@@ -12,9 +12,11 @@ turns a raw ``documents`` table into training-ready artifacts:
 3. **mix** — per-source temperature weights over the *surviving*
    corpus (``mix_weights``), written beside the chunks as the
    sampling manifest;
-4. **validate + write** — chunk grain (doc_id, chunk_id) checked
-   unique/nonempty, then two-phase staged writes (no partial output
-   is ever visible, re-runs are safe).
+4. **write + validate** — two-phase staged writes (no partial output
+   is ever visible, re-runs are safe) whose quality gates ride the
+   write: the chunk grain (doc_id, chunk_id) and the manifest key are
+   observed unique/non-NULL/non-empty while the staging copy is
+   written, and checked before the swap.
 
 Everything is one lineage per output; the only full-corpus shuffles
 are the ones the operators already budget (repetition bigram counts,
@@ -24,13 +26,17 @@ document scan.
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyspark_scd_spark.operators import corpus
-from pyspark_scd_spark.operators.quality import validate
+from pyspark_scd_spark.operators.quality import (
+    observed_write_metrics,
+    validate,
+)
 from pyspark_scd_spark.sources.writers import write_staged
 
 
@@ -65,18 +71,21 @@ def run(
 
     mix = corpus.mix_weights(clean_docs)
 
-    chunks.persist()
-    try:
-        validate(chunks, ["doc_id", "chunk_id"])
+    # One staged write per output, with the row gates observed during
+    # it (the same gate as jobs/employee_dim.py): each lineage runs
+    # once, nothing is cached, and a bad output never replaces the
+    # committed one.
+    for df, name, keys, partition_by in (
+        (chunks, "chunks", ["doc_id", "chunk_id"], ["source"]),
+        (mix, "mix", ["source"], []),
+    ):
+        observed, obs = observed_write_metrics(df, keys)
         write_staged(
-            chunks,
-            os.path.join(out_dir, "chunks"),
-            partition_by=["source"],
+            observed,
+            os.path.join(out_dir, name),
+            partition_by=partition_by,
+            check=functools.partial(validate, df, keys, observed=obs),
         )
-    finally:
-        chunks.unpersist()
-    validate(mix, ["source"])
-    write_staged(mix, os.path.join(out_dir, "mix"))
 
     return (
         spark.read.parquet(os.path.join(out_dir, "chunks")),

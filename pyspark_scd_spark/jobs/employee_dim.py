@@ -10,7 +10,12 @@ This version:
 - ``spark`` is a parameter (reference wish-list, README.md:121-122);
 - history is partitioned parquet, written via two-phase staged swap —
   the self-read-overwrite race cannot happen;
-- validation is ONE aggregation pass, not three jobs;
+- the quality gates ride the writes: schema is a metadata check before
+  any job runs, and the row gates (non-empty, no NULL or duplicate
+  key) are metrics observed while the staging copy is written and
+  checked before the swap — no gate runs a job of its own;
+- every parquet read passes the profile schema, so Spark runs no
+  footer-inference job;
 - statuses recomputed with the corrected islands partitioning;
 - an incremental variant applies the day's snapshot against the
   current view only (scd_merge) — O(day) not O(history).
@@ -18,13 +23,19 @@ This version:
 
 from __future__ import annotations
 
+import functools
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from pyspark_scd_spark.operators import scd
-from pyspark_scd_spark.operators.quality import validate
-from pyspark_scd_spark.profiles import employee_profiles
+from pyspark_scd_spark.operators.quality import (
+    assert_schema,
+    observed_write_metrics,
+    validate,
+)
+from pyspark_scd_spark.profiles import EMP_ALL_SCHEMA, employee_profiles
 from pyspark_scd_spark.sources.readers import read_csv_snapshots
 from pyspark_scd_spark.sources.writers import archive_files, write_staged
 
@@ -41,6 +52,24 @@ HASH_COLS = [
     "salary",
     "termination_date",
 ]
+
+
+def _write_checked(
+    df: DataFrame,
+    path: str,
+    keys: list[str],
+    partition_by: tuple[str, ...] = (),
+) -> str:
+    """Staged write with the row gates observed during the write and
+    ``validate``d before the swap: a bad frame raises ``QualityError``
+    with the committed output untouched, and no gate runs a job."""
+    observed, obs = observed_write_metrics(df, keys)
+    return write_staged(
+        observed,
+        path,
+        partition_by=partition_by,
+        check=functools.partial(validate, df, keys, observed=obs),
+    )
 
 
 def run(
@@ -66,7 +95,7 @@ def run(
 
     hist_path = all_profile.output_path
     if os.path.isdir(hist_path):
-        history = spark.read.parquet(hist_path).select(*snap_profile.schema.names)
+        history = all_profile.read(spark).select(*snap_profile.schema.names)
         snapshots = scd.union_snapshots(history, new_df)
     else:
         snapshots = new_df
@@ -77,33 +106,28 @@ def run(
         time_col=TIME_COL,
         hash_cols=HASH_COLS,
     )
-    # Cache across validate+write: the reference ran its three gates
-    # and the save as four separate jobs, re-executing the whole
-    # window lineage each time (SURVEY.md §3). One persist = one
-    # lineage execution total.
-    employee_all.persist()
-    try:
-        validate(employee_all, [TIME_COL, *KEY_COLS], all_profile.schema)
-        write_staged(
-            employee_all,
-            hist_path,
-            partition_by=all_profile.partition_by,
-        )
-    finally:
-        employee_all.unpersist()
+    # The write is the lineage's only consumer (the gates ride it), so
+    # nothing is cached: the window pipeline runs exactly once. It also
+    # observes the latest snapshot date, which stamps employee_current
+    # without a scalar-aggregate job of its own.
+    assert_schema(employee_all, all_profile.schema)
+    latest = Observation()
+    _write_checked(
+        employee_all.observe(latest, F.max(TIME_COL).alias(TIME_COL)),
+        hist_path,
+        [TIME_COL, *KEY_COLS],
+        partition_by=all_profile.partition_by,
+    )
 
-    committed_all = spark.read.parquet(hist_path)
-    employee_current = scd.current_view(committed_all, KEY_COLS, TIME_COL)
-    validate(employee_current, KEY_COLS)
-    write_staged(employee_current, cur_profile.output_path)
+    employee_current = scd.current_view(
+        all_profile.read(spark), KEY_COLS, TIME_COL, stamp_global_max=False
+    ).withColumn(TIME_COL, F.lit(latest.get[TIME_COL]))
+    _write_checked(employee_current, cur_profile.output_path, KEY_COLS)
 
     if archive and files:
         archive_files(files, snap_profile.output_path)
 
-    return (
-        spark.read.parquet(hist_path),
-        spark.read.parquet(cur_profile.output_path),
-    )
+    return all_profile.read(spark), cur_profile.read(spark)
 
 
 def run_incremental(
@@ -114,11 +138,11 @@ def run_incremental(
     """Incremental daily apply: merge one day against the current view
     (the 100 TB path — history is append-only elsewhere)."""
     if os.path.isdir(current_path):
-        current = spark.read.parquet(current_path)
+        current = spark.read.schema(EMP_ALL_SCHEMA).parquet(current_path)
         new_current = scd.scd_merge(
             current, day_snapshot, KEY_COLS, TIME_COL, HASH_COLS
         )
     else:
         new_current = scd.scd_bootstrap(day_snapshot, KEY_COLS, TIME_COL)
-    write_staged(new_current, current_path)
-    return spark.read.parquet(current_path)
+    _write_checked(new_current, current_path, KEY_COLS)
+    return spark.read.schema(EMP_ALL_SCHEMA).parquet(current_path)

@@ -4,16 +4,18 @@ The reference runs three eager assertions before every write
 (``test_DF``, reference jobs/create_employee_all.py:158-180): duplicate
 keys, schema equality, non-empty. Each assertion there is a separate
 Spark job re-executing the full unpersisted lineage — ~3× recompute per
-output table (SURVEY.md §3). Here the row-level checks run in ONE pass
-(a single aggregate job), and the empty-check uses ``isEmpty`` (scans at
-most one partition) rather than a full ``count()``.
+output table (SURVEY.md §3). Here the schema gate is metadata-only, and
+the row gates (non-empty, no NULL key, no duplicate key) are metrics
+``observe()``d while the write itself runs (``observed_write_metrics``)
+and checked by ``validate`` before the staged swap: validation runs no
+job at all.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -54,35 +56,49 @@ def assert_not_empty(df: DataFrame) -> None:
 
 
 def observed_write_metrics(
-    df: DataFrame, key_cols: Sequence[str] | None = None, name: str = "quality"
-):
-    """Attach zero-cost quality metrics to a DataFrame via
+    df: DataFrame, key_cols: Sequence[str] | None = None
+) -> tuple[DataFrame, Observation]:
+    """Attach the row-level quality metrics to a DataFrame via
     ``observe()``: they are computed DURING whatever action consumes
-    the df (typically the write), so validation adds no extra pass at
-    all — the SURVEY.md §3 fix for the reference's 3-jobs-per-write
+    the df (typically the write), so validation adds no pass of its
+    own — the SURVEY.md §3 fix for the reference's 3-jobs-per-write
     pattern taken to its limit.
+
+    Metrics: ``n_rows``; ``n_null_keys`` (rows with a NULL in any key
+    column); ``n_bad_keys`` (rows with a NULL key, plus rows whose key
+    group holds more than one row). The group size is a
+    ``count(*) over (partition by keys)`` window: on input already
+    clustered by a subset of the keys (every SCD output is
+    hash-partitioned on the entity key) it costs a sort, not an
+    exchange.
 
     Returns (df, observation); read ``observation.get`` AFTER the
     action. Example::
 
         df2, obs = observed_write_metrics(df, keys)
         df2.write.parquet(path)
-        m = obs.get          # {'n_rows': ..., 'n_null_keys': ...}
+        m = obs.get          # {'n_rows': ..., 'n_null_keys': ..., ...}
     """
     import functools
     import operator
-
-    from pyspark.sql import Observation
 
     keys = list(key_cols) if key_cols else df.columns[:1]
     null_key = functools.reduce(
         operator.or_, [F.col(c).isNull() for c in keys]
     )
-    obs = Observation(name)
-    out = df.observe(
-        obs,
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.when(null_key, 1).otherwise(0)).alias("n_null_keys"),
+    group_rows = F.count(F.lit(1)).over(Window.partitionBy(*keys))
+    obs = Observation()
+    out = (
+        df.withColumn("__key_rows", group_rows)
+        .observe(
+            obs,
+            F.count(F.lit(1)).alias("n_rows"),
+            F.count(F.when(null_key, 1)).alias("n_null_keys"),
+            F.count(F.when(null_key | (F.col("__key_rows") > 1), 1)).alias(
+                "n_bad_keys"
+            ),
+        )
+        .drop("__key_rows")
     )
     return out, obs
 
@@ -91,25 +107,35 @@ def validate(
     df: DataFrame,
     keys: Sequence[str],
     expected_schema: T.StructType | None = None,
+    observed: Observation | None = None,
 ) -> None:
-    """All gates in one aggregation job.
+    """The quality gates: schema, non-empty, no NULL key, no duplicate
+    key.
 
-    A single ``agg`` computes total rows and distinct key-groups
-    together; dup keys exist iff the two differ. One shuffle, partial
-    aggregation map-side — contrast the reference's three jobs.
+    The schema gate is metadata-only. The row gates read the metrics
+    of ``observed_write_metrics``: pass ``observed`` (its observation,
+    read after the action that consumed the observed df — normally the
+    staged write, see ``write_staged(check=...)``) and they run no job
+    at all. Without it they measure ``df`` themselves in one noop-write
+    pass.
     """
     if expected_schema is not None:
         assert_schema(df, expected_schema)
-    row = df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.count_distinct(*[F.col(k) for k in keys]).alias("n_keys"),
-    ).first()
-    if row["n"] == 0:
+    if observed is None:
+        measured, observed = observed_write_metrics(df, keys)
+        measured.write.format("noop").mode("overwrite").save()
+    m = observed.get
+    if m["n_rows"] == 0:
         raise QualityError("DataFrame has 0 records")
-    if row["n"] != row["n_keys"]:
+    if m["n_null_keys"]:
         raise QualityError(
-            f"duplicate keys: {row['n']} rows over {row['n_keys']} "
-            f"distinct key groups {tuple(keys)}"
+            f"NULL keys: {m['n_null_keys']} of {m['n_rows']} rows have a "
+            f"NULL in {tuple(keys)}"
+        )
+    if m["n_bad_keys"]:
+        raise QualityError(
+            f"duplicate keys: {m['n_bad_keys']} of {m['n_rows']} rows share "
+            f"their key group {tuple(keys)}"
         )
 
 

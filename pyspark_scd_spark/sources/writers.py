@@ -6,7 +6,7 @@ directory in place — its documented crash mode
 configs/config.py:23 + jobs/create_employee_all.py:190-196) — and
 forces a single-task write via ``coalesce(1)`` (:191).
 
-Here: write to a staging directory, validate, then atomically swap.
+Here: write to a staging directory, check it, then atomically swap.
 Partitioned parquet by default; no ``coalesce(1)`` anywhere.
 """
 
@@ -14,7 +14,7 @@ from __future__ import annotations
 
 import os
 import shutil
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -26,15 +26,20 @@ def write_staged(
     partition_by: Sequence[str] = (),
     fmt: str = "parquet",
     options: dict | None = None,
+    check: Callable[[], None] | None = None,
 ) -> str:
-    """Two-phase commit: stage → swap.
+    """Two-phase commit: stage → check → swap.
 
     1. Write the full output to ``<path>.__staging__``. Because the
        source lineage may read ``path`` itself (self-referential
        accumulate, reference configs/config.py:23), the write happens
        BEFORE anything under ``path`` is touched — no lazy file refs
        can dangle.
-    2. Move the old output aside, promote staging, delete the old copy.
+    2. ``check`` (optional) runs once the staging copy is complete —
+       typically ``quality.validate`` reading metrics observed during
+       this very write. If it raises, the staging copy is deleted and
+       the committed output is left untouched.
+    3. Move the old output aside, promote staging, delete the old copy.
 
     On a real deployment this maps to a table-format commit (Iceberg /
     Delta snapshot swap); plain directories get the rename dance, which
@@ -48,6 +53,12 @@ def write_staged(
     if options:
         writer = writer.options(**options)
     writer.save(staging)
+    if check is not None:
+        try:
+            check()
+        except BaseException:
+            shutil.rmtree(staging, ignore_errors=True)
+            raise
 
     if os.path.exists(backup):
         shutil.rmtree(backup)

@@ -99,6 +99,10 @@ def test_full_job_two_runs(spark, tmp_path):
     assert cur_rows[30]["change_status"] == "Deleted"
     assert cur_rows[13]["salary"] == 99_999
     assert cur3.count() == cur3.select("employee_number").distinct().count()
+    # every current row carries the latest snapshot date
+    assert {r["snapshot_date"] for r in cur_rows.values()} == {
+        dt.date(2020, 1, 10)
+    }
 
     # history is partitioned by snapshot_date on disk
     parts = [
@@ -174,3 +178,111 @@ def test_write_staged_recovers_from_stale_staging(spark, tmp_path):
     assert spark.read.parquet(path).count() == 10
     assert not os.path.exists(f"{path}.__staging__")
     assert not os.path.exists(f"{path}.__old__")
+
+
+def _jobs_of(spark, fn) -> int:
+    """Spark jobs ``fn`` runs, counted under a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4()}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _second_run_base(spark, tmp_path) -> str:
+    """A job directory after run 1 (days 1-5) with days 6-10 pending,
+    so the next run reads history."""
+    base = str(tmp_path / "scd")
+    _write_csvs(base, days=range(1, 6))
+    employee_dim.run(spark, base)
+    _write_csvs(base, days=range(6, 11))
+    return base
+
+
+# Jobs per call, measured with the gates riding the writes and every
+# parquet read given its schema. A pre-write validation pass or a
+# footer-inference read brings back jobs and fails these bounds.
+RUN_JOB_BUDGET = 7
+RUN_INCREMENTAL_JOB_BUDGET = 4
+
+
+def test_job_budget(spark, tmp_path):
+    """Jobs of a run that reads history (the second over the 10-day
+    fixture) and of an incremental merge onto an existing view."""
+    from tests.emp_fixture import emp_snapshots
+
+    base = _second_run_base(spark, tmp_path)
+    n_run = _jobs_of(spark, lambda: employee_dim.run(spark, base))
+
+    cur_path = str(tmp_path / "cur")
+    snaps = emp_snapshots(spark)
+    for day in range(1, 10):
+        employee_dim.run_incremental(
+            spark, snaps.filter(F.dayofmonth("snapshot_date") == day), cur_path
+        )
+    last = snaps.filter(F.dayofmonth("snapshot_date") == 10)
+    n_inc = _jobs_of(
+        spark, lambda: employee_dim.run_incremental(spark, last, cur_path)
+    )
+    assert n_run <= RUN_JOB_BUDGET, n_run
+    assert n_inc <= RUN_INCREMENTAL_JOB_BUDGET, n_inc
+
+
+def _bad_all(kind: str):
+    """A corruption of scd_apply's output that one gate must reject."""
+    real = scd.scd_apply
+
+    def bad(*args, **kwargs):
+        df = real(*args, **kwargs)
+        if kind == "schema":
+            return df.withColumn("salary", F.col("salary").cast("long"))
+        if kind == "empty":
+            return df.filter(F.lit(False))
+        if kind == "duplicate":
+            return df.unionByName(df.limit(1))
+        null_row = df.limit(1).withColumn(
+            "employee_number", F.lit(None).cast("int")
+        )
+        return df.unionByName(null_row)
+
+    return bad
+
+
+@pytest.mark.parametrize(
+    "kind, message",
+    [
+        ("schema", "schema mismatch"),
+        ("empty", "0 records"),
+        ("duplicate", "duplicate keys"),
+        ("null_key", "NULL keys"),
+    ],
+)
+def test_run_gates_reject(spark, tmp_path, monkeypatch, kind, message):
+    """Each gate stops the run: committed outputs stay byte-identical,
+    no staging copy is left and the pending drops are not archived. The
+    schema gate fails before any Spark job runs."""
+    from pyspark_scd_spark.operators.quality import QualityError
+    from tests.test_quality_gate import _tree_bytes
+
+    base = _second_run_base(spark, tmp_path)
+    before = _tree_bytes(f"{base}/output")
+    pending = sorted(os.listdir(f"{base}/input"))
+
+    monkeypatch.setattr(scd, "scd_apply", _bad_all(kind))
+
+    def attempt():
+        with pytest.raises(QualityError, match=message):
+            employee_dim.run(spark, base)
+
+    n_jobs = _jobs_of(spark, attempt)
+    assert _tree_bytes(f"{base}/output") == before
+    assert sorted(os.listdir(f"{base}/input")) == pending
+    assert not [p for p in os.listdir(f"{base}/output") if "__" in p]
+    if kind == "schema":
+        assert n_jobs == 0

@@ -265,6 +265,11 @@ _SINGLE_PARTITION_ALLOWED = {
                                  # exchange); the grouped twin
                                  # (quantile_sketch_by_group) has
                                  # zero SinglePartition stages
+    "lm_perplexity_score": 1,    # the V scalar: one partial count per
+                                 # partition into a 1-row
+                                 # COUNT(DISTINCT third char) over the
+                                 # alphabet-bounded trigram table,
+                                 # broadcast back — no data rows
 }
 
 
