@@ -24,9 +24,10 @@ Scale notes (100 TB design point):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Observation, Window, functions as F
 
 from pyspark_scd_spark.functions import text as TXT
+from pyspark_scd_spark.operators.quality import observed_aggregates
 
 
 def _word_ngrams(toks: Column, n: int) -> Column:
@@ -1710,35 +1711,46 @@ def quality_classifier_train(
     Returns (scored DataFrame (id, label, score, predicted), final
     weights).
 
-    Distributed shape: each GD step is ONE scan-side projection + ONE
-    4-value aggregate (map-side combined) — at 100 TB a step is a
-    single pass with a scalar result, and the weights (d+1 floats,
-    the kmeans bounded-driver-state contract) broadcast back inside
-    the next step's expression. No instance-level shuffle ever.
+    Distributed shape: each GD step is ONE pass over the checkpointed
+    features whose 4-value gradient is ``observe()``d — partials
+    merge on the driver as the tasks finish, so a step is one Spark
+    job with no exchange (``quality.observed_aggregates``). Step 1's
+    gradient (at w=0) rides the job that checkpoints the features, so
+    ``n_steps`` steps cost ``n_steps`` jobs in all, and ``n_steps=0``
+    costs none (the scorer then reads the features straight from
+    ``df``). The weights (d+1 floats, the kmeans bounded-driver-state
+    contract) broadcast back inside the next step's expression. No
+    instance-level shuffle ever.
 
     Determinism across engines: the per-step GRADIENT is rounded
-    in-engine at 9 decimals (absorbing libm-exp ulp and
-    summation-order noise, both ~1e-13 relative, far under the 1e-9
-    quantum), and the weight update w - lr*g is single IEEE ops —
-    bit-exact in any engine — so the whole weight trajectory replays
-    identically in the unrolled-CTE SQL oracle.
+    in-engine at 9 decimals (absorbing libm-exp ulp and the
+    summation-order noise of the partial merge, both ~1e-13 relative,
+    far under the 1e-9 quantum), and the weight update w - lr*g is
+    single IEEE ops — bit-exact in any engine — so the whole weight
+    trajectory replays identically in the unrolled-CTE SQL oracle.
     """
-    feats = _classifier_features(
-        df, label_pred, id_col, text_col
-    ).localCheckpoint()  # read n_steps+1 times; compute features once
-
     dims = 4
-    w = [0.0] * dims
-    for _ in range(n_steps):
+
+    def _gradient(w: list[float]) -> list[Column]:
         p = _classifier_p(w)
-        grad = feats.agg(
-            *[
-                F.round(
-                    F.avg((p - F.col("__y")) * F.col(f"__x{k}")), 9
-                ).alias(f"g{k}")
-                for k in range(dims)
-            ]
-        ).collect()[0]
+        return [
+            F.round(F.avg((p - F.col("__y")) * F.col(f"__x{k}")), 9).alias(
+                f"g{k}"
+            )
+            for k in range(dims)
+        ]
+
+    w = [0.0] * dims
+    feats = _classifier_features(df, label_pred, id_col, text_col)
+    for step in range(n_steps):
+        if step == 0:
+            # read n_steps+1 times: compute the features once, and
+            # take the first gradient during that same pass
+            obs = Observation()
+            feats = feats.observe(obs, *_gradient(w)).localCheckpoint()
+            grad = obs.get
+        else:
+            grad = observed_aggregates(feats, *_gradient(w))
         w = [w[k] - lr * grad[f"g{k}"] for k in range(dims)]
 
     score = F.round(_classifier_p(w), 4)

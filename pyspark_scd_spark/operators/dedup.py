@@ -21,11 +21,12 @@ from __future__ import annotations
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pyspark_scd_spark.functions import text as TXT
+from pyspark_scd_spark.operators.quality import observed_aggregates
 
 
 def exact_groups(
@@ -929,10 +930,11 @@ def connected_components(
     — each round relaxes labels across edges (label(v) := min over
     neighbors) and then jumps (label(v) := label(label(v))), so chains
     collapse in O(log diameter) rounds, not O(diameter). Rounds are
-    two shuffles plus one exact-decimal aggregate for the convergence
-    test; lineage is cut with localCheckpoint every round (iterative
-    DataFrame plans otherwise grow without bound and re-execute under
-    AQE). Labels only decrease, so the label-sum is strictly
+    two shuffles; lineage is cut with localCheckpoint every round
+    (iterative DataFrame plans otherwise grow without bound and
+    re-execute under AQE), and the convergence test's exact-decimal
+    label sum is observed during that checkpoint, so it costs no job
+    of its own. Labels only decrease, so the label-sum is strictly
     decreasing until the fixpoint — equality of consecutive sums is
     the stop test, with no old-vs-new join.
 
@@ -992,15 +994,19 @@ def connected_components(
         parent = relaxed.select(
             F.col("id").alias("pid"), F.col("label").alias("plabel")
         )
-        jumped = (
+        # the convergence sum is observed while the checkpoint runs:
+        # no job of its own
+        label_sum = Observation()
+        labels = (
             relaxed.join(parent, relaxed.label == F.col("pid"))
             .select("id", F.col("plabel").alias("label"))
+            .observe(
+                label_sum,
+                F.sum(F.col("label").cast("decimal(38,0)")).alias("s"),
+            )
             .localCheckpoint()
         )
-        labels = jumped
-        s = jumped.agg(
-            F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-        ).collect()[0]["s"]
+        s = label_sum.get["s"]
         if prev_sum is not None and s == prev_sum:
             break
         prev_sum = s
@@ -1555,7 +1561,7 @@ def _prefix_pos_ranks(
         global_dense_rank,
     )
 
-    mx = t.agg(F.max(F.length(text_col))).collect()[0][0]
+    mx = observed_aggregates(t, F.max(F.length(text_col)).alias("mx"))["mx"]
     if not mx:
         return None, 0, 0
     mx = int(mx)
@@ -1703,7 +1709,9 @@ def dedup_exact_substrings(
             ).alias("kept_md5"),
         )
 
-    mx0 = nonempty.agg(F.max(F.length(text_col))).collect()[0][0]
+    mx0 = observed_aggregates(
+        nonempty, F.max(F.length(text_col)).alias("mx")
+    )["mx"]
     if not mx0 or int(mx0) < L:
         # no document reaches L chars — bail BEFORE the eager codes
         # checkpoint materializes a corpus-positions table for nothing

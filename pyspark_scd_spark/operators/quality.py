@@ -15,7 +15,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Observation, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -55,6 +55,29 @@ def assert_not_empty(df: DataFrame) -> None:
         raise QualityError("DataFrame has 0 records")
 
 
+def _key_metrics(
+    df: DataFrame, key_cols: Sequence[str] | None
+) -> tuple[DataFrame, list[Column]]:
+    """``df`` with a ``__key_rows`` group-size column, and the row-gate
+    aggregates over it (see ``observed_write_metrics``)."""
+    import functools
+    import operator
+
+    keys = list(key_cols) if key_cols else df.columns[:1]
+    null_key = functools.reduce(
+        operator.or_, [F.col(c).isNull() for c in keys]
+    )
+    group_rows = F.count(F.lit(1)).over(Window.partitionBy(*keys))
+    aggs = [
+        F.count(F.lit(1)).alias("n_rows"),
+        F.count(F.when(null_key, 1)).alias("n_null_keys"),
+        F.count(F.when(null_key | (F.col("__key_rows") > 1), 1)).alias(
+            "n_bad_keys"
+        ),
+    ]
+    return df.withColumn("__key_rows", group_rows), aggs
+
+
 def observed_write_metrics(
     df: DataFrame, key_cols: Sequence[str] | None = None
 ) -> tuple[DataFrame, Observation]:
@@ -79,28 +102,29 @@ def observed_write_metrics(
         df2.write.parquet(path)
         m = obs.get          # {'n_rows': ..., 'n_null_keys': ..., ...}
     """
-    import functools
-    import operator
-
-    keys = list(key_cols) if key_cols else df.columns[:1]
-    null_key = functools.reduce(
-        operator.or_, [F.col(c).isNull() for c in keys]
-    )
-    group_rows = F.count(F.lit(1)).over(Window.partitionBy(*keys))
+    sized, aggs = _key_metrics(df, key_cols)
     obs = Observation()
-    out = (
-        df.withColumn("__key_rows", group_rows)
-        .observe(
-            obs,
-            F.count(F.lit(1)).alias("n_rows"),
-            F.count(F.when(null_key, 1)).alias("n_null_keys"),
-            F.count(F.when(null_key | (F.col("__key_rows") > 1), 1)).alias(
-                "n_bad_keys"
-            ),
-        )
-        .drop("__key_rows")
-    )
-    return out, obs
+    return sized.observe(obs, *aggs).drop("__key_rows"), obs
+
+
+def observed_aggregates(df: DataFrame, *aggs: Column) -> dict:
+    """Global aggregates of ``df`` read by the driver, in ONE job.
+
+    ``df.agg(...).collect()`` is a two-job plan under AQE: a
+    shuffle-map job whose exchange carries one partial row per
+    partition, then the result job. Here the aggregates are
+    ``observe()``d on a ``noop`` write of ``df``: partials merge on the
+    driver as the tasks finish, so the pass is one job with no
+    exchange of its own. Returns ``{alias: value}``; aggregates over
+    zero rows come back as for ``agg`` (0 for counts, None otherwise).
+
+    When ``df`` is about to be materialized anyway (an eager
+    ``localCheckpoint``, a write), observe the aggregates on THAT
+    action instead: they then cost no job at all.
+    """
+    obs = Observation()
+    df.observe(obs, *aggs).write.format("noop").mode("overwrite").save()
+    return obs.get
 
 
 def validate(
@@ -116,15 +140,16 @@ def validate(
     of ``observed_write_metrics``: pass ``observed`` (its observation,
     read after the action that consumed the observed df — normally the
     staged write, see ``write_staged(check=...)``) and they run no job
-    at all. Without it they measure ``df`` themselves in one noop-write
-    pass.
+    at all. Without it they measure ``df`` themselves in one
+    ``observed_aggregates`` pass.
     """
     if expected_schema is not None:
         assert_schema(df, expected_schema)
     if observed is None:
-        measured, observed = observed_write_metrics(df, keys)
-        measured.write.format("noop").mode("overwrite").save()
-    m = observed.get
+        sized, aggs = _key_metrics(df, keys)
+        m = observed_aggregates(sized, *aggs)
+    else:
+        m = observed.get
     if m["n_rows"] == 0:
         raise QualityError("DataFrame has 0 records")
     if m["n_null_keys"]:

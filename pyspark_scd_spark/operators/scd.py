@@ -71,19 +71,15 @@ def with_row_hash(
 def snapshot_dedup(
     df: DataFrame,
     key_cols: Sequence[str],
-    tiebreak_cols: Sequence[str] = (),
+    tiebreak_cols: Sequence[str],
 ) -> DataFrame:
     """Keep exactly one row per key group.
 
     The reference's dedup (reference jobs/create_employee_all.py:74-81)
     orders by a column that is constant within the partition, so the
     survivor among non-identical duplicates is nondeterministic. Here
-    ``tiebreak_cols`` (descending) pins the survivor; with no tiebreak
-    given this degenerates to ``dropDuplicates`` semantics, which is
-    fine only when duplicates are exact re-drops (reference README.md:87).
+    ``tiebreak_cols`` (descending, at least one) pins the survivor.
     """
-    if not tiebreak_cols:
-        return df.dropDuplicates(list(key_cols))
     w = Window.partitionBy(*key_cols).orderBy(
         *[F.col(c).desc() for c in tiebreak_cols]
     )
@@ -103,16 +99,20 @@ def snapshot_dedup_aligned(
     """Dedup to one row per (key, time) WITHOUT leaving the per-key
     partitioning.
 
-    ``snapshot_dedup`` partitions by (key, time) — an exchange the
-    downstream SCD windows (partitioned by key alone) cannot reuse, so
-    the pipeline pays two shuffles. Here rows are sorted (time ASC,
-    tiebreaks DESC) inside the per-KEY window and a row survives iff it
-    is the first of its time-run (``lag(time) != time``) — same
-    survivor as row_number()=1 per (key, time) ordered by tiebreaks
-    DESC, but the single hash(key) exchange now serves every later
-    window (Spark satisfies a required (key) clustering and
-    (key, time) sort prefix from it). One shuffle for the whole SCD
-    pipeline instead of two.
+    ``snapshot_dedup`` (or ``dropDuplicates``) on (key, time) clusters
+    by hash(key, time) — an exchange the downstream SCD windows
+    (partitioned by key alone) cannot reuse, so the pipeline pays two
+    shuffles. Here rows are sorted (time ASC, tiebreaks DESC) inside
+    the per-KEY window and a row survives iff it is the first of its
+    time-run (``lag(time) != time``) — same survivor as
+    row_number()=1 per (key, time) ordered by tiebreaks DESC, but the
+    single hash(key) exchange now serves every later window (Spark
+    satisfies a required (key) clustering and (key, time) sort prefix
+    from it). One shuffle for the whole SCD pipeline instead of two.
+
+    The survivor is the row whose ``tiebreak_cols`` tuple sorts
+    highest (DESC puts NULL lowest); among rows that tie on every
+    tiebreak column it is arbitrary.
     """
     w = Window.partitionBy(*key_cols).orderBy(
         F.col(time_col).asc(),
@@ -382,17 +382,23 @@ def scd_apply(
     (reference jobs/create_employee_all.py:236-240): dedup → hash →
     status → change date → drop helpers.
 
+    Dedup keeps one row per (key, ``time_col``): the row whose
+    ``tiebreak_cols`` tuple sorts highest (descending, NULL lowest).
+    With no ``tiebreak_cols`` the fingerprint columns break the tie
+    the same way — among rows listed twice for one key and date, the
+    one whose ``hash_cols`` tuple sorts highest survives — so a drop
+    that disagrees with itself still yields a deterministic history.
+    Exact re-drops (reference README.md:87) are the common case and
+    collapse to their single distinct row.
+
     Plan shape: ONE hash exchange on ``key_cols`` feeds the dedup, the
     status windows, and the islands windows (partition-aligned dedup +
     prefix-compatible sorts); the global-max scalar comes from the raw
     pre-dedup scan so its branch is scan+agg only.
     """
-    if tiebreak_cols:
-        df = snapshot_dedup_aligned(
-            snapshots, key_cols, time_col, tiebreak_cols
-        )
-    else:
-        df = snapshot_dedup(snapshots, [*key_cols, time_col], ())
+    df = snapshot_dedup_aligned(
+        snapshots, key_cols, time_col, tiebreak_cols or hash_cols
+    )
     df = with_row_hash(df, hash_cols, hardened=hardened_hash)
     df = with_change_status(
         df,

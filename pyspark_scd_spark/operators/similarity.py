@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from pyspark_scd_spark.functions import vectors as V
+from pyspark_scd_spark.operators.quality import observed_aggregates
 
 
 def brute_force_topk(
@@ -2822,19 +2823,20 @@ def ivf_drift_retrain(
         .join(_hist(acb, "__nb"), "cell", "left")
         .fillna(0, subset=["__ns", "__nb"])
     )
-    tot = hist.agg(
-        F.sum("__ns").alias("ts"), F.sum("__nb").alias("tb")
-    ).collect()[0]
+    tot = observed_aggregates(
+        hist, F.sum("__ns").alias("ts"), F.sum("__nb").alias("tb")
+    )
     ts, tb = int(tot["ts"]), int(tot["tb"])
     tv_num = int(
-        hist.agg(
+        observed_aggregates(
+            hist,
             F.sum(
                 F.abs(
                     F.col("__nb") * F.lit(ts)
                     - F.col("__ns") * F.lit(tb)
                 )
-            )
-        ).collect()[0][0]
+            ).alias("tv_num"),
+        )["tv_num"]
     )
     # half-AWAY rounding (DuckDB ROUND), not Python's banker's round:
     # a TV landing exactly on a 5e-7 boundary must not round apart

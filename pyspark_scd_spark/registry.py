@@ -27,7 +27,10 @@ from pyspark.sql import functions as F
 
 from pyspark_scd_spark.operators import relational, scd, topk
 from pyspark_scd_spark.functions.time import epoch_us
-from pyspark_scd_spark.operators.quality import duplicate_keys
+from pyspark_scd_spark.operators.quality import (
+    duplicate_keys,
+    observed_aggregates,
+)
 from pyspark_scd_spark.sources.readers import read_parquet_table
 
 
@@ -6355,7 +6358,9 @@ def q19_disjunctive_revenue(spark, sf_dir):
     "receipt/commit dates): double-correlated EXISTS / NOT EXISTS "
     "decorrelated into per-order window aggregates — top-2 distinct "
     "supplier ship maxes per order replace both correlated scans, so "
-    "lineitem is shuffled once on l_orderkey instead of three times.",
+    "lineitem is shuffled once on l_orderkey instead of three times: "
+    "the (order, supplier) group and the per-order windows share "
+    "that one exchange.",
 )
 def q21_last_shipper(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem").select(
@@ -6368,9 +6373,15 @@ def q21_last_shipper(spark, sf_dir):
 
     w = Window.partitionBy("l_orderkey")
     # Per (order, supplier) ship max, then per order: the overall max,
-    # how many suppliers attain it, and the runner-up max.
-    supp_max = li.groupBy("l_orderkey", "l_suppkey").agg(
-        F.max("l_shipdate").alias("supp_max")
+    # how many suppliers attain it, and the runner-up max. Clustering
+    # on l_orderkey first lets the (order, supplier) group and the
+    # per-order windows share that one exchange (a hash on l_orderkey
+    # satisfies both); grouped directly, the group would shuffle on
+    # (l_orderkey, l_suppkey) and the window again on l_orderkey.
+    supp_max = (
+        li.repartition("l_orderkey")
+        .groupBy("l_orderkey", "l_suppkey")
+        .agg(F.max("l_shipdate").alias("supp_max"))
     )
     decorated = (
         supp_max.withColumn("nsupp", F.count("*").over(w))
@@ -9445,9 +9456,9 @@ def q_stream_late_data_accounting(spark, sf_dir):
         # The cutoff travels as epoch MICROS (a tz-free long):
         # collecting a timestamp renders it in the driver's local
         # zone, which silently shifts the cut on non-UTC machines.
-        cut_us = ev.agg(
-            epoch_us(F.date_trunc("hour", F.min("ts"))).alias("c")
-        ).collect()[0]["c"] + 7_200_000_000
+        cut_us = observed_aggregates(
+            ev, epoch_us(F.date_trunc("hour", F.min("ts"))).alias("c")
+        )["c"] + 7_200_000_000
         # Three staged files whose PATH order and MTIME order both
         # ascend (the part file is renamed to a fixed sequence name,
         # and a sleep separates the mtimes) — whichever ordering the
@@ -10373,11 +10384,14 @@ def _logreg_oracle(n_steps: int = 3, lr: float = 0.5) -> str:
     "and applied to the corpus (operators/corpus.py "
     "quality_classifier_train) — the fastText/WebText-classifier "
     "corpus-prep stage as one hash-checked lifecycle. Each GD step "
-    "is ONE scan + ONE 4-value aggregate (map-side combined); the "
-    "weights (d+1 floats, bounded driver state) ride back inside "
-    "the next step's expression — no instance-level shuffle at any "
-    "scale. Cross-engine determinism: gradients round in-engine at "
-    "9dp (libm-exp ulp and summation-order noise are ~1e-13), weight "
+    "is ONE Spark job: a pass over the checkpointed features whose "
+    "4-value gradient is observe()d and merged on the driver (step "
+    "1 rides the checkpoint itself), so 3 steps build in 3 jobs with "
+    "no exchange; the weights (d+1 floats, bounded driver state) ride "
+    "back inside the next step's expression — no instance-level "
+    "shuffle at any scale. Cross-engine determinism: gradients round "
+    "in-engine at 9dp (libm-exp ulp and summation-order noise are "
+    "~1e-13), weight "
     "updates are single IEEE ops, so the oracle's unrolled (g_i, "
     "w_i) CTE chain replays the trajectory bit-exactly.",
 )

@@ -538,6 +538,33 @@ def test_quality_classifier_matches_python_reference(spark):
         assert out[doc_id]["label"] == y
 
 
+def test_quality_classifier_one_job_per_step(spark):
+    """Each GD step is one Spark job (step 1 rides the feature
+    checkpoint); with no steps nothing runs and the w=0 scores still
+    come out."""
+    from tests.test_employee_job import _jobs_of
+
+    df = spark.createDataFrame(
+        [(i, f"doc {i} " + "word " * i, "en" if i % 2 else "fr")
+         for i in range(20)],
+        ["doc_id", "text", "lang"],
+    )
+    label = F.col("lang") == "en"
+    out = {}
+
+    def train(n_steps):
+        out[n_steps] = corpus.quality_classifier_train(df, label, n_steps=n_steps)
+
+    assert _jobs_of(spark, lambda: train(3)) == 3
+    assert _jobs_of(spark, lambda: train(0)) == 0
+    assert out[3][1] != [0.0] * 4
+    scored, w = out[0]
+    assert w == [0.0] * 4
+    rows = scored.collect()
+    assert len(rows) == 20
+    assert {r["score"] for r in rows} == {0.5}
+
+
 def test_minhash_recall_report_invariants(spark, sf_dir):
     from pyspark_scd_spark.operators import dedup
 

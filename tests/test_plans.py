@@ -48,6 +48,45 @@ def test_scd_single_key_shuffle(spark, sf_dir):
     assert explain.has_broadcast_join(df), plan
 
 
+def _hash_exchange_keys(plan: str) -> list[list[str]]:
+    """Column names of every hashpartitioning exchange, in order."""
+    return [
+        [re.sub(r"#\d+L?$", "", c.strip()) for c in m.group(1).split(",")][:-1]
+        for m in re.finditer(r"Exchange hashpartitioning\(([^)]*)\)", plan)
+    ]
+
+
+def test_employee_all_single_key_shuffle(spark):
+    """The job's employee_all (scd_apply with no tiebreak) dedups
+    inside the per-key windows: one hash(employee_number) exchange
+    serves the whole pipeline, and none clusters on the snapshot date
+    (a dedup on (key, date) would add that second shuffle)."""
+    from pyspark_scd_spark.jobs import employee_dim
+    from pyspark_scd_spark.operators import scd
+    from tests.emp_fixture import emp_snapshots
+
+    df = scd.scd_apply(
+        emp_snapshots(spark),
+        key_cols=employee_dim.KEY_COLS,
+        time_col=employee_dim.TIME_COL,
+        hash_cols=employee_dim.HASH_COLS,
+    )
+    plan = explain.physical_plan(df)
+    keys = _hash_exchange_keys(plan)
+    assert keys == [["employee_number"]], plan
+    assert "snapshot_date" not in str(keys), plan
+
+
+def test_q21_single_lineitem_shuffle(spark, sf_dir):
+    """q21's (order, supplier) group and per-order windows share ONE
+    exchange on l_orderkey; none clusters on (l_orderkey, l_suppkey)."""
+    df = REGISTRY["q21_last_shipper"].builder(spark, sf_dir)
+    plan = explain.physical_plan(df)
+    keys = _hash_exchange_keys(plan)
+    assert [k for k in keys if k[0] == "l_orderkey"] == [["l_orderkey"]], plan
+    assert not [k for k in keys if "l_suppkey" in k], plan
+
+
 def test_global_max_is_broadcast(spark, sf_dir):
     df = REGISTRY["global_max_broadcast"].builder(spark, sf_dir)
     assert explain.has_broadcast_join(df)

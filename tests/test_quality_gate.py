@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from pyspark_scd_spark.operators.quality import (
     QualityError,
+    observed_aggregates,
     observed_write_metrics,
     validate,
 )
@@ -115,3 +116,27 @@ def test_write_gate_keeps_committed_output(spark, tmp_path, name, message):
     assert not os.path.exists(f"{path}.__staging__")
     assert not os.path.exists(f"{path}.__old__")
     assert spark.read.parquet(path).count() == 20
+
+
+def test_observed_aggregates_match_agg_in_one_job(spark):
+    """The driver-read aggregate helper returns what ``agg().collect()``
+    does, empty input included, in one job."""
+    from tests.test_employee_job import _jobs_of
+
+    df = spark.range(0, 50, numPartitions=4).select(
+        (F.col("id") % 7).alias("x"), F.col("id").cast("decimal(38,0)").alias("d")
+    )
+    aggs = [
+        F.count(F.lit(1)).alias("n"),
+        F.max("x").alias("mx"),
+        F.sum("d").alias("s"),
+        F.round(F.avg("x"), 9).alias("a"),
+    ]
+    for frame in (df, df.filter(F.col("x") > 7)):
+        want = frame.agg(*aggs).collect()[0].asDict()
+        got = {}
+        n_jobs = _jobs_of(
+            spark, lambda: got.update(observed_aggregates(frame, *aggs))
+        )
+        assert got == want
+        assert n_jobs == 1, n_jobs
