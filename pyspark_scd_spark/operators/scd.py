@@ -28,6 +28,8 @@ as long as no single entity's history is pathological.
 
 from __future__ import annotations
 
+import functools
+import operator
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window
@@ -321,7 +323,6 @@ _HELPER_COLS = (
     "__next_hash",
     "__global_max_t",
     "__gap_grp",
-    "__n_dates_lt",
     "row_hash",
 )
 
@@ -438,71 +439,78 @@ def scd_merge(
 
     The reference recomputes every status over the full accumulated
     history on every run (reference jobs/create_employee_all.py:76-81,
-    README's read-own-output loop) — O(history) per day. This joins the
-    day's snapshot (N_day rows) against the current view (N_entities
-    rows) with a full-outer join on the key: O(N_entities) per day,
-    independent of history depth, and co-partitionable (bucket both
-    sides by key → zero-shuffle join). BASELINE.json names this
-    ("DataFrame upsert/merge operations") as the target approach.
+    README's read-own-output loop) — O(history) per day. This merges
+    the day's snapshot (N_day rows) into the current view (N_entities
+    rows): O(N_entities) per day, independent of history depth.
+    BASELINE.json names this ("DataFrame upsert/merge operations") as
+    the target approach.
+
+    Like the rest of the module it uses no join (reference README.md:99):
+    both sides are tagged and unioned, and ONE unordered window on the
+    key hands every new row its key's current hash and change date and
+    counts the key's new rows. New rows all survive; a current row
+    survives only when its key has no new row, as ``Deleted``. That
+    single hash exchange on ``key_cols`` also clusters the output for
+    any key-partitioned consumer (the write gate's key window).
 
     Returns the NEW current view with ``status_col``/``date_col``
     updated; append it to the history table to extend ``employee_all``.
-    Known divergence vs the full windowed recompute: an entity that
-    disappears and later reappears with its pre-gap fingerprint gets
-    its change date from the merge state, not from the pre-gap island
-    (the window form treats the gap as invisible — SURVEY.md §2 #10).
+    A key listed twice in the snapshot yields two rows, as a MERGE
+    would. Known divergence vs the full windowed recompute: an entity
+    that disappears and later reappears with its pre-gap fingerprint
+    gets its change date from the merge state, not from the pre-gap
+    island (the window form treats the gap as invisible — SURVEY.md
+    §2 #10).
     """
     keys = list(key_cols)
-    attr_cols = [c for c in new_snapshot.columns if c not in (*keys, time_col)]
+    cols = [*keys, time_col]
+    cols += [c for c in new_snapshot.columns if c not in cols]
 
-    new = with_row_hash(new_snapshot, hash_cols, out_col="__new_hash")
-    cur = with_row_hash(current, hash_cols, out_col="__cur_hash")
-
-    # Alias scheme: user attribute columns get a "__an_" / "__ac_" prefix
-    # (new/current side); bookkeeping columns use bare "__*" names with
-    # no user-column suffix, so no user column name can collide.
-    n = new.select(
-        *keys,
-        F.col(time_col).alias("__t_n"),
-        *[F.col(a).alias(f"__an_{a}") for a in attr_cols],
+    # concat_ws never yields NULL, so a non-NULL "__new_hash" marks a
+    # row of the new snapshot and a non-NULL "__cur_hash" one of the
+    # current view — no separate side tag needed.
+    new = with_row_hash(new_snapshot, hash_cols, out_col="__new_hash").select(
+        *cols,
         "__new_hash",
+        F.lit(None).cast("string").alias("__cur_hash"),
+        F.lit(None).cast(current.schema[date_col].dataType).alias("__dt_c"),
     )
-    c = cur.select(
-        *keys,
-        F.col(time_col).alias("__t_c"),
-        *[F.col(a).alias(f"__ac_{a}") for a in attr_cols],
-        F.col(status_col).alias("__st_c"),
-        F.col(date_col).alias("__dt_c"),
+    cur = with_row_hash(current, hash_cols, out_col="__cur_hash").select(
+        *cols,
+        F.lit(None).cast("string").alias("__new_hash"),
         "__cur_hash",
+        F.col(date_col).alias("__dt_c"),
     )
-    j = n.join(c, on=keys, how="full_outer")
-
-    # concat_ws never yields NULL, so a NULL hash ⇔ that side's row is
-    # absent from the join — no separate presence flags needed.
-    is_new = F.col("__cur_hash").isNull()
+    # A NULL key matches nothing (as in an equi-join), so its rows take
+    # no aggregate from the rows they share a window partition with.
+    w = Window.partitionBy(*keys)
+    keyed = functools.reduce(
+        operator.and_, [F.col(k).isNotNull() for k in keys]
+    )
+    u = new.unionByName(cur).select(
+        *cols,
+        "__new_hash",
+        F.when(keyed, F.max("__cur_hash").over(w)).alias("__cur_hash"),
+        F.when(keyed, F.max("__dt_c").over(w)).alias("__dt_c"),
+        F.when(keyed, F.count("__new_hash").over(w))
+        .otherwise(0)
+        .alias("__n_new"),
+    )
     is_gone = F.col("__new_hash").isNull()
+    is_new = F.col("__cur_hash").isNull()
     changed = F.col("__new_hash") != F.col("__cur_hash")
 
     status = (
-        F.when(is_new, F.lit(STATUS_NEW))
-        .when(is_gone, F.lit(STATUS_DELETED))
+        F.when(is_gone, F.lit(STATUS_DELETED))
+        .when(is_new, F.lit(STATUS_NEW))
         .when(changed, F.lit(STATUS_CHANGED))
         .otherwise(F.lit(STATUS_NO_CHANGE))
     )
-    change_date = (
-        F.when(is_new, F.col("__t_n"))
-        .when(is_gone, F.col("__t_c"))
-        .when(changed, F.col("__t_n"))
-        .otherwise(F.col("__dt_c"))
-    )
-    picked_attrs = [
-        F.when(is_gone, F.col(f"__ac_{a}")).otherwise(F.col(f"__an_{a}")).alias(a)
-        for a in attr_cols
-    ]
-    return j.select(
-        *keys,
-        F.coalesce(F.col("__t_n"), F.col("__t_c")).alias(time_col),
-        *picked_attrs,
+    change_date = F.when(
+        is_gone | is_new | changed, F.col(time_col)
+    ).otherwise(F.col("__dt_c"))
+    return u.filter(~is_gone | (F.col("__n_new") == 0)).select(
+        *cols,
         status.alias(status_col),
         change_date.alias(date_col),
     )
@@ -518,7 +526,7 @@ def scd_merge_tree(
 ) -> DataFrame:
     """Tree-fold (parallel-prefix) form of the incremental MERGE fold:
     the same end state as folding ``scd_merge`` day-by-day, in
-    ``ceil(log2 days)`` passes instead of ``days`` sequential joins.
+    ``ceil(log2 days)`` passes instead of ``days`` sequential merges.
 
     Input: ONE table with one row per (key, snapshot time) — i.e. the
     deduped union of all snapshots — where the distinct snapshot
@@ -542,7 +550,7 @@ def scd_merge_tree(
 
     Scale: each pass is ONE hash exchange on (key, pair) over one
     summary row per live (key, block) — the day-by-day fold is a
-    serial chain of full-outer joins whose length is the snapshot
+    serial chain of merges whose length is the snapshot
     count, which is exactly what dominates its wall clock at x10
     (NOTES round-7 flag). Driver state: the sorted distinct snapshot
     times (bounded — days, not rows).

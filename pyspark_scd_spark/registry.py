@@ -365,7 +365,7 @@ def q_scd_employee_current(spark, sf_dir):
 )
 def q_scd_merge_incremental(spark, sf_dir):
     # Tree-fold (parallel-prefix) form: ceil(log2 years) exchanges on
-    # (key, pair) instead of a serial chain of full-outer joins one
+    # (key, pair) instead of a serial chain of merges, one exchange
     # per year — identical end state (property-tested against the
     # day-by-day scd_merge fold on gap/revert/delete patterns, and
     # the closed-form oracle here checks the composition end-to-end).

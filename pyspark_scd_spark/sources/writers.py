@@ -87,9 +87,7 @@ def write_bucketed_table(
 
     Two tables bucketed on the same keys with the same bucket count
     join with ZERO shuffle — each task reads bucket i of both sides —
-    and sorted buckets skip the sort-merge sort too. This is the
-    at-rest layout for the incremental SCD current-view table: daily
-    ``scd_merge`` joins then move no data at all. (Plain
+    and sorted buckets skip the sort-merge sort too. (Plain
     ``DataFrameWriter.save`` paths cannot carry bucket metadata;
     bucketing requires the catalog, hence ``saveAsTable``.)
     """

@@ -208,9 +208,13 @@ def _second_run_base(spark, tmp_path) -> str:
 # Jobs per call, measured with the gates riding the writes, every
 # parquet read given its schema and one exchange for the SCD windows.
 # A pre-write validation pass, a footer-inference read or a dedup
-# shuffle of its own brings back jobs and fails these bounds.
+# shuffle of its own brings back jobs and fails these bounds. The
+# merge is a union under one key window that the write gate's key
+# window shares (one shuffle-map job, then the write): a join of the
+# day's drop and the current view would shuffle each side and then
+# re-shuffle its output for the gate, and fails the second bound.
 RUN_JOB_BUDGET = 6
-RUN_INCREMENTAL_JOB_BUDGET = 4
+RUN_INCREMENTAL_JOB_BUDGET = 2
 
 
 def test_job_budget(spark, tmp_path):
@@ -233,6 +237,34 @@ def test_job_budget(spark, tmp_path):
     )
     assert n_run <= RUN_JOB_BUDGET, n_run
     assert n_inc <= RUN_INCREMENTAL_JOB_BUDGET, n_inc
+
+
+def test_incremental_duplicate_key_rejected(spark, tmp_path):
+    """A day drop that lists one employee twice merges into two rows
+    for that key, and the write gate rejects them: the committed
+    current view stays byte-identical and no staging copy is left."""
+    from pyspark_scd_spark.operators.quality import QualityError
+    from tests.emp_fixture import emp_snapshots
+    from tests.test_quality_gate import _tree_bytes
+
+    cur_path = str(tmp_path / "cur")
+    snaps = emp_snapshots(spark)
+    for day in (1, 2):
+        employee_dim.run_incremental(
+            spark, snaps.filter(F.dayofmonth("snapshot_date") == day), cur_path
+        )
+    before = _tree_bytes(cur_path)
+
+    day3 = snaps.filter(F.dayofmonth("snapshot_date") == 3)
+    dup = day3.filter(F.col("employee_number") == 1).withColumn(
+        "salary", F.lit(77777)
+    )
+    with pytest.raises(QualityError, match="duplicate keys"):
+        employee_dim.run_incremental(spark, day3.unionByName(dup), cur_path)
+
+    assert _tree_bytes(cur_path) == before
+    assert not os.path.exists(f"{cur_path}.__staging__")
+    assert not os.path.exists(f"{cur_path}.__old__")
 
 
 @pytest.mark.parametrize("dup_first", [True, False])

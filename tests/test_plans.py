@@ -77,6 +77,37 @@ def test_employee_all_single_key_shuffle(spark):
     assert "snapshot_date" not in str(keys), plan
 
 
+def test_scd_merge_single_key_shuffle(spark, tmp_path):
+    """The incremental merge as the job writes it (scd_merge under the
+    write gate's key window) is a union under one key window: one
+    hash(employee_number) exchange serves the merge and the gate, and
+    no join shuffles the two sides separately."""
+    from pyspark_scd_spark.jobs import employee_dim
+    from pyspark_scd_spark.operators import scd
+    from pyspark_scd_spark.operators.quality import observed_write_metrics
+    from pyspark_scd_spark.profiles import EMP_ALL_SCHEMA
+    from tests.emp_fixture import emp_snapshots
+
+    snaps = emp_snapshots(spark)
+    path = str(tmp_path / "cur")
+    scd.scd_bootstrap(
+        snaps.filter(F.dayofmonth("snapshot_date") == 9),
+        employee_dim.KEY_COLS,
+        employee_dim.TIME_COL,
+    ).write.parquet(path)
+    merged = scd.scd_merge(
+        spark.read.schema(EMP_ALL_SCHEMA).parquet(path),
+        snaps.filter(F.dayofmonth("snapshot_date") == 10),
+        employee_dim.KEY_COLS,
+        employee_dim.TIME_COL,
+        employee_dim.HASH_COLS,
+    )
+    gated, _ = observed_write_metrics(merged, employee_dim.KEY_COLS)
+    plan = explain.physical_plan(gated)
+    assert _hash_exchange_keys(plan) == [["employee_number"]], plan
+    assert "Join" not in plan, plan
+
+
 def test_q21_single_lineitem_shuffle(spark, sf_dir):
     """q21's (order, supplier) group and per-order windows share ONE
     exchange on l_orderkey; none clusters on (l_orderkey, l_suppkey)."""

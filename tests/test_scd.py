@@ -180,6 +180,52 @@ def test_scd_merge_matches_full_recompute(spark):
         assert g_date == date, (emp, g_date, date)
 
 
+def test_scd_merge_unmatched_and_repeated_keys(spark):
+    """Merge rows as an equi-join on the key would pair them: a NULL
+    key matches nothing (the current row is Deleted, the new one New),
+    and a key listed twice in the drop yields one row per listing,
+    each classified against the current row. Output columns and types
+    follow the current view."""
+    cur = spark.createDataFrame(
+        [
+            (1, d(1), "a", "New", d(1)),
+            (2, d(1), "b", "New", d(1)),
+            (3, d(1), "c", "Changed", d(1)),
+            (None, d(1), "n", "New", d(1)),
+            (5, d(1), "e", "No Change", d(1)),
+        ],
+        "k int, t date, v string, change_status string, "
+        "changed_status_date date",
+    )
+    new = spark.createDataFrame(
+        [
+            (1, d(2), "a"),
+            (2, d(2), "B"),
+            (4, d(2), "d"),
+            (None, d(2), "n"),
+            (5, d(2), "e"),
+            (5, d(2), "E"),
+        ],
+        "k int, t date, v string",
+    )
+    out = scd.scd_merge(cur, new, ["k"], "t", ["v"])
+    assert out.schema.simpleString() == cur.schema.simpleString()
+    got = sorted(map(tuple, out.collect()), key=str)
+    assert got == sorted(
+        [
+            (1, d(2), "a", "No Change", d(1)),
+            (2, d(2), "B", "Changed", d(2)),
+            (3, d(1), "c", "Deleted", d(1)),
+            (4, d(2), "d", "New", d(2)),
+            (5, d(2), "E", "Changed", d(2)),
+            (5, d(2), "e", "No Change", d(1)),
+            (None, d(1), "n", "Deleted", d(1)),
+            (None, d(2), "n", "New", d(2)),
+        ],
+        key=str,
+    )
+
+
 def test_schema_evolution_golden(spark):
     """A tracked column appears mid-history: union_snapshots_evolving
     backfills NULL, the hardened hash keeps fingerprints comparable
