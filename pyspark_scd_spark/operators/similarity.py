@@ -17,6 +17,14 @@ Two paths, per the standard ANN playbook:
 All cosine math is double-precision Catalyst expressions
 (functions/vectors.py) — bit-identical to the oracle's
 ``list_cosine_similarity(CAST(v AS DOUBLE[]), ...)``.
+
+The LSH and IVF operators take ``verify=``: a bucket/cell GEMM (the
+default) or ``'pairs'``, the pair-gather twin through
+``candidate_pair_cosine``. The two paths return identical output up to
+one caveat: the GEMM and the pair path's per-row (a*b).sum associate
+float adds differently, so a dot landing EXACTLY on a rounding boundary
+could round apart — never observed on the fixtures, where parity tests
+pin exact equality.
 """
 
 from __future__ import annotations
@@ -2303,6 +2311,84 @@ def _hardneg_tail(
     )
 
 
+def _check_verify(verify: str, allowed: tuple[str, str]) -> None:
+    """Reject an unknown ``verify=`` before any Spark job runs: a typo
+    would otherwise silently fall through to the pair-gather branch,
+    changing the physical plan the caller asked for."""
+    if verify not in allowed:
+        raise ValueError(f"unknown verify: {verify!r}")
+
+
+def _pair_scored(
+    df: DataFrame,
+    cand: DataFrame,
+    id_col: str,
+    vec_col: str,
+    label_col: str,
+    cross_label_only: bool,
+) -> DataFrame:
+    """The ``verify='pairs'`` leg of the per-anchor consumers: exact
+    6 dp cosine of every directed candidate pair as (qid, qlabel, nid,
+    nlabel, c) rows, same-label pairs dropped if ``cross_label_only``."""
+    scored = candidate_pair_cosine(
+        df, cand, id_col, vec_col, label_col, decimals=6
+    )
+    if cross_label_only:
+        scored = scored.filter(F.col("label_a") != F.col("label_b"))
+    return scored.select(
+        F.col("id_a").alias("qid"),
+        F.col("label_a").alias("qlabel"),
+        F.col("id_b").alias("nid"),
+        F.col("label_b").alias("nlabel"),
+        F.col("cosine").alias("c"),
+    )
+
+
+def _lsh_scored(
+    df: DataFrame,
+    k: int,
+    dim: int,
+    n_planes: int | None,
+    n_tables: int,
+    multiprobe: bool,
+    id_col: str,
+    vec_col: str,
+    label_col: str,
+    verify: str,
+    cross_label_only: bool,
+) -> DataFrame:
+    """Scored candidate neighbors of the LSH tier's per-anchor
+    consumers (kNN vote, hard negatives), ready for their global tail.
+
+    ``verify='buckets'``: per-(table, bucket) dense GEMM + vectorized
+    local top-k — top-k distributes over the bucket cover, so
+    per-bucket top-k ⊇ global top-k (the grid kernel's argument; with
+    ``cross_label_only`` the same-label mask applies inside the kernel
+    and the argument holds on the masked order). Candidate pairs are
+    never materialized; on dup-heavy corpora this replaces the
+    pair-gather whose candidate volume was near-quadratic per bucket
+    (the 201 s x10 row). ``verify='pairs'`` scores every directed
+    LSH candidate pair."""
+    _check_verify(verify, ("buckets", "pairs"))
+    if n_planes is None:
+        n_planes = auto_planes(df.count())
+    if verify == "buckets":
+        queries, members = _lsh_assigned_vec_rows(
+            df, dim, n_planes, n_tables, multiprobe,
+            id_col, vec_col, label_col,
+        )
+        return _grouped_topk_scored(
+            queries, members, ["t", "b"], k,
+            id_col, vec_col, label_col, decimals=6,
+            cross_label_only=cross_label_only,
+        )
+    cand = lsh_candidates(
+        df, dim, n_planes, n_tables, multiprobe, id_col, vec_col,
+        ordered=False,
+    )
+    return _pair_scored(df, cand, id_col, vec_col, label_col, cross_label_only)
+
+
 def embedding_neardup_pairs_ann(
     df: DataFrame,
     threshold: float,
@@ -2336,19 +2422,11 @@ def embedding_neardup_pairs_ann(
     near-quadratic, this replaces the generic pair-gather whose
     ~0.6M pairs/s rate was the x10 wall (round-4 study).
     ``verify='pairs'`` routes the distinct candidate pair set through
-    ``candidate_pair_cosine`` — identical output (identical up to one caveat: the
-    bucket/cell GEMM and the pair path's per-row (a*b).sum
-    associate float adds differently, so a dot landing EXACTLY on
-    a rounding boundary could round apart — never observed on the
-    fixtures, where parity tests pin exact equality),
-    kept for candidate
-    sets consumers want to inspect and for cross-tier comparability.
+    ``candidate_pair_cosine`` — identical output (up to the module
+    docstring's caveat), kept for candidate sets consumers want to
+    inspect and for cross-tier comparability.
     """
-    if verify not in ("buckets", "pairs"):
-        # fail loudly BEFORE any Spark job (the count below): a typo
-        # would otherwise silently fall through to the pair-gather
-        # branch, changing the physical plan the caller asked for
-        raise ValueError(f"unknown verify: {verify!r}")
+    _check_verify(verify, ("buckets", "pairs"))
     if n_planes is None:
         n_planes = auto_planes(df.count())
     if verify == "buckets":
@@ -2394,49 +2472,12 @@ def knn_label_vote_ann(
     top-k, then the same majority vote / tie-break contract as the
     exact twin ``knn_label_vote_grid``. Rows whose buckets hold no
     other vector emit no vote (both engines replay identically).
-
-    ``verify='buckets'`` (default): per-(table, bucket) dense GEMM +
-    vectorized local top-k, globally merged — top-k distributes over
-    the bucket cover, so per-bucket top-k ⊇ global top-k (the grid
-    kernel's argument). Candidate pairs are never materialized; on
-    dup-heavy corpora this replaces the pair-gather whose candidate
-    volume was near-quadratic per bucket (the 201 s x10 row).
-    ``verify='pairs'`` is the pair-gather twin — identical
-    output (identical up to one caveat: the
-    bucket/cell GEMM and the pair path's per-row (a*b).sum
-    associate float adds differently, so a dot landing EXACTLY on
-    a rounding boundary could round apart — never observed on the
-    fixtures, where parity tests pin exact equality).
+    ``verify='buckets'`` (default) scores candidates with per-bucket
+    GEMMs, ``verify='pairs'`` by pair-gather (``_lsh_scored``).
     """
-    if verify not in ("buckets", "pairs"):
-        # fail loudly BEFORE any Spark job (the count below): a typo
-        # would otherwise silently fall through to the pair-gather
-        # branch, changing the physical plan the caller asked for
-        raise ValueError(f"unknown verify: {verify!r}")
-    if n_planes is None:
-        n_planes = auto_planes(df.count())
-    if verify == "buckets":
-        queries, members = _lsh_assigned_vec_rows(
-            df, dim, n_planes, n_tables, multiprobe,
-            id_col, vec_col, label_col,
-        )
-        scored = _grouped_topk_scored(
-            queries, members, ["t", "b"], k,
-            id_col, vec_col, label_col, decimals=6,
-        )
-        return _vote_tail(scored, k, id_col, label_col)
-    cand = lsh_candidates(
-        df, dim, n_planes, n_tables, multiprobe, id_col, vec_col,
-        ordered=False,
-    )
-    scored = candidate_pair_cosine(
-        df, cand, id_col, vec_col, label_col, decimals=6
-    ).select(
-        F.col("id_a").alias("qid"),
-        F.col("label_a").alias("qlabel"),
-        F.col("id_b").alias("nid"),
-        F.col("label_b").alias("nlabel"),
-        F.col("cosine").alias("c"),
+    scored = _lsh_scored(
+        df, k, dim, n_planes, n_tables, multiprobe,
+        id_col, vec_col, label_col, verify, cross_label_only=False,
     )
     return _vote_tail(scored, k, id_col, label_col)
 
@@ -2458,52 +2499,12 @@ def hard_negative_mining_ann(
     different-label neighbors per anchor. Ranking at 6 dp (cosine
     DESC, id ASC); emitted cosine re-rounds to 4 dp half-away — the
     exact twin ``hard_negative_mining_grid``'s contract.
-
-    ``verify='buckets'`` (default): per-(table, bucket) dense GEMM
-    with the same-label mask applied inside the kernel (the global
-    ranking is over cross-label candidates, so the per-group top-k ⊇
-    global top-k argument holds on the masked order).
-    ``verify='pairs'`` is the pair-gather twin — identical
-    output (identical up to one caveat: the
-    bucket/cell GEMM and the pair path's per-row (a*b).sum
-    associate float adds differently, so a dot landing EXACTLY on
-    a rounding boundary could round apart — never observed on the
-    fixtures, where parity tests pin exact equality).
+    ``verify='buckets'`` (default) scores candidates with per-bucket
+    GEMMs, ``verify='pairs'`` by pair-gather (``_lsh_scored``).
     """
-    if verify not in ("buckets", "pairs"):
-        # fail loudly BEFORE any Spark job (the count below): a typo
-        # would otherwise silently fall through to the pair-gather
-        # branch, changing the physical plan the caller asked for
-        raise ValueError(f"unknown verify: {verify!r}")
-    if n_planes is None:
-        n_planes = auto_planes(df.count())
-    if verify == "buckets":
-        queries, members = _lsh_assigned_vec_rows(
-            df, dim, n_planes, n_tables, multiprobe,
-            id_col, vec_col, label_col,
-        )
-        scored = _grouped_topk_scored(
-            queries, members, ["t", "b"], k,
-            id_col, vec_col, label_col, decimals=6,
-            cross_label_only=True,
-        )
-        return _hardneg_tail(scored, k, id_col, label_col)
-    cand = lsh_candidates(
-        df, dim, n_planes, n_tables, multiprobe, id_col, vec_col,
-        ordered=False,
-    )
-    scored = (
-        candidate_pair_cosine(
-            df, cand, id_col, vec_col, label_col, decimals=6
-        )
-        .filter(F.col("label_a") != F.col("label_b"))
-        .select(
-            F.col("id_a").alias("qid"),
-            F.col("label_a").alias("qlabel"),
-            F.col("id_b").alias("nid"),
-            F.col("label_b").alias("nlabel"),
-            F.col("cosine").alias("c"),
-        )
+    scored = _lsh_scored(
+        df, k, dim, n_planes, n_tables, multiprobe,
+        id_col, vec_col, label_col, verify, cross_label_only=True,
     )
     return _hardneg_tail(scored, k, id_col, label_col)
 
@@ -2714,8 +2715,7 @@ def embedding_neardup_incremental_ivf(
 
     Returns (store_id, batch_id, cosine ≥ threshold at ``round_to``).
     """
-    if verify not in ("cells", "pairs"):
-        raise ValueError(f"unknown verify: {verify!r}")
+    _check_verify(verify, ("cells", "pairs"))
     if store_cells is not None and centroids is None:
         # A persisted cell table is only meaningful WITH the centroids
         # that produced it: re-deriving defaults here would assign the
@@ -2930,10 +2930,11 @@ def _ivf_cell_rows(
     (score DESC, cell DESC). With ``fold='serial'`` (the registry /
     oracle-replay default) every dot is the serial left-fold
     (j-ascending multiply-add); ``fold='blas'`` is one GEMM per
-    Arrow batch — at auto_cells scale (k≈n/64) the 64-step serial
-    loop over an (n, k) accumulator is memory-bandwidth-bound and
-    dominates assignment cost (measured ~20s of the 34s IVF total at
-    100k vectors, k=1563), while the GEMM is <1s; the two differ only
+    Arrow batch — at large k the 64-step serial loop over an (n, k)
+    accumulator is memory-bandwidth-bound and dominates assignment
+    cost (measured ~20s of the 34s IVF total at 100k vectors with
+    k=1563; auto_cells now sets k = n_probe·√n, ≈632 there), while
+    the GEMM is <1s; the two differ only
     in float association, which the 9 dp rounding almost always
     absorbs, so 'blas' is the documented large-k scale path and
     'serial' the bit-replayable oracle twin.
@@ -3292,6 +3293,58 @@ def ivf_candidates(
     )
 
 
+def _ivf_scored(
+    df: DataFrame,
+    k: int,
+    k_cells: int | None,
+    n_probe: int,
+    id_col: str,
+    vec_col: str,
+    label_col: str,
+    verify: str,
+    n_salt: int | None,
+    cross_label_only: bool,
+) -> DataFrame:
+    """Scored candidate neighbors of the IVF tier's per-anchor
+    consumers (kNN vote, hard negatives), ready for their global tail.
+
+    ``verify='cells'`` is the directed analogue of the pairs path's
+    cells verify: vectors shuffle once to their probed cells (with the
+    label carried — no join back), each cell GEMMs against itself
+    (same-label pairs masked inside the kernel if
+    ``cross_label_only``) and emits its local top-k per anchor.
+    Per-cell top-k ⊇ global top-k (top-k distributes over the cell
+    cover). Under a PINNED cell count the anchor side additionally
+    salts ``n_salt`` ways (default: enough that cells x salts covers
+    the task slots, see ``_auto_anchor_salt``) — members replicate per
+    salt so every anchor still sees the full cell, output unchanged,
+    parallelism x salt (the r6 x10 wall: 8 cells = 8 tasks on 32
+    cores). ``verify='pairs'`` scores every directed same-cell
+    candidate pair through the generic pair-gather."""
+    _check_verify(verify, ("cells", "pairs"))
+    if verify == "cells":
+        centroids = _default_centroids(
+            df, k_cells, n_probe, id_col, vec_col
+        )
+        assigned = _ivf_cell_vec_rows(
+            df, centroids, n_probe, id_col, vec_col, "serial",
+            extra_cols=(label_col,),
+        )
+        salt = (
+            n_salt
+            if n_salt is not None
+            else _auto_anchor_salt(df, len(centroids), n_probe)
+        )
+        return _salted_cell_topk_scored(
+            assigned, k, id_col, vec_col, label_col, salt,
+            decimals=6, cross_label_only=cross_label_only,
+        )
+    cand = ivf_candidates(
+        df, None, k_cells, n_probe, id_col, vec_col, ordered=False
+    )
+    return _pair_scored(df, cand, id_col, vec_col, label_col, cross_label_only)
+
+
 def knn_label_vote_ivf(
     df: DataFrame,
     k: int = 5,
@@ -3313,59 +3366,13 @@ def knn_label_vote_ivf(
     centroid structure. Anchors alone in their cells emit no vote —
     both engines replay identically.
 
-    ``verify='cells'`` (default) is the directed analogue of the
-    pairs path's cells verify: vectors shuffle once to their probed
-    cells (with the label carried — no join back), each cell GEMMs
-    against itself and emits its local top-k per anchor; the global
-    merge is the shared vote tail. Per-cell top-k ⊇ global top-k
-    (top-k distributes over the cell cover). Under a PINNED cell
-    count the anchor side additionally salts ``n_salt`` ways
-    (default: enough that cells x salts covers the task slots, see
-    ``_auto_anchor_salt``) — members replicate per salt so every
-    anchor still sees the full cell, output unchanged, parallelism
-    x salt (the r6 x10 wall: 8 cells = 8 tasks on 32 cores). ``verify='pairs'``
-    routes same-cell candidate pairs through the generic pair-gather
-    — identical output (identical up to one caveat: the
-    bucket/cell GEMM and the pair path's per-row (a*b).sum
-    associate float adds differently, so a dot landing EXACTLY on
-    a rounding boundary could round apart — never observed on the
-    fixtures, where parity tests pin exact equality), kept
-    for cross-tier comparability.
+    ``verify='cells'`` (default) scores candidates with per-cell
+    GEMMs, ``verify='pairs'`` by pair-gather; ``n_salt`` splits each
+    cell's anchors under a pinned cell count (``_ivf_scored``).
     """
-    if verify not in ("cells", "pairs"):
-        # fail loudly: a typo would otherwise silently fall
-        # through to the pair-gather branch, changing the
-        # physical plan the caller asked for
-        raise ValueError(f"unknown verify: {verify!r}")
-    if verify == "cells":
-        centroids = _default_centroids(
-            df, k_cells, n_probe, id_col, vec_col
-        )
-        assigned = _ivf_cell_vec_rows(
-            df, centroids, n_probe, id_col, vec_col, "serial",
-            extra_cols=(label_col,),
-        )
-        salt = (
-            n_salt
-            if n_salt is not None
-            else _auto_anchor_salt(df, len(centroids), n_probe)
-        )
-        scored = _salted_cell_topk_scored(
-            assigned, k, id_col, vec_col, label_col, salt,
-            decimals=6,
-        )
-        return _vote_tail(scored, k, id_col, label_col)
-    cand = ivf_candidates(
-        df, None, k_cells, n_probe, id_col, vec_col, ordered=False
-    )
-    scored = candidate_pair_cosine(
-        df, cand, id_col, vec_col, label_col, decimals=6
-    ).select(
-        F.col("id_a").alias("qid"),
-        F.col("label_a").alias("qlabel"),
-        F.col("id_b").alias("nid"),
-        F.col("label_b").alias("nlabel"),
-        F.col("cosine").alias("c"),
+    scored = _ivf_scored(
+        df, k, k_cells, n_probe, id_col, vec_col, label_col,
+        verify, n_salt, cross_label_only=False,
     )
     return _vote_tail(scored, k, id_col, label_col)
 
@@ -3389,50 +3396,12 @@ def hard_negative_mining_ivf(
     hard-negative use case needs the MOST similar cross-label rows;
     on clustered corpora those share cells by construction.
 
-    ``verify='cells'`` (default): within-cell dense GEMM with the
-    same-label mask applied inside the kernel, local top-k per
-    anchor, global merge in the shared tail. ``verify='pairs'`` is
-    the pair-gather twin — identical output (up to the cross-path
-    rounding-boundary caveat documented on knn_label_vote_ivf).
+    ``verify='cells'`` (default) scores candidates with per-cell
+    GEMMs, ``verify='pairs'`` by pair-gather (``_ivf_scored``).
     """
-    if verify not in ("cells", "pairs"):
-        # fail loudly: a typo would otherwise silently fall
-        # through to the pair-gather branch, changing the
-        # physical plan the caller asked for
-        raise ValueError(f"unknown verify: {verify!r}")
-    if verify == "cells":
-        centroids = _default_centroids(
-            df, k_cells, n_probe, id_col, vec_col
-        )
-        assigned = _ivf_cell_vec_rows(
-            df, centroids, n_probe, id_col, vec_col, "serial",
-            extra_cols=(label_col,),
-        )
-        salt = (
-            n_salt
-            if n_salt is not None
-            else _auto_anchor_salt(df, len(centroids), n_probe)
-        )
-        scored = _salted_cell_topk_scored(
-            assigned, k, id_col, vec_col, label_col, salt,
-            decimals=6, cross_label_only=True,
-        )
-        return _hardneg_tail(scored, k, id_col, label_col)
-    cand = ivf_candidates(
-        df, None, k_cells, n_probe, id_col, vec_col, ordered=False
-    )
-    scored = (
-        candidate_pair_cosine(
-            df, cand, id_col, vec_col, label_col, decimals=6
-        )
-        .filter(F.col("label_a") != F.col("label_b"))
-        .select(
-            F.col("id_a").alias("qid"),
-            F.col("label_a").alias("qlabel"),
-            F.col("id_b").alias("nid"),
-            F.col("label_b").alias("nlabel"),
-            F.col("cosine").alias("c"),
-        )
+    scored = _ivf_scored(
+        df, k, k_cells, n_probe, id_col, vec_col, label_col,
+        verify, n_salt, cross_label_only=True,
     )
     return _hardneg_tail(scored, k, id_col, label_col)
 
@@ -3467,8 +3436,9 @@ def embedding_neardup_pairs_ivf(
     ``centroids`` defaults to the first ``k_cells`` vectors by id — a
     deterministic, oracle-replayable sample (pass ``kmeans_train``
     output for tighter cells; the candidate contract is unchanged).
-    The k-row collect is bounded by construction (k ≈ n/64 rows of
-    dim doubles), the same bounded-driver-state contract as
+    The k-row collect is bounded by construction (k = n_probe·√n rows
+    of dim doubles under ``auto_cells``), the same bounded-driver-state
+    contract as
     kmeans_train's per-iteration centroid aggregate.
 
     Exact-cosine verify on candidates only, threshold on the
@@ -3482,11 +3452,7 @@ def embedding_neardup_pairs_ivf(
     ``candidate_pair_cosine`` (the LSH tier's verify) — identical
     output, kept for cross-tier comparability.
     """
-    if verify not in ("cells", "pairs"):
-        # fail loudly BEFORE the centroid count+collect jobs: a typo
-        # would otherwise silently fall through to the pair-gather
-        # branch, changing the physical plan the caller asked for
-        raise ValueError(f"unknown verify: {verify!r}")
+    _check_verify(verify, ("cells", "pairs"))
     if centroids is None:
         centroids = _default_centroids(
             df, k_cells, n_probe, id_col, vec_col

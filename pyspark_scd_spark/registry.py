@@ -1424,53 +1424,62 @@ def q_sim_search_topk(spark, sf_dir):
     return similarity.brute_force_topk(e, queries, k=10)
 
 
-def _lsh_cand_ctes(n_planes: int = 8, n_tables: int = 8,
+# ----------------------------------------------------------------------
+# Dense-family oracle pieces. Every kNN / hard-negative / near-dup oracle
+# is one candidate source (all pairs, LSH buckets or IVF cells) feeding
+# one consumer tail (near-dup verify, kNN vote, hard-negative rank)
+# over ``e(vec_id, label, v)``.
+# ----------------------------------------------------------------------
+
+_DENSE_E = """e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
+               FROM embeddings)"""
+
+# The rows of the ``cand(id_a, id_b)`` pairs as ``a`` and ``b``.
+_CAND_PAIRS = """cand JOIN e a ON a.vec_id = cand.id_a
+                    JOIN e b ON b.vec_id = cand.id_b"""
+
+
+def _all_pairs(ordered: bool) -> str:
+    """Every pair of ``e`` as ``a`` and ``b`` — the exact grid's
+    candidate set (each unordered pair once when ``ordered``)."""
+    return f"e a JOIN e b ON a.vec_id {'<' if ordered else '<>'} b.vec_id"
+
+
+def _lsh_buckets_sql(src: str, n_planes: int, n_tables: int) -> str:
+    """(vec_id, t, b) rows of ``src``: one sign-bit bucket per table,
+    the hyperplane constants inlined (seed 42 + t, as the engine)."""
+    from pyspark_scd_spark.operators.similarity import duckdb_bucket_sql
+
+    return "\n      UNION ALL ".join(
+        f"SELECT vec_id, {t} AS t, "
+        f"{duckdb_bucket_sql('v', 64, n_planes, seed=42 + t)} AS b "
+        f"FROM {src}"
+        for t in range(n_tables)
+    )
+
+
+def _lsh_cand_ctes(n_planes: int | None = 8, n_tables: int = 8,
                    ordered: bool = True) -> str:
-    """Shared oracle CTEs replaying lsh_candidates(multiprobe=True):
-    per-table sign-bit buckets (hyperplane constants inlined), one
-    side expanded to the Hamming<=1 probe set, DISTINCT co-bucketed
-    id pairs. XOR is symmetric, so expanding one side covers both."""
-    from pyspark_scd_spark.operators.similarity import duckdb_bucket_sql
+    """Oracle CTEs replaying lsh_candidates(multiprobe=True): per-table
+    sign-bit buckets, one side expanded to the Hamming<=1 probe set,
+    DISTINCT co-bucketed id pairs as ``cand(id_a, id_b)``. XOR is
+    symmetric, so expanding one side covers both.
 
-    per_table = "\n      UNION ALL ".join(
-        f"SELECT vec_id, {t} AS t, "
-        f"{duckdb_bucket_sql('v', 64, n_planes, seed=42 + t)} AS b FROM e"
-        for t in range(n_tables)
-    )
-    probes = ", ".join(["b"] + [f"xor(b, {1 << i})" for i in range(n_planes)])
-    op = "<" if ordered else "<>"
-    return f"""cb AS ({per_table}),
-    pb AS (SELECT vec_id, t, unnest([{probes}]) AS pb FROM cb),
-    cand AS (SELECT DISTINCT a.vec_id AS id_a, c.vec_id AS id_b
-             FROM pb a JOIN cb c ON a.t = c.t AND a.pb = c.b
-             WHERE a.vec_id {op} c.vec_id)"""
-
-
-def _lsh_cand_ctes_auto(n_tables: int = 8, ordered: bool = True) -> str:
-    """``_lsh_cand_ctes`` under the ``auto_planes`` rule (planes =
-    clamp(ceil(log2(n/32)), 4, 20) — similarity.auto_planes), with
-    the plane count computed IN SQL from the corpus count so one
-    static oracle stays correct at every scale factor. Works because
+    ``n_planes=None`` is the ``auto_planes`` rule (planes =
+    clamp(ceil(log2(n/32)), 4, 20)), computed IN SQL from the corpus
+    count so one static oracle stays correct at every scale factor.
     ``hyperplanes`` draws planes from ONE serial PRNG stream — the
-    first p planes of a 20-plane generation ARE the p-plane
-    generation — so the 20-plane bucket masks down to any p:
-    bucket_p = bucket_20 % 2^p. Multiprobe XOR probes generate for
-    i < p via a LATERAL range."""
-    from pyspark_scd_spark.operators.similarity import duckdb_bucket_sql
-
-    per_table = "\n      UNION ALL ".join(
-        f"SELECT vec_id, {t} AS t, "
-        f"{duckdb_bucket_sql('v', 64, 20, seed=42 + t)} AS b20 FROM e"
-        for t in range(n_tables)
+    first p planes of a 20-plane generation ARE the p-plane generation
+    — so the 20-plane bucket masks down to any p: bucket_p =
+    bucket_20 % 2^p (a no-op for a pinned plane count)."""
+    p = n_planes if n_planes is not None else (
+        "(SELECT GREATEST(4, LEAST(20, CAST(CEIL(LOG2("
+        "GREATEST(COUNT(*), 1) / 32.0)) AS INTEGER))) FROM e)"
     )
     op = "<" if ordered else "<>"
-    return f"""np AS (SELECT GREATEST(4, LEAST(20,
-                  CAST(CEIL(LOG2(GREATEST(COUNT(*), 1) / 32.0))
-                       AS INTEGER))) AS p
-            FROM e),
-    cb20 AS ({per_table}),
-    cb AS (SELECT vec_id, t, b20 % (CAST(1 AS BIGINT) << p) AS b
-           FROM cb20, np),
+    return f"""np AS (SELECT {p} AS p),
+    cb AS (SELECT vec_id, t, b % (CAST(1 AS BIGINT) << p) AS b
+           FROM ({_lsh_buckets_sql("e", n_planes or 20, n_tables)}), np),
     pb AS (SELECT vec_id, t,
                   CASE WHEN i.i = -1 THEN b
                        ELSE xor(b, (CAST(1 AS BIGINT) << i.i)) END AS pb
@@ -1498,70 +1507,130 @@ def _ivf_assign_sql(src: str, cent: str, cent_cell: str,
       FROM {src} s CROSS JOIN {cent} t) WHERE rn <= {n_probe})"""
 
 
-def _first_k_cent_sql(src: str, k_cells: int) -> str:
-    """The deterministic centroid seed CTE (first ``k_cells`` vectors
-    of ``src`` by id) — the rule _default_centroids implements."""
-    return f"""cent AS (SELECT CAST(ROW_NUMBER() OVER (ORDER BY vec_id) - 1
-                    AS INTEGER) AS c, v AS cv
-             FROM {src} ORDER BY vec_id LIMIT {k_cells})"""
-
-
-def _ivf_cand_ctes(k_cells: int = 8, n_probe: int = 2,
-                   ordered: bool = True) -> str:
-    """Shared oracle CTEs replaying ivf_candidates: first-k centroids
-    by id, top-``n_probe`` cell assignment (9dp-rounded cosine, ties
-    toward the larger cell — _ivf_cell_rows' exact rule), DISTINCT
-    same-cell id pairs. Expects an ``e(vec_id, v)`` CTE upstream."""
-    op = "<" if ordered else "<>"
-    return f"""{_first_k_cent_sql("e", k_cells)},
-    {_ivf_assign_sql("e", "cent", "c", "assign", n_probe)},
-    cand AS (SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-             FROM assign a JOIN assign b
-             ON a.c = b.c AND a.vec_id {op} b.vec_id)"""
-
-
-def _ivf_cand_ctes_auto(n_probe: int = 2, ordered: bool = True) -> str:
-    """``_ivf_cand_ctes`` with the balanced ``auto_cells`` rule
-    (k = probe·√n, clamped to [8, 65536] — similarity.auto_cells)
-    computed IN SQL from the corpus count, so one static oracle
-    string stays correct at every scale factor. DuckDB accepts a
-    scalar subquery as LIMIT; ROUND here and Python round() agree at
-    every integer n that can tie-break differently only if 2·√n hits
-    an exact .5 double (verified not to at the testdata SFs —
-    2·√n is irrational unless n is a perfect square, where it's an
-    even integer)."""
-    op = "<" if ordered else "<>"
-    k_sql = (
-        f"(SELECT GREATEST(8, LEAST(65536, "
-        f"CAST(ROUND({n_probe} * SQRT(COUNT(*))) AS BIGINT))) FROM e)"
+def _first_k_cent_sql(src: str, k_cells: int | None,
+                      n_probe: int = 2) -> str:
+    """The deterministic centroid seed CTE ``cent(c, cv)``: the first
+    ``k_cells`` vectors of ``src`` by id — the rule _default_centroids
+    implements. ``k_cells=None`` is the balanced ``auto_cells`` rule
+    (k = probe·√n, clamped to [8, 65536]) computed IN SQL from the
+    count of ``src``; DuckDB accepts a scalar subquery as LIMIT. SQL
+    ROUND and Python round() could disagree only where probe·√n is an
+    exact .5 — 2·√n is irrational unless n is a perfect square, where
+    it is an even integer."""
+    k = k_cells if k_cells is not None else (
+        f"(SELECT GREATEST(8, LEAST(65536, CAST(ROUND({n_probe} * "
+        f"SQRT(COUNT(*))) AS BIGINT))) FROM {src})"
     )
     return f"""cent AS (SELECT CAST(ROW_NUMBER() OVER (ORDER BY vec_id) - 1
                     AS INTEGER) AS c, v AS cv
-             FROM e ORDER BY vec_id LIMIT {k_sql}),
-    {_ivf_assign_sql("e", "cent", "c", "assign", n_probe)},
+             FROM {src} ORDER BY vec_id LIMIT {k})"""
+
+
+def _ivf_cand_ctes(k_cells: int | None = 8, n_probe: int = 2,
+                   ordered: bool = True, seed: bool = True) -> str:
+    """Oracle CTEs replaying ivf_candidates: first-k centroids by id
+    (``_first_k_cent_sql``; ``seed=False`` uses an upstream
+    ``cent(c, cv)`` table instead, e.g. trained centroids), top-
+    ``n_probe`` cell assignment, DISTINCT same-cell id pairs as
+    ``cand(id_a, id_b)``. Expects an ``e(vec_id, v)`` CTE upstream."""
+    op = "<" if ordered else "<>"
+    cent = f"{_first_k_cent_sql('e', k_cells, n_probe)},\n    " if seed else ""
+    return f"""{cent}{_ivf_assign_sql("e", "cent", "c", "assign", n_probe)},
     cand AS (SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
              FROM assign a JOIN assign b
              ON a.c = b.c AND a.vec_id {op} b.vec_id)"""
 
 
-def _sim_search_lsh_oracle() -> str:
+def _neardup_verify_sql(pairs: str, name: str = "nd") -> str:
+    """``name(id_a, id_b, cosine)``: the near-dup verify over the
+    ``pairs`` rows — exact cosine at 4 dp, kept at >= 0.3 on the
+    rounded value."""
+    return f"""{name} AS (SELECT * FROM (
+      SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+             ROUND(list_cosine_similarity(a.v, b.v), 4) AS cosine
+      FROM {pairs}) WHERE cosine >= 0.3)"""
+
+
+def _neardup_tail(pairs: str) -> str:
+    return f"""{_neardup_verify_sql(pairs)}
+    SELECT id_a, id_b, cosine FROM nd"""
+
+
+def _ranked_sql(pairs: str, cross_label: bool) -> str:
+    """``r``: each anchor's candidate neighbors ranked ``rk`` by cosine
+    at 6 dp DESC, then id ASC; ``cross_label`` masks same-label
+    pairs (the hard-negative rank)."""
+    where = "\n          WHERE a.label <> b.label" if cross_label else ""
+    return f"""s AS (SELECT a.vec_id AS vec_id, a.label AS label,
+                 b.vec_id AS nid, b.label AS nlabel,
+                 ROUND(list_cosine_similarity(a.v, b.v), 6) AS c
+          FROM {pairs}{where}),
+    r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
+                    ORDER BY c DESC, nid ASC) AS rk FROM s)"""
+
+
+def _knn_vote_tail(pairs: str, k: int = 5) -> str:
+    """Majority label among each anchor's top-``k`` neighbors, ties
+    toward the smaller label."""
+    return f"""{_ranked_sql(pairs, cross_label=False)},
+    v AS (SELECT vec_id, label, nlabel, COUNT(*) AS votes
+          FROM r WHERE rk <= {k} GROUP BY 1, 2, 3),
+    p AS (SELECT vec_id, label, nlabel AS predicted_label, votes,
+                 ROW_NUMBER() OVER (PARTITION BY vec_id
+                 ORDER BY votes DESC, nlabel ASC) AS pr FROM v)
+    SELECT vec_id, label, predicted_label,
+           CAST(votes AS INTEGER) AS n_agree,
+           predicted_label <> label AS mislabeled
+    FROM p WHERE pr = 1"""
+
+
+def _hardneg_tail(pairs: str, k: int = 3) -> str:
+    """Each anchor's top-``k`` different-label neighbors, cosine
+    emitted at 4 dp."""
+    return f"""{_ranked_sql(pairs, cross_label=True)}
+    SELECT vec_id, label, nid AS neg_id, nlabel AS neg_label,
+           ROUND(c, 4) AS cosine, CAST(rk AS INTEGER) AS rank
+    FROM r WHERE rk <= {k}"""
+
+
+def _semantic_clusters_oracle(cand_ctes: str) -> str:
+    """Near-dup verify over ``cand_ctes``' pairs, closed into connected
+    components by a recursive CTE (component id = smallest member)."""
+    return f"""
+    WITH RECURSIVE {_DENSE_E},
+    {cand_ctes},
+    {_neardup_verify_sql(_CAND_PAIRS)},
+    edges AS (SELECT id_a AS a, id_b AS b FROM nd
+              UNION SELECT id_b, id_a FROM nd),
+    reach AS (SELECT a, b FROM edges
+              UNION
+              SELECT r.a, e2.b FROM reach r JOIN edges e2 ON r.b = e2.a)
+    SELECT vec_id, cluster_id,
+           CAST(COUNT(*) OVER (PARTITION BY cluster_id) AS BIGINT)
+             AS cluster_size
+    FROM (SELECT a AS vec_id, LEAST(a, MIN(b)) AS cluster_id
+          FROM reach GROUP BY a)
+    """
+
+
+def _sim_search_lsh_oracle(multiprobe: bool = False) -> str:
     """DuckDB twin of lsh_bucketed_topk(dim=64, k=5, n_planes=6,
     n_tables=3): the hyperplane constants inline as literals, so the
     oracle derives the IDENTICAL candidate set and re-rank — ANN made
-    exact-checkable because its randomness is deterministic."""
-    from pyspark_scd_spark.operators.similarity import duckdb_bucket_sql
-
-    per_table = "\n      UNION ALL ".join(
-        f"SELECT vec_id, {t} AS t, "
-        f"{duckdb_bucket_sql('v', 64, 6, seed=42 + t)} AS b FROM e"
-        for t in range(3)
-    )
+    exact-checkable because its randomness is deterministic. With
+    ``multiprobe`` the query side's (t, b) keys expand to the
+    Hamming<=1 probe set before the bucket join."""
+    b = "b"
+    if multiprobe:
+        probes = ", ".join(["b"] + [f"xor(b, {1 << i})" for i in range(6)])
+        b = f"unnest([{probes}])"
     return f"""
     WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
                FROM embeddings),
     q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 20),
-    cb AS ({per_table}),
-    qb AS (SELECT vec_id AS query_id, t, b FROM cb WHERE vec_id < 20),
+    cb AS ({_lsh_buckets_sql("e", 6, 3)}),
+    qb AS (SELECT vec_id AS query_id, t, {b} AS b
+           FROM cb WHERE vec_id < 20),
     cand AS (SELECT DISTINCT qb.query_id, cb.vec_id
              FROM qb JOIN cb ON qb.t = cb.t AND qb.b = cb.b),
     scored AS (SELECT c.query_id, c.vec_id,
@@ -1593,30 +1662,6 @@ def q_sim_search_lsh(spark, sf_dir):
         F.col("vec_id").alias("query_id"), "embedding"
     )
     return similarity.lsh_bucketed_topk(e, queries, dim=64, k=5, n_planes=6)
-
-
-@register(
-    "embedding_neardup_pairs",
-    """
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-               FROM embeddings)
-    SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-           ROUND(list_cosine_similarity(a.v, b.v), 4) AS cosine
-    FROM e a JOIN e b ON a.vec_id < b.vec_id
-    WHERE ROUND(list_cosine_similarity(a.v, b.v), 4) >= 0.3
-    """,
-    doc="Semantic near-dup pairs, cosine >= 0.3, via the blocked BLAS "
-    "pair GRID: corpus packed into chunk rows, upper-triangle block "
-    "self-join, one dense matmul per cell — exact, and never "
-    "materialized on the driver or broadcast corpus-wide; threshold "
-    "applies to the 4dp-rounded value so backends agree "
-    "(operators/similarity.py embedding_neardup_pairs_grid).",
-)
-def q_embedding_neardup_pairs(spark, sf_dir):
-    from pyspark_scd_spark.operators import similarity
-
-    e = _t(spark, sf_dir, "embeddings")
-    return similarity.embedding_neardup_pairs_grid(e, threshold=0.3)
 
 
 @register(
@@ -4950,43 +4995,6 @@ def q_corpus_release(spark, sf_dir):
 
 
 @register(
-    "knn_label_vote",
-    """
-    WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
-               FROM embeddings),
-    s AS (SELECT a.vec_id AS vec_id, a.label AS label,
-                 b.vec_id AS nid, b.label AS nlabel,
-                 ROUND(list_cosine_similarity(a.v, b.v), 6) AS c
-          FROM e a JOIN e b ON a.vec_id <> b.vec_id),
-    r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                    ORDER BY c DESC, nid ASC) AS rk FROM s),
-    v AS (SELECT vec_id, label, nlabel, COUNT(*) AS votes
-          FROM r WHERE rk <= 5 GROUP BY 1, 2, 3),
-    p AS (SELECT vec_id, label, nlabel AS predicted_label, votes,
-                 ROW_NUMBER() OVER (PARTITION BY vec_id
-                 ORDER BY votes DESC, nlabel ASC) AS pr FROM v)
-    SELECT vec_id, label, predicted_label,
-           CAST(votes AS INTEGER) AS n_agree,
-           predicted_label <> label AS mislabeled
-    FROM p WHERE pr = 1
-    """,
-    doc="kNN label-consistency audit (k=5): majority label among each "
-    "vector's nearest cosine neighbors, self excluded — disagreements "
-    "are candidate annotation errors. Blocked pair GRID: per-cell "
-    "dense matmuls emit local top-k candidates (lossless under the "
-    "total order), global merge + vote as window/groupBy plans — no "
-    "driver collect, no corpus broadcast; deterministic ranking "
-    "(cosine 6dp DESC, id ASC) and tie-break (smaller label) mirrored "
-    "in the oracle (operators/similarity.py knn_label_vote_grid).",
-)
-def q_knn_label_vote(spark, sf_dir):
-    from pyspark_scd_spark.operators import similarity
-
-    e = _t(spark, sf_dir, "embeddings")
-    return similarity.knn_label_vote_grid(e, k=5)
-
-
-@register(
     "doc_chunk_windows",
     f"""
     WITH t AS (SELECT doc_id, {_TOKS_SQL} AS toks FROM documents),
@@ -6479,36 +6487,6 @@ def q22_idle_balance(spark, sf_dir):
 
 
 @register(
-    "hard_negative_mining",
-    """
-    WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
-               FROM embeddings),
-    s AS (SELECT a.vec_id AS vec_id, a.label AS label,
-                 b.vec_id AS neg_id, b.label AS neg_label,
-                 ROUND(list_cosine_similarity(a.v, b.v), 6) AS c
-          FROM e a JOIN e b ON a.label <> b.label),
-    r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                    ORDER BY c DESC, neg_id ASC) AS rank FROM s)
-    SELECT vec_id, label, neg_id, neg_label,
-           ROUND(c, 4) AS cosine, CAST(rank AS INTEGER) AS rank
-    FROM r WHERE rank <= 3
-    """,
-    doc="Contrastive-training hard negatives: top-3 most-similar "
-    "different-label vectors per anchor via the blocked pair GRID "
-    "with same-label columns masked per cell — local top-k per "
-    "(anchor-block, corpus-block), lossless global window merge; no "
-    "driver collect, no corpus broadcast. Ranking at 6 dp (cosine "
-    "DESC, neg_id ASC), emitted cosine at 4 dp, both mirrored in the "
-    "oracle (operators/similarity.py hard_negative_mining_grid).",
-)
-def q_hard_negative_mining(spark, sf_dir):
-    from pyspark_scd_spark.operators import similarity
-
-    e = _t(spark, sf_dir, "embeddings")
-    return similarity.hard_negative_mining_grid(e, k=3)
-
-
-@register(
     "graph_triangle_count",
     """
     WITH su AS (SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem
@@ -7447,42 +7425,14 @@ def q_scd_asof_lookup(spark, sf_dir):
     )
 
 
-@register(
-    "dedup_semantic_clusters",
-    f"""
-    WITH RECURSIVE e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-               FROM embeddings),
-    {_lsh_cand_ctes(ordered=True)},
-    pairs AS (SELECT id_a AS doc_a, id_b AS doc_b FROM cand
-              JOIN e ea ON ea.vec_id = cand.id_a
-              JOIN e eb ON eb.vec_id = cand.id_b
-              WHERE ROUND(list_cosine_similarity(ea.v, eb.v), 4) >= 0.3),
-    edges AS (SELECT doc_a AS a, doc_b AS b FROM pairs
-              UNION SELECT doc_b, doc_a FROM pairs),
-    reach AS (SELECT a, b FROM edges
-              UNION
-              SELECT r.a, e2.b FROM reach r JOIN edges e2 ON r.b = e2.a)
-    SELECT vec_id, cluster_id,
-           CAST(COUNT(*) OVER (PARTITION BY cluster_id) AS BIGINT)
-             AS cluster_size
-    FROM (SELECT a AS vec_id, LEAST(a, MIN(b)) AS cluster_id
-          FROM reach GROUP BY a)
-    """,
-    doc="Semantic (embedding) near-dup clusters over the ANN tier — "
-    "the 100 TB default path: multi-probe LSH candidates + exact "
-    "cosine verify (embedding_neardup_pairs_ann) closed into "
-    "connected components. The transitive closure partially absorbs "
-    "candidate-tier misses (a missed a-b edge still clusters via "
-    "a-c-b); the exact grid twin remains available for bounded "
-    "subsets. Oracle replays candidates, verify and a recursive-CTE "
-    "closure.",
-)
-def q_dedup_semantic_clusters(spark, sf_dir):
+def _semantic_clusters(spark, sf_dir, pairs_op: str, **index_kwargs):
+    """Near-dup pairs from ``similarity.<pairs_op>`` closed into
+    connected components, with each component's size."""
     from pyspark_scd_spark.operators import dedup, similarity
 
     e = _t(spark, sf_dir, "embeddings")
-    pairs = similarity.embedding_neardup_pairs_ann(
-        e, threshold=0.3, dim=64, n_planes=8, n_tables=8
+    pairs = getattr(similarity, pairs_op)(
+        e, threshold=0.3, **index_kwargs
     ).select("id_a", "id_b")
     cc = dedup.connected_components(
         pairs, src_col="id_a", dst_col="id_b",
@@ -7495,6 +7445,25 @@ def q_dedup_semantic_clusters(spark, sf_dir):
         F.col("id_a").alias("vec_id"),
         F.col("component").alias("cluster_id"),
         "cluster_size",
+    )
+
+
+@register(
+    "dedup_semantic_clusters",
+    _semantic_clusters_oracle(_lsh_cand_ctes(ordered=True)),
+    doc="Semantic (embedding) near-dup clusters over the ANN tier — "
+    "the 100 TB default path: multi-probe LSH candidates + exact "
+    "cosine verify (embedding_neardup_pairs_ann) closed into "
+    "connected components. The transitive closure partially absorbs "
+    "candidate-tier misses (a missed a-b edge still clusters via "
+    "a-c-b); the exact grid twin remains available for bounded "
+    "subsets. Oracle replays candidates, verify and a recursive-CTE "
+    "closure.",
+)
+def q_dedup_semantic_clusters(spark, sf_dir):
+    return _semantic_clusters(
+        spark, sf_dir, "embedding_neardup_pairs_ann",
+        dim=64, n_planes=8, n_tables=8,
     )
 
 
@@ -8897,175 +8866,229 @@ def q_retrieval_disagreement(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# ANN candidate generation + exact re-rank (the dense tier's scale path)
+# The dense kNN / hard-negative / near-dup family: one candidate source per
+# index (exact grid, LSH buckets, IVF cells) times one tail per consumer.
+# An index parameter of None is the scale form (auto_planes / auto_cells),
+# computed from the corpus count in both engines.
 # ---------------------------------------------------------------------------
 
+# consumer -> (operator/registry name prefix, ordered pairs, oracle tail,
+#              operator arguments)
+_DENSE_CONSUMERS = {
+    "neardup": ("embedding_neardup_pairs", True, _neardup_tail,
+                {"threshold": 0.3}),
+    "knn": ("knn_label_vote", False, _knn_vote_tail, {"k": 5}),
+    "hardneg": ("hard_negative_mining", False, _hardneg_tail, {"k": 3}),
+}
 
-def _neardup_ann_oracle() -> str:
+# index -> (operator suffix, oracle candidate CTEs, index arguments)
+_DENSE_INDEXES = {
+    "grid": ("grid", None, lambda p: {}),
+    "lsh": ("ann", _lsh_cand_ctes,
+            lambda p: {"dim": 64, "n_planes": p, "n_tables": 8}),
+    "ivf": ("ivf", _ivf_cand_ctes,
+            lambda p: {"k_cells": p, "n_probe": 2}),
+}
+
+
+def _dense_oracle(consumer: str, index: str, param: int | None) -> str:
+    _, ordered, tail, _ = _DENSE_CONSUMERS[consumer]
+    cand_ctes = _DENSE_INDEXES[index][1]
+    if cand_ctes is None:
+        body = tail(_all_pairs(ordered))
+    else:
+        body = f"{cand_ctes(param, ordered=ordered)},\n    {tail(_CAND_PAIRS)}"
     return f"""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-               FROM embeddings),
-    {_lsh_cand_ctes(ordered=True)},
-    j AS (SELECT id_a, id_b,
-                 ROUND(list_cosine_similarity(ea.v, eb.v), 4) AS cosine
-          FROM cand JOIN e ea ON ea.vec_id = cand.id_a
-                    JOIN e eb ON eb.vec_id = cand.id_b)
-    SELECT id_a, id_b, cosine FROM j WHERE cosine >= 0.3
+    WITH {_DENSE_E},
+    {body}
     """
 
 
-@register(
-    "embedding_neardup_pairs_ann",
-    _neardup_ann_oracle(),
-    doc="Semantic near-dup pairs, ANN tier — the 100 TB default path "
-    "for the dense quartet: multi-probe hyperplane LSH candidates "
-    "(8 tables x 8 planes, Hamming<=1) -> exact cosine verify >= 0.3 "
-    "on the 4dp-rounded value (operators/similarity.py "
-    "embedding_neardup_pairs_ann). Candidate volume is "
-    "O(n*bucket*tables) with auto_planes, vs the grid twin's O(n^2) "
-    "matmul; the hyperplanes are deterministic constants, so the "
-    "FULL composition (candidates AND verify) replays in oracle SQL. "
-    "Recall vs the exact twin is measured per cosine band by "
-    "ann_pair_recall_report.",
-)
-def q_embedding_neardup_pairs_ann(spark, sf_dir):
-    from pyspark_scd_spark.operators import similarity
+def _dense_builder(consumer: str, index: str, param: int | None):
+    prefix, _, _, kwargs = _DENSE_CONSUMERS[consumer]
+    suffix, _, index_kwargs = _DENSE_INDEXES[index]
 
-    e = _t(spark, sf_dir, "embeddings")
-    return similarity.embedding_neardup_pairs_ann(
-        e, threshold=0.3, dim=64, n_planes=8, n_tables=8
+    def build(spark, sf_dir):
+        from pyspark_scd_spark.operators import similarity
+
+        e = _t(spark, sf_dir, "embeddings")
+        return getattr(similarity, f"{prefix}_{suffix}")(
+            e, **kwargs, **index_kwargs(param)
+        )
+
+    return build
+
+
+# (name, consumer, index, index parameter, doc)
+for _name, _consumer, _index, _param, _doc in (
+    (
+        "embedding_neardup_pairs", "neardup", "grid", None,
+        "Semantic near-dup pairs, cosine >= 0.3, via the blocked BLAS "
+        "pair GRID: corpus packed into chunk rows, upper-triangle block "
+        "self-join, one dense matmul per cell — exact, and never "
+        "materialized on the driver or broadcast corpus-wide; threshold "
+        "applies to the 4dp-rounded value so backends agree "
+        "(operators/similarity.py embedding_neardup_pairs_grid).",
+    ),
+    (
+        "embedding_neardup_pairs_ann", "neardup", "lsh", 8,
+        "Semantic near-dup pairs, ANN tier — the 100 TB default path "
+        "for the dense quartet: multi-probe hyperplane LSH candidates "
+        "(8 tables x 8 planes, Hamming<=1) -> exact cosine verify >= 0.3 "
+        "on the 4dp-rounded value (operators/similarity.py "
+        "embedding_neardup_pairs_ann). Candidate volume is "
+        "O(n*bucket*tables) with auto_planes, vs the grid twin's O(n^2) "
+        "matmul; the hyperplanes are deterministic constants, so the "
+        "FULL composition (candidates AND verify) replays in oracle SQL. "
+        "Recall vs the exact twin is measured per cosine band by "
+        "ann_pair_recall_report.",
+    ),
+    (
+        "embedding_neardup_pairs_ann_auto", "neardup", "lsh", None,
+        "embedding_neardup_pairs_ann under the auto_planes rule "
+        "(planes = clamp(ceil(log2(n/32)), 4, 20)) — the LSH tier's "
+        "SCALE form: growing planes with log2(n) keeps bucket population "
+        "(and per-row candidate work) constant, making the tier "
+        "O(n*tables) where the pinned-planes parity form's candidate "
+        "FRACTION is constant (quadratic pair work). One static oracle "
+        "covers every scale factor because the hyperplane PRNG stream is "
+        "prefix-stable: the 20-plane bucket masks to any p via "
+        "b20 % 2^p, with p computed from the corpus count in SQL.",
+    ),
+    (
+        "embedding_neardup_pairs_ivf", "neardup", "ivf", 8,
+        "Semantic near-dup pairs, IVF tier (operators/similarity.py "
+        "embedding_neardup_pairs_ivf): top-2 centroid-cell assignment "
+        "(9dp-rounded cosine, ties toward the larger cell), candidates = "
+        "same-cell pairs, exact cosine verify >= 0.3 at 4dp. Under the "
+        "balanced auto_cells rule (k = probe*sqrt(n)) assignment plus "
+        "within-cell dense verify total O(n^1.5*d) — vs the exact "
+        "grid's O(n^2*d) and hyperplane LSH, whose candidate density on "
+        "clustered corpora stays near-quadratic (round-4 SCALING study, "
+        "100k x 64d: LSH emitted 175M candidates — 3.5% of all pairs — "
+        "and ran 8x slower than the exact grid itself; measured walls "
+        "and the n where each tier wins are in SCALING.md). Centroids "
+        "here are the first 8 vectors (deterministic, oracle-replayable "
+        "— k pinned so the oracle SQL stays static); kmeans_train "
+        "output composes for tighter cells.",
+    ),
+    (
+        "embedding_neardup_pairs_ivf_auto", "neardup", "ivf", None,
+        "embedding_neardup_pairs_ivf under the balanced auto_cells "
+        "rule (k = probe*sqrt(n), operators/similarity.py auto_cells) — "
+        "the SCALE form of the IVF tier, where assignment O(n*k*d) and "
+        "within-cell verify O(n*(n/k)*probe^2*d) equalize at O(n^1.5*d). "
+        "The pinned-k=8 sibling stays registered as the parity form "
+        "(static small-k oracle); this entry computes k from the corpus "
+        "count in BOTH engines (scalar-subquery LIMIT on the oracle "
+        "side), so the benched x10 tier finally measures the sub-linear "
+        "path the round-4 study validated, not the quadratic-in-cell "
+        "parity pin.",
+    ),
+    (
+        "knn_label_vote", "knn", "grid", None,
+        "kNN label-consistency audit (k=5): majority label among each "
+        "vector's nearest cosine neighbors, self excluded — disagreements "
+        "are candidate annotation errors. Blocked pair GRID: per-cell "
+        "dense matmuls emit local top-k candidates (lossless under the "
+        "total order), global merge + vote as window/groupBy plans — no "
+        "driver collect, no corpus broadcast; deterministic ranking "
+        "(cosine 6dp DESC, id ASC) and tie-break (smaller label) mirrored "
+        "in the oracle (operators/similarity.py knn_label_vote_grid).",
+    ),
+    (
+        "knn_label_vote_ann", "knn", "lsh", 8,
+        "kNN label-consistency audit, ANN tier (operators/similarity"
+        ".py knn_label_vote_ann): neighbor candidates from multi-probe "
+        "LSH (8x8, Hamming<=1) instead of the exact all-pairs grid, then "
+        "the identical exact-cosine top-5 re-rank, majority vote and "
+        "tie-breaks as knn_label_vote. Per-anchor candidate work is "
+        "O(bucket*tables) — the shape that survives 100x corpus growth.",
+    ),
+    (
+        "knn_label_vote_ann_auto", "knn", "lsh", None,
+        "knn_label_vote_ann under auto_planes (planes = "
+        "clamp(ceil(log2(n/32)), 4, 20), prefix-stable hyperplane "
+        "stream: bucket_p = bucket_20 % 2^p with p from COUNT(*) in "
+        "SQL) — the LSH tier's scale form for the directed kNN audit: "
+        "bucket population stays ~constant as n grows, so per-anchor "
+        "candidate work is O(bucket*tables) at any scale. Same vote and "
+        "tie-break contract as the pinned parity form.",
+    ),
+    (
+        "knn_label_vote_ivf", "knn", "ivf", 8,
+        "kNN label-consistency audit, IVF tier (operators/similarity"
+        ".py knn_label_vote_ivf): directed same-cell candidates instead "
+        "of LSH buckets, then the identical exact-cosine top-5 re-rank, "
+        "majority vote and tie-breaks as knn_label_vote. The candidate "
+        "generator the round-4 study promotes for clustered corpora — "
+        "per-anchor candidate work ~probe^2*sqrt(n) under balanced "
+        "auto_cells (k pinned to 8 here for the static oracle); the LSH "
+        "twin stays registered for corpora without centroid structure.",
+    ),
+    (
+        "knn_label_vote_ivf_auto", "knn", "ivf", None,
+        "knn_label_vote_ivf under the balanced auto_cells rule — the "
+        "scale form of the directed IVF audit (per-anchor candidate work "
+        "~probe^2*sqrt(n) instead of the pinned-k=8 parity form's n/8 "
+        "cell population). Same vote/tie-break contract; k computed from "
+        "the corpus count in both engines.",
+    ),
+    (
+        "hard_negative_mining", "hardneg", "grid", None,
+        "Contrastive-training hard negatives: top-3 most-similar "
+        "different-label vectors per anchor via the blocked pair GRID "
+        "with same-label columns masked per cell — local top-k per "
+        "(anchor-block, corpus-block), lossless global window merge; no "
+        "driver collect, no corpus broadcast. Ranking at 6 dp (cosine "
+        "DESC, neg_id ASC), emitted cosine at 4 dp, both mirrored in the "
+        "oracle (operators/similarity.py hard_negative_mining_grid).",
+    ),
+    (
+        "hard_negative_mining_ann", "hardneg", "lsh", 8,
+        "Contrastive hard negatives, ANN tier (operators/similarity"
+        ".py hard_negative_mining_ann): multi-probe LSH candidates with "
+        "same-label pairs masked, exact-cosine top-3 re-rank per anchor "
+        "— ranking at 6dp (cosine DESC, id ASC), emitted cosine 4dp "
+        "half-away, the exact twin's contract. The hard-negative use "
+        "case needs the MOST similar cross-label rows, exactly where "
+        "LSH recall concentrates.",
+    ),
+    (
+        "hard_negative_mining_ivf", "hardneg", "ivf", 8,
+        "Contrastive hard negatives, IVF tier (operators/similarity"
+        ".py hard_negative_mining_ivf): directed same-cell candidates "
+        "with same-label pairs masked, exact-cosine top-3 re-rank per "
+        "anchor — ranking at 6dp (cosine DESC, id ASC), emitted cosine "
+        "4dp half-away, the exact twin's contract. Hard negatives are "
+        "the MOST similar cross-label rows; on clustered corpora those "
+        "share a centroid cell by construction.",
+    ),
+    (
+        "hard_negative_mining_ivf_auto", "hardneg", "ivf", None,
+        "hard_negative_mining_ivf under the balanced auto_cells rule "
+        "(k = probe*sqrt(n)) — completes the IVF auto family: every "
+        "IVF consumer now has a benched scale form whose index "
+        "parameter is computed from the corpus count in both engines "
+        "(the LSH hard-negative tier has no auto form). "
+        "Same masking/ranking contract as the pinned parity form.",
+    ),
+):
+    register(_name, _dense_oracle(_consumer, _index, _param), doc=_doc)(
+        _dense_builder(_consumer, _index, _param)
     )
 
 
 @register(
-    "embedding_neardup_pairs_ann_auto",
+    "ann_pair_recall_report",
     f"""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-               FROM embeddings),
-    {_lsh_cand_ctes_auto(ordered=True)},
-    j AS (SELECT id_a, id_b,
-                 ROUND(list_cosine_similarity(ea.v, eb.v), 4) AS cosine
-          FROM cand JOIN e ea ON ea.vec_id = cand.id_a
-                    JOIN e eb ON eb.vec_id = cand.id_b)
-    SELECT id_a, id_b, cosine FROM j WHERE cosine >= 0.3
-    """,
-    doc="embedding_neardup_pairs_ann under the auto_planes rule "
-    "(planes = clamp(ceil(log2(n/32)), 4, 20)) — the LSH tier's "
-    "SCALE form: growing planes with log2(n) keeps bucket population "
-    "(and per-row candidate work) constant, making the tier "
-    "O(n*tables) where the pinned-planes parity form's candidate "
-    "FRACTION is constant (quadratic pair work). One static oracle "
-    "covers every scale factor because the hyperplane PRNG stream is "
-    "prefix-stable: the 20-plane bucket masks to any p via "
-    "b20 % 2^p, with p computed from the corpus count in SQL.",
-)
-def q_embedding_neardup_pairs_ann_auto(spark, sf_dir):
-    from pyspark_scd_spark.operators import similarity
-
-    e = _t(spark, sf_dir, "embeddings")
-    return similarity.embedding_neardup_pairs_ann(
-        e, threshold=0.3, dim=64, n_planes=None, n_tables=8
-    )
-
-
-def _knn_ann_oracle() -> str:
-    return f"""
-    WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
-               FROM embeddings),
-    {_lsh_cand_ctes(ordered=False)},
-    s AS (SELECT cand.id_a AS vec_id, ea.label AS label,
-                 cand.id_b AS nid, eb.label AS nlabel,
-                 ROUND(list_cosine_similarity(ea.v, eb.v), 6) AS c
-          FROM cand JOIN e ea ON ea.vec_id = cand.id_a
-                    JOIN e eb ON eb.vec_id = cand.id_b),
-    r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                    ORDER BY c DESC, nid ASC) AS rk FROM s),
-    v AS (SELECT vec_id, label, nlabel, COUNT(*) AS votes
-          FROM r WHERE rk <= 5 GROUP BY 1, 2, 3),
-    p AS (SELECT vec_id, label, nlabel AS predicted_label, votes,
-                 ROW_NUMBER() OVER (PARTITION BY vec_id
-                 ORDER BY votes DESC, nlabel ASC) AS pr FROM v)
-    SELECT vec_id, label, predicted_label,
-           CAST(votes AS INTEGER) AS n_agree,
-           predicted_label <> label AS mislabeled
-    FROM p WHERE pr = 1
-    """
-
-
-@register(
-    "knn_label_vote_ann",
-    _knn_ann_oracle(),
-    doc="kNN label-consistency audit, ANN tier (operators/similarity"
-    ".py knn_label_vote_ann): neighbor candidates from multi-probe "
-    "LSH (8x8, Hamming<=1) instead of the exact all-pairs grid, then "
-    "the identical exact-cosine top-5 re-rank, majority vote and "
-    "tie-breaks as knn_label_vote. Per-anchor candidate work is "
-    "O(bucket*tables) — the shape that survives 100x corpus growth.",
-)
-def q_knn_label_vote_ann(spark, sf_dir):
-    from pyspark_scd_spark.operators import similarity
-
-    e = _t(spark, sf_dir, "embeddings")
-    return similarity.knn_label_vote_ann(
-        e, k=5, dim=64, n_planes=8, n_tables=8
-    )
-
-
-def _hardneg_ann_oracle() -> str:
-    return f"""
-    WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
-               FROM embeddings),
-    {_lsh_cand_ctes(ordered=False)},
-    s AS (SELECT cand.id_a AS vec_id, ea.label AS label,
-                 cand.id_b AS neg_id, eb.label AS neg_label,
-                 ROUND(list_cosine_similarity(ea.v, eb.v), 6) AS c
-          FROM cand JOIN e ea ON ea.vec_id = cand.id_a
-                    JOIN e eb ON eb.vec_id = cand.id_b
-          WHERE ea.label <> eb.label),
-    r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                    ORDER BY c DESC, neg_id ASC) AS rank FROM s)
-    SELECT vec_id, label, neg_id, neg_label,
-           ROUND(c, 4) AS cosine, CAST(rank AS INTEGER) AS rank
-    FROM r WHERE rank <= 3
-    """
-
-
-@register(
-    "hard_negative_mining_ann",
-    _hardneg_ann_oracle(),
-    doc="Contrastive hard negatives, ANN tier (operators/similarity"
-    ".py hard_negative_mining_ann): multi-probe LSH candidates with "
-    "same-label pairs masked, exact-cosine top-3 re-rank per anchor "
-    "— ranking at 6dp (cosine DESC, id ASC), emitted cosine 4dp "
-    "half-away, the exact twin's contract. The hard-negative use "
-    "case needs the MOST similar cross-label rows, exactly where "
-    "LSH recall concentrates.",
-)
-def q_hard_negative_mining_ann(spark, sf_dir):
-    from pyspark_scd_spark.operators import similarity
-
-    e = _t(spark, sf_dir, "embeddings")
-    return similarity.hard_negative_mining_ann(
-        e, k=3, dim=64, n_planes=8, n_tables=8
-    )
-
-
-def _ann_pair_recall_oracle() -> str:
-    return f"""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-               FROM embeddings),
-    exact AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-                     ROUND(list_cosine_similarity(a.v, b.v), 4) AS cosine
-              FROM e a JOIN e b ON a.vec_id < b.vec_id
-              WHERE ROUND(list_cosine_similarity(a.v, b.v), 4) >= 0.3),
+    WITH {_DENSE_E},
+    {_neardup_verify_sql(_all_pairs(ordered=True), "exact")},
     {_lsh_cand_ctes(ordered=True)},
-    ann AS (SELECT id_a, id_b FROM cand
-            JOIN e ea ON ea.vec_id = cand.id_a
-            JOIN e eb ON eb.vec_id = cand.id_b
-            WHERE ROUND(list_cosine_similarity(ea.v, eb.v), 4) >= 0.3),
-    j AS (SELECT CAST(CASE WHEN cosine < 0.35 THEN 0.30
-                      WHEN cosine < 0.40 THEN 0.35
-                      WHEN cosine < 0.45 THEN 0.40
+    {_neardup_verify_sql(_CAND_PAIRS, "ann")},
+    j AS (SELECT CAST(CASE WHEN exact.cosine < 0.35 THEN 0.30
+                      WHEN exact.cosine < 0.40 THEN 0.35
+                      WHEN exact.cosine < 0.45 THEN 0.40
                       ELSE 0.45 END AS DOUBLE) AS band_lo,
                  CASE WHEN ann.id_a IS NULL THEN 0 ELSE 1 END AS hit
           FROM exact LEFT JOIN ann USING (id_a, id_b))
@@ -9073,12 +9096,7 @@ def _ann_pair_recall_oracle() -> str:
            CAST(SUM(hit) AS BIGINT) AS n_hit,
            ROUND(SUM(hit) * 1.0 / COUNT(*), 6) AS recall
     FROM j GROUP BY band_lo
-    """
-
-
-@register(
-    "ann_pair_recall_report",
-    _ann_pair_recall_oracle(),
+    """,
     doc="Recall of the ANN pair tier vs the exact grid twin, per "
     "cosine band (operators/similarity.py ann_pair_recall_report) — "
     "the measurement that justifies making ANN the default path. "
@@ -9235,45 +9253,9 @@ def q_dsir_importance_rank(spark, sf_dir):
     )
 
 
-def _sim_search_lsh_mp_oracle() -> str:
-    """DuckDB twin of lsh_bucketed_topk(multiprobe=True): the query
-    side's (t, b) keys expand to the Hamming<=1 probe set before the
-    bucket join; candidate set and re-rank replay exactly."""
-    from pyspark_scd_spark.operators.similarity import duckdb_bucket_sql
-
-    n_planes, n_tables = 6, 3
-    per_table = "\n      UNION ALL ".join(
-        f"SELECT vec_id, {t} AS t, "
-        f"{duckdb_bucket_sql('v', 64, n_planes, seed=42 + t)} AS b FROM e"
-        for t in range(n_tables)
-    )
-    probes = ", ".join(
-        ["b"] + [f"xor(b, {1 << i})" for i in range(n_planes)]
-    )
-    return f"""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-               FROM embeddings),
-    q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 20),
-    cb AS ({per_table}),
-    qb AS (SELECT vec_id AS query_id, t,
-                  unnest([{probes}]) AS b
-           FROM cb WHERE vec_id < 20),
-    cand AS (SELECT DISTINCT qb.query_id, cb.vec_id
-             FROM qb JOIN cb ON qb.t = cb.t AND qb.b = cb.b),
-    scored AS (SELECT c.query_id, c.vec_id,
-                      ROUND(list_cosine_similarity(e.v, q.qv), 6) AS cosine
-               FROM cand c JOIN e ON e.vec_id = c.vec_id
-                           JOIN q ON q.query_id = c.query_id),
-    r AS (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-               ORDER BY cosine DESC, vec_id ASC) AS INTEGER) AS rank
-          FROM scored)
-    SELECT query_id, vec_id, cosine, rank FROM r WHERE rank <= 5
-    """
-
-
 @register(
     "sim_search_lsh_multiprobe",
-    _sim_search_lsh_mp_oracle(),
+    _sim_search_lsh_oracle(multiprobe=True),
     doc="Multi-probe ANN top-k (operators/similarity.py "
     "lsh_bucketed_topk(multiprobe=True); Lv et al. VLDB'07): each "
     "query probes its own bucket plus every Hamming-1 neighbor in "
@@ -9302,35 +9284,18 @@ def _neardup_incr_oracle() -> str:
     (hyperplane constants inlined), Hamming<=1 probe expansion on the
     BATCH side only, DISTINCT (store, batch) candidates, exact cosine
     verify at 4dp."""
-    from pyspark_scd_spark.operators.similarity import duckdb_bucket_sql
-
-    per_store = "\n      UNION ALL ".join(
-        f"SELECT vec_id, {t} AS t, "
-        f"{duckdb_bucket_sql('v', 64, 8, seed=42 + t)} AS b FROM s"
-        for t in range(8)
-    )
-    per_batch = "\n      UNION ALL ".join(
-        f"SELECT vec_id, {t} AS t, "
-        f"{duckdb_bucket_sql('v', 64, 8, seed=42 + t)} AS b FROM nb"
-        for t in range(8)
-    )
     probes = ", ".join(["b"] + [f"xor(b, {1 << i})" for i in range(8)])
     return f"""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-               FROM embeddings),
+    WITH {_DENSE_E},
     s AS (SELECT * FROM e WHERE vec_id % 10 <> 7),
     nb AS (SELECT * FROM e WHERE vec_id % 10 = 7),
-    cbs AS ({per_store}),
-    cbb AS ({per_batch}),
+    cbs AS ({_lsh_buckets_sql("s", 8, 8)}),
+    cbb AS ({_lsh_buckets_sql("nb", 8, 8)}),
     pb AS (SELECT vec_id, t, unnest([{probes}]) AS pb FROM cbb),
-    cand AS (SELECT DISTINCT cbs.vec_id AS store_id,
-                    pb.vec_id AS batch_id
+    cand AS (SELECT DISTINCT cbs.vec_id AS id_a, pb.vec_id AS id_b
              FROM cbs JOIN pb ON cbs.t = pb.t AND cbs.b = pb.pb),
-    j AS (SELECT store_id, batch_id,
-                 ROUND(list_cosine_similarity(ea.v, eb.v), 4) AS cosine
-          FROM cand JOIN e ea ON ea.vec_id = cand.store_id
-                    JOIN e eb ON eb.vec_id = cand.batch_id)
-    SELECT store_id, batch_id, cosine FROM j WHERE cosine >= 0.3
+    {_neardup_verify_sql(_CAND_PAIRS)}
+    SELECT id_a AS store_id, id_b AS batch_id, cosine FROM nd
     """
 
 
@@ -9536,62 +9501,8 @@ def q_stream_late_data_accounting(spark, sf_dir):
 
 
 @register(
-    "embedding_neardup_pairs_ivf",
-    f"""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-               FROM embeddings),
-    {_ivf_cand_ctes(ordered=True)},
-    j AS (SELECT id_a, id_b,
-                 ROUND(list_cosine_similarity(ea.v, eb.v), 4) AS cosine
-          FROM cand JOIN e ea ON ea.vec_id = cand.id_a
-                    JOIN e eb ON eb.vec_id = cand.id_b)
-    SELECT id_a, id_b, cosine FROM j WHERE cosine >= 0.3
-    """,
-    doc="Semantic near-dup pairs, IVF tier (operators/similarity.py "
-    "embedding_neardup_pairs_ivf): top-2 centroid-cell assignment "
-    "(9dp-rounded cosine, ties toward the larger cell), candidates = "
-    "same-cell pairs, exact cosine verify >= 0.3 at 4dp. Under the "
-    "balanced auto_cells rule (k = probe*sqrt(n)) assignment plus "
-    "within-cell dense verify total O(n^1.5*d) — vs the exact "
-    "grid's O(n^2*d) and hyperplane LSH, whose candidate density on "
-    "clustered corpora stays near-quadratic (round-4 SCALING study, "
-    "100k x 64d: LSH emitted 175M candidates — 3.5% of all pairs — "
-    "and ran 8x slower than the exact grid itself; measured walls "
-    "and the n where each tier wins are in SCALING.md). Centroids "
-    "here are the first 8 vectors (deterministic, oracle-replayable "
-    "— k pinned so the oracle SQL stays static); kmeans_train "
-    "output composes for tighter cells.",
-)
-def q_embedding_neardup_pairs_ivf(spark, sf_dir):
-    from pyspark_scd_spark.operators import similarity
-
-    e = _t(spark, sf_dir, "embeddings")
-    return similarity.embedding_neardup_pairs_ivf(
-        e, threshold=0.3, k_cells=8, n_probe=2
-    )
-
-
-@register(
     "dedup_semantic_clusters_ivf",
-    f"""
-    WITH RECURSIVE e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-               FROM embeddings),
-    {_ivf_cand_ctes(ordered=True)},
-    pairs AS (SELECT id_a AS doc_a, id_b AS doc_b FROM cand
-              JOIN e ea ON ea.vec_id = cand.id_a
-              JOIN e eb ON eb.vec_id = cand.id_b
-              WHERE ROUND(list_cosine_similarity(ea.v, eb.v), 4) >= 0.3),
-    edges AS (SELECT doc_a AS a, doc_b AS b FROM pairs
-              UNION SELECT doc_b, doc_a FROM pairs),
-    reach AS (SELECT a, b FROM edges
-              UNION
-              SELECT r.a, e2.b FROM reach r JOIN edges e2 ON r.b = e2.a)
-    SELECT vec_id, cluster_id,
-           CAST(COUNT(*) OVER (PARTITION BY cluster_id) AS BIGINT)
-             AS cluster_size
-    FROM (SELECT a AS vec_id, LEAST(a, MIN(b)) AS cluster_id
-          FROM reach GROUP BY a)
-    """,
+    _semantic_clusters_oracle(_ivf_cand_ctes(ordered=True)),
     doc="Semantic near-dup clusters over the IVF tier — the "
     "composition the round-4 scale study promotes for clustered "
     "corpora: same-cell IVF candidates + within-cell dense-GEMM "
@@ -9604,251 +9515,16 @@ def q_embedding_neardup_pairs_ivf(spark, sf_dir):
     "recursive-CTE closure.",
 )
 def q_dedup_semantic_clusters_ivf(spark, sf_dir):
-    from pyspark_scd_spark.operators import dedup, similarity
-
-    e = _t(spark, sf_dir, "embeddings")
-    pairs = similarity.embedding_neardup_pairs_ivf(
-        e, threshold=0.3, k_cells=8, n_probe=2
-    ).select("id_a", "id_b")
-    cc = dedup.connected_components(
-        pairs, src_col="id_a", dst_col="id_b",
-        strategy=_cc_strategy(e),
-    )
-    w = Window.partitionBy("component")
-    return cc.withColumn(
-        "cluster_size", F.count(F.lit(1)).over(w)
-    ).select(
-        F.col("id_a").alias("vec_id"),
-        F.col("component").alias("cluster_id"),
-        "cluster_size",
-    )
-
-
-@register(
-    "knn_label_vote_ivf",
-    f"""
-    WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
-               FROM embeddings),
-    {_ivf_cand_ctes(ordered=False)},
-    s AS (SELECT cand.id_a AS vec_id, ea.label AS label,
-                 cand.id_b AS nid, eb.label AS nlabel,
-                 ROUND(list_cosine_similarity(ea.v, eb.v), 6) AS c
-          FROM cand JOIN e ea ON ea.vec_id = cand.id_a
-                    JOIN e eb ON eb.vec_id = cand.id_b),
-    r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                    ORDER BY c DESC, nid ASC) AS rk FROM s),
-    v AS (SELECT vec_id, label, nlabel, COUNT(*) AS votes
-          FROM r WHERE rk <= 5 GROUP BY 1, 2, 3),
-    p AS (SELECT vec_id, label, nlabel AS predicted_label, votes,
-                 ROW_NUMBER() OVER (PARTITION BY vec_id
-                 ORDER BY votes DESC, nlabel ASC) AS pr FROM v)
-    SELECT vec_id, label, predicted_label,
-           CAST(votes AS INTEGER) AS n_agree,
-           predicted_label <> label AS mislabeled
-    FROM p WHERE pr = 1
-    """,
-    doc="kNN label-consistency audit, IVF tier (operators/similarity"
-    ".py knn_label_vote_ivf): directed same-cell candidates instead "
-    "of LSH buckets, then the identical exact-cosine top-5 re-rank, "
-    "majority vote and tie-breaks as knn_label_vote. The candidate "
-    "generator the round-4 study promotes for clustered corpora — "
-    "per-anchor candidate work ~probe^2*sqrt(n) under balanced "
-    "auto_cells (k pinned to 8 here for the static oracle); the LSH "
-    "twin stays registered for corpora without centroid structure.",
-)
-def q_knn_label_vote_ivf(spark, sf_dir):
-    from pyspark_scd_spark.operators import similarity
-
-    e = _t(spark, sf_dir, "embeddings")
-    return similarity.knn_label_vote_ivf(e, k=5, k_cells=8, n_probe=2)
-
-
-@register(
-    "embedding_neardup_pairs_ivf_auto",
-    f"""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-               FROM embeddings),
-    {_ivf_cand_ctes_auto(ordered=True)},
-    j AS (SELECT id_a, id_b,
-                 ROUND(list_cosine_similarity(ea.v, eb.v), 4) AS cosine
-          FROM cand JOIN e ea ON ea.vec_id = cand.id_a
-                    JOIN e eb ON eb.vec_id = cand.id_b)
-    SELECT id_a, id_b, cosine FROM j WHERE cosine >= 0.3
-    """,
-    doc="embedding_neardup_pairs_ivf under the balanced auto_cells "
-    "rule (k = probe*sqrt(n), operators/similarity.py auto_cells) — "
-    "the SCALE form of the IVF tier, where assignment O(n*k*d) and "
-    "within-cell verify O(n*(n/k)*probe^2*d) equalize at O(n^1.5*d). "
-    "The pinned-k=8 sibling stays registered as the parity form "
-    "(static small-k oracle); this entry computes k from the corpus "
-    "count in BOTH engines (scalar-subquery LIMIT on the oracle "
-    "side), so the benched x10 tier finally measures the sub-linear "
-    "path the round-4 study validated, not the quadratic-in-cell "
-    "parity pin.",
-)
-def q_embedding_neardup_pairs_ivf_auto(spark, sf_dir):
-    from pyspark_scd_spark.operators import similarity
-
-    e = _t(spark, sf_dir, "embeddings")
-    return similarity.embedding_neardup_pairs_ivf(
-        e, threshold=0.3, k_cells=None, n_probe=2
-    )
-
-
-@register(
-    "knn_label_vote_ivf_auto",
-    f"""
-    WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
-               FROM embeddings),
-    {_ivf_cand_ctes_auto(ordered=False)},
-    s AS (SELECT cand.id_a AS vec_id, ea.label AS label,
-                 cand.id_b AS nid, eb.label AS nlabel,
-                 ROUND(list_cosine_similarity(ea.v, eb.v), 6) AS c
-          FROM cand JOIN e ea ON ea.vec_id = cand.id_a
-                    JOIN e eb ON eb.vec_id = cand.id_b),
-    r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                    ORDER BY c DESC, nid ASC) AS rk FROM s),
-    v AS (SELECT vec_id, label, nlabel, COUNT(*) AS votes
-          FROM r WHERE rk <= 5 GROUP BY 1, 2, 3),
-    p AS (SELECT vec_id, label, nlabel AS predicted_label, votes,
-                 ROW_NUMBER() OVER (PARTITION BY vec_id
-                 ORDER BY votes DESC, nlabel ASC) AS pr FROM v)
-    SELECT vec_id, label, predicted_label,
-           CAST(votes AS INTEGER) AS n_agree,
-           predicted_label <> label AS mislabeled
-    FROM p WHERE pr = 1
-    """,
-    doc="knn_label_vote_ivf under the balanced auto_cells rule — the "
-    "scale form of the directed IVF audit (per-anchor candidate work "
-    "~probe^2*sqrt(n) instead of the pinned-k=8 parity form's n/8 "
-    "cell population). Same vote/tie-break contract; k computed from "
-    "the corpus count in both engines.",
-)
-def q_knn_label_vote_ivf_auto(spark, sf_dir):
-    from pyspark_scd_spark.operators import similarity
-
-    e = _t(spark, sf_dir, "embeddings")
-    return similarity.knn_label_vote_ivf(e, k=5, k_cells=None, n_probe=2)
-
-
-@register(
-    "hard_negative_mining_ivf",
-    f"""
-    WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
-               FROM embeddings),
-    {_ivf_cand_ctes(ordered=False)},
-    s AS (SELECT cand.id_a AS vec_id, ea.label AS label,
-                 cand.id_b AS neg_id, eb.label AS neg_label,
-                 ROUND(list_cosine_similarity(ea.v, eb.v), 6) AS c
-          FROM cand JOIN e ea ON ea.vec_id = cand.id_a
-                    JOIN e eb ON eb.vec_id = cand.id_b
-          WHERE ea.label <> eb.label),
-    r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                    ORDER BY c DESC, neg_id ASC) AS rank FROM s)
-    SELECT vec_id, label, neg_id, neg_label,
-           ROUND(c, 4) AS cosine, CAST(rank AS INTEGER) AS rank
-    FROM r WHERE rank <= 3
-    """,
-    doc="Contrastive hard negatives, IVF tier (operators/similarity"
-    ".py hard_negative_mining_ivf): directed same-cell candidates "
-    "with same-label pairs masked, exact-cosine top-3 re-rank per "
-    "anchor — ranking at 6dp (cosine DESC, id ASC), emitted cosine "
-    "4dp half-away, the exact twin's contract. Hard negatives are "
-    "the MOST similar cross-label rows; on clustered corpora those "
-    "share a centroid cell by construction.",
-)
-def q_hard_negative_mining_ivf(spark, sf_dir):
-    from pyspark_scd_spark.operators import similarity
-
-    e = _t(spark, sf_dir, "embeddings")
-    return similarity.hard_negative_mining_ivf(
-        e, k=3, k_cells=8, n_probe=2
-    )
-
-
-@register(
-    "hard_negative_mining_ivf_auto",
-    f"""
-    WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
-               FROM embeddings),
-    {_ivf_cand_ctes_auto(ordered=False)},
-    s AS (SELECT cand.id_a AS vec_id, ea.label AS label,
-                 cand.id_b AS neg_id, eb.label AS neg_label,
-                 ROUND(list_cosine_similarity(ea.v, eb.v), 6) AS c
-          FROM cand JOIN e ea ON ea.vec_id = cand.id_a
-                    JOIN e eb ON eb.vec_id = cand.id_b
-          WHERE ea.label <> eb.label),
-    r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                    ORDER BY c DESC, neg_id ASC) AS rank FROM s)
-    SELECT vec_id, label, neg_id, neg_label,
-           ROUND(c, 4) AS cosine, CAST(rank AS INTEGER) AS rank
-    FROM r WHERE rank <= 3
-    """,
-    doc="hard_negative_mining_ivf under the balanced auto_cells rule "
-    "(k = probe*sqrt(n)) — completes the auto family: every "
-    "ANN/IVF consumer now has a benched scale form whose index "
-    "parameter is computed from the corpus count in both engines. "
-    "Same masking/ranking contract as the pinned parity form.",
-)
-def q_hard_negative_mining_ivf_auto(spark, sf_dir):
-    from pyspark_scd_spark.operators import similarity
-
-    e = _t(spark, sf_dir, "embeddings")
-    return similarity.hard_negative_mining_ivf(
-        e, k=3, k_cells=None, n_probe=2
-    )
-
-
-@register(
-    "knn_label_vote_ann_auto",
-    f"""
-    WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
-               FROM embeddings),
-    {_lsh_cand_ctes_auto(ordered=False)},
-    s AS (SELECT cand.id_a AS vec_id, ea.label AS label,
-                 cand.id_b AS nid, eb.label AS nlabel,
-                 ROUND(list_cosine_similarity(ea.v, eb.v), 6) AS c
-          FROM cand JOIN e ea ON ea.vec_id = cand.id_a
-                    JOIN e eb ON eb.vec_id = cand.id_b),
-    r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                    ORDER BY c DESC, nid ASC) AS rk FROM s),
-    v AS (SELECT vec_id, label, nlabel, COUNT(*) AS votes
-          FROM r WHERE rk <= 5 GROUP BY 1, 2, 3),
-    p AS (SELECT vec_id, label, nlabel AS predicted_label, votes,
-                 ROW_NUMBER() OVER (PARTITION BY vec_id
-                 ORDER BY votes DESC, nlabel ASC) AS pr FROM v)
-    SELECT vec_id, label, predicted_label,
-           CAST(votes AS INTEGER) AS n_agree,
-           predicted_label <> label AS mislabeled
-    FROM p WHERE pr = 1
-    """,
-    doc="knn_label_vote_ann under auto_planes (planes = "
-    "clamp(ceil(log2(n/32)), 4, 20), prefix-stable hyperplane "
-    "stream: bucket_p = bucket_20 %% 2^p with p from COUNT(*) in "
-    "SQL) — the LSH tier's scale form for the directed kNN audit: "
-    "bucket population stays ~constant as n grows, so per-anchor "
-    "candidate work is O(bucket*tables) at any scale. Same vote and "
-    "tie-break contract as the pinned parity form.",
-)
-def q_knn_label_vote_ann_auto(spark, sf_dir):
-    from pyspark_scd_spark.operators import similarity
-
-    e = _t(spark, sf_dir, "embeddings")
-    return similarity.knn_label_vote_ann(
-        e, k=5, dim=64, n_planes=None, n_tables=8
+    return _semantic_clusters(
+        spark, sf_dir, "embedding_neardup_pairs_ivf", k_cells=8, n_probe=2
     )
 
 
 _IVF_TRAINED_NEARDUP_TAIL = f"""
-{_ivf_assign_sql("e", "c3", "cell", "assign", 2)},
-cand AS (SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-         FROM assign a JOIN assign b
-         ON a.c = b.c AND a.vec_id < b.vec_id),
-j AS (SELECT id_a, id_b,
-             ROUND(list_cosine_similarity(ea.v, eb.v), 4) AS cosine
-      FROM cand JOIN e ea ON ea.vec_id = cand.id_a
-                JOIN e eb ON eb.vec_id = cand.id_b)
-SELECT id_a, id_b, cosine FROM j WHERE cosine >= 0.3
+cent AS (SELECT cell AS c, cv FROM c3),
+{_ivf_cand_ctes(ordered=True, seed=False)},
+{_neardup_verify_sql(_CAND_PAIRS)}
+SELECT id_a, id_b, cosine FROM nd
 """
 
 
@@ -9881,24 +9557,39 @@ def q_embedding_neardup_pairs_ivf_trained(spark, sf_dir):
     )
 
 
-@register(
-    "embedding_neardup_incremental_ivf",
-    f"""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-               FROM embeddings),
+def _neardup_incr_ivf_oracle(k_cells: int | None) -> str:
+    """DuckDB twin of embedding_neardup_incremental_ivf: the batch
+    (vec_id % 10 = 7) and the store (the rest) assigned to the store's
+    first-k centroids, same-cell (store, batch) candidates, exact
+    cosine verify at 4dp."""
+    return f"""
+    WITH {_DENSE_E},
     st AS (SELECT * FROM e WHERE vec_id % 10 <> 7),
     ba AS (SELECT * FROM e WHERE vec_id % 10 = 7),
-    {_first_k_cent_sql("st", 8)},
+    {_first_k_cent_sql("st", k_cells)},
     {_ivf_assign_sql("st", "cent", "c", "acs", 2)},
     {_ivf_assign_sql("ba", "cent", "c", "acb", 2)},
-    cand AS (SELECT DISTINCT s.vec_id AS store_id, b.vec_id AS batch_id
+    cand AS (SELECT DISTINCT s.vec_id AS id_a, b.vec_id AS id_b
              FROM acs s JOIN acb b ON s.c = b.c),
-    j AS (SELECT store_id, batch_id,
-                 ROUND(list_cosine_similarity(es.v, eb.v), 4) AS cosine
-          FROM cand JOIN e es ON es.vec_id = cand.store_id
-                    JOIN e eb ON eb.vec_id = cand.batch_id)
-    SELECT store_id, batch_id, cosine FROM j WHERE cosine >= 0.3
-    """,
+    {_neardup_verify_sql(_CAND_PAIRS)}
+    SELECT id_a AS store_id, id_b AS batch_id, cosine FROM nd
+    """
+
+
+def _neardup_incr_ivf(spark, sf_dir, k_cells: int | None):
+    from pyspark_scd_spark.operators import similarity
+
+    e = _t(spark, sf_dir, "embeddings")
+    store = e.filter(F.col("vec_id") % 10 != 7)
+    batch = e.filter(F.col("vec_id") % 10 == 7)
+    return similarity.embedding_neardup_incremental_ivf(
+        store, batch, threshold=0.3, k_cells=k_cells, n_probe=2
+    )
+
+
+@register(
+    "embedding_neardup_incremental_ivf",
+    _neardup_incr_ivf_oracle(8),
     doc="Daily-ingest semantic near-dup, IVF tier (operators/"
     "similarity.py embedding_neardup_incremental_ivf): the new batch "
     "(vec_id%10=7) is cell-assigned with the STORE's centroids and "
@@ -9912,41 +9603,12 @@ def q_embedding_neardup_pairs_ivf_trained(spark, sf_dir):
     "artifact, retrained only on drift.",
 )
 def q_embedding_neardup_incremental_ivf(spark, sf_dir):
-    from pyspark_scd_spark.operators import similarity
-
-    e = _t(spark, sf_dir, "embeddings")
-    store = e.filter(F.col("vec_id") % 10 != 7)
-    batch = e.filter(F.col("vec_id") % 10 == 7)
-    return similarity.embedding_neardup_incremental_ivf(
-        store, batch, threshold=0.3, k_cells=8, n_probe=2
-    )
+    return _neardup_incr_ivf(spark, sf_dir, k_cells=8)
 
 
 @register(
     "embedding_neardup_incremental_ivf_auto",
-    f"""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-               FROM embeddings),
-    st AS (SELECT * FROM e WHERE vec_id % 10 <> 7),
-    ba AS (SELECT * FROM e WHERE vec_id % 10 = 7),
-    cent AS (SELECT CAST(ROW_NUMBER() OVER (ORDER BY vec_id) - 1
-                    AS INTEGER) AS c, v AS cv
-             FROM st ORDER BY vec_id
-             LIMIT (SELECT GREATEST(8, LEAST(65536,
-                      CAST(ROUND(2 * SQRT(COUNT(*))) AS BIGINT)))
-                    FROM st)),
-    {_ivf_assign_sql("st", "cent", "c", "acs", 2)},
-    {_ivf_assign_sql("ba", "cent", "c", "acb", 2)},
-    cand AS (SELECT DISTINCT a.vec_id AS store_id,
-                    b.vec_id AS batch_id
-             FROM acs a JOIN acb b ON a.c = b.c),
-    j AS (SELECT store_id, batch_id,
-                 ROUND(list_cosine_similarity(ea.v, eb.v), 4)
-                   AS cosine
-          FROM cand JOIN e ea ON ea.vec_id = store_id
-                    JOIN e eb ON eb.vec_id = batch_id)
-    SELECT store_id, batch_id, cosine FROM j WHERE cosine >= 0.3
-    """,
+    _neardup_incr_ivf_oracle(None),
     doc="embedding_neardup_incremental_ivf under the balanced "
     "auto_cells rule (k = probe*sqrt(n_store)) — the SCALE form of "
     "the daily-ingest near-dup. The r8 x100 study measured the "
@@ -9960,14 +9622,7 @@ def q_embedding_neardup_incremental_ivf(spark, sf_dir):
     "store count in BOTH engines (scalar-subquery LIMIT).",
 )
 def q_embedding_neardup_incremental_ivf_auto(spark, sf_dir):
-    from pyspark_scd_spark.operators import similarity
-
-    e = _t(spark, sf_dir, "embeddings")
-    store = e.filter(F.col("vec_id") % 10 != 7)
-    batch = e.filter(F.col("vec_id") % 10 == 7)
-    return similarity.embedding_neardup_incremental_ivf(
-        store, batch, threshold=0.3, k_cells=None, n_probe=2
-    )
+    return _neardup_incr_ivf(spark, sf_dir, k_cells=None)
 
 
 @register(

@@ -3,7 +3,47 @@ every oracle key must have a builder."""
 
 from __future__ import annotations
 
+import os
+import sys
+
+import pytest
+
 from pyspark_scd_spark.registry import REGISTRY
+
+sys.path.insert(
+    0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "tools")
+)
+from check_oracle import _canon  # noqa: E402
+
+# Entries whose oracle is assembled from the dense-family pieces in
+# registry.py (candidate source x consumer tail, the near-dup verify
+# and the LSH bucket SQL).
+DENSE_ORACLE_ENTRIES = [
+    "embedding_neardup_pairs",
+    "embedding_neardup_pairs_ann",
+    "embedding_neardup_pairs_ann_auto",
+    "embedding_neardup_pairs_ivf",
+    "embedding_neardup_pairs_ivf_auto",
+    "knn_label_vote",
+    "knn_label_vote_ann",
+    "knn_label_vote_ann_auto",
+    "knn_label_vote_ivf",
+    "knn_label_vote_ivf_auto",
+    "hard_negative_mining",
+    "hard_negative_mining_ann",
+    "hard_negative_mining_ivf",
+    "hard_negative_mining_ivf_auto",
+    "dedup_semantic_clusters",
+    "dedup_semantic_clusters_ivf",
+    "ann_pair_recall_report",
+    "embedding_neardup_pairs_ivf_trained",
+    "embedding_neardup_incremental",
+    "embedding_neardup_incremental_ivf",
+    "embedding_neardup_incremental_ivf_auto",
+    "stream_embedding_neardup",
+    "sim_search_lsh",
+    "sim_search_lsh_multiprobe",
+]
 
 
 def test_every_query_analyzes(spark):
@@ -129,3 +169,33 @@ def test_schema_diff(spark):
     # symmetric: removed from the other direction
     back = {r["column"]: r for r in schema_diff(b, a).collect()}
     assert back["extra"]["change"] == "removed"
+
+
+@pytest.fixture(scope="module")
+def duck(sf_dir):
+    import duckdb
+
+    from pyspark_scd_spark.sources.readers import TESTDATA_TABLES
+
+    con = duckdb.connect()
+    for t in TESTDATA_TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
+        )
+    yield con
+    con.close()
+
+
+@pytest.mark.parametrize("name", DENSE_ORACLE_ENTRIES)
+def test_dense_oracle_matches_builder(spark, sf_dir, duck, name):
+    """The Spark builder and its DuckDB oracle return the same rows
+    (compared as tools/check_oracle.py does)."""
+    q = REGISTRY[name]
+    sdf = q.builder(spark, sf_dir)
+    s_cols, s_rows = _canon(sdf.columns, [tuple(r) for r in sdf.collect()])
+    rel = duck.sql(q.oracle)
+    d_cols, d_rows = _canon(list(rel.columns), rel.fetchall())
+    assert s_cols == d_cols
+    assert s_rows, f"{name}: no rows, nothing compared"
+    assert len(s_rows) == len(d_rows)
+    assert s_rows == d_rows

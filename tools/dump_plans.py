@@ -1,9 +1,17 @@
-"""Generate PLANS.md: the physical plan audit for every headline query.
+"""Dump physical plans.
 
-For each query: exchange count, broadcast usage, scan pushdown
-evidence, and the full formatted plan — the artifact backing the
-scale-design claims in README.md (regenerate after plan-affecting
-changes: ``python tools/dump_plans.py``).
+``python tools/dump_plans.py`` generates PLANS.md: the physical plan
+audit for every headline query. For each query: exchange count,
+broadcast usage, scan pushdown evidence, and the full formatted plan —
+the artifact backing the scale-design claims in README.md (regenerate
+after plan-affecting changes).
+
+``python tools/dump_plans.py --tag TAG [SUFFIX [query ...]]`` writes
+each query's ``explain("formatted")`` to
+``plans/TAG/<query>_<SUFFIX>.txt`` — SUFFIX is ``before`` (the
+default) or ``after`` a change, so a plan-shape claim can be checked
+by diffing the two. With no query list it dumps every HEADLINE +
+X3_EXACT query.
 """
 
 from __future__ import annotations
@@ -14,15 +22,33 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import HEADLINE  # noqa: E402
+from bench import HEADLINE, X3_EXACT, _release  # noqa: E402
 from pyspark_scd_spark.plans import explain  # noqa: E402
 from pyspark_scd_spark.registry import REGISTRY  # noqa: E402
 from pyspark_scd_spark.session import get_spark  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.01"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def dump_tagged(tag: str, suffix: str, names: list[str]) -> None:
+    out_dir = os.path.join(REPO, "plans", tag)
+    os.makedirs(out_dir, exist_ok=True)
+    spark = get_spark(app_name=f"dump_plans_{tag}")
+    for name in names or [n for n in HEADLINE + X3_EXACT if n in REGISTRY]:
+        df = REGISTRY[name].builder(spark, SF_DIR)
+        path = os.path.join(out_dir, f"{name}_{suffix}.txt")
+        with open(path, "w") as f:
+            f.write(explain.formatted_plan(df))
+        print(f"wrote {path}", flush=True)
+        _release(spark)
 
 
 def main() -> None:
+    if sys.argv[1:2] == ["--tag"]:
+        suffix = sys.argv[3] if len(sys.argv) > 3 else "before"
+        dump_tagged(sys.argv[2], suffix, sys.argv[4:])
+        return
     spark = get_spark(app_name="dump_plans")
     lines = [
         "# PLANS — physical-plan audit of the headline queries",
@@ -62,7 +88,7 @@ def main() -> None:
             "```",
             "",
         ]
-    out = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md")
+    out = os.path.join(REPO, "PLANS.md")
     with open(out, "w") as f:
         f.write("\n".join(lines))
     print(f"wrote {out}: {len(HEADLINE)} plans")
