@@ -472,34 +472,13 @@ def _vid_dims(doc_id: int, min_w: int = 8, min_h: int = 6):
     )
 
 
-def _vid_plane(
-    doc_id: int, f: int, w: int, h: int, coef, boost: int = 0
-) -> bytes:
-    """Pure-Python reference form of one plane — kept as the pinned
-    semantics the vectorized ``_vid_planes_np`` must reproduce
-    bit-for-bit (tests/test_video.py recomputes planes through this
-    form)."""
-    a, b, c, d = coef
-    return bytes(
-        (
-            doc_id * a
-            + f * b
-            + y * c
-            + x * d
-            + (boost if f == 0 and y == 0 and x == 0 else 0)
-        )
-        % 256
-        for y in range(h)
-        for x in range(w)
-    )
-
-
 def _vid_planes_np(
     doc_id: int, n: int, w: int, h: int, coef, boost: int = 0
 ):
     """All ``n`` frames of one plane as a (n, h*w) uint8 matrix —
-    the numpy form of ``_vid_plane`` (r13: the per-pixel Python
-    generator was ~2.3s of every video query's wall at sf0.1; the
+    the numpy form of the pure-Python reference ``_vid_plane`` in
+    tests/test_video.py, which pins it bit-for-bit (r13: the per-pixel
+    Python generator was ~2.3s of every video query's wall at sf0.1; the
     closed form doc*a + f*b + y*c + x*d (+boost at (0,0,0)) % 256 is
     three broadcast adds). All terms are non-negative int64 (doc ids
     < 2^31, coefficients < 100), so the modulo matches Python's

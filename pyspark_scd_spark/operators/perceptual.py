@@ -9,8 +9,8 @@ pHash (Zauner 2010, and the pHash.org implementation): downscale,
 the median → a 64-bit fingerprint whose Hamming distance tracks
 perceptual similarity. Candidate generation is multi-index hashing
 (Norouzi, Punjani & Fleet, CVPR 2012): split the 64-bit hash into
-``bands`` disjoint 16-bit substrings; by pigeonhole any pair within
-Hamming distance d < bands agrees EXACTLY on at least one substring,
+``MIH_BANDS`` disjoint 16-bit substrings; by pigeonhole any pair within
+Hamming distance d < MIH_BANDS agrees EXACTLY on at least one substring,
 so an equi-join per band finds every qualifying pair — recall 1 by
 construction, not probabilistically (contrast MinHash LSH's
 (1-j^r)^b miss curve). Verification is exact: bit_count(xor) on the
@@ -45,7 +45,9 @@ north-star list mandates.
 from __future__ import annotations
 
 import math
+import operator
 from collections.abc import Iterator
+from functools import reduce
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -185,33 +187,277 @@ def _pinned_hash_cache(df: DataFrame, *cols: str) -> DataFrame:
     return out
 
 
-def _banded(
-    df: DataFrame, id_col: str, hash_col: str, bands: int
-) -> DataFrame:
-    """Multi-index banding projection shared by the batch and
-    incremental near-dup forms: explode each (id, hash) row into
-    ``bands`` (band_no, band_val) rows where band i is bits
-    [width*i, width*(i+1)) of the hash. ONE definition so the band
-    layout can never drift between the two join shapes."""
-    width = 64 // bands
-    mask = (1 << width) - 1
+# ======================================================================
+# Multi-index Hamming join (Norouzi, Punjani & Fleet, CVPR 2012) behind
+# every near-dup operator below. A hash is one 63-bit word or two
+# 62-bit words, cut into MIH_BANDS disjoint substrings: 16 bits each
+# for one word, 31 bits each for two. Two consumers — the batch
+# self-join and the store x batch probe — plus the frame-vote tail.
+# ======================================================================
+
+MIH_BANDS = 4  # disjoint substrings per hash: recall 1 at hamming < 4
+_BAND_BITS = {1: 16, 2: 31}  # hash words -> substring width
+# internal hash-word columns; a pair side swaps the third character
+# for its tag: __h -> __ha/__hb/__hs, (__lo, __hi) -> (__la, __ha), ...
+_WORDS = {1: ("__h",), 2: ("__lo", "__hi")}
+
+
+def _mih_words(n_words: int, max_hamming: int) -> tuple[str, ...]:
+    """The hash-word columns for an ``n_words`` hash, after the
+    pigeonhole check every consumer relies on: a pair within distance
+    d < MIH_BANDS has fewer differing bits than substrings, so at
+    least one substring matches exactly — the band equi-join has
+    RECALL 1. Checked before any job runs."""
+    if max_hamming >= MIH_BANDS:
+        raise ValueError(
+            "pigeonhole recall guarantee needs max_hamming < bands "
+            f"(got {max_hamming} >= {MIH_BANDS})"
+        )
+    return _WORDS[n_words]
+
+
+def _side(words, tag: str) -> list[str]:
+    return [w[:3] + tag for w in words]
+
+
+def _renamed(df: DataFrame, id_col: str, id_as: str, cols, names):
     return df.select(
-        F.col(id_col).alias("__id"),
-        F.col(hash_col).alias("__h"),
+        F.col(id_col).alias(id_as),
+        *[F.col(c).alias(n) for c, n in zip(cols, names)],
+    )
+
+
+def _hamming(xs, ys):
+    return reduce(
+        operator.add,
+        [
+            F.bit_count(F.col(x).bitwiseXOR(F.col(y)))
+            for x, y in zip(xs, ys)
+        ],
+    ).cast("int")
+
+
+def _banded(hs: DataFrame, words) -> DataFrame:
+    """Multi-index banding projection shared by both consumers:
+    explode each distinct-hash row into MIH_BANDS (band_no, band_val)
+    rows where band j of word i is bits [width*j, width*(j+1)) of that
+    word. ONE definition so the band layout can never drift between
+    the two join shapes."""
+    width = _BAND_BITS[len(words)]
+    per_word = MIH_BANDS // len(words)
+    mask = (1 << width) - 1
+    return hs.select(
+        *words,
         F.explode(
             F.array(
                 *[
                     F.struct(
-                        F.lit(i).alias("band_no"),
-                        F.shiftright(F.col(hash_col), i * width)
+                        F.lit(i * per_word + j).alias("band_no"),
+                        F.shiftright(F.col(w), j * width)
                         .bitwiseAND(F.lit(mask))
                         .alias("band_val"),
                     )
-                    for i in range(bands)
+                    for i, w in enumerate(words)
+                    for j in range(per_word)
                 ]
             )
         ).alias("__b"),
-    ).select("__id", "__h", "__b.band_no", "__b.band_val")
+    ).select(*words, "__b.band_no", "__b.band_val")
+
+
+def _word_lt(words):
+    """Lexicographic a < b over the hash words: each unordered hash
+    pair is emitted once."""
+    a, b = F.col(f"a.{words[0]}"), F.col(f"b.{words[0]}")
+    if len(words) == 1:
+        return a < b
+    return (a < b) | ((a == b) & _word_lt(words[1:]))
+
+
+def _candidate_pairs(
+    hs: DataFrame, words, max_hamming: int
+) -> DataFrame:
+    """(a-side words, b-side words, hamming) verified pairs over a
+    DISTINCT hash table: band self-join, exact bit_count(xor) verify.
+
+    At 31-bit bands (two words) the self-join runs over hot buckets
+    only (r13 restructure; x1000 stage attribution: the naive banded
+    self-join was 80s of the video family's 137s wall with ZERO
+    surviving candidates — pure sort-merge mechanics on 60M band
+    rows): only a (band_no, band_val) bucket holding >= 2 distinct
+    hashes can produce a pair, and at 2^31-value buckets occupancy is
+    ~always 1 (expected hot buckets ~ 4·n²/2^32 — 200k of 60M rows
+    at 15M hashes). So: ONE map-side-combined exchange counts bucket
+    occupancy; the hot-bucket key set (tiny) joins back against the
+    banded table — AQE broadcasts it, so the 60M rows are probed in
+    place, never exchanged or sorted — and the pair self-join runs
+    over the ~hot-rows-only remainder. At 100 TB (~10^8+ distinct
+    hashes) the hot set grows as n²/2^32; when it outgrows the
+    broadcast threshold AQE falls back to a shuffled join of
+    banded-vs-hot — still strictly cheaper than the full banded
+    self-join this replaces. In this form ``hs`` is cached (plain
+    cache — it arrives co-partitioned from the pinned cache): the
+    banded explode feeds BOTH the occupancy count and the probe pass,
+    and without the pin the distinct aggregation runs twice.
+
+    At 16-bit bands (one word) buckets are dense (n/2^16 hashes
+    each), so the prefilter would drop nothing: plain self-join.
+    """
+    if len(words) == 1:
+        cand = _banded(hs, words)
+    else:
+        banded = _banded(hs.cache(), words)
+        hot = (
+            banded.groupBy("band_no", "band_val")
+            .agg(F.count(F.lit(1)).alias("__n"))
+            .filter(F.col("__n") >= 2)
+            .select("band_no", "band_val")
+        )
+        cand = banded.join(hot, ["band_no", "band_val"])
+    a = cand.alias("a")
+    b = cand.alias("b")
+    wa, wb = _side(words, "a"), _side(words, "b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band_no") == F.col("b.band_no"))
+            & (F.col("a.band_val") == F.col("b.band_val"))
+            & _word_lt(words),
+        )
+        .select(
+            *[F.col(f"a.{w}").alias(x) for w, x in zip(words, wa)],
+            *[F.col(f"b.{w}").alias(x) for w, x in zip(words, wb)],
+        )
+        .distinct()
+        .withColumn("hamming", _hamming(wa, wb))
+        .filter(F.col("hamming") <= max_hamming)
+    )
+
+
+def _batch_pairs(
+    df: DataFrame,
+    id_col: str,
+    hash_cols,
+    max_hamming: int,
+    frames: bool = False,
+) -> DataFrame:
+    """(doc_a, doc_b, hamming) for every id pair within
+    ``max_hamming``, doc_a < doc_b — the distinct-hash collapse
+    (phash_neardup_pairs' docstring): the band join runs over DISTINCT
+    hashes, two hash->ids expansion joins recover cross-hash pairs,
+    and one hash-keyed self-join adds the equal-hash (hamming 0) pairs
+    — AQE skew-join splits a hot hash.
+
+    ``frames``: rows are video frames (columns video_a, video_b) —
+    two frames of ONE video may be near each other, and a frame vote
+    counts cross-video matches only."""
+    words = _mih_words(len(hash_cols), max_hamming)
+    # the (id, hash) projection is referenced four times below (hash
+    # universe, two expansion joins, the hamming-0 self-join), ALL
+    # keyed on the hash words; the pinned hash-partitioned cache runs
+    # the upstream Arrow decode+hash stage once AND makes every
+    # consumer exchange-free (_pinned_hash_cache, r13).
+    ids = _pinned_hash_cache(
+        _renamed(df, id_col, "__id", hash_cols, words), *words
+    )
+    hp = _candidate_pairs(
+        ids.select(*words).distinct(), words, max_hamming
+    )
+    wa, wb = _side(words, "a"), _side(words, "b")
+    cross = hp.join(
+        _renamed(ids, "__id", "__ida", words, wa), wa
+    ).join(_renamed(ids, "__id", "__idb", words, wb), wb)
+    if frames:
+        cross = cross.filter(F.col("__ida") != F.col("__idb"))
+    out_a, out_b = ("video_a", "video_b") if frames else ("doc_a", "doc_b")
+    x = ids.alias("x")
+    y = ids.alias("y")
+    zero = x.join(
+        y,
+        reduce(
+            operator.and_,
+            [F.col(f"x.{w}") == F.col(f"y.{w}") for w in words],
+        )
+        & (F.col("x.__id") < F.col("y.__id")),
+    ).select(
+        F.col("x.__id").alias(out_a),
+        F.col("y.__id").alias(out_b),
+        F.lit(0).cast("int").alias("hamming"),
+    )
+    return cross.select(
+        F.least("__ida", "__idb").alias(out_a),
+        F.greatest("__ida", "__idb").alias(out_b),
+        "hamming",
+    ).unionByName(zero)
+
+
+def _probe_pairs(
+    store: DataFrame,
+    batch: DataFrame,
+    id_col: str,
+    hash_cols,
+    max_hamming: int,
+) -> DataFrame:
+    """(store_id, batch_id, hamming) for every store x batch pair
+    within ``max_hamming`` — the O(batch)/day probe. Distinct-hash
+    collapse on both sides: the band join runs store-hash x
+    batch-hash, then two hash->ids joins expand to ids. Equal hashes
+    across the two sides band-match trivially, so hamming-0 pairs
+    need no separate branch (the sides are disjoint id spaces)."""
+    words = _mih_words(len(hash_cols), max_hamming)
+    ws, wb = _side(words, "s"), _side(words, "b")
+    s_ids = _pinned_hash_cache(
+        _renamed(store, id_col, "store_id", hash_cols, ws), *ws
+    )
+    b_ids = _pinned_hash_cache(
+        _renamed(batch, id_col, "batch_id", hash_cols, wb), *wb
+    )
+
+    def banded(ids, names):
+        return _banded(
+            ids.select(
+                *[F.col(n).alias(w) for n, w in zip(names, words)]
+            ).distinct(),
+            words,
+        )
+
+    s = banded(s_ids, ws).alias("s")
+    b = banded(b_ids, wb).alias("b")
+    hp = (
+        s.join(
+            b,
+            (F.col("s.band_no") == F.col("b.band_no"))
+            & (F.col("s.band_val") == F.col("b.band_val")),
+        )
+        .select(
+            *[F.col(f"s.{w}").alias(x) for w, x in zip(words, ws)],
+            *[F.col(f"b.{w}").alias(x) for w, x in zip(words, wb)],
+        )
+        .distinct()
+        .withColumn("hamming", _hamming(ws, wb))
+        .filter(F.col("hamming") <= max_hamming)
+    )
+    # expand the (typically much smaller) batch side FIRST so the
+    # store expansion — the output-sized blowup on clique-heavy
+    # corpora — happens in the last join instead of being shuffled
+    # again through a second one.
+    return (
+        hp.join(b_ids, wb)
+        .join(s_ids, ws)
+        .select("store_id", "batch_id", "hamming")
+    )
+
+
+def _frame_vote(
+    pairs: DataFrame, a: str, b: str, min_matches: int
+) -> DataFrame:
+    """Video pairs with at least ``min_matches`` matched frame
+    combinations, from frame-level pairs."""
+    return (
+        pairs.groupBy(a, b)
+        .agg(F.count(F.lit(1)).cast("long").alias("n_matched"))
+        .filter(F.col("n_matched") >= min_matches)
+    )
 
 
 PHASH_SCHEMA = T.StructType(
@@ -283,15 +529,14 @@ def phash_neardup_pairs(
     id_col: str = "doc_id",
     hash_col: str = "phash",
     max_hamming: int = 3,
-    bands: int = 4,
 ) -> DataFrame:
     """(doc_a, doc_b, hamming) for every pair with Hamming distance
     <= max_hamming, doc_a < doc_b. Multi-index hashing: band i is
     bits [16i, 16i+16) of the hash; a pair within distance d <
-    ``bands`` has < bands differing-bit "budget" spread over
-    ``bands`` disjoint substrings, so at least one substring matches
-    exactly (pigeonhole) — the band equi-join has RECALL 1, then
-    bit_count(xor) verifies candidates exactly.
+    ``MIH_BANDS`` has < MIH_BANDS differing-bit "budget" spread
+    over ``MIH_BANDS`` disjoint substrings, so at least one
+    substring matches exactly (pigeonhole) — the band equi-join has
+    RECALL 1, then bit_count(xor) verifies candidates exactly.
 
     DISTINCT-HASH COLLAPSE (round-10 decade-study finding): image
     corpora carry exact-duplicate cliques — many docs sharing one
@@ -307,76 +552,7 @@ def phash_neardup_pairs(
     contract — but no shuffle JOIN is quadratic anymore. Measured at
     the same 150k tier: 195s -> ~9s.
     """
-    if max_hamming >= bands:
-        raise ValueError(
-            "pigeonhole recall guarantee needs max_hamming < bands "
-            f"(got {max_hamming} >= {bands})"
-        )
-    # the (id, hash) projection is referenced four times below (hash
-    # universe, two expansion joins, the hamming-0 self-join), ALL
-    # keyed on the hash column; the pinned hash-partitioned cache
-    # runs the upstream Arrow decode+DCT stage once AND makes every
-    # consumer exchange-free (_pinned_hash_cache, r13).
-    ids = _pinned_hash_cache(
-        ph.select(
-            F.col(id_col).alias("__id"), F.col(hash_col).alias("__h")
-        ),
-        "__h",
-    )
-    hs = ids.select("__h").distinct()
-    banded = _banded(hs, "__h", "__h", bands)
-    a = banded.alias("a")
-    b = banded.alias("b")
-    hp = (
-        a.join(
-            b,
-            (F.col("a.band_no") == F.col("b.band_no"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.__h") < F.col("b.__h")),
-        )
-        .select(
-            F.col("a.__h").alias("__ha"), F.col("b.__h").alias("__hb")
-        )
-        .distinct()
-        .withColumn(
-            "hamming",
-            F.bit_count(F.col("__ha").bitwiseXOR(F.col("__hb"))).cast(
-                "int"
-            ),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-    )
-    cross = (
-        hp.join(
-            ids.select(
-                F.col("__id").alias("__ida"), F.col("__h").alias("__ha")
-            ),
-            "__ha",
-        )
-        .join(
-            ids.select(
-                F.col("__id").alias("__idb"), F.col("__h").alias("__hb")
-            ),
-            "__hb",
-        )
-        .select(
-            F.least("__ida", "__idb").alias("doc_a"),
-            F.greatest("__ida", "__idb").alias("doc_b"),
-            "hamming",
-        )
-    )
-    x = ids.alias("x")
-    y = ids.alias("y")
-    zero = x.join(
-        y,
-        (F.col("x.__h") == F.col("y.__h"))
-        & (F.col("x.__id") < F.col("y.__id")),
-    ).select(
-        F.col("x.__id").alias("doc_a"),
-        F.col("y.__id").alias("doc_b"),
-        F.lit(0).cast("int").alias("hamming"),
-    )
-    return cross.unionByName(zero)
+    return _batch_pairs(ph, id_col, [hash_col], max_hamming)
 
 
 def phash_neardup_incremental(
@@ -385,7 +561,6 @@ def phash_neardup_incremental(
     id_col: str = "doc_id",
     hash_col: str = "phash",
     max_hamming: int = 3,
-    bands: int = 4,
 ) -> DataFrame:
     """Daily-ingest image near-dup: candidates ONLY between the NEW
     batch and the existing store — the O(batch)/day shape of
@@ -394,69 +569,12 @@ def phash_neardup_incremental(
     a pure projection of the (id, phash) store — cheap to rebuild or
     persist); each day's work is one band equi-join of the batch's
     4·|batch| band rows against the store index, never a history
-    re-scan. Pigeonhole recall 1 at max_hamming < bands, exact
+    re-scan. Pigeonhole recall 1 at max_hamming < MIH_BANDS, exact
     bit_count verify — same guarantees as the batch form.
 
     Returns (store_id, batch_id, hamming <= max_hamming).
     """
-    if max_hamming >= bands:
-        raise ValueError(
-            "pigeonhole recall guarantee needs max_hamming < bands "
-            f"(got {max_hamming} >= {bands})"
-        )
-    # Distinct-hash collapse, same as phash_neardup_pairs (see its
-    # docstring for the measured quadratic-clique finding): the band
-    # join runs store-hash x batch-hash, then two hash->ids joins
-    # expand to (store_id, batch_id). Equal hashes across the two
-    # sides band-match trivially, so hamming-0 pairs need no separate
-    # branch here (the sides are disjoint id spaces).
-    s_ids = _pinned_hash_cache(
-        store.select(
-            F.col(id_col).alias("store_id"),
-            F.col(hash_col).alias("__hs"),
-        ),
-        "__hs",
-    )
-    b_ids = _pinned_hash_cache(
-        batch.select(
-            F.col(id_col).alias("batch_id"),
-            F.col(hash_col).alias("__hb"),
-        ),
-        "__hb",
-    )
-    s = _banded(s_ids.select("__hs").distinct(), "__hs", "__hs", bands).alias(
-        "s"
-    )
-    b = _banded(b_ids.select("__hb").distinct(), "__hb", "__hb", bands).alias(
-        "b"
-    )
-    hp = (
-        s.join(
-            b,
-            (F.col("s.band_no") == F.col("b.band_no"))
-            & (F.col("s.band_val") == F.col("b.band_val")),
-        )
-        .select(
-            F.col("s.__h").alias("__hs"), F.col("b.__h").alias("__hb")
-        )
-        .distinct()
-        .withColumn(
-            "hamming",
-            F.bit_count(F.col("__hs").bitwiseXOR(F.col("__hb"))).cast(
-                "int"
-            ),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-    )
-    # expand the (typically much smaller) batch side FIRST so the
-    # store expansion — the output-sized blowup on clique-heavy
-    # corpora — happens in the last join instead of being shuffled
-    # again through a second one.
-    return (
-        hp.join(b_ids, "__hb")
-        .join(s_ids, "__hs")
-        .select("store_id", "batch_id", "hamming")
-    )
+    return _probe_pairs(store, batch, id_col, [hash_col], max_hamming)
 
 
 # ======================================================================
@@ -537,7 +655,6 @@ def video_neardup_pairs(
     hash_col: str = "fhash",
     max_hamming: int = 3,
     min_matches: int = 2,
-    bands: int = 4,
 ) -> DataFrame:
     """(video_a, video_b, n_matched) for every cross-video pair whose
     frames match at least ``min_matches`` times, where a frame match
@@ -549,78 +666,13 @@ def video_neardup_pairs(
 
     Same scale architecture as phash_neardup_pairs: the band join
     runs over DISTINCT frame hashes (pigeonhole recall 1 at
-    max_hamming < bands), doc-level pairs are recovered by expansion
+    max_hamming < MIH_BANDS), doc-level pairs are recovered by expansion
     joins, and equal-hash frame matches come from one hash-keyed
     self-join (AQE skew-join splits a hot fingerprint). The only
     corpus-sized exchanges are hash-keyed.
     """
-    if max_hamming >= bands:
-        raise ValueError(
-            "pigeonhole recall guarantee needs max_hamming < bands "
-            f"(got {max_hamming} >= {bands})"
-        )
-    frames = _pinned_hash_cache(
-        fh.select(
-            F.col(id_col).alias("__vid"), F.col(hash_col).alias("__h")
-        ),
-        "__h",
-    )
-    hs = frames.select("__h").distinct()
-    banded = _banded(hs, "__h", "__h", bands)
-    a = banded.alias("a")
-    b = banded.alias("b")
-    hp = (
-        a.join(
-            b,
-            (F.col("a.band_no") == F.col("b.band_no"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.__h") < F.col("b.__h")),
-        )
-        .select(
-            F.col("a.__h").alias("__ha"), F.col("b.__h").alias("__hb")
-        )
-        .distinct()
-        .filter(
-            F.bit_count(
-                F.col("__ha").bitwiseXOR(F.col("__hb"))
-            ) <= max_hamming
-        )
-    )
-    cross = (
-        hp.join(
-            frames.select(
-                F.col("__vid").alias("__va"), F.col("__h").alias("__ha")
-            ),
-            "__ha",
-        )
-        .join(
-            frames.select(
-                F.col("__vid").alias("__vb"), F.col("__h").alias("__hb")
-            ),
-            "__hb",
-        )
-        .filter(F.col("__va") != F.col("__vb"))
-        .select(
-            F.least("__va", "__vb").alias("video_a"),
-            F.greatest("__va", "__vb").alias("video_b"),
-        )
-    )
-    x = frames.alias("x")
-    y = frames.alias("y")
-    equal = x.join(
-        y,
-        (F.col("x.__h") == F.col("y.__h"))
-        & (F.col("x.__vid") < F.col("y.__vid")),
-    ).select(
-        F.col("x.__vid").alias("video_a"),
-        F.col("y.__vid").alias("video_b"),
-    )
-    return (
-        cross.unionByName(equal)
-        .groupBy("video_a", "video_b")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_matched"))
-        .filter(F.col("n_matched") >= min_matches)
-    )
+    pairs = _batch_pairs(fh, id_col, [hash_col], max_hamming, frames=True)
+    return _frame_vote(pairs, "video_a", "video_b", min_matches)
 
 
 # ======================================================================
@@ -724,7 +776,6 @@ def video_neardup_incremental(
     hash_col: str = "fhash",
     max_hamming: int = 3,
     min_matches: int = 2,
-    bands: int = 4,
 ) -> DataFrame:
     """Daily-ingest video near-dup: frame-vote pairs ONLY between the
     NEW batch's videos and the standing store — the O(batch)/day
@@ -738,54 +789,8 @@ def video_neardup_incremental(
 
     Returns (store_id, batch_id, n_matched >= min_matches).
     """
-    if max_hamming >= bands:
-        raise ValueError(
-            "pigeonhole recall guarantee needs max_hamming < bands "
-            f"(got {max_hamming} >= {bands})"
-        )
-    s_ids = _pinned_hash_cache(
-        store_fh.select(
-            F.col(id_col).alias("store_id"),
-            F.col(hash_col).alias("__hs"),
-        ),
-        "__hs",
-    )
-    b_ids = _pinned_hash_cache(
-        batch_fh.select(
-            F.col(id_col).alias("batch_id"),
-            F.col(hash_col).alias("__hb"),
-        ),
-        "__hb",
-    )
-    s = _banded(s_ids.select("__hs").distinct(), "__hs", "__hs", bands).alias(
-        "s"
-    )
-    b = _banded(b_ids.select("__hb").distinct(), "__hb", "__hb", bands).alias(
-        "b"
-    )
-    hp = (
-        s.join(
-            b,
-            (F.col("s.band_no") == F.col("b.band_no"))
-            & (F.col("s.band_val") == F.col("b.band_val")),
-        )
-        .select(
-            F.col("s.__h").alias("__hs"), F.col("b.__h").alias("__hb")
-        )
-        .distinct()
-        .filter(
-            F.bit_count(
-                F.col("__hs").bitwiseXOR(F.col("__hb"))
-            ) <= max_hamming
-        )
-    )
-    return (
-        hp.join(b_ids, "__hb")
-        .join(s_ids, "__hs")
-        .groupBy("store_id", "batch_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_matched"))
-        .filter(F.col("n_matched") >= min_matches)
-    )
+    pairs = _probe_pairs(store_fh, batch_fh, id_col, [hash_col], max_hamming)
+    return _frame_vote(pairs, "store_id", "batch_id", min_matches)
 
 
 # ======================================================================
@@ -884,95 +889,6 @@ def audio_fingerprint_wide(
     )
 
 
-def _banded_wide(df: DataFrame, lo_col: str, hi_col: str) -> DataFrame:
-    """Two-word MIH banding: bands 0,1 = bits [0,31),[31,62) of the
-    lo word; bands 2,3 = the same of the hi word. One definition for
-    both join shapes (the _banded discipline)."""
-    mask = (1 << 31) - 1
-    parts = []
-    for wi, col in enumerate((lo_col, hi_col)):
-        for j in range(2):
-            parts.append(
-                F.struct(
-                    F.lit(wi * 2 + j).alias("band_no"),
-                    F.shiftright(F.col(col), j * 31)
-                    .bitwiseAND(F.lit(mask))
-                    .alias("band_val"),
-                )
-            )
-    return df.select(
-        F.col(lo_col).alias("__lo"),
-        F.col(hi_col).alias("__hi"),
-        F.explode(F.array(*parts)).alias("__b"),
-    ).select("__lo", "__hi", "__b.band_no", "__b.band_val")
-
-
-def _wide_candidate_pairs(hs: DataFrame, max_hamming: int) -> DataFrame:
-    """(la, ha, lb, hb, hamming) verified candidate pairs over a
-    DISTINCT (__lo, __hi) hash table — the wide-MIH band join shared
-    by the audio/image and video pairs forms.
-
-    r13 hot-bucket restructure (x1000 stage attribution: the naive
-    banded self-join was 80s of the video family's 137s wall with
-    ZERO surviving candidates — pure sort-merge mechanics on 60M
-    band rows): only a (band_no, band_val) bucket holding >= 2
-    distinct hashes can produce a pair, and at 2^31-value buckets
-    occupancy is ~always 1 (expected hot buckets ~ 4·n²/2^32 — 200k
-    of 60M rows at 15M hashes). So: ONE map-side-combined exchange
-    counts bucket occupancy; the hot-bucket key set (tiny) joins
-    back against the banded table — AQE broadcasts it, so the 60M
-    rows are probed in place, never exchanged or sorted — and the
-    pair self-join runs over the ~hot-rows-only remainder. At 100 TB
-    (~10^8+ distinct hashes) the hot set grows as n²/2^32; when it
-    outgrows the broadcast threshold AQE falls back to a shuffled
-    join of banded-vs-hot — still strictly cheaper than the full
-    banded self-join this replaces.
-
-    ``hs`` is cached here (plain cache — it arrives co-partitioned
-    from the pinned frames cache, so no repartition needed): the
-    banded explode feeds BOTH the occupancy count and the probe
-    pass, and without the pin the distinct aggregation runs twice.
-    """
-    hs = hs.cache()
-    banded = _banded_wide(hs, "__lo", "__hi")
-    hot = (
-        banded.groupBy("band_no", "band_val")
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .filter(F.col("__n") >= 2)
-        .select("band_no", "band_val")
-    )
-    cand = banded.join(hot, ["band_no", "band_val"])
-    a = cand.alias("a")
-    b = cand.alias("b")
-    a_lt_b = (F.col("a.__lo") < F.col("b.__lo")) | (
-        (F.col("a.__lo") == F.col("b.__lo"))
-        & (F.col("a.__hi") < F.col("b.__hi"))
-    )
-    return (
-        a.join(
-            b,
-            (F.col("a.band_no") == F.col("b.band_no"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & a_lt_b,
-        )
-        .select(
-            F.col("a.__lo").alias("__la"),
-            F.col("a.__hi").alias("__ha"),
-            F.col("b.__lo").alias("__lb"),
-            F.col("b.__hi").alias("__hb"),
-        )
-        .distinct()
-        .withColumn(
-            "hamming",
-            (
-                F.bit_count(F.col("__la").bitwiseXOR(F.col("__lb")))
-                + F.bit_count(F.col("__ha").bitwiseXOR(F.col("__hb")))
-            ).cast("int"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-    )
-
-
 def wide_hamming_neardup_pairs(
     fp: DataFrame,
     id_col: str = "doc_id",
@@ -989,58 +905,7 @@ def wide_hamming_neardup_pairs(
     stays ~planted-pairs-sized instead of the n²/2^16 floor
     (SCALING.md round 11 measured that floor dominating the narrow
     family's decade beyond ~10^6 distinct hashes)."""
-    if max_hamming > 3:
-        raise ValueError(
-            "pigeonhole recall guarantee over 4 bands needs "
-            f"max_hamming <= 3 (got {max_hamming})"
-        )
-    ids = _pinned_hash_cache(
-        fp.select(
-            F.col(id_col).alias("__id"),
-            F.col(lo_col).alias("__lo"),
-            F.col(hi_col).alias("__hi"),
-        ),
-        "__lo",
-        "__hi",
-    )
-    hs = ids.select("__lo", "__hi").distinct()
-    hp = _wide_candidate_pairs(hs, max_hamming)
-    cross = (
-        hp.join(
-            ids.select(
-                F.col("__id").alias("__ida"),
-                F.col("__lo").alias("__la"),
-                F.col("__hi").alias("__ha"),
-            ),
-            ["__la", "__ha"],
-        )
-        .join(
-            ids.select(
-                F.col("__id").alias("__idb"),
-                F.col("__lo").alias("__lb"),
-                F.col("__hi").alias("__hb"),
-            ),
-            ["__lb", "__hb"],
-        )
-        .select(
-            F.least("__ida", "__idb").alias("doc_a"),
-            F.greatest("__ida", "__idb").alias("doc_b"),
-            "hamming",
-        )
-    )
-    x = ids.alias("x")
-    y = ids.alias("y")
-    zero = x.join(
-        y,
-        (F.col("x.__lo") == F.col("y.__lo"))
-        & (F.col("x.__hi") == F.col("y.__hi"))
-        & (F.col("x.__id") < F.col("y.__id")),
-    ).select(
-        F.col("x.__id").alias("doc_a"),
-        F.col("y.__id").alias("doc_b"),
-        F.lit(0).cast("int").alias("hamming"),
-    )
-    return cross.unionByName(zero)
+    return _batch_pairs(fp, id_col, [lo_col, hi_col], max_hamming)
 
 
 def wide_hamming_neardup_incremental(
@@ -1068,71 +933,8 @@ def wide_hamming_neardup_incremental(
 
     Returns (store_id, batch_id, hamming <= max_hamming).
     """
-    if max_hamming > 3:
-        raise ValueError(
-            "pigeonhole recall guarantee over 4 bands needs "
-            f"max_hamming <= 3 (got {max_hamming})"
-        )
-    s_ids = _pinned_hash_cache(
-        store.select(
-            F.col(id_col).alias("store_id"),
-            F.col(lo_col).alias("__ls"),
-            F.col(hi_col).alias("__hs"),
-        ),
-        "__ls",
-        "__hs",
-    )
-    b_ids = _pinned_hash_cache(
-        batch.select(
-            F.col(id_col).alias("batch_id"),
-            F.col(lo_col).alias("__lb"),
-            F.col(hi_col).alias("__hb"),
-        ),
-        "__lb",
-        "__hb",
-    )
-    s = _banded_wide(
-        s_ids.select(
-            F.col("__ls").alias("__lo"), F.col("__hs").alias("__hi")
-        ).distinct(),
-        "__lo",
-        "__hi",
-    ).alias("s")
-    b = _banded_wide(
-        b_ids.select(
-            F.col("__lb").alias("__lo"), F.col("__hb").alias("__hi")
-        ).distinct(),
-        "__lo",
-        "__hi",
-    ).alias("b")
-    hp = (
-        s.join(
-            b,
-            (F.col("s.band_no") == F.col("b.band_no"))
-            & (F.col("s.band_val") == F.col("b.band_val")),
-        )
-        .select(
-            F.col("s.__lo").alias("__ls"),
-            F.col("s.__hi").alias("__hs"),
-            F.col("b.__lo").alias("__lb"),
-            F.col("b.__hi").alias("__hb"),
-        )
-        .distinct()
-        .withColumn(
-            "hamming",
-            (
-                F.bit_count(F.col("__ls").bitwiseXOR(F.col("__lb")))
-                + F.bit_count(F.col("__hs").bitwiseXOR(F.col("__hb")))
-            ).cast("int"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-    )
-    # batch side expands FIRST (typically much smaller), store side
-    # last — the narrow incremental's expansion-order discipline
-    return (
-        hp.join(b_ids, ["__lb", "__hb"])
-        .join(s_ids, ["__ls", "__hs"])
-        .select("store_id", "batch_id", "hamming")
+    return _probe_pairs(
+        store, batch, id_col, [lo_col, hi_col], max_hamming
     )
 
 
@@ -1288,62 +1090,10 @@ def video_neardup_pairs_wide(
     splits a hot fingerprint). The only corpus-sized exchanges are
     hash-keyed.
     """
-    if max_hamming > 3:
-        raise ValueError(
-            "pigeonhole recall guarantee over 4 bands needs "
-            f"max_hamming <= 3 (got {max_hamming})"
-        )
-    frames = _pinned_hash_cache(
-        fh.select(
-            F.col(id_col).alias("__vid"),
-            F.col(lo_col).alias("__lo"),
-            F.col(hi_col).alias("__hi"),
-        ),
-        "__lo",
-        "__hi",
+    pairs = _batch_pairs(
+        fh, id_col, [lo_col, hi_col], max_hamming, frames=True
     )
-    hs = frames.select("__lo", "__hi").distinct()
-    hp = _wide_candidate_pairs(hs, max_hamming).drop("hamming")
-    cross = (
-        hp.join(
-            frames.select(
-                F.col("__vid").alias("__va"),
-                F.col("__lo").alias("__la"),
-                F.col("__hi").alias("__ha"),
-            ),
-            ["__la", "__ha"],
-        )
-        .join(
-            frames.select(
-                F.col("__vid").alias("__vb"),
-                F.col("__lo").alias("__lb"),
-                F.col("__hi").alias("__hb"),
-            ),
-            ["__lb", "__hb"],
-        )
-        .filter(F.col("__va") != F.col("__vb"))
-        .select(
-            F.least("__va", "__vb").alias("video_a"),
-            F.greatest("__va", "__vb").alias("video_b"),
-        )
-    )
-    x = frames.alias("x")
-    y = frames.alias("y")
-    equal = x.join(
-        y,
-        (F.col("x.__lo") == F.col("y.__lo"))
-        & (F.col("x.__hi") == F.col("y.__hi"))
-        & (F.col("x.__vid") < F.col("y.__vid")),
-    ).select(
-        F.col("x.__vid").alias("video_a"),
-        F.col("y.__vid").alias("video_b"),
-    )
-    return (
-        cross.unionByName(equal)
-        .groupBy("video_a", "video_b")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_matched"))
-        .filter(F.col("n_matched") >= min_matches)
-    )
+    return _frame_vote(pairs, "video_a", "video_b", min_matches)
 
 
 def video_neardup_incremental_wide(
@@ -1372,71 +1122,10 @@ def video_neardup_incremental_wide(
 
     Returns (store_id, batch_id, n_matched >= min_matches).
     """
-    if max_hamming > 3:
-        raise ValueError(
-            "pigeonhole recall guarantee over 4 bands needs "
-            f"max_hamming <= 3 (got {max_hamming})"
-        )
-    s_ids = _pinned_hash_cache(
-        store_fh.select(
-            F.col(id_col).alias("store_id"),
-            F.col(lo_col).alias("__ls"),
-            F.col(hi_col).alias("__hs"),
-        ),
-        "__ls",
-        "__hs",
+    pairs = _probe_pairs(
+        store_fh, batch_fh, id_col, [lo_col, hi_col], max_hamming
     )
-    b_ids = _pinned_hash_cache(
-        batch_fh.select(
-            F.col(id_col).alias("batch_id"),
-            F.col(lo_col).alias("__lb"),
-            F.col(hi_col).alias("__hb"),
-        ),
-        "__lb",
-        "__hb",
-    )
-    s = _banded_wide(
-        s_ids.select(
-            F.col("__ls").alias("__lo"), F.col("__hs").alias("__hi")
-        ).distinct(),
-        "__lo",
-        "__hi",
-    ).alias("s")
-    b = _banded_wide(
-        b_ids.select(
-            F.col("__lb").alias("__lo"), F.col("__hb").alias("__hi")
-        ).distinct(),
-        "__lo",
-        "__hi",
-    ).alias("b")
-    hp = (
-        s.join(
-            b,
-            (F.col("s.band_no") == F.col("b.band_no"))
-            & (F.col("s.band_val") == F.col("b.band_val")),
-        )
-        .select(
-            F.col("s.__lo").alias("__ls"),
-            F.col("s.__hi").alias("__hs"),
-            F.col("b.__lo").alias("__lb"),
-            F.col("b.__hi").alias("__hb"),
-        )
-        .distinct()
-        .filter(
-            (
-                F.bit_count(F.col("__ls").bitwiseXOR(F.col("__lb")))
-                + F.bit_count(F.col("__hs").bitwiseXOR(F.col("__hb")))
-            )
-            <= max_hamming
-        )
-    )
-    return (
-        hp.join(b_ids, ["__lb", "__hb"])
-        .join(s_ids, ["__ls", "__hs"])
-        .groupBy("store_id", "batch_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_matched"))
-        .filter(F.col("n_matched") >= min_matches)
-    )
+    return _frame_vote(pairs, "store_id", "batch_id", min_matches)
 
 
 # ======================================================================

@@ -108,7 +108,34 @@ def test_phash_envelope_gates(spark):
         perceptual.image_phash(df).collect()
     ph = spark.createDataFrame([(1, 5)], "doc_id: long, phash: long")
     with pytest.raises(ValueError, match="pigeonhole"):
-        perceptual.phash_neardup_pairs(ph, max_hamming=4, bands=4)
+        perceptual.phash_neardup_pairs(ph, max_hamming=4)
+
+
+
+def test_tools_reference_existing_perceptual_names():
+    """The scale studies in tools/ call perceptual.<name> but never
+    run in the test suite, so a renamed operator would only surface
+    on a full-scale run. Scan their ASTs (no Spark) and require every
+    referenced name to exist."""
+    import ast
+    import glob
+    import os
+
+    tools = os.path.join(os.path.dirname(__file__), "..", "tools")
+    refs = {}
+    for path in glob.glob(os.path.join(tools, "*.py")):
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Attribute)
+                and isinstance(node.value, ast.Name)
+                and node.value.id == "perceptual"
+            ):
+                refs.setdefault(node.attr, os.path.basename(path))
+    assert refs, "no perceptual.<name> references found under tools/"
+    missing = {n: p for n, p in refs.items() if not hasattr(perceptual, n)}
+    assert not missing, missing
 
 
 def test_pixel_sql_python_parity():

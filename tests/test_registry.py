@@ -15,10 +15,11 @@ sys.path.insert(
 )
 from check_oracle import _canon  # noqa: E402
 
-# Entries whose oracle is assembled from the dense-family pieces in
-# registry.py (candidate source x consumer tail, the near-dup verify
-# and the LSH bucket SQL).
-DENSE_ORACLE_ENTRIES = [
+# Entries whose oracle is generated from shared pieces in registry.py:
+# the dense family (candidate source x consumer tail, the near-dup
+# verify and the LSH bucket SQL) and the perceptual family (modality x
+# width x consumer).
+GENERATED_ORACLE_ENTRIES = [
     "embedding_neardup_pairs",
     "embedding_neardup_pairs_ann",
     "embedding_neardup_pairs_ann_auto",
@@ -43,6 +44,24 @@ DENSE_ORACLE_ENTRIES = [
     "stream_embedding_neardup",
     "sim_search_lsh",
     "sim_search_lsh_multiprobe",
+    "image_phash",
+    "image_phash_neardup",
+    "image_phash_incremental",
+    "image_phash_wide",
+    "image_phash_neardup_wide",
+    "image_phash_incremental_wide",
+    "video_phash_frames",
+    "video_phash_neardup",
+    "video_phash_incremental",
+    "video_frame_hash_wide",
+    "video_phash_neardup_wide",
+    "video_phash_incremental_wide",
+    "audio_fingerprint",
+    "audio_fingerprint_neardup",
+    "audio_fingerprint_incremental",
+    "audio_fingerprint_wide",
+    "audio_fingerprint_neardup_wide",
+    "audio_fingerprint_incremental_wide",
 ]
 
 
@@ -186,7 +205,7 @@ def duck(sf_dir):
     con.close()
 
 
-@pytest.mark.parametrize("name", DENSE_ORACLE_ENTRIES)
+@pytest.mark.parametrize("name", GENERATED_ORACLE_ENTRIES)
 def test_dense_oracle_matches_builder(spark, sf_dir, duck, name):
     """The Spark builder and its DuckDB oracle return the same rows
     (compared as tools/check_oracle.py does)."""

@@ -64,6 +64,28 @@ def test_unknown_colorspace_raises():
         videocodec.decode_y4m(payload)
 
 
+def _vid_plane(
+    doc_id: int, f: int, w: int, h: int, coef, boost: int = 0
+) -> bytes:
+    """Pure-Python reference form of one plane — the pinned semantics
+    the vectorized ``multimodal._vid_planes_np`` must reproduce
+    bit-for-bit (the test below recomputes planes through this
+    form)."""
+    a, b, c, d = coef
+    return bytes(
+        (
+            doc_id * a
+            + f * b
+            + y * c
+            + x * d
+            + (boost if f == 0 and y == 0 and x == 0 else 0)
+        )
+        % 256
+        for y in range(h)
+        for x in range(w)
+    )
+
+
 def test_video_frame_stats_matches_python_reference(spark):
     from pyspark_scd_spark.operators import multimodal
 
@@ -83,7 +105,7 @@ def test_video_frame_stats_matches_python_reference(spark):
         w, h, n = multimodal._vid_dims(i)
         for f in range(n):
             planes = [
-                multimodal._vid_plane(i, f, w, h, coef)
+                _vid_plane(i, f, w, h, coef)
                 for coef in
                 (multimodal._VID_Y, multimodal._VID_U, multimodal._VID_V)
             ]

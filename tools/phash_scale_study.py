@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame, functions as F, types as T  # noqa: E402
 
 from pyspark_scd_spark.operators import perceptual  # noqa: E402
 from pyspark_scd_spark.session import get_spark  # noqa: E402
+from tools.av_scale_study import _consume, _ensure_tier  # noqa: E402
 
 TIERS = [(150_000, "x30"), (500_000, "x100"), (1_500_000, "x300")]
 
@@ -90,22 +91,6 @@ def diverse_grayscale_payload(
             ]
         ),
     )
-
-
-def _consume(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
-
-
-def _ensure_tier(spark, n: int, d: str) -> None:
-    marker = os.path.join(d, "documents.parquet", "_SUCCESS")
-    if os.path.exists(marker):
-        return
-    t0 = time.time()
-    df = spark.range(0, n).withColumnRenamed("id", "doc_id")
-    df.repartition(32).write.mode("overwrite").parquet(
-        os.path.join(d, "documents.parquet")
-    )
-    print(f"built {d} ({n} ids) in {time.time() - t0:.1f}s", flush=True)
 
 
 def _queries(spark, sf_dir: str):
