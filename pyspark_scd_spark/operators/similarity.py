@@ -1,22 +1,25 @@
 """Similarity search over embedding columns (``array<float>``).
 
-Two paths, per the standard ANN playbook:
+Two kinds of operator live here:
 
-- ``brute_force_topk``: exact cosine top-k of every query against the
-  corpus. The query set is broadcast, so the corpus is scanned ONCE
-  with no shuffle of the big side — correct baseline and perfectly
-  scalable when |queries| is bounded.
-- ``lsh_bucketed_topk``: random-hyperplane LSH — sign-bit bucket per
-  vector, candidates = same-bucket (or neighboring-bucket) rows, exact
-  cosine re-rank inside the bucket. Sub-linear candidate sets at the
-  cost of recall; the hyperplanes are deterministic constants so runs
-  are reproducible and the DuckDB oracle can replicate them.
-- ``embedding_neardup_pairs``: threshold cosine self-join for semantic
-  dedup (the exact-verify stage LSH candidates feed into).
-
-All cosine math is double-precision Catalyst expressions
-(functions/vectors.py) — bit-identical to the oracle's
-``list_cosine_similarity(CAST(v AS DOUBLE[]), ...)``.
+- Query-set top-k (``brute_force_topk``, ``lsh_bucketed_topk``): the
+  query set is broadcast and the corpus scanned once. Their cosine is
+  a double-precision Catalyst expression (functions/vectors.py),
+  bit-identical to the oracle's
+  ``list_cosine_similarity(CAST(v AS DOUBLE[]), ...)``.
+- The dense self-similarity family — kNN label vote, hard negatives
+  and near-dup pairs — over three indexes: the exact pair grid
+  (``*_grid``), LSH buckets (``*_ann``) and IVF cells (``*_ivf``).
+  The index decides which vectors meet in a group (a grid cell, a
+  (table, bucket) or a probed cell); every group is then scored by
+  one of two numpy kernels: ``_np_topk_emit`` (per-anchor top-k) or
+  ``_np_pairs_emit`` (above-threshold pairs). Both L2-normalize
+  through ``_l2_rows`` (a zero vector scores NaN, which no threshold
+  keeps) and round through ``_round_away``, DuckDB's
+  half-away-from-zero ``ROUND``. The driver-collect twins
+  (``embedding_neardup_pairs_blas``, ``knn_label_vote``,
+  ``hard_negative_mining``) are explicit small-corpus options outside
+  this contract.
 
 The LSH and IVF operators take ``verify=``: a bucket/cell GEMM (the
 default) or ``'pairs'``, the pair-gather twin through
@@ -224,41 +227,6 @@ def lsh_bucketed_topk(
     )
 
 
-def embedding_neardup_pairs(
-    df: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    use_lsh: bool = False,
-    dim: int | None = None,
-) -> DataFrame:
-    """Semantic near-dup pairs: cosine ≥ threshold, id_a < id_b
-    (expression form).
-
-    ``use_lsh=True`` restricts the self-join to same-bucket candidates
-    (the 100 TB path — full n² is only for bounded subsets / oracle
-    verification). For the dense all-pairs case prefer
-    ``embedding_neardup_pairs_blas``: per-element Catalyst lambdas cost
-    ~100× a BLAS matmul on the same pairs.
-    """
-    a = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("__va"))
-    b = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("__vb"))
-    if use_lsh:
-        assert dim is not None
-        a = with_lsh_bucket(a, dim, vec_col="__va")
-        b = with_lsh_bucket(b, dim, vec_col="__vb")
-        joined = a.join(b, "bucket").filter(F.col("id_a") < F.col("id_b"))
-    else:
-        joined = a.join(b, F.col("id_a") < F.col("id_b"))
-    return (
-        joined.withColumn(
-            "cosine", F.round(V.cosine(F.col("__va"), F.col("__vb")), 6)
-        )
-        .filter(_neardup_threshold(threshold))
-        .select("id_a", "id_b", "cosine")
-    )
-
-
 def embedding_neardup_pairs_blas(
     df: DataFrame,
     threshold: float,
@@ -269,8 +237,9 @@ def embedding_neardup_pairs_blas(
     """All-pairs cosine ≥ threshold via blocked BLAS matmul —
     EXPLICIT SMALL-CORPUS OPTION: collects the corpus to the driver.
     The registry and any at-scale caller use
-    ``embedding_neardup_pairs_grid`` (same results, fully
-    distributed); this form wins only on corpora small enough that
+    ``embedding_neardup_pairs_grid`` (fully distributed; the same
+    results except on exact .5 rounding ties, which this form rounds
+    half to even); this form wins only on corpora small enough that
     grid-cell scheduling overhead dominates.
 
     One side is collected, L2-normalized, and broadcast (N×d float64 —
@@ -836,7 +805,8 @@ def knn_label_vote(
 
     EXPLICIT SMALL-CORPUS OPTION — collects the corpus to the driver
     and broadcasts it; the registry and any at-scale caller use
-    ``knn_label_vote_grid`` (bit-identical output, fully distributed).
+    ``knn_label_vote_grid`` (fully distributed; the same output except
+    on exact .5 ties at 6 dp, which this form rounds half to even).
 
     Same blocked-BLAS shape as ``embedding_neardup_pairs_blas``: the
     corpus matrix is L2-normalized and broadcast, ``mapInPandas``
@@ -1065,8 +1035,7 @@ def _pack_vec_blocks(
 
     def _pack(key, pdf):
         ids = pdf[id_col].to_numpy(dtype=np.int64)
-        mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-        mat /= np.linalg.norm(mat, axis=1, keepdims=True)
+        mat = _l2_rows(pdf[vec_col])
         row = {
             "blk": [int(key[0])],
             "n": [int(len(ids))],
@@ -1107,6 +1076,24 @@ def _grid(packed: DataFrame, upper_only: bool) -> DataFrame:
     return cells
 
 
+def _grid_side(row, side: str):
+    """(ids, labels or None, L2-normalized matrix) of one side
+    (``'l'`` or ``'r'``) of a ``_grid`` cell row."""
+    import numpy as np
+
+    def get(c):
+        return getattr(row, f"{side}_{c}", None)
+
+    lab = get("labels")
+    return (
+        np.frombuffer(get("ids"), dtype=np.int64),
+        None if lab is None else np.frombuffer(lab, dtype=np.int64),
+        np.frombuffer(get("mat"), dtype=np.float64).reshape(
+            get("n"), get("dim")
+        ),
+    )
+
+
 def embedding_neardup_pairs_grid(
     df: DataFrame,
     threshold: float,
@@ -1122,15 +1109,15 @@ def embedding_neardup_pairs_grid(
 
     The corpus is packed into ``n_blocks`` chunk rows (one shuffle),
     the chunk table self-joined into the upper-triangle grid of block
-    pairs, and each grid cell runs one dense matmul over Arrow,
-    emitting only pairs ≥ threshold with id_a < id_b. Per-pair math is
-    identical to the broadcast path (normalized float64 dot, rounded to
-    ``round_to``, threshold on the ROUNDED value), so results are
-    bit-identical — each unordered pair lives in exactly one cell.
+    pairs, and each grid cell runs the pairs kernel
+    (``_np_pairs_emit``: normalized float64 dot, rounded half away
+    from zero to ``round_to`` like DuckDB's ROUND, threshold on the
+    ROUNDED value), emitting pairs with id_a < id_b. Each unordered
+    pair lives in exactly one cell. Same rows as the LSH and IVF
+    tiers' verify; the ``_blas`` twin rounds half to even, so it can
+    differ on exact .5 ties.
     """
     import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
 
     # localCheckpoint: the grid references the packed table twice; the
     # checkpoint runs the pack once and pins it executor-side.
@@ -1142,35 +1129,60 @@ def embedding_neardup_pairs_grid(
     def _cell(batches):
         for pdf in batches:
             for row in pdf.itertuples(index=False):
-                aids = np.frombuffer(row.l_ids, dtype=np.int64)
-                amat = np.frombuffer(row.l_mat, dtype=np.float64).reshape(
-                    row.l_n, row.l_dim
-                )
-                bids = np.frombuffer(row.r_ids, dtype=np.int64)
-                bmat = np.frombuffer(row.r_mat, dtype=np.float64).reshape(
-                    row.r_n, row.r_dim
-                )
-                sims = np.round(amat @ bmat.T, round_to)
-                mask = sims >= threshold
+                aids, _, amat = _grid_side(row, "l")
+                bids, _, bmat = _grid_side(row, "r")
                 # One emission per unordered pair: the diagonal cell
                 # sees both orderings, off-diagonal cells see one.
-                if row.l_blk == row.r_blk:
-                    mask &= aids[:, None] < bids[None, :]
-                ii, jj = np.nonzero(mask)
-                id_a = np.minimum(aids[ii], bids[jj])
-                id_b = np.maximum(aids[ii], bids[jj])
-                yield pd.DataFrame(
-                    {"id_a": id_a, "id_b": id_b, "cosine": sims[ii, jj]}
+                out = _frame(
+                    _np_pairs_emit(
+                        aids, amat, bids, bmat, threshold, round_to,
+                        upper=row.l_blk == row.r_blk,
+                    ),
+                    _PAIR_FIELDS,
+                )
+                yield out.assign(
+                    id_a=np.minimum(out.id_a, out.id_b),
+                    id_b=np.maximum(out.id_a, out.id_b),
                 )
 
-    schema = T.StructType(
-        [
-            T.StructField("id_a", T.LongType()),
-            T.StructField("id_b", T.LongType()),
-            T.StructField("cosine", T.DoubleType()),
-        ]
-    )
-    return cells.mapInPandas(_cell, schema=schema)
+    return cells.mapInPandas(_cell, schema=_schema(_PAIR_FIELDS))
+
+
+def _grid_topk_scored(
+    df: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    label_col: str,
+    n_blocks: int | None,
+    cross_label_only: bool,
+) -> DataFrame:
+    """(qid, qlabel, nid, nlabel, c) candidate rows of the exact grid's
+    per-anchor consumers: every (query-block, corpus-block) cell runs
+    the top-k kernel (``_np_topk_emit``, cosine at 6 dp) and emits its
+    LOCAL top-k per query — lossless, because top-k under a total
+    order distributes over any partition of the corpus. Shuffled
+    candidate volume is |corpus|·n_blocks·k rows, independent of
+    corpus width."""
+    if n_blocks is None:
+        n_blocks = _auto_blocks(df, vec_col)
+    packed = _pack_vec_blocks(
+        df, n_blocks, id_col, vec_col, label_col
+    ).localCheckpoint()
+    cells = _grid(packed, upper_only=False)
+
+    def _cell(batches):
+        for pdf in batches:
+            for row in pdf.itertuples(index=False):
+                yield _frame(
+                    _np_topk_emit(
+                        *_grid_side(row, "l"), *_grid_side(row, "r"),
+                        k, 6, cross_label_only,
+                    ),
+                    _SCORED_FIELDS,
+                )
+
+    return cells.mapInPandas(_cell, schema=_schema(_SCORED_FIELDS))
 
 
 def knn_label_vote_grid(
@@ -1183,102 +1195,21 @@ def knn_label_vote_grid(
 ) -> DataFrame:
     """Exact kNN label-consistency audit without materializing the
     corpus on the driver (the 100 TB-shaped twin of
-    ``knn_label_vote``; same output, bit-for-bit).
+    ``knn_label_vote``, which ranks on half-to-even rounded cosines —
+    the two can differ only on exact .5 ties at 6 dp).
 
-    Candidate generation is a blocked pair grid: every (query-block,
-    corpus-block) cell computes one dense matmul and emits only its
-    LOCAL top-k rows per query — correct because top-k under a total
-    order distributes over any partition of the corpus. The global
-    merge (row_number over cosine DESC, id ASC), majority vote and
-    smaller-label tie-break then run as ordinary window/groupBy plans
-    — the same declarative shape as the DuckDB oracle. Shuffled
-    candidate volume is |corpus|·n_blocks·k rows, independent of
-    corpus width.
+    Candidate generation is the blocked pair grid
+    (``_grid_topk_scored``): each cell emits its local top-k rows per
+    query. The global merge (row_number over cosine DESC, id ASC),
+    majority vote and smaller-label tie-break then run as ordinary
+    window/groupBy plans (``_vote_tail``) — the same declarative shape
+    as the DuckDB oracle.
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    if n_blocks is None:
-        n_blocks = _auto_blocks(df, vec_col)
-    packed = _pack_vec_blocks(
-        df, n_blocks, id_col, vec_col, label_col
-    ).localCheckpoint()
-    cells = _grid(packed, upper_only=False)
-
-    def _cell(batches):
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                qids = np.frombuffer(row.l_ids, dtype=np.int64)
-                qlab = np.frombuffer(row.l_labels, dtype=np.int64)
-                qmat = np.frombuffer(row.l_mat, dtype=np.float64).reshape(
-                    row.l_n, row.l_dim
-                )
-                cids = np.frombuffer(row.r_ids, dtype=np.int64)
-                clab = np.frombuffer(row.r_labels, dtype=np.int64)
-                cmat = np.frombuffer(row.r_mat, dtype=np.float64).reshape(
-                    row.r_n, row.r_dim
-                )
-                sims = np.round(qmat @ cmat.T, 6)
-                sims[qids[:, None] == cids[None, :]] = -np.inf  # no self
-                # Vectorized local top-k under the (cosine DESC, id
-                # ASC) total order: one 2-D lexsort per cell instead
-                # of a Python loop per query row (the loop, not the
-                # matmul, dominated cell cost at depth).
-                kk = min(k, sims.shape[1])
-                order = np.lexsort(
-                    (np.broadcast_to(cids, sims.shape), -sims), axis=-1
-                )[:, :kk]
-                top_s = np.take_along_axis(sims, order, axis=1)
-                valid = (top_s != -np.inf).ravel()
-                yield pd.DataFrame(
-                    {
-                        "qid": np.repeat(qids, kk)[valid],
-                        "qlabel": np.repeat(qlab, kk)[valid].astype(
-                            np.int32
-                        ),
-                        "nid": cids[order.ravel()][valid],
-                        "nlabel": clab[order.ravel()][valid].astype(
-                            np.int32
-                        ),
-                        "c": top_s.ravel()[valid],
-                    }
-                )
-
-    cand_schema = T.StructType(
-        [
-            T.StructField("qid", T.LongType()),
-            T.StructField("qlabel", T.IntegerType()),
-            T.StructField("nid", T.LongType()),
-            T.StructField("nlabel", T.IntegerType()),
-            T.StructField("c", T.DoubleType()),
-        ]
+    scored = _grid_topk_scored(
+        df, k, id_col, vec_col, label_col, n_blocks,
+        cross_label_only=False,
     )
-    cand = cells.mapInPandas(_cell, schema=cand_schema)
-
-    w_rank = Window.partitionBy("qid").orderBy(
-        F.col("c").desc(), F.col("nid").asc()
-    )
-    topk = cand.withColumn("rk", F.row_number().over(w_rank)).filter(
-        F.col("rk") <= k
-    )
-    votes = topk.groupBy("qid", "qlabel", "nlabel").agg(
-        F.count(F.lit(1)).alias("votes")
-    )
-    w_vote = Window.partitionBy("qid").orderBy(
-        F.col("votes").desc(), F.col("nlabel").asc()
-    )
-    return (
-        votes.withColumn("pr", F.row_number().over(w_vote))
-        .filter(F.col("pr") == 1)
-        .select(
-            F.col("qid").alias(id_col),
-            F.col("qlabel").alias(label_col),
-            F.col("nlabel").alias("predicted_label"),
-            F.col("votes").cast("int").alias("n_agree"),
-            (F.col("nlabel") != F.col("qlabel")).alias("mislabeled"),
-        )
-    )
+    return _vote_tail(scored, k, id_col, label_col)
 
 
 def hard_negative_mining_grid(
@@ -1290,98 +1221,21 @@ def hard_negative_mining_grid(
     n_blocks: int | None = None,
 ) -> DataFrame:
     """Exact top-k hard negatives per anchor via the blocked pair grid
-    (the 100 TB-shaped twin of ``hard_negative_mining``; same output,
-    bit-for-bit — no driver collect, no corpus broadcast).
+    (the 100 TB-shaped twin of ``hard_negative_mining`` — no driver
+    collect, no corpus broadcast).
 
-    Each grid cell masks same-label columns, emits its local top-k
-    negatives per anchor under (cosine@6dp DESC, id ASC); the global
-    row_number merge keeps the true top-k (local top-k under a total
-    order is lossless). The emitted cosine re-rounds to 4 dp with
-    HALF_UP, matching DuckDB ROUND.
+    Each grid cell masks same-label columns and emits its local top-k
+    negatives per anchor under (cosine@6dp DESC, id ASC)
+    (``_grid_topk_scored``); the global row_number merge keeps the
+    true top-k (local top-k under a total order is lossless), and the
+    emitted cosine re-rounds to 4 dp half away from zero, matching
+    DuckDB ROUND (``_hardneg_tail``).
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    if n_blocks is None:
-        n_blocks = _auto_blocks(df, vec_col)
-    packed = _pack_vec_blocks(
-        df, n_blocks, id_col, vec_col, label_col
-    ).localCheckpoint()
-    cells = _grid(packed, upper_only=False)
-
-    def _round_away(a, d):
-        p = 10.0 ** d
-        return np.sign(a) * np.floor(np.abs(a) * p + 0.5) / p
-
-    def _cell(batches):
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                qids = np.frombuffer(row.l_ids, dtype=np.int64)
-                qlab = np.frombuffer(row.l_labels, dtype=np.int64)
-                qmat = np.frombuffer(row.l_mat, dtype=np.float64).reshape(
-                    row.l_n, row.l_dim
-                )
-                cids = np.frombuffer(row.r_ids, dtype=np.int64)
-                clab = np.frombuffer(row.r_labels, dtype=np.int64)
-                cmat = np.frombuffer(row.r_mat, dtype=np.float64).reshape(
-                    row.r_n, row.r_dim
-                )
-                sims = _round_away(qmat @ cmat.T, 6)
-                sims[qlab[:, None] == clab[None, :]] = -np.inf  # negs only
-                # Vectorized local top-k (see knn_label_vote_grid).
-                kk = min(k, sims.shape[1])
-                order = np.lexsort(
-                    (np.broadcast_to(cids, sims.shape), -sims), axis=-1
-                )[:, :kk]
-                top_s = np.take_along_axis(sims, order, axis=1)
-                valid = (top_s != -np.inf).ravel()
-                s_out = top_s.ravel()[valid]
-                yield pd.DataFrame(
-                    {
-                        "qid": np.repeat(qids, kk)[valid],
-                        "qlabel": np.repeat(qlab, kk)[valid].astype(
-                            np.int32
-                        ),
-                        "nid": cids[order.ravel()][valid],
-                        "nlabel": clab[order.ravel()][valid].astype(
-                            np.int32
-                        ),
-                        "c": s_out,
-                        # 4dp re-round in double arithmetic (like
-                        # DuckDB's ROUND), not Spark's BigDecimal
-                        # HALF_UP — the two can disagree on
-                        # .5-boundary doubles.
-                        "c4": _round_away(s_out, 4),
-                    }
-                )
-
-    cand_schema = T.StructType(
-        [
-            T.StructField("qid", T.LongType()),
-            T.StructField("qlabel", T.IntegerType()),
-            T.StructField("nid", T.LongType()),
-            T.StructField("nlabel", T.IntegerType()),
-            T.StructField("c", T.DoubleType()),
-            T.StructField("c4", T.DoubleType()),
-        ]
+    scored = _grid_topk_scored(
+        df, k, id_col, vec_col, label_col, n_blocks,
+        cross_label_only=True,
     )
-    cand = cells.mapInPandas(_cell, schema=cand_schema)
-    w = Window.partitionBy("qid").orderBy(
-        F.col("c").desc(), F.col("nid").asc()
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("qid").alias(id_col),
-            F.col("qlabel").alias(label_col),
-            F.col("nid").alias("neg_id"),
-            F.col("nlabel").alias("neg_label"),
-            F.col("c4").alias("cosine"),
-            F.col("rank"),
-        )
-    )
+    return _hardneg_tail(scored, k, id_col, label_col)
 
 
 def ann_recall_report(
@@ -1668,8 +1522,6 @@ def candidate_pair_cosine(
     candidate row (caller dedups if it passed a multiset).
     """
     import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
 
     if n_blocks is None:
         n_blocks = _auto_blocks(df, vec_col)
@@ -1710,23 +1562,15 @@ def candidate_pair_cosine(
     # gaining an exchange).
     occupied = cand2.select("blk_a", "blk_b").distinct()
     cells = cells.join(F.broadcast(occupied), ["blk_a", "blk_b"], "left_semi")
-    fields = [
-        T.StructField("id_a", T.LongType()),
-        T.StructField("id_b", T.LongType()),
-    ]
+    fields = [("id_a", "long"), ("id_b", "long")]
     if label_col:
-        fields += [
-            T.StructField("label_a", T.IntegerType()),
-            T.StructField("label_b", T.IntegerType()),
-        ]
-    fields.append(T.StructField("cosine", T.DoubleType()))
-    out_schema = T.StructType(fields)
-    p10 = 10.0 ** decimals
+        fields += [("label_a", "int"), ("label_b", "int")]
+    fields.append(("cosine", "double"))
     with_labels = bool(label_col)
 
     def _cell(key, cand_pdf, cell_pdf):
         if len(cand_pdf) == 0 or len(cell_pdf) == 0:
-            return pd.DataFrame({f.name: [] for f in fields})
+            return _frame({}, fields)
         row = cell_pdf.iloc[0]
         aids = np.frombuffer(row["l_ids"], dtype=np.int64)
         amat = np.frombuffer(row["l_mat"], dtype=np.float64).reshape(
@@ -1763,21 +1607,20 @@ def candidate_pair_cosine(
                 "ids absent from the corpus, or the id column's type hashes "
                 "differently than the corpus id column."
             )
-        c = (amat[ia] * bmat[ib]).sum(axis=1)
-        c = np.sign(c) * np.floor(np.abs(c) * p10 + 0.5) / p10
-        out = {"id_a": ca, "id_b": cb}
+        out = {"id_a": [ca], "id_b": [cb]}
         if with_labels:
             alab = np.frombuffer(row["l_labels"], dtype=np.int64)
             blab = np.frombuffer(row["r_labels"], dtype=np.int64)
-            out["label_a"] = alab[ia].astype(np.int32)
-            out["label_b"] = blab[ib].astype(np.int32)
-        out["cosine"] = c
-        return pd.DataFrame(out)
+            out["label_a"] = [alab[ia]]
+            out["label_b"] = [blab[ib]]
+        c = (amat[ia] * bmat[ib]).sum(axis=1)
+        out["cosine"] = [_round_away(c, decimals)]
+        return _frame(out, fields)
 
     return (
         cand2.groupBy("blk_a", "blk_b")
         .cogroup(cells.groupBy("blk_a", "blk_b"))
-        .applyInPandas(_cell, schema=out_schema)
+        .applyInPandas(_cell, schema=_schema(fields))
     )
 
 
@@ -1786,18 +1629,32 @@ def _round_away_col(c, decimals: int):
     arithmetic): sign(x)·floor(|x|·10^d + 0.5)/10^d. IEEE ops are
     deterministic, so this is bit-identical across engines — unlike
     Spark's BigDecimal HALF_UP round, which can disagree with the
-    float formula on .5-boundary doubles (see
-    hard_negative_mining_grid)."""
+    float formula on .5-boundary doubles. The Column twin of
+    ``_round_away``."""
     p = float(10**decimals)
     return F.signum(c) * F.floor(F.abs(c) * F.lit(p) + F.lit(0.5)) / F.lit(p)
 
 
+def _round_away(a, decimals: int):
+    """DuckDB's ``ROUND`` in numpy: half away from zero, in double
+    arithmetic. ``np.round`` is half-to-even, and the two disagree
+    exactly on .5 boundaries, which real cosine ties hit (1/32 at 4 dp
+    is 0.0313 here and in DuckDB, 0.0312 under ``np.round``). NaN
+    stays NaN."""
+    import numpy as np
+
+    p = 10.0**decimals
+    with np.errstate(invalid="ignore"):
+        return np.sign(a) * np.floor(np.abs(a) * p + 0.5) / p
+
+
 def _l2_rows(col, dim_hint: int | None = None):
-    """Vector column → L2-normalized float64 matrix, mirroring
-    ``_pack_vec_blocks`` exactly (NO zero-norm guard: a zero vector
-    normalizes to NaN rows, so its cosines are NaN — which Spark's
-    window ordering ranks GREATEST and ``_neardup_threshold``
-    excludes, the same fates the pair-gather path gives them)."""
+    """Vector column → L2-normalized float64 matrix — the one
+    normalization of the dense family (``_pack_vec_blocks`` and every
+    bucket/cell verify). NO zero-norm guard: a zero vector normalizes
+    to NaN rows, so its cosines are NaN — which Spark's window
+    ordering ranks GREATEST and ``_neardup_threshold`` excludes, the
+    same fates every tier gives them."""
     import numpy as np
 
     try:
@@ -1826,51 +1683,94 @@ def _l2_rows(col, dim_hint: int | None = None):
     return mat
 
 
+def _chunk_rows(chunk_rows: int, n_members: int) -> int:
+    """Query rows per GEMM chunk: at most ``chunk_rows``, and few enough
+    that the chunk's sims matrix stays near 16M doubles (~128 MB). The
+    floor is 1, not 16: a 16-row floor lets the sims matrix reach
+    16*M elements on mega-groups (M=10M members -> ~1.3 GB)."""
+    return max(1, min(chunk_rows, 16_000_000 // max(n_members, 1)))
+
+
 def _np_topk_emit(
-    qids, qlab, qmat, nids, nlab, nmat, k, p10, cross_label_only,
-    chunk_rows,
+    qids, qlab, qmat, nids, nlab, nmat, k, decimals, cross_label_only,
+    chunk_rows=2048,
 ):
-    """Chunked directed top-k of one group: rounded GEMM sims, self
+    """Top-k kernel of the dense family: chunked directed top-k of one
+    group (grid cell, LSH bucket or IVF cell). Rounded GEMM sims, self
     masked, (optionally) same-label masked, per-query top-k under the
-    (cosine DESC, id ASC) total order — the grid kernel's vectorized
-    lexsort, reused per bucket/cell. NaN sims rank GREATEST (Spark /
+    (cosine DESC, id ASC) total order. NaN sims rank GREATEST (Spark /
     DuckDB NaN-greatest ordering — numpy would sort them last, which
     would silently diverge from the pair-gather twin on degenerate
-    vectors). Returns column arrays for the caller to frame."""
+    vectors). Returns per-chunk column arrays of ``_SCORED_FIELDS`` for
+    ``_frame``.
+
+    The order is one int64 key per (query, member), ascending: a
+    rounded cosine is a whole number of 10^-decimals units, so minus
+    that count (NaN above every cosine, masked members below), times
+    the member count, plus the member's id rank is exact and tie-free.
+    ``argpartition`` then a k-wide sort replace a two-key lexsort of
+    every full row (about 3x faster per cell at k=3)."""
     import numpy as np
 
-    M = len(nids)
-    kk = min(k, M)
-    # floor of 1, not 16: a 16-row floor lets the per-chunk sims
-    # matrix reach 16*M elements on mega-groups (M=10M members ->
-    # ~1.3 GB), 16x past the intended ~128 MB element budget
-    chunk = max(1, min(chunk_rows, 16_000_000 // max(M, 1)))
+    m = len(nids)
+    kk = min(k, m)
+    big = 2.0 * 10**decimals
+    id_rank = np.empty(m, dtype=np.int64)
+    id_rank[np.argsort(nids, kind="stable")] = np.arange(m)
+    chunk = _chunk_rows(chunk_rows, m)
     cols = {"qid": [], "qlabel": [], "nid": [], "nlabel": [], "c": []}
     for lo in range(0, len(qids), chunk):
-        hi = min(lo + chunk, len(qids))
-        sims = qmat[lo:hi] @ nmat.T
-        with np.errstate(invalid="ignore"):
-            sims = np.sign(sims) * np.floor(np.abs(sims) * p10 + 0.5) / p10
-        keyk = np.where(np.isnan(sims), np.inf, sims)
-        keyk[qids[lo:hi, None] == nids[None, :]] = -np.inf
+        q = slice(lo, lo + chunk)
+        sims = _round_away(qmat[q] @ nmat.T, decimals)
+        units = np.rint(sims * 10.0**decimals)
+        units[np.isnan(units)] = big
+        units[qids[q, None] == nids[None, :]] = -big
         if cross_label_only:
-            keyk[qlab[lo:hi, None] == nlab[None, :]] = -np.inf
-        order = np.lexsort(
-            (np.broadcast_to(nids, keyk.shape), -keyk), axis=-1
-        )[:, :kk]
-        topkey = np.take_along_axis(keyk, order, axis=1)
-        valid = (topkey != -np.inf).ravel()
-        cols["qid"].append(np.repeat(qids[lo:hi], kk)[valid])
-        cols["qlabel"].append(
-            np.repeat(qlab[lo:hi], kk)[valid].astype(np.int32)
+            units[qlab[q, None] == nlab[None, :]] = -big
+        key = (-units).astype(np.int64) * m + id_rank
+        top = np.argpartition(key, kk - 1, axis=-1)[:, :kk]
+        order = np.take_along_axis(
+            top,
+            np.argsort(np.take_along_axis(key, top, axis=-1), axis=-1),
+            axis=-1,
         )
+        valid = (np.take_along_axis(units, order, axis=1) != -big).ravel()
+        cols["qid"].append(np.repeat(qids[q], kk)[valid])
+        cols["qlabel"].append(np.repeat(qlab[q], kk)[valid])
         cols["nid"].append(nids[order.ravel()][valid])
-        cols["nlabel"].append(
-            nlab[order.ravel()][valid].astype(np.int32)
-        )
+        cols["nlabel"].append(nlab[order.ravel()][valid])
         cols["c"].append(
             np.take_along_axis(sims, order, axis=1).ravel()[valid]
         )
+    return cols
+
+
+def _np_pairs_emit(
+    qids, qmat, nids, nmat, threshold, decimals, upper, chunk_rows=2048,
+):
+    """Pairs kernel of the dense family: chunked above-threshold pairs
+    of one group. Rounded GEMM sims ``>= threshold`` — NaN fails the
+    IEEE ``>=``, the ``_neardup_threshold`` contract — and, when
+    ``upper``, only ``qid < nid`` (a self group, or a group whose
+    queries and members overlap, then emits each unordered pair once).
+    Rounding moves a dot by at most half a unit, so only dots within
+    one unit of the threshold are rounded and tested. Returns
+    per-chunk column arrays of ``_PAIR_FIELDS`` for ``_frame``."""
+    import numpy as np
+
+    chunk = _chunk_rows(chunk_rows, len(nids))
+    cols = {"id_a": [], "id_b": [], "cosine": []}
+    for lo in range(0, len(qids), chunk):
+        dots = qmat[lo:lo + chunk] @ nmat.T
+        with np.errstate(invalid="ignore"):
+            ii, jj = np.nonzero(dots >= threshold - 10.0**-decimals)
+        c = _round_away(dots[ii, jj], decimals)
+        keep = c >= threshold
+        if upper:
+            keep &= qids[ii + lo] < nids[jj]
+        cols["id_a"].append(qids[ii[keep] + lo])
+        cols["id_b"].append(nids[jj[keep]])
+        cols["cosine"].append(c[keep])
     return cols
 
 
@@ -1881,29 +1781,32 @@ _SCORED_FIELDS = [
     ("nlabel", "int"),
     ("c", "double"),
 ]
+_PAIR_FIELDS = [("id_a", "long"), ("id_b", "long"), ("cosine", "double")]
 
 
-def _scored_schema():
+def _schema(fields):
+    """Spark schema of ``(name, 'long' | 'int' | 'double')`` fields."""
     from pyspark.sql import types as T
 
     m = {"long": T.LongType(), "int": T.IntegerType(),
          "double": T.DoubleType()}
-    return T.StructType(
-        [T.StructField(n, m[t]) for n, t in _SCORED_FIELDS]
-    )
+    return T.StructType([T.StructField(n, m[t]) for n, t in fields])
 
 
-def _empty_scored_pdf():
+def _frame(cols, fields):
+    """pandas frame of ``fields`` from per-chunk column arrays (a
+    kernel's output; ``{}`` for an empty group), typed to match
+    ``_schema(fields)`` even when no row survives."""
     import numpy as np
     import pandas as pd
 
+    m = {"long": np.int64, "int": np.int32, "double": np.float64}
     return pd.DataFrame(
         {
-            "qid": np.array([], dtype=np.int64),
-            "qlabel": np.array([], dtype=np.int32),
-            "nid": np.array([], dtype=np.int64),
-            "nlabel": np.array([], dtype=np.int32),
-            "c": np.array([], dtype=np.float64),
+            n: np.concatenate(cols[n]).astype(m[t], copy=False)
+            if cols.get(n)
+            else np.array([], dtype=m[t])
+            for n, t in fields
         }
     )
 
@@ -2036,36 +1939,28 @@ def _grouped_topk_scored(
     Returns deduped (qid, qlabel, nid, nlabel, c) rows — the exact
     shape the vote / hard-negative tails rank globally.
     """
-    import pandas as pd
-
-    p10 = 10.0 ** decimals
-    schema = _scored_schema()
-
     def _cell(key, qpdf, mpdf):
         import numpy as np
 
         if len(qpdf) == 0 or len(mpdf) == 0:
-            return _empty_scored_pdf()
-        qids = qpdf[id_col].to_numpy(dtype=np.int64)
-        qlab = qpdf[label_col].to_numpy(dtype=np.int64)
-        qmat = _l2_rows(qpdf[vec_col])
-        nids = mpdf[id_col].to_numpy(dtype=np.int64)
-        nlab = mpdf[label_col].to_numpy(dtype=np.int64)
-        nmat = _l2_rows(mpdf[vec_col])
-        cols = _np_topk_emit(
-            qids, qlab, qmat, nids, nlab, nmat, k, p10,
-            cross_label_only, chunk_rows,
-        )
-        if not cols["qid"]:
-            return _empty_scored_pdf()
-        return pd.DataFrame(
-            {name: np.concatenate(arrs) for name, arrs in cols.items()}
+            return _frame({}, _SCORED_FIELDS)
+        return _frame(
+            _np_topk_emit(
+                qpdf[id_col].to_numpy(dtype=np.int64),
+                qpdf[label_col].to_numpy(dtype=np.int64),
+                _l2_rows(qpdf[vec_col]),
+                mpdf[id_col].to_numpy(dtype=np.int64),
+                mpdf[label_col].to_numpy(dtype=np.int64),
+                _l2_rows(mpdf[vec_col]),
+                k, decimals, cross_label_only, chunk_rows,
+            ),
+            _SCORED_FIELDS,
         )
 
     scored = (
         queries.groupBy(*group_cols)
         .cogroup(members.groupBy(*group_cols))
-        .applyInPandas(_cell, schema=schema)
+        .applyInPandas(_cell, schema=_schema(_SCORED_FIELDS))
     )
     return _dedup_scored(scored)
 
@@ -2085,31 +1980,24 @@ def _cell_topk_scored(
     e.g. IVF cells where every row is both anchor and neighbor): one
     grouped pass, each group GEMMs against itself — no cogroup, no
     second shuffle of the same rows."""
-    import pandas as pd
-
-    p10 = 10.0 ** decimals
-    schema = _scored_schema()
-
     def _cell(key, pdf):
         import numpy as np
 
         if len(pdf) < 2:
-            return _empty_scored_pdf()
+            return _frame({}, _SCORED_FIELDS)
         ids = pdf[id_col].to_numpy(dtype=np.int64)
         lab = pdf[label_col].to_numpy(dtype=np.int64)
         mat = _l2_rows(pdf[vec_col])
-        cols = _np_topk_emit(
-            ids, lab, mat, ids, lab, mat, k, p10,
-            cross_label_only, chunk_rows,
-        )
-        if not cols["qid"]:
-            return _empty_scored_pdf()
-        return pd.DataFrame(
-            {name: np.concatenate(arrs) for name, arrs in cols.items()}
+        return _frame(
+            _np_topk_emit(
+                ids, lab, mat, ids, lab, mat, k, decimals,
+                cross_label_only, chunk_rows,
+            ),
+            _SCORED_FIELDS,
         )
 
     scored = assigned.groupBy(*group_cols).applyInPandas(
-        _cell, schema=schema
+        _cell, schema=_schema(_SCORED_FIELDS)
     )
     return _dedup_scored(scored)
 
@@ -2123,82 +2011,41 @@ def _grouped_threshold_pairs(
     vec_col: str,
     round_to: int = 4,
     chunk_rows: int = 2048,
+    upper: bool = True,
 ) -> DataFrame:
     """Per-group above-threshold pairs via dense GEMM — the
-    bucket-native verify for the unordered-pair consumers (near-dup).
-    Emits each surviving pair as (id_a < id_b, cosine); a pair found
-    in several shared groups collapses by max-agg (the IVF cells
-    path's rounding-boundary rationale). Every unordered candidate
-    pair (a, b) with a < b is found at least once: a's probe rows
-    visit b's exact bucket by the candidate definition, so the
-    (a-as-query, b-as-member) meeting always happens. NaN cosines
-    are excluded by the IEEE ``>=`` — the ``_neardup_threshold``
-    contract."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    p10 = 10.0 ** round_to
-    schema = T.StructType(
-        [
-            T.StructField("id_a", T.LongType()),
-            T.StructField("id_b", T.LongType()),
-            T.StructField("cosine", T.DoubleType()),
-        ]
-    )
-
-    def _empty():
-        import numpy as np
-
-        return pd.DataFrame(
-            {
-                "id_a": np.array([], dtype=np.int64),
-                "id_b": np.array([], dtype=np.int64),
-                "cosine": np.array([], dtype=np.float64),
-            }
-        )
+    bucket/cell-native verify for the pair consumers (near-dup).
+    Emits each surviving pair as (id_a, id_b, cosine); a pair found in
+    several shared groups collapses by max-agg (the IVF cells path's
+    rounding-boundary rationale). With ``upper`` (one corpus on both
+    sides) only id_a < id_b is kept, and every unordered candidate
+    pair (a, b) with a < b is still found at least once: a's probe
+    rows visit b's exact bucket by the candidate definition, so the
+    (a-as-query, b-as-member) meeting always happens. ``upper=False``
+    is the directed store×batch form (id_a from ``queries``, id_b from
+    ``members``). NaN cosines are excluded by the IEEE ``>=`` — the
+    ``_neardup_threshold`` contract."""
 
     def _cell(key, qpdf, mpdf):
         import numpy as np
 
         if len(qpdf) == 0 or len(mpdf) == 0:
-            return _empty()
-        qids = qpdf[id_col].to_numpy(dtype=np.int64)
-        qmat = _l2_rows(qpdf[vec_col])
-        nids = mpdf[id_col].to_numpy(dtype=np.int64)
-        nmat = _l2_rows(mpdf[vec_col])
-        M = len(nids)
-        chunk = max(1, min(chunk_rows, 16_000_000 // max(M, 1)))  # floor 1: see _np_topk_emit
-        out_a, out_b, out_c = [], [], []
-        for lo in range(0, len(qids), chunk):
-            hi = min(lo + chunk, len(qids))
-            sims = qmat[lo:hi] @ nmat.T
-            with np.errstate(invalid="ignore"):
-                sims = (
-                    np.sign(sims)
-                    * np.floor(np.abs(sims) * p10 + 0.5) / p10
-                )
-            with np.errstate(invalid="ignore"):
-                mask = (sims >= threshold) & (
-                    qids[lo:hi, None] < nids[None, :]
-                )
-            ii, jj = np.nonzero(mask)
-            out_a.append(qids[ii + lo])
-            out_b.append(nids[jj])
-            out_c.append(sims[ii, jj])
-        if not out_a:
-            return _empty()
-        return pd.DataFrame(
-            {
-                "id_a": np.concatenate(out_a),
-                "id_b": np.concatenate(out_b),
-                "cosine": np.concatenate(out_c),
-            }
+            return _frame({}, _PAIR_FIELDS)
+        return _frame(
+            _np_pairs_emit(
+                qpdf[id_col].to_numpy(dtype=np.int64),
+                _l2_rows(qpdf[vec_col]),
+                mpdf[id_col].to_numpy(dtype=np.int64),
+                _l2_rows(mpdf[vec_col]),
+                threshold, round_to, upper, chunk_rows,
+            ),
+            _PAIR_FIELDS,
         )
 
     pairs = (
         queries.groupBy(*group_cols)
         .cogroup(members.groupBy(*group_cols))
-        .applyInPandas(_cell, schema=schema)
+        .applyInPandas(_cell, schema=_schema(_PAIR_FIELDS))
     )
     return pairs.groupBy("id_a", "id_b").agg(
         F.max("cosine").alias("cosine")
@@ -2704,7 +2551,8 @@ def embedding_neardup_incremental_ivf(
 
     ``verify='cells'`` (default) is the directed cell-native GEMM:
     both sides cogroup on the cell key and pair volume exists only as
-    FLOPs inside each task (``_cell_dense_pairs_directed``). The r8
+    FLOPs inside each task (``_grouped_threshold_pairs`` with
+    ``upper=False``, store rows as queries). The r8
     x100 study caught the previous default — ``verify='pairs'``, kept
     for cross-tier comparability — materializing AND checkpointing the
     full same-cell store×batch pair list before verifying: ~160M rows
@@ -2744,17 +2592,14 @@ def embedding_neardup_incremental_ivf(
     if verify == "cells":
         ca_vec = cs.join(store.select(id_col, vec_col), id_col)
         cb_vec = cb.join(batch.select(id_col, vec_col), id_col)
-        pairs = _cell_dense_pairs_directed(
-            ca_vec, cb_vec, threshold, id_col, vec_col, round_to
+        pairs = _grouped_threshold_pairs(
+            ca_vec, cb_vec, ["cell"], threshold, id_col, vec_col,
+            round_to, upper=False,
         )
-        return (
-            pairs.groupBy("id_a", "id_b")
-            .agg(F.max("cosine").alias("cosine"))
-            .select(
-                F.col("id_a").alias("store_id"),
-                F.col("id_b").alias("batch_id"),
-                "cosine",
-            )
+        return pairs.select(
+            F.col("id_a").alias("store_id"),
+            F.col("id_b").alias("batch_id"),
+            "cosine",
         )
     cand = (
         cs.select(F.col(id_col).alias("id_a"), "cell")
@@ -3073,9 +2918,10 @@ def _cell_dense_pairs(
     round_to: int,
     chunk_rows: int = 2048,
 ) -> DataFrame:
-    """Within-cell dense verify: group by cell, L2-normalize the
-    cell's vectors, one (chunked) GEMM per cell, emit upper-triangle
-    pairs whose half-away-rounded cosine clears ``threshold``.
+    """Within-cell dense verify: group by cell and run the pairs kernel
+    of each cell against itself (``_np_pairs_emit``, upper triangle),
+    emitting pairs whose half-away-rounded cosine clears
+    ``threshold``.
 
     This is the IVF-native verify shape: candidate pairs are never
     materialized — per-cell pair work IS the candidate volume
@@ -3088,142 +2934,21 @@ def _cell_dense_pairs(
     matrix (chunk_rows × cell_rows float64) — the x30 OOM lesson from
     the pair grid applies to skewed cells too.
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    p = 10.0 ** round_to
-
-    out_schema = T.StructType(
-        [
-            T.StructField("id_a", T.LongType()),
-            T.StructField("id_b", T.LongType()),
-            T.StructField("cosine", T.DoubleType()),
-        ]
-    )
 
     def _pairs(key, pdf):
-        pdf = pdf.sort_values(id_col, kind="mergesort")
+        import numpy as np
+
         ids = pdf[id_col].to_numpy(dtype=np.int64)
-        mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-        n = len(ids)
-        if n < 2:
-            return pd.DataFrame(
-                {"id_a": [], "id_b": [], "cosine": []}
-            ).astype(
-                {"id_a": np.int64, "id_b": np.int64, "cosine": np.float64}
-            )
-        norms = np.linalg.norm(mat, axis=1, keepdims=True)
-        norms[norms == 0.0] = 1.0
-        mat = mat / norms
-        # bound the sims chunk to ~128 MB even for pathologically
-        # skewed cells (chunk_rows x n float64)
-        chunk = max(1, min(chunk_rows, 16_000_000 // n))  # floor 1: see _np_topk_emit
-        out_a, out_b, out_c = [], [], []
-        for lo in range(0, n, chunk):
-            hi = min(lo + chunk, n)
-            sims = mat[lo:hi] @ mat.T
-            sims = np.sign(sims) * np.floor(np.abs(sims) * p + 0.5) / p
-            # upper triangle in sorted-id order: j > global row index
-            ii, jj = np.nonzero(sims >= threshold)
-            keep = jj > (ii + lo)
-            out_a.append(ids[ii[keep] + lo])
-            out_b.append(ids[jj[keep]])
-            out_c.append(sims[ii[keep], jj[keep]])
-        return pd.DataFrame(
-            {
-                "id_a": np.concatenate(out_a),
-                "id_b": np.concatenate(out_b),
-                "cosine": np.concatenate(out_c),
-            }
+        mat = _l2_rows(pdf[vec_col])
+        return _frame(
+            _np_pairs_emit(
+                ids, mat, ids, mat, threshold, round_to, True, chunk_rows
+            ),
+            _PAIR_FIELDS,
         )
 
     return assigned.groupBy("cell").applyInPandas(
-        _pairs, schema=out_schema
-    )
-
-
-def _cell_dense_pairs_directed(
-    assigned_a: DataFrame,
-    assigned_b: DataFrame,
-    threshold: float,
-    id_col: str,
-    vec_col: str,
-    round_to: int,
-    chunk_rows: int = 2048,
-) -> DataFrame:
-    """Within-cell dense verify between TWO sides (store rows A,
-    batch rows B sharing a probed cell): cogroup on cell, L2-normalize
-    both sides, one (chunked) A×Bᵀ GEMM per cell, emit only
-    (id_a, id_b) pairs whose half-away-rounded cosine clears
-    ``threshold``. The directed twin of ``_cell_dense_pairs``.
-
-    This replaces the candidate-pair materialization that made the
-    pinned-k incremental IVF form quadratic in practice: the r8 x100
-    study caught ``embedding_neardup_incremental_ivf`` checkpointing
-    the full store×batch same-cell pair LIST (~160M rows at 60k
-    vectors with k_cells=8, billions at 600k) before verifying.
-    Here pair volume exists only as GEMM FLOPs inside each task;
-    the shuffle is one assignment pass per side (O(n·probe·dim)
-    bytes) and the output is hits only.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    p = 10.0 ** round_to
-
-    out_schema = T.StructType(
-        [
-            T.StructField("id_a", T.LongType()),
-            T.StructField("id_b", T.LongType()),
-            T.StructField("cosine", T.DoubleType()),
-        ]
-    )
-
-    def _norm(pdf):
-        ids = pdf[id_col].to_numpy(dtype=np.int64)
-        mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-        norms = np.linalg.norm(mat, axis=1, keepdims=True)
-        norms[norms == 0.0] = 1.0
-        return ids, mat / norms
-
-    def _pairs(key, pa, pb):
-        if len(pa) == 0 or len(pb) == 0:
-            return pd.DataFrame(
-                {"id_a": [], "id_b": [], "cosine": []}
-            ).astype(
-                {
-                    "id_a": np.int64,
-                    "id_b": np.int64,
-                    "cosine": np.float64,
-                }
-            )
-        ids_a, mat_a = _norm(pa)
-        ids_b, mat_b = _norm(pb)
-        nb = len(ids_b)
-        chunk = max(1, min(chunk_rows, 16_000_000 // max(nb, 1)))
-        out_a, out_b, out_c = [], [], []
-        for lo in range(0, len(ids_a), chunk):
-            hi = min(lo + chunk, len(ids_a))
-            sims = mat_a[lo:hi] @ mat_b.T
-            sims = np.sign(sims) * np.floor(np.abs(sims) * p + 0.5) / p
-            ii, jj = np.nonzero(sims >= threshold)
-            out_a.append(ids_a[ii + lo])
-            out_b.append(ids_b[jj])
-            out_c.append(sims[ii, jj])
-        return pd.DataFrame(
-            {
-                "id_a": np.concatenate(out_a),
-                "id_b": np.concatenate(out_b),
-                "cosine": np.concatenate(out_c),
-            }
-        )
-
-    return (
-        assigned_a.groupBy("cell")
-        .cogroup(assigned_b.groupBy("cell"))
-        .applyInPandas(_pairs, schema=out_schema)
+        _pairs, schema=_schema(_PAIR_FIELDS)
     )
 
 

@@ -459,3 +459,131 @@ def test_verify_validation_before_spark_jobs():
         similarity.embedding_neardup_pairs_ivf(
             boom, threshold=0.3, verify="cell"
         )
+
+
+def test_grid_and_ivf_verify_agree_on_ties_and_zero_vectors(spark):
+    """The exact grid and the IVF tier verify through one pairs
+    kernel: a cosine exactly on a 4 dp rounding boundary (1/32) rounds
+    half away from zero in both, as DuckDB's ROUND does (np.round
+    would give 0.0312 and drop the pair), and a zero vector scores
+    NaN, which no threshold keeps (DuckDB scores it -1.0)."""
+    schema = "vec_id bigint, embedding array<double>"
+    tie = spark.createDataFrame(
+        [(1, [1.0, 0.0, 0.0, 0.0, 0.0]), (2, [1.0, 31.0, 5.0, 6.0, 1.0])],
+        schema,
+    )
+    zero = spark.createDataFrame(
+        [
+            (1, [1.0, 0.0, 0.0, 0.0]),
+            (2, [0.0, 1.0, 0.0, 0.0]),
+            (3, [0.0, 0.0, 0.0, 0.0]),
+        ],
+        schema,
+    )
+
+    def both_tiers(df, threshold):
+        grid = similarity.embedding_neardup_pairs_grid(
+            df, threshold, n_blocks=1
+        )
+        ivf = similarity.embedding_neardup_pairs_ivf(
+            df, threshold, k_cells=1, n_probe=1
+        )
+        return [sorted(map(tuple, out.collect())) for out in (grid, ivf)]
+
+    assert both_tiers(tie, 0.0313) == [[(1, 2, 0.0313)]] * 2
+    assert both_tiers(zero, -0.5) == [[(1, 2, 0.0)]] * 2
+
+
+def test_dense_kernels_match_reference_at_any_chunking():
+    """Both dense kernels chunk the query rows to bound the sims
+    matrix; one-row chunks and one whole-group chunk must give the
+    same rows in the same order, for every mask combination, and those
+    rows must match a plain-Python ranking and filter of the same
+    rounded cosines — with a duplicate vector (a cosine tie, broken by
+    the smaller id), a zero vector (NaN cosines: greatest in the top-k
+    order, never above a threshold) and a pair whose cosine, 1/32,
+    clears a 0.0313 threshold only by rounding half away from zero."""
+    import math
+
+    import numpy as np
+    import pandas as pd
+
+    from pyspark_scd_spark.operators.similarity import (
+        _PAIR_FIELDS,
+        _SCORED_FIELDS,
+        _frame,
+        _l2_rows,
+        _np_pairs_emit,
+        _np_topk_emit,
+        _round_away,
+    )
+
+    rng = np.random.default_rng(7)
+    base = rng.normal(size=(73, 8))
+    base[40] = base[30]
+    base[50] = 0.0
+    base[5] = [1.0, 0, 0, 0, 0, 0, 0, 0]
+    base[60] = [1.0, 31, 5, 6, 1, 0, 0, 0]
+    labels = rng.integers(0, 3, size=73).astype(np.int64)
+    # queries 0..36 and members 20..72 overlap, so the self and
+    # upper-triangle masks both bite
+    qids = np.arange(0, 37, dtype=np.int64)
+    nids = np.arange(20, 73, dtype=np.int64)
+    qmat = _l2_rows(pd.Series(list(base[qids])))
+    nmat = _l2_rows(pd.Series(list(base[nids])))
+    dots = qmat @ nmat.T
+
+    def rank_key(cand):
+        c, nid = cand
+        return (not math.isnan(c), 0.0 if math.isnan(c) else -c, nid)
+
+    for cross_label_only in (True, False):
+        one, whole = (
+            _frame(
+                _np_topk_emit(
+                    qids, labels[qids], qmat, nids, labels[nids], nmat,
+                    5, 6, cross_label_only, chunk_rows=c,
+                ),
+                _SCORED_FIELDS,
+            )
+            for c in (1, 4096)
+        )
+        pd.testing.assert_frame_equal(one, whole)
+        sims = _round_away(dots, 6)
+        expected = []
+        for i, q in enumerate(qids):
+            cands = [
+                (sims[i, j], n)
+                for j, n in enumerate(nids)
+                if n != q
+                and not (cross_label_only and labels[n] == labels[q])
+            ]
+            expected += [(q, n, c) for c, n in sorted(cands, key=rank_key)[:5]]
+        got = list(zip(whole.qid, whole.nid, whole.c))
+        assert len(got) == len(expected) == 5 * len(qids)
+        for (gq, gn, gc), (eq, en, ec) in zip(got, expected):
+            assert (gq, gn) == (eq, en)
+            assert gc == ec or (math.isnan(gc) and math.isnan(ec))
+
+    sims = _round_away(dots, 4)
+    for upper, threshold in ((True, 0.2), (False, 0.2), (True, 0.0313)):
+        one, whole = (
+            _frame(
+                _np_pairs_emit(
+                    qids, qmat, nids, nmat, threshold, 4, upper,
+                    chunk_rows=c,
+                ),
+                _PAIR_FIELDS,
+            )
+            for c in (1, 4096)
+        )
+        pd.testing.assert_frame_equal(one, whole)
+        expected = [
+            (q, n, sims[i, j])
+            for i, q in enumerate(qids)
+            for j, n in enumerate(nids)
+            if sims[i, j] >= threshold and (q < n or not upper)
+        ]
+        assert (30, 40, 1.0) in expected
+        assert list(zip(whole.id_a, whole.id_b, whole.cosine)) == expected
+    assert (5, 60, 0.0313) in expected

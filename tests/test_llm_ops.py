@@ -95,21 +95,6 @@ def test_lsh_bucket_deterministic(vectors):
     }
 
 
-def test_neardup_pairs_lsh_subset_of_exact(vectors):
-    exact = {
-        (r["id_a"], r["id_b"])
-        for r in similarity.embedding_neardup_pairs(vectors, 0.9).collect()
-    }
-    lsh = {
-        (r["id_a"], r["id_b"])
-        for r in similarity.embedding_neardup_pairs(
-            vectors, 0.9, use_lsh=True, dim=4
-        ).collect()
-    }
-    assert lsh <= exact
-    assert (0, 1) in exact
-
-
 def test_multimodal_meta_roundtrip(docs):
     payloads = multimodal.with_binary_payload(docs)
     meta = {
