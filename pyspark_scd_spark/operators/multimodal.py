@@ -8,23 +8,101 @@ across the Python boundary (one serialization per ~10k rows, not per
 row), and the iterator form streams batches so a 100 TB binary column
 never materializes per-partition.
 
-The actual media decoding (PIL/librosa/ffmpeg) is NOT in this
-container, so ``decode_image``/``decode_audio`` are stubs gated behind
-``NotImplementedError`` with a deterministic fake path used by tests —
-the Spark-side plumbing (schema, batch iteration, partitioning) is real
-and tested either way.
+The boundary is crossed in exactly two places: ``_synth_payloads``
+(id -> synthesized payload) and ``_map_payloads`` (id, payload ->
+output rows). Every operator here and in operators/perceptual.py
+supplies only its per-payload work; batching, schemas and the Arrow
+hand-off live in those two helpers.
+
+Decoding is REAL: six vendored pure-Python codecs (functions/) cover
+PPM/PGM/BMP + PNG (imagecodec), GIF (gifcodec), baseline JPEG
+(jpegcodec), WAV (audiocodec), Y4M (videocodec) and FLAC (flaccodec),
+each paired with a deterministic synthesizer whose signal a SQL
+oracle replays sample for sample. ``decode_image_features`` prefers
+PIL when the executors have it, and raises NotImplementedError for a
+format neither PIL nor the vendored codecs cover.
 """
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import zlib
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+
+def _synth_payloads(
+    df: DataFrame,
+    make,
+    id_col: str = "doc_id",
+    out_col: str = "payload",
+    spread: bool = False,
+    id_offset: int = 0,
+) -> DataFrame:
+    """The one id -> payload map: (id + ``id_offset``, ``make(id)``)
+    for every ``id_col`` value of ``df``, an Arrow batch at a time.
+
+    ``spread`` exchanges the ids before the map, for synthesizers
+    whose pure-Python encode is too slow to run on the one or two
+    tasks the documents scan yields. The partition COUNT is pinned: a
+    bare repartition(col) is ~40 KB of ids here and AQE coalesces it
+    straight back to ONE partition — byte-light but compute-heavy
+    stages must opt out of coalescing."""
+
+    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            ids = pdf[id_col].astype("int64")
+            yield pd.DataFrame(
+                {id_col: ids + id_offset, out_col: [make(int(i)) for i in ids]}
+            )
+
+    ids = df.select(id_col)
+    if spread:
+        par = df.sparkSession.sparkContext.defaultParallelism
+        ids = ids.repartition(par, id_col)
+    return ids.mapInPandas(
+        _synth,
+        schema=T.StructType(
+            [
+                T.StructField(id_col, T.LongType()),
+                T.StructField(out_col, T.BinaryType()),
+            ]
+        ),
+    )
+
+
+def _map_payloads(
+    df: DataFrame,
+    rows,
+    schema: T.StructType,
+    id_col: str = "doc_id",
+    payload_col: str = "payload",
+) -> DataFrame:
+    """The one (id, payload) -> rows map behind every decoder and
+    hasher: ``rows(doc_id, payload)`` returns that payload's output
+    tuples in ``schema`` order — one tuple for a decode, one per frame
+    or window for a split (so a payload may also yield none)."""
+    names = schema.fieldNames()
+
+    def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame.from_records(
+                [
+                    r
+                    for doc_id, payload in zip(pdf[id_col], pdf[payload_col])
+                    for r in rows(int(doc_id), bytes(payload))
+                ],
+                columns=names,
+            )
+
+    return df.select(id_col, payload_col).mapInPandas(_map, schema=schema)
+
 
 # Metadata emitted for every binary payload.
 PAYLOAD_META_SCHEMA = T.StructType(
@@ -52,26 +130,12 @@ def extract_payload_meta(
     """Byte-level metadata via mapInPandas (the pattern every real
     decode follows: binary in → typed columns out, batch-at-a-time)."""
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = pdf[payload_col]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "n_bytes": payloads.map(len).astype("int64"),
-                    "first_byte": payloads.map(
-                        lambda b: b[0] if len(b) else -1
-                    ).astype("int32"),
-                    "prefix_hex": payloads.map(lambda b: b[:8].hex()),
-                    "crc32": payloads.map(
-                        lambda b: zlib.crc32(b) & 0xFFFFFFFF
-                    ).astype("int64"),
-                }
-            )
+    def rows(doc_id, b):
+        first = b[0] if len(b) else -1
+        crc = zlib.crc32(b) & 0xFFFFFFFF
+        return [(doc_id, len(b), first, b[:8].hex(), crc)]
 
-    return df.select(id_col, payload_col).mapInPandas(
-        _extract, schema=PAYLOAD_META_SCHEMA
-    )
+    return _map_payloads(df, rows, PAYLOAD_META_SCHEMA, id_col, payload_col)
 
 
 IMAGE_FEATURE_SCHEMA = T.StructType(
@@ -85,6 +149,17 @@ IMAGE_FEATURE_SCHEMA = T.StructType(
 )
 
 
+@functools.cache
+def _pil_image():
+    """PIL's Image module, or None when the executor lacks PIL — the
+    import is tried once per worker process, not once per batch."""
+    try:
+        from PIL import Image  # type: ignore
+    except ImportError:
+        return None
+    return Image
+
+
 def decode_image_features(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -95,9 +170,9 @@ def decode_image_features(
 
     ``fake=False`` decodes REAL images: PIL when importable on the
     executors (optional dependency — this container does not ship it),
-    else the vendored pure-Python PPM/PGM/BMP codec
-    (functions/imagecodec.py) for those formats, and
-    NotImplementedError for formats neither path covers. The two real
+    else the vendored pure-Python codecs for PPM/PGM/BMP/PNG
+    (functions/imagecodec.py) and baseline JPEG (functions/jpegcodec.py),
+    and NotImplementedError for formats neither path covers. The two real
     paths agree on the feature contract (imagecodec mirrors PIL's
     channel semantics, incl. palette-index mode for 8-bit BMP).
     ``fake=True`` derives deterministic pseudo-features from a sha256
@@ -105,76 +180,41 @@ def decode_image_features(
     and partitioning as the real decoder either way.
     """
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pil_image = None
-        if not fake:
-            try:
-                from PIL import Image as pil_image  # type: ignore
-            except ImportError:
-                pil_image = None
+    def rows(doc_id, payload):
         from pyspark_scd_spark.functions import imagecodec, jpegcodec
 
-        for pdf in batches:
-            feats = {"doc_id": [], "width": [], "height": [], "channels": [], "mean_intensity": []}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                if fake:
-                    d = hashlib.sha256(payload).digest()
-                    feats["doc_id"].append(int(doc_id))
-                    feats["width"].append(64 + d[0])
-                    feats["height"].append(64 + d[1])
-                    feats["channels"].append(1 + d[2] % 4)
-                    feats["mean_intensity"].append(
-                        round(sum(d[:16]) / (16 * 255.0), 6)
-                    )
-                elif pil_image is not None:
-                    import io
+        if fake:
+            d = hashlib.sha256(payload).digest()
+            mean = round(sum(d[:16]) / (16 * 255.0), 6)
+            return [(doc_id, 64 + d[0], 64 + d[1], 1 + d[2] % 4, mean)]
+        pil_image = _pil_image()
+        if pil_image is not None:
+            import io
 
-                    img = pil_image.open(io.BytesIO(payload))
-                    bands = img.getbands()
-                    px = list(img.getdata())
-                    if len(bands) == 1:
-                        total = sum(px)
-                    else:
-                        total = sum(sum(p) for p in px)
-                    n_samples = max(len(px) * len(bands), 1)
-                    feats["doc_id"].append(int(doc_id))
-                    feats["width"].append(img.width)
-                    feats["height"].append(img.height)
-                    feats["channels"].append(len(bands))
-                    feats["mean_intensity"].append(
-                        round(total / (n_samples * 255.0), 6)
-                    )
-                elif imagecodec.sniff(bytes(payload)):
-                    w, h, c, mean = imagecodec.features(bytes(payload))
-                    feats["doc_id"].append(int(doc_id))
-                    feats["width"].append(w)
-                    feats["height"].append(h)
-                    feats["channels"].append(c)
-                    feats["mean_intensity"].append(mean)
-                elif jpegcodec.sniff(bytes(payload)):
-                    w, h, nc, planes = jpegcodec.decode(bytes(payload))
-                    total = sum(sum(p) for p in planes)
-                    feats["doc_id"].append(int(doc_id))
-                    feats["width"].append(w)
-                    feats["height"].append(h)
-                    feats["channels"].append(nc)
-                    feats["mean_intensity"].append(
-                        round(
-                            total / (max(w * h * nc, 1) * 255.0), 6
-                        )
-                    )
-                else:
-                    raise NotImplementedError(
-                        "payload is neither PPM/PGM/BMP/PNG/baseline-"
-                        "JPEG (vendored codecs) nor decodable without "
-                        "PIL/opencv — install PIL on the cluster "
-                        "image or use fake=True for plumbing tests"
-                    )
-            yield pd.DataFrame(feats)
+            img = pil_image.open(io.BytesIO(payload))
+            bands = img.getbands()
+            px = list(img.getdata())
+            if len(bands) == 1:
+                total = sum(px)
+            else:
+                total = sum(sum(p) for p in px)
+            mean = round(total / (max(len(px) * len(bands), 1) * 255.0), 6)
+            return [(doc_id, img.width, img.height, len(bands), mean)]
+        if imagecodec.sniff(payload):
+            return [(doc_id, *imagecodec.features(payload))]
+        if jpegcodec.sniff(payload):
+            w, h, nc, planes = jpegcodec.decode(payload)
+            total = sum(sum(p) for p in planes)
+            mean = round(total / (max(w * h * nc, 1) * 255.0), 6)
+            return [(doc_id, w, h, nc, mean)]
+        raise NotImplementedError(
+            "payload is neither PPM/PGM/BMP/PNG/baseline-"
+            "JPEG (vendored codecs) nor decodable without "
+            "PIL/opencv — install PIL on the cluster "
+            "image or use fake=True for plumbing tests"
+        )
 
-    return df.select(id_col, payload_col).mapInPandas(
-        _decode, schema=IMAGE_FEATURE_SCHEMA
-    )
+    return _map_payloads(df, rows, IMAGE_FEATURE_SCHEMA, id_col, payload_col)
 
 
 RESIZED_SCHEMA = T.StructType(
@@ -192,36 +232,21 @@ def resize_payload(
     target_bytes: int = 64,
     id_col: str = "doc_id",
     payload_col: str = "payload",
-    fake: bool = True,
 ) -> DataFrame:
     """Resize: binary in → smaller binary out (the image-thumbnail /
     audio-downsample shape — output schema identical in kind, smaller
-    payload). ``fake=True`` stride-samples every k-th byte
-    deterministically; ``fake=False`` raises (real resizing needs
-    PIL/ffmpeg, absent in this container). Either way the Arrow batch
-    path, schema, and cardinality contract (1:1) are the real thing.
+    payload). Stride-samples every k-th byte deterministically, so the
+    oracle replays it per byte position; the Arrow batch path, schema,
+    and cardinality contract (1:1) are the ones a codec resample
+    would use.
     """
 
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not fake:
-                raise NotImplementedError(
-                    "real image/audio resize requires PIL/ffmpeg; use "
-                    "fake=True for plumbing tests"
-                )
-            out = {"doc_id": [], "resized": [], "n_bytes_in": [], "n_bytes_out": []}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                stride = max(len(payload) // target_bytes, 1)
-                small = payload[::stride][:target_bytes]
-                out["doc_id"].append(int(doc_id))
-                out["resized"].append(small)
-                out["n_bytes_in"].append(len(payload))
-                out["n_bytes_out"].append(len(small))
-            yield pd.DataFrame(out)
+    def rows(doc_id, payload):
+        stride = max(len(payload) // target_bytes, 1)
+        small = payload[::stride][:target_bytes]
+        return [(doc_id, small, len(payload), len(small))]
 
-    return df.select(id_col, payload_col).mapInPandas(
-        _resize, schema=RESIZED_SCHEMA
-    )
+    return _map_payloads(df, rows, RESIZED_SCHEMA, id_col, payload_col)
 
 
 FRAME_SAMPLE_SCHEMA = T.StructType(
@@ -243,21 +268,15 @@ def sample_frames(
     (the video/audio-chunking shape: output cardinality ≠ input).
     Deterministic byte-slicing stands in for real frame extraction."""
 
-    def _sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "frame_idx": [], "frame_bytes": []}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                n = max(len(payload), 1)
-                step = max(n // n_frames, 1)
-                for i in range(min(n_frames, n)):
-                    out["doc_id"].append(int(doc_id))
-                    out["frame_idx"].append(i)
-                    out["frame_bytes"].append(payload[i * step : i * step + step])
-            yield pd.DataFrame(out)
+    def rows(doc_id, payload):
+        n = max(len(payload), 1)
+        step = max(n // n_frames, 1)
+        return [
+            (doc_id, i, payload[i * step : i * step + step])
+            for i in range(min(n_frames, n))
+        ]
 
-    return df.select(id_col, payload_col).mapInPandas(
-        _sample, schema=FRAME_SAMPLE_SCHEMA
-    )
+    return _map_payloads(df, rows, FRAME_SAMPLE_SCHEMA, id_col, payload_col)
 
 
 # ----------------------------------------------------------------------
@@ -323,45 +342,20 @@ def with_audio_payload(
     entries use 250 so every clip meets audio_fingerprint_wide's
     125-window precondition."""
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def make(i):
         from pyspark_scd_spark.functions import audiocodec
 
-        import numpy as np
+        # numpy form of the per-sample loop (r13) — all terms
+        # non-negative int64 before the modulo, so the values are
+        # bit-identical to the Python reference (i*7919 + j*104729 <
+        # 2^63 for any testdata id)
+        j = np.arange(min_samples + i % 193, dtype=np.int64)
+        s = i * 7919 + j * 104729
+        if phase_boost:
+            s[:2] += phase_boost
+        return audiocodec.encode_wav((s % 65536) - 32768, AUDIO_RATE)
 
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                n = min_samples + i % 193
-                # numpy form of the per-sample loop (r13) — all
-                # terms non-negative int64 before the modulo, so the
-                # values are bit-identical to the Python reference
-                # (i*7919 + j*104729 < 2^63 for any testdata id)
-                j = np.arange(n, dtype=np.int64)
-                s = i * 7919 + j * 104729
-                if phase_boost:
-                    s[:2] += phase_boost
-                samples = (s % 65536) - 32768
-                payloads.append(
-                    audiocodec.encode_wav(samples, AUDIO_RATE)
-                )
-            yield pd.DataFrame(
-                {
-                    id_col: (ids + id_offset),
-                    out_col: payloads,
-                }
-            )
-
-    return df.select(id_col).mapInPandas(
-        _synth,
-        schema=T.StructType(
-            [
-                T.StructField(id_col, T.LongType()),
-                T.StructField(out_col, T.BinaryType()),
-            ]
-        ),
-    )
+    return _synth_payloads(df, make, id_col, out_col, id_offset=id_offset)
 
 
 def decode_audio_features(
@@ -377,30 +371,24 @@ def decode_audio_features(
     and ``sum_squares`` prove the sample data was actually decoded,
     not just the header."""
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def rows(doc_id, payload):
         from pyspark_scd_spark.functions import audiocodec
 
-        for pdf in batches:
-            out = {k.name: [] for k in AUDIO_FEATURE_SCHEMA.fields}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                meta, samples = audiocodec.decode_wav(bytes(payload))
-                out["doc_id"].append(int(doc_id))
-                out["sample_rate"].append(meta["sample_rate"])
-                out["n_channels"].append(meta["n_channels"])
-                out["bits_per_sample"].append(meta["bits_per_sample"])
-                out["n_frames"].append(meta["n_frames"])
-                out["duration_us"].append(
-                    meta["n_frames"] * 1_000_000 // meta["sample_rate"]
-                )
-                out["peak_abs"].append(
-                    max((abs(s) for s in samples), default=0)
-                )
-                out["sum_squares"].append(sum(s * s for s in samples))
-            yield pd.DataFrame(out)
+        meta, samples = audiocodec.decode_wav(payload)
+        return [
+            (
+                doc_id,
+                meta["sample_rate"],
+                meta["n_channels"],
+                meta["bits_per_sample"],
+                meta["n_frames"],
+                meta["n_frames"] * 1_000_000 // meta["sample_rate"],
+                max((abs(s) for s in samples), default=0),
+                sum(s * s for s in samples),
+            )
+        ]
 
-    return df.select(id_col, payload_col).mapInPandas(
-        _decode, schema=AUDIO_FEATURE_SCHEMA
-    )
+    return _map_payloads(df, rows, AUDIO_FEATURE_SCHEMA, id_col, payload_col)
 
 
 def audio_window_energy(
@@ -415,27 +403,18 @@ def audio_window_energy(
     loudness segmentation all reduce to this scan). Integer math end
     to end, so the oracle replays it exactly."""
 
-    def _energy(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
+    def rows(doc_id, payload):
         from pyspark_scd_spark.functions import audiocodec
 
-        for pdf in batches:
-            out = {k.name: [] for k in AUDIO_ENERGY_SCHEMA.fields}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                _, samples = audiocodec.decode_wav(bytes(payload))
-                s = np.asarray(samples, dtype=np.int64)
-                for w in range(0, len(s), window):
-                    seg = s[w : w + window]
-                    out["doc_id"].append(int(doc_id))
-                    out["win_idx"].append(w // window)
-                    out["n_samples"].append(len(seg))
-                    out["energy"].append(int((seg * seg).sum()))
-            yield pd.DataFrame(out)
+        _, samples = audiocodec.decode_wav(payload)
+        s = np.asarray(samples, dtype=np.int64)
+        out = []
+        for w in range(0, len(s), window):
+            seg = s[w : w + window]
+            out.append((doc_id, w // window, len(seg), int((seg * seg).sum())))
+        return out
 
-    return df.select(id_col, payload_col).mapInPandas(
-        _energy, schema=AUDIO_ENERGY_SCHEMA
-    )
+    return _map_payloads(df, rows, AUDIO_ENERGY_SCHEMA, id_col, payload_col)
 
 
 # ----------------------------------------------------------------------
@@ -521,42 +500,22 @@ def with_video_payload(
     stay byte-identical to the base clip, so every twin pair carries
     at least one guaranteed hamming-0 frame match."""
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def make(i):
         from pyspark_scd_spark.functions import videocodec
 
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                w, h, n = _vid_dims(i, min_w, min_h)
-                # one numpy cube per plane (all frames at once) —
-                # bit-identical to the _vid_plane reference form
-                ys = _vid_planes_np(i, n, w, h, _VID_Y, pixel_boost)
-                us = _vid_planes_np(i, n, w, h, _VID_U)
-                vs = _vid_planes_np(i, n, w, h, _VID_V)
-                frames = [
-                    (
-                        ys[f].tobytes(),
-                        us[f].tobytes(),
-                        vs[f].tobytes(),
-                    )
-                    for f in range(n)
-                ]
-                payloads.append(videocodec.encode_y4m(frames, w, h))
-            yield pd.DataFrame(
-                {id_col: ids + id_offset, out_col: payloads}
-            )
+        w, h, n = _vid_dims(i, min_w, min_h)
+        # one numpy cube per plane (all frames at once) —
+        # bit-identical to the _vid_plane reference form
+        ys = _vid_planes_np(i, n, w, h, _VID_Y, pixel_boost)
+        us = _vid_planes_np(i, n, w, h, _VID_U)
+        vs = _vid_planes_np(i, n, w, h, _VID_V)
+        frames = [
+            (ys[f].tobytes(), us[f].tobytes(), vs[f].tobytes())
+            for f in range(n)
+        ]
+        return videocodec.encode_y4m(frames, w, h)
 
-    return df.select(id_col).mapInPandas(
-        _synth,
-        schema=T.StructType(
-            [
-                T.StructField(id_col, T.LongType()),
-                T.StructField(out_col, T.BinaryType()),
-            ]
-        ),
-    )
+    return _synth_payloads(df, make, id_col, out_col, id_offset=id_offset)
 
 
 def video_frame_stats(
@@ -571,35 +530,29 @@ def video_frame_stats(
     The sums depend on every decoded pixel, so a hash check proves the
     byte-level container parse and plane split, not just plumbing."""
 
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
+    def rows(doc_id, payload):
         from pyspark_scd_spark.functions import videocodec
 
-        for pdf in batches:
-            out = {k.name: [] for k in VIDEO_FRAME_STATS_SCHEMA.fields}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                meta, frames = videocodec.decode_y4m(bytes(payload))
-                for f, (y, u, v) in enumerate(frames):
-                    ya = np.frombuffer(y, dtype=np.uint8)
-                    out["doc_id"].append(int(doc_id))
-                    out["frame_idx"].append(f)
-                    out["width"].append(meta["width"])
-                    out["height"].append(meta["height"])
-                    out["sum_y"].append(int(ya.astype(np.int64).sum()))
-                    out["sum_u"].append(
-                        int(np.frombuffer(u, dtype=np.uint8)
-                            .astype(np.int64).sum())
-                    )
-                    out["sum_v"].append(
-                        int(np.frombuffer(v, dtype=np.uint8)
-                            .astype(np.int64).sum())
-                    )
-                    out["max_y"].append(int(ya.max()))
-            yield pd.DataFrame(out)
+        def plane_sum(p):
+            return int(np.frombuffer(p, dtype=np.uint8).astype(np.int64).sum())
 
-    return df.select(id_col, payload_col).mapInPandas(
-        _stats, schema=VIDEO_FRAME_STATS_SCHEMA
+        meta, frames = videocodec.decode_y4m(payload)
+        return [
+            (
+                doc_id,
+                f,
+                meta["width"],
+                meta["height"],
+                plane_sum(y),
+                plane_sum(u),
+                plane_sum(v),
+                int(np.frombuffer(y, dtype=np.uint8).max()),
+            )
+            for f, (y, u, v) in enumerate(frames)
+        ]
+
+    return _map_payloads(
+        df, rows, VIDEO_FRAME_STATS_SCHEMA, id_col, payload_col
     )
 
 
@@ -652,29 +605,13 @@ def with_png_payload(
     filters in rotation) from the deterministic pixels above. Every
     byte downstream is a genuine PNG any viewer opens."""
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def make(i):
         from pyspark_scd_spark.functions import imagecodec
 
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                w, h = _png_dims(i)
-                payloads.append(
-                    imagecodec.encode_png(w, h, 3, _png_pixels(i, w, h))
-                )
-            yield pd.DataFrame({id_col: ids, out_col: payloads})
+        w, h = _png_dims(i)
+        return imagecodec.encode_png(w, h, 3, _png_pixels(i, w, h))
 
-    return df.select(id_col).mapInPandas(
-        _synth,
-        schema=T.StructType(
-            [
-                T.StructField(id_col, T.LongType()),
-                T.StructField(out_col, T.BinaryType()),
-            ]
-        ),
-    )
+    return _synth_payloads(df, make, id_col, out_col)
 
 
 def png_pixel_stats(
@@ -689,33 +626,25 @@ def png_pixel_stats(
     filter arithmetic byte for byte — decode bugs in any of the five
     filters shift sums on the very first corrupted row."""
 
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
+    def rows(doc_id, payload):
         from pyspark_scd_spark.functions import imagecodec
 
-        for pdf in batches:
-            out = {k.name: [] for k in PNG_PIXEL_STATS_SCHEMA.fields}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                w, h, c, px = imagecodec.decode(bytes(payload))
-                arr = np.asarray(px, dtype=np.int64).reshape(-1, c)
-                out["doc_id"].append(int(doc_id))
-                out["width"].append(w)
-                out["height"].append(h)
-                out["channels"].append(c)
-                out["sum_r"].append(int(arr[:, 0].sum()))
-                out["sum_g"].append(
-                    int(arr[:, 1].sum()) if c >= 3 else 0
-                )
-                out["sum_b"].append(
-                    int(arr[:, 2].sum()) if c >= 3 else 0
-                )
-                out["max_r"].append(int(arr[:, 0].max()))
-            yield pd.DataFrame(out)
+        w, h, c, px = imagecodec.decode(payload)
+        arr = np.asarray(px, dtype=np.int64).reshape(-1, c)
+        return [
+            (
+                doc_id,
+                w,
+                h,
+                c,
+                int(arr[:, 0].sum()),
+                int(arr[:, 1].sum()) if c >= 3 else 0,
+                int(arr[:, 2].sum()) if c >= 3 else 0,
+                int(arr[:, 0].max()),
+            )
+        ]
 
-    return df.select(id_col, payload_col).mapInPandas(
-        _stats, schema=PNG_PIXEL_STATS_SCHEMA
-    )
+    return _map_payloads(df, rows, PNG_PIXEL_STATS_SCHEMA, id_col, payload_col)
 
 
 # ----------------------------------------------------------------------
@@ -772,32 +701,15 @@ def with_gif_payload(
     genuine dictionary-building LZW, global color table) from the
     deterministic indexed image above."""
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    pal = _gif_palette()
+
+    def make(i):
         from pyspark_scd_spark.functions import gifcodec
 
-        pal = _gif_palette()
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                w, h = _gif_dims(i)
-                payloads.append(
-                    gifcodec.encode_gif87a(
-                        w, h, pal, _gif_indices(i, w, h)
-                    )
-                )
-            yield pd.DataFrame({id_col: ids, out_col: payloads})
+        w, h = _gif_dims(i)
+        return gifcodec.encode_gif87a(w, h, pal, _gif_indices(i, w, h))
 
-    return df.select(id_col).mapInPandas(
-        _synth,
-        schema=T.StructType(
-            [
-                T.StructField(id_col, T.LongType()),
-                T.StructField(out_col, T.BinaryType()),
-            ]
-        ),
-    )
+    return _synth_payloads(df, make, id_col, out_col)
 
 
 def gif_pixel_stats(
@@ -812,29 +724,25 @@ def gif_pixel_stats(
     through the parsed color table, so a hash match proves the
     entropy decode AND the palette parse byte for byte."""
 
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
+    def rows(doc_id, payload):
         from pyspark_scd_spark.functions import gifcodec
 
-        for pdf in batches:
-            out = {k.name: [] for k in GIF_PIXEL_STATS_SCHEMA.fields}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                w, h, pal, idx = gifcodec.decode(bytes(payload))
-                arr = np.asarray(idx, dtype=np.int64)
-                reds = np.asarray(pal[0::3], dtype=np.int64)
-                out["doc_id"].append(int(doc_id))
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_palette"].append(len(pal) // 3)
-                out["sum_idx"].append(int(arr.sum()))
-                out["max_idx"].append(int(arr.max()))
-                out["sum_r"].append(int(reds[arr].sum()))
-            yield pd.DataFrame(out)
+        w, h, pal, idx = gifcodec.decode(payload)
+        arr = np.asarray(idx, dtype=np.int64)
+        reds = np.asarray(pal[0::3], dtype=np.int64)
+        return [
+            (
+                doc_id,
+                w,
+                h,
+                len(pal) // 3,
+                int(arr.sum()),
+                int(arr.max()),
+                int(reds[arr].sum()),
+            )
+        ]
 
-    return df.select(id_col, payload_col).mapInPandas(
-        _stats, schema=GIF_PIXEL_STATS_SCHEMA
-    )
+    return _map_payloads(df, rows, GIF_PIXEL_STATS_SCHEMA, id_col, payload_col)
 
 
 # ----------------------------------------------------------------------
@@ -895,40 +803,20 @@ def with_jpeg_payload(
     coding with byte stuffing) from the deterministic coefficients
     above. Every byte downstream is a genuine JPEG any viewer opens."""
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def make(i):
         from pyspark_scd_spark.functions import jpegcodec
 
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                w, h = _jpeg_dims(i)
-                comp = [
-                    _jpeg_blocks(
-                        i, c, w // 8, h // 8, jpegcodec.AC44_ZZ
-                    )
-                    for c in range(3)
-                ]
-                payloads.append(jpegcodec.encode_jpeg(w, h, comp))
-            yield pd.DataFrame({id_col: ids, out_col: payloads})
+        w, h = _jpeg_dims(i)
+        comp = [
+            _jpeg_blocks(i, c, w // 8, h // 8, jpegcodec.AC44_ZZ)
+            for c in range(3)
+        ]
+        return jpegcodec.encode_jpeg(w, h, comp)
 
     # the documents scan is 1-2 parquet files at these SFs, and
     # pure-python entropy coding at ~0.5ms/doc serializes on one task
-    # without an explicit exchange; the shuffle moves ids only. The
-    # partition COUNT is pinned: a bare repartition(col) is ~40 KB of
-    # ids here and AQE coalesces it straight back to ONE partition —
-    # byte-light but compute-heavy stages must opt out of coalescing.
-    par = df.sparkSession.sparkContext.defaultParallelism
-    return df.select(id_col).repartition(par, id_col).mapInPandas(
-        _synth,
-        schema=T.StructType(
-            [
-                T.StructField(id_col, T.LongType()),
-                T.StructField(out_col, T.BinaryType()),
-            ]
-        ),
-    )
+    # without an explicit exchange; the shuffle moves ids only
+    return _synth_payloads(df, make, id_col, out_col, spread=True)
 
 
 def jpeg_component_stats(
@@ -945,33 +833,27 @@ def jpeg_component_stats(
     statistic that proves the AC path: sum of squares per block is
     64*v^2 + 64*k^2, which shifts on the first wrong coefficient."""
 
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
+    def rows(doc_id, payload):
         from pyspark_scd_spark.functions import jpegcodec
 
-        for pdf in batches:
-            out = {k.name: [] for k in JPEG_COMPONENT_STATS_SCHEMA.fields}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                w, h, nc, planes = jpegcodec.decode(bytes(payload))
-                y = np.asarray(planes[0], dtype=np.int64)
-                out["doc_id"].append(int(doc_id))
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_components"].append(nc)
-                out["sum_y"].append(int(y.sum()))
-                out["sum_cb"].append(
-                    int(sum(planes[1])) if nc >= 3 else 0
-                )
-                out["sum_cr"].append(
-                    int(sum(planes[2])) if nc >= 3 else 0
-                )
-                out["sumsq_y"].append(int((y * y).sum()))
-                out["max_y"].append(int(y.max()))
-            yield pd.DataFrame(out)
+        w, h, nc, planes = jpegcodec.decode(payload)
+        y = np.asarray(planes[0], dtype=np.int64)
+        return [
+            (
+                doc_id,
+                w,
+                h,
+                nc,
+                int(y.sum()),
+                int(sum(planes[1])) if nc >= 3 else 0,
+                int(sum(planes[2])) if nc >= 3 else 0,
+                int((y * y).sum()),
+                int(y.max()),
+            )
+        ]
 
-    return df.select(id_col, payload_col).mapInPandas(
-        _stats, schema=JPEG_COMPONENT_STATS_SCHEMA
+    return _map_payloads(
+        df, rows, JPEG_COMPONENT_STATS_SCHEMA, id_col, payload_col
     )
 
 
@@ -1016,35 +898,15 @@ def with_flac_payload(
     residual partitions, CRC-8 + CRC-16) from the deterministic
     signal above. Any spec-conforming player decodes the result."""
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def make(i):
         from pyspark_scd_spark.functions import flaccodec
 
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                n, sr = _flac_params(i)
-                payloads.append(
-                    flaccodec.encode_flac(
-                        _flac_samples(i, n), sample_rate=sr
-                    )
-                )
-            yield pd.DataFrame({id_col: ids, out_col: payloads})
+        n, sr = _flac_params(i)
+        return flaccodec.encode_flac(_flac_samples(i, n), sample_rate=sr)
 
     # rice coding is ~2ms/doc of pure python — exchange the ids so
-    # the work spreads, with the count PINNED (AQE would coalesce the
-    # 40 KB id shuffle back to one partition; see with_jpeg_payload)
-    par = df.sparkSession.sparkContext.defaultParallelism
-    return df.select(id_col).repartition(par, id_col).mapInPandas(
-        _synth,
-        schema=T.StructType(
-            [
-                T.StructField(id_col, T.LongType()),
-                T.StructField(out_col, T.BinaryType()),
-            ]
-        ),
-    )
+    # the work spreads
+    return _synth_payloads(df, make, id_col, out_col, spread=True)
 
 
 def flac_sample_stats(
@@ -1060,25 +922,25 @@ def flac_sample_stats(
     every reconstructed sample — a hash match proves the entropy
     layer and both prediction recurrences bit for bit."""
 
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
+    def rows(doc_id, payload):
         from pyspark_scd_spark.functions import flaccodec
 
-        for pdf in batches:
-            out = {k.name: [] for k in FLAC_SAMPLE_STATS_SCHEMA.fields}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                sr, n, samples = flaccodec.decode(bytes(payload))
-                a = np.asarray(samples, dtype=np.int64)
-                out["doc_id"].append(int(doc_id))
-                out["sample_rate"].append(sr)
-                out["n_samples"].append(n)
-                out["sum_s"].append(int(a.sum()) if n else 0)
-                out["sumsq_s"].append(int((a * a).sum()) if n else 0)
-                out["min_s"].append(int(a.min()) if n else 0)
-                out["max_s"].append(int(a.max()) if n else 0)
-            yield pd.DataFrame(out)
+        sr, n, samples = flaccodec.decode(payload)
+        a = np.asarray(samples, dtype=np.int64)
+        if not n:
+            return [(doc_id, sr, n, 0, 0, 0, 0)]
+        return [
+            (
+                doc_id,
+                sr,
+                n,
+                int(a.sum()),
+                int((a * a).sum()),
+                int(a.min()),
+                int(a.max()),
+            )
+        ]
 
-    return df.select(id_col, payload_col).mapInPandas(
-        _stats, schema=FLAC_SAMPLE_STATS_SCHEMA
+    return _map_payloads(
+        df, rows, FLAC_SAMPLE_STATS_SCHEMA, id_col, payload_col
     )

@@ -32,9 +32,11 @@ Python row loop over pixels); bands multiply rows only at doc
 granularity (x4); candidates come from a band-key equi-join that
 shuffles (band_no, band_val) — the same bucketed-candidates shape as
 minhash_lsh_pairs, never an all-pairs cross join. Duplicate-heavy
-corpora concentrate identical hashes in one band bucket; collapse
-identical phash values first (groupBy phash) when verbatim copies
-dominate, exactly like the identical-set collapse in text dedup.
+corpora would concentrate identical hashes in one band bucket, so the
+band join runs over DISTINCT hashes and ids are recovered by
+hash-keyed joins afterwards (the distinct-hash collapse,
+phash_neardup_pairs) — verbatim copies cost one band row per hash,
+like the identical-set collapse in text dedup.
 
 Reference scope note: the reference engine (see SURVEY.md) has no
 image operators at all — this extends the §2c multimodal family
@@ -46,13 +48,17 @@ from __future__ import annotations
 
 import math
 import operator
-from collections.abc import Iterator
-from functools import reduce
+from functools import cache, reduce
 
-import pandas as pd
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from pyspark_scd_spark.operators.multimodal import (
+    _map_payloads,
+    _synth_payloads,
+)
 
 PHASH_IMG = 16  # synthetic grayscale image side (N x N)
 PHASH_FREQ = 8  # low-frequency DCT block kept (top-left F x F)
@@ -60,20 +66,24 @@ PHASH_SCALE = 10000  # integer cosine fixed-point scale
 PHASH_GROUPS = 40  # docs sharing doc_id % GROUPS share a base image
 
 
-def phash_cos_table() -> list[list[int]]:
+def phash_cos_table(rows: int = PHASH_FREQ) -> list[list[int]]:
     """ct[u][k] = round(cos(pi*(2k+1)*u / (2*PHASH_IMG)) * SCALE),
-    u in [0, PHASH_FREQ), k in [0, PHASH_IMG). Verified: every value
-    sits >= 0.09 from a .5 boundary at SCALE=10000, so Python and any
-    SQL engine rounding a correctly-rounded double cos agree exactly.
-    The registry interpolates these integers as LITERALS into the
-    oracle SQL — the oracle never recomputes a cosine."""
+    u in [0, rows), k in [0, PHASH_IMG). The default PHASH_FREQ rows
+    are the pHash low-frequency block; ``rows=16`` is the full table
+    whose extra rows 8..15 extend the frequency range the wide hash
+    keeps (rows 0..7 are the same formula, so equal). Verified: every
+    value of the full 16x16 grid sits >= 0.0966 from a .5 boundary at
+    SCALE=10000, so Python and any SQL engine rounding a
+    correctly-rounded double cos agree exactly. The registry
+    interpolates these integers as LITERALS into the oracle SQL — the
+    oracle never recomputes a cosine."""
     n = PHASH_IMG
     return [
         [
             round(math.cos(math.pi * (2 * k + 1) * u / (2 * n)) * PHASH_SCALE)
             for k in range(n)
         ]
-        for u in range(PHASH_FREQ)
+        for u in range(rows)
     ]
 
 
@@ -110,8 +120,6 @@ def _pixels_np(doc: int, n: int):
     query's wall at sf0.1). All terms non-negative int64, so the
     modulos match Python's exactly — bit-identical to the reference
     form (pinned in tests/test_perceptual.py)."""
-    import numpy as np
-
     g = doc % PHASH_GROUPS
     eps = (doc // PHASH_GROUPS) % 4
     y = np.arange(n, dtype=np.int64)[:, None]
@@ -129,32 +137,16 @@ def with_grayscale_payload(
     consumers exercise a genuine decode, same playbook as
     multimodal.with_png_payload."""
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def make(i):
         from pyspark_scd_spark.functions import imagecodec
 
+        # one numpy grid per doc — bit-identical to the _pixel
+        # reference form (encode_png slices the flat buffer row-wise;
+        # bytes input is equivalent to a list of ints)
         n = PHASH_IMG
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                # one numpy grid per doc — bit-identical to the
-                # _pixel reference form (encode_png slices the flat
-                # buffer row-wise; bytes input is equivalent to the
-                # old list of ints)
-                px = _pixels_np(i, n).tobytes()
-                payloads.append(imagecodec.encode_png(n, n, 1, px))
-            yield pd.DataFrame({id_col: ids, out_col: payloads})
+        return imagecodec.encode_png(n, n, 1, _pixels_np(i, n).tobytes())
 
-    return df.select(id_col).mapInPandas(
-        _synth,
-        schema=T.StructType(
-            [
-                T.StructField(id_col, T.LongType()),
-                T.StructField(out_col, T.BinaryType()),
-            ]
-        ),
-    )
+    return _synth_payloads(df, make, id_col, out_col)
 
 
 def _pinned_hash_cache(df: DataFrame, *cols: str) -> DataFrame:
@@ -460,6 +452,68 @@ def _frame_vote(
     )
 
 
+# ======================================================================
+# Hash kernels. Each derivation has ONE kernel taking ``n_words``: a
+# hash is one 63-bit word (the narrow operators) or two 62-bit words
+# (the wide ones, for 31-bit MIH bands); the public hashers are thin
+# wrappers that pick the width.
+# ======================================================================
+
+_HASH_BITS = {1: 63, 2: 124}  # hash words -> fingerprint bits
+
+
+@cache
+def _pack_weights(n_words: int):
+    per = _HASH_BITS[n_words] // n_words
+    k = np.arange(_HASH_BITS[n_words], dtype=np.int64)
+    w = np.zeros((k.size, n_words), dtype=np.int64)
+    w[k, k // per] = np.left_shift(np.int64(1), k % per)
+    return w
+
+
+def _pack(bits, n_words: int):
+    """Pack the last axis of a 0/1 int64 array of _HASH_BITS[n_words]
+    bits into ``n_words`` int64 words (the result's last axis): bits
+    0..62 into one word, or bits 0..61 into the lo word and 62..123
+    into the hi word. Bit 63 is never set, so every word is a
+    non-negative BIGINT in every engine."""
+    return bits @ _pack_weights(n_words)
+
+
+def _image_phash(df, id_col, payload_col, n_words: int) -> DataFrame:
+    """The pHash kernel behind ``image_phash`` (one word: 8x8 block,
+    coefs = CT8 @ P @ CT8^T) and ``image_phash_wide`` (two words: 8x16
+    block, CT8 @ P @ CT16^T): drop the DC term, threshold the next
+    _HASH_BITS row-major coefficients at their lower-median rank
+    (strict >), pack."""
+    name = "image_phash" if n_words == 1 else "image_phash_wide"
+    schema = PHASH_SCHEMA if n_words == 1 else WIDE_PHASH_SCHEMA
+    n_bits = _HASH_BITS[n_words]
+    ct = np.asarray(phash_cos_table(), dtype=np.int64)
+    ct_v = np.asarray(phash_cos_table(PHASH_FREQ * n_words), dtype=np.int64)
+
+    def rows(doc_id, payload):
+        from pyspark_scd_spark.functions import imagecodec
+
+        w, h, c, px = imagecodec.decode(payload)
+        if (w, h) != (PHASH_IMG, PHASH_IMG):
+            # the fixed-point cosine table is N=16-specific; real
+            # pipelines resize to N x N first (the downscale step of
+            # canonical pHash) — out of scope for the deterministic
+            # synthetic family
+            raise ValueError(
+                f"{name} expects a "
+                f"{PHASH_IMG}x{PHASH_IMG} input, got {w}x{h}"
+            )
+        p = np.asarray(px, dtype=np.int64).reshape(h, w, c)[:, :, 0]
+        # row-major index 0 is the DC term (u=0, v=0)
+        rest = (ct @ p @ ct_v.T).ravel()[1 : n_bits + 1]
+        bits = (rest > np.sort(rest)[(n_bits - 1) // 2]).astype(np.int64)
+        return [(doc_id, w, h, *_pack(bits, n_words).tolist())]
+
+    return _map_payloads(df, rows, schema, id_col, payload_col)
+
+
 PHASH_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
@@ -485,43 +539,7 @@ def image_phash(
     the hash is bit-identical across engines and platforms — the
     property the oracle pins."""
 
-    def _hash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from pyspark_scd_spark.functions import imagecodec
-
-        ct = np.asarray(phash_cos_table(), dtype=np.int64)
-        weights = (np.int64(1) << np.arange(63, dtype=np.int64))
-        for pdf in batches:
-            out = {k.name: [] for k in PHASH_SCHEMA.fields}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                w, h, c, px = imagecodec.decode(bytes(payload))
-                if (w, h) != (PHASH_IMG, PHASH_IMG):
-                    # the fixed-point cosine table is N=16-specific;
-                    # real pipelines resize to N x N first (the
-                    # downscale step of canonical pHash) — out of
-                    # scope for the deterministic synthetic family
-                    raise ValueError(
-                        "image_phash expects a "
-                        f"{PHASH_IMG}x{PHASH_IMG} input, got {w}x{h}"
-                    )
-                p = np.asarray(px, dtype=np.int64).reshape(h, w, c)[
-                    :, :, 0
-                ]
-                coefs = (ct @ p @ ct.T).ravel()
-                rest = coefs[1:]  # row-major index 0 is (u=0, v=0)
-                med = np.sort(rest)[31]
-                bits = (rest > med).astype(np.int64)
-                phash = int((bits * weights).sum())
-                out["doc_id"].append(int(doc_id))
-                out["width"].append(int(w))
-                out["height"].append(int(h))
-                out["phash"].append(phash)
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, payload_col).mapInPandas(
-        _hash, schema=PHASH_SCHEMA
-    )
+    return _image_phash(df, id_col, payload_col, n_words=1)
 
 
 def phash_neardup_pairs(
@@ -591,6 +609,70 @@ VIDEO_FHASH_SCHEMA = T.StructType(
 )
 
 
+def _frame_hashes(df, id_col, payload_col, n_words: int) -> DataFrame:
+    """The frame-hash kernel behind ``video_frame_hashes`` (one word,
+    bit k samples luma (k % h, (k*7) % w)) and
+    ``video_frame_hash_wide`` (two words, bit k samples flat index
+    (k * VIDEO_WIDE_STRIDE) % (w*h), with its size and injectivity
+    guards): bit k is set iff that sample exceeds the frame mean,
+    compared exactly as ``lum * (w*h) > sum(luma)``."""
+    schema = VIDEO_FHASH_SCHEMA if n_words == 1 else WIDE_VIDEO_FHASH_SCHEMA
+    ks = np.arange(_HASH_BITS[n_words], dtype=np.int64)
+
+    def rows(doc_id, payload):
+        from pyspark_scd_spark.functions import videocodec
+
+        meta, frames = videocodec.decode_y4m(payload)
+        w, h = meta["width"], meta["height"]
+        wh = w * h
+        if n_words == 1:
+            idx = (ks % h) * w + (ks * 7) % w
+        else:
+            if wh < 124:
+                raise ValueError(
+                    "video_frame_hash_wide needs >= 124 luma "
+                    f"samples per frame (w*h >= 124), got "
+                    f"{w}x{h} for doc {doc_id}; small frames "
+                    "use video_frame_hashes (63-bit)"
+                )
+            idx = (ks * VIDEO_WIDE_STRIDE) % wh
+            # the stride-101 map is a bijection over k<124 only when
+            # gcd(101, w*h)=1 OR w*h/101 >= 124; a frame with e.g.
+            # w*h = 202 passes the size check yet repeats positions
+            # with period w*h/101, silently re-correlating the MIH
+            # bands — enforce the docstring's distinctness claim
+            if np.unique(idx).size != 124:
+                raise ValueError(
+                    "video_frame_hash_wide stride-101 position "
+                    f"map is non-injective for {w}x{h} frames "
+                    f"(w*h={wh} shares factor 101 with the "
+                    "stride and w*h/101 < 124) for doc "
+                    f"{doc_id}; all 124 bits must sample "
+                    "distinct pixels — use a frame size with "
+                    "w*h not a multiple of 101, or "
+                    "video_frame_hashes (63-bit)"
+                )
+        # stack the clip's luma planes into ONE (n_frames, w*h)
+        # matrix: one row-sum, one broadcast compare, one bit-pack
+        # GEMM replace the per-frame Python loop (r13: hashing was the
+        # video families' wall — 60-65s of the wide x1000 136.5s;
+        # same values, pinned bit-identical in tests/test_perceptual.py)
+        n_f = len(frames)
+        m = np.frombuffer(
+            b"".join(bytes(fr[0]) for fr in frames), dtype=np.uint8
+        ).reshape(n_f, wh)
+        sums = m.sum(axis=1, dtype=np.int64)
+        bits = (m[:, idx].astype(np.int64) * wh > sums[:, None]).astype(
+            np.int64
+        )
+        return [
+            (doc_id, f, *ws)
+            for f, ws in enumerate(_pack(bits, n_words).tolist())
+        ]
+
+    return _map_payloads(df, rows, schema, id_col, payload_col)
+
+
 def video_frame_hashes(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -609,44 +691,7 @@ def video_frame_hashes(
     nothing exchanges.
     """
 
-    def _hash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from pyspark_scd_spark.functions import videocodec
-
-        ks = np.arange(63, dtype=np.int64)
-        weights = np.left_shift(np.int64(1), ks, dtype=np.int64)
-        for pdf in batches:
-            out = {"doc_id": [], "frame_idx": [], "fhash": []}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                meta, frames = videocodec.decode_y4m(bytes(payload))
-                w, h = meta["width"], meta["height"]
-                wh = w * h
-                idx = (ks % h) * w + (ks * 7) % w
-                # stack the clip's luma planes into ONE (n_frames,
-                # w*h) matrix: one row-sum, one broadcast compare,
-                # one GEMV bit pack replace the per-frame Python
-                # loop (r13: hashing was the video families' wall —
-                # 60-65s of the wide x1000 136.5s; same values,
-                # pinned bit-identical in tests/test_perceptual.py)
-                n_f = len(frames)
-                m = np.frombuffer(
-                    b"".join(bytes(fr[0]) for fr in frames),
-                    dtype=np.uint8,
-                ).reshape(n_f, wh)
-                sums = m.sum(axis=1, dtype=np.int64)
-                bits = (
-                    m[:, idx].astype(np.int64) * wh > sums[:, None]
-                ).astype(np.int64)
-                fhs = bits @ weights
-                out["doc_id"].extend([int(doc_id)] * n_f)
-                out["frame_idx"].extend(range(n_f))
-                out["fhash"].extend(int(x) for x in fhs)
-            yield pd.DataFrame(out)
-
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        _hash, schema=VIDEO_FHASH_SCHEMA
-    )
+    return _frame_hashes(df, id_col, payload_col, n_words=1)
 
 
 def video_neardup_pairs(
@@ -690,6 +735,49 @@ AUDIO_FP_SCHEMA = T.StructType(
 )
 
 
+def _audio_fp(
+    df, id_col, payload_col, window: int, n_words: int
+) -> DataFrame:
+    """The fingerprint kernel behind ``audio_fingerprint`` (one word,
+    transition k at bit (16k) % 63) and ``audio_fingerprint_wide``
+    (two words, transition k at bit k, >= 125 windows enforced):
+    ``window``-sample window energies (sum of squares, the last window
+    zero-padded), transition sign k = energy[k+1] > energy[k]."""
+    schema = AUDIO_FP_SCHEMA if n_words == 1 else WIDE_AUDIO_FP_SCHEMA
+    n_bits = _HASH_BITS[n_words]
+
+    def rows(doc_id, payload):
+        from pyspark_scd_spark.functions import audiocodec
+
+        _, samples = audiocodec.decode_wav(payload)
+        s = np.asarray(samples, dtype=np.int64)
+        n_win = (len(s) + window - 1) // window
+        if n_words == 2 and n_win < 125:
+            raise ValueError(
+                "audio_fingerprint_wide needs >= 125 windows "
+                f"(>= {125 * window} samples at window="
+                f"{window}), got {n_win} for doc {doc_id}; "
+                "short clips use audio_fingerprint (63-bit)"
+            )
+        pad = n_win * window - len(s)
+        if pad:
+            s = np.concatenate([s, np.zeros(pad, dtype=np.int64)])
+        # pure numpy (r12: the per-window Python loop was the measured
+        # hash-stage bottleneck at the 5M-clip tier — same values)
+        e = (s.reshape(n_win, window) ** 2).sum(axis=1)
+        # a zero-sample clip (n_win == 0) has no transitions and
+        # emits afp=0: clamp k at 0
+        k = max(0, min(n_win - 1, n_bits))
+        bits = (e[1 : k + 1] > e[:k]).astype(np.int64)
+        if n_words == 1:
+            spread = np.zeros(n_bits, dtype=np.int64)
+            spread[(16 * np.arange(k)) % 63] = bits
+            bits = spread
+        return [(doc_id, n_win, *_pack(bits, n_words).tolist())]
+
+    return _map_payloads(df, rows, schema, id_col, payload_col)
+
+
 def audio_fingerprint(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -727,46 +815,7 @@ def audio_fingerprint(
     hash-generic).
     """
 
-    def _fp(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from pyspark_scd_spark.functions import audiocodec
-
-        # bit weights at the interleaved positions, precomputed once;
-        # the window-energy/transition loop is pure numpy (r12: the
-        # per-window Python loop was the measured hash-stage
-        # bottleneck at the 5M-clip tier — same values, vectorized)
-        wts = np.left_shift(
-            np.int64(1),
-            (16 * np.arange(63, dtype=np.int64)) % 63,
-            dtype=np.int64,
-        )
-        for pdf in batches:
-            out = {"doc_id": [], "n_windows": [], "afp": []}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                _, samples = audiocodec.decode_wav(bytes(payload))
-                s = np.asarray(samples, dtype=np.int64)
-                n_win = (len(s) + window - 1) // window
-                pad = n_win * window - len(s)
-                if pad:
-                    s = np.concatenate(
-                        [s, np.zeros(pad, dtype=np.int64)]
-                    )
-                e = (s.reshape(n_win, window) ** 2).sum(axis=1)
-                # n_win == 0 (zero-sample clip) must emit afp=0 like
-                # the pre-vectorization loop did: clamp k at 0 so the
-                # empty `bits` multiplies an empty weight slice
-                # instead of broadcasting against wts[:-1] (62 elems).
-                k = max(0, min(n_win - 1, 63))
-                bits = (e[1 : k + 1] > e[:k]).astype(np.int64)
-                out["doc_id"].append(int(doc_id))
-                out["n_windows"].append(n_win)
-                out["afp"].append(int((bits * wts[:k]).sum()))
-            yield pd.DataFrame(out)
-
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        _fp, schema=AUDIO_FP_SCHEMA
-    )
+    return _audio_fp(df, id_col, payload_col, window, n_words=1)
 
 
 def video_neardup_incremental(
@@ -842,51 +891,7 @@ def audio_fingerprint_wide(
     avoid; short clips belong to the 63-bit ``audio_fingerprint``.
     """
 
-    def _fp(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from pyspark_scd_spark.functions import audiocodec
-
-        # precomputed bit weights; energy/transition work is pure
-        # numpy (r12: the per-window Python loop was the measured
-        # hash-stage bottleneck at the 5M-clip tier — same values)
-        ks = np.arange(124, dtype=np.int64)
-        w_lo = np.zeros(124, dtype=np.int64)
-        w_lo[:62] = np.left_shift(np.int64(1), ks[:62], dtype=np.int64)
-        w_hi = np.zeros(124, dtype=np.int64)
-        w_hi[62:] = np.left_shift(
-            np.int64(1), ks[62:] - 62, dtype=np.int64
-        )
-        for pdf in batches:
-            out = {"doc_id": [], "n_windows": [], "afp_lo": [], "afp_hi": []}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                _, samples = audiocodec.decode_wav(bytes(payload))
-                s = np.asarray(samples, dtype=np.int64)
-                n_win = (len(s) + window - 1) // window
-                if n_win < 125:
-                    raise ValueError(
-                        "audio_fingerprint_wide needs >= 125 windows "
-                        f"(>= {125 * window} samples at window="
-                        f"{window}), got {n_win} for doc {doc_id}; "
-                        "short clips use audio_fingerprint (63-bit)"
-                    )
-                pad = n_win * window - len(s)
-                if pad:
-                    s = np.concatenate(
-                        [s, np.zeros(pad, dtype=np.int64)]
-                    )
-                e = (s.reshape(n_win, window) ** 2).sum(axis=1)
-                k = min(n_win - 1, 124)
-                bits = (e[1 : k + 1] > e[:k]).astype(np.int64)
-                out["doc_id"].append(int(doc_id))
-                out["n_windows"].append(n_win)
-                out["afp_lo"].append(int((bits * w_lo[:k]).sum()))
-                out["afp_hi"].append(int((bits * w_hi[:k]).sum()))
-            yield pd.DataFrame(out)
-
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        _fp, schema=WIDE_AUDIO_FP_SCHEMA
-    )
+    return _audio_fp(df, id_col, payload_col, window, n_words=2)
 
 
 def wide_hamming_neardup_pairs(
@@ -987,82 +992,7 @@ def video_frame_hash_wide(
     at 100 TB it scales with frames/core and nothing exchanges.
     """
 
-    def _hash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from pyspark_scd_spark.functions import videocodec
-
-        ks = np.arange(124, dtype=np.int64)
-        w_lo = np.zeros(124, dtype=np.int64)
-        w_lo[:62] = np.left_shift(
-            np.int64(1), ks[:62], dtype=np.int64
-        )
-        w_hi = np.zeros(124, dtype=np.int64)
-        w_hi[62:] = np.left_shift(
-            np.int64(1), ks[62:] - 62, dtype=np.int64
-        )
-        for pdf in batches:
-            out = {
-                "doc_id": [],
-                "frame_idx": [],
-                "fhash_lo": [],
-                "fhash_hi": [],
-            }
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                meta, frames = videocodec.decode_y4m(bytes(payload))
-                w, h = meta["width"], meta["height"]
-                if w * h < 124:
-                    raise ValueError(
-                        "video_frame_hash_wide needs >= 124 luma "
-                        f"samples per frame (w*h >= 124), got "
-                        f"{w}x{h} for doc {doc_id}; small frames "
-                        "use video_frame_hashes (63-bit)"
-                    )
-                wh = w * h
-                idx = (ks * VIDEO_WIDE_STRIDE) % wh
-                # the stride-101 map is a bijection over k<124 only
-                # when gcd(101, w*h)=1 OR w*h/101 >= 124; a frame
-                # with e.g. w*h = 202 passes the size check yet
-                # repeats positions with period w*h/101, silently
-                # re-correlating the MIH bands — enforce the
-                # docstring's distinctness claim directly
-                if np.unique(idx).size != 124:
-                    raise ValueError(
-                        "video_frame_hash_wide stride-101 position "
-                        f"map is non-injective for {w}x{h} frames "
-                        f"(w*h={wh} shares factor 101 with the "
-                        "stride and w*h/101 < 124) for doc "
-                        f"{doc_id}; all 124 bits must sample "
-                        "distinct pixels — use a frame size with "
-                        "w*h not a multiple of 101, or "
-                        "video_frame_hashes (63-bit)"
-                    )
-                # clip-stacked kernel, same device as the narrow
-                # form: (n_frames, w*h) matrix, one row-sum, one
-                # broadcast compare, two GEMV bit packs for the
-                # lo/hi words (r13 VERDICT item 1 — hashing was
-                # 60-65s of the wide x1000 wall; values pinned
-                # bit-identical in tests/test_perceptual.py)
-                n_f = len(frames)
-                m = np.frombuffer(
-                    b"".join(bytes(fr[0]) for fr in frames),
-                    dtype=np.uint8,
-                ).reshape(n_f, wh)
-                sums = m.sum(axis=1, dtype=np.int64)
-                bits = (
-                    m[:, idx].astype(np.int64) * wh > sums[:, None]
-                ).astype(np.int64)
-                los = bits @ w_lo
-                his = bits @ w_hi
-                out["doc_id"].extend([int(doc_id)] * n_f)
-                out["frame_idx"].extend(range(n_f))
-                out["fhash_lo"].extend(int(x) for x in los)
-                out["fhash_hi"].extend(int(x) for x in his)
-            yield pd.DataFrame(out)
-
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        _hash, schema=WIDE_VIDEO_FHASH_SCHEMA
-    )
+    return _frame_hashes(df, id_col, payload_col, n_words=2)
 
 
 def video_neardup_pairs_wide(
@@ -1146,26 +1076,6 @@ WIDE_PHASH_SCHEMA = T.StructType(
 )
 
 
-def phash_cos_table_16() -> list[list[int]]:
-    """The full 16-row fixed-point cosine table: ct[u][k] =
-    round(cos(pi*(2k+1)*u / 32) * SCALE) for u AND k in [0, 16).
-    Rows 0..7 equal phash_cos_table exactly (same formula); rows
-    8..15 extend the frequency range the wide hash keeps. Verified:
-    every value sits >= 0.0966 from a .5 rounding boundary at
-    SCALE=10000 (checked over the full 16x16 grid), so Python and
-    any SQL engine rounding a correctly-rounded double cos agree
-    exactly — the same cross-engine-exactness discipline as the
-    8-row table."""
-    n = PHASH_IMG
-    return [
-        [
-            round(math.cos(math.pi * (2 * k + 1) * u / (2 * n)) * PHASH_SCALE)
-            for k in range(n)
-        ]
-        for u in range(n)
-    ]
-
-
 def image_phash_wide(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -1186,43 +1096,4 @@ def image_phash_wide(
     — the image twin of the audio (r11) and video (r12) wide forms.
     """
 
-    def _hash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from pyspark_scd_spark.functions import imagecodec
-
-        ct8 = np.asarray(phash_cos_table(), dtype=np.int64)
-        ct16 = np.asarray(phash_cos_table_16(), dtype=np.int64)
-        ks = np.arange(124, dtype=np.int64)
-        w_lo = np.zeros(124, dtype=np.int64)
-        w_lo[:62] = np.left_shift(np.int64(1), ks[:62], dtype=np.int64)
-        w_hi = np.zeros(124, dtype=np.int64)
-        w_hi[62:] = np.left_shift(
-            np.int64(1), ks[62:] - 62, dtype=np.int64
-        )
-        for pdf in batches:
-            out = {k.name: [] for k in WIDE_PHASH_SCHEMA.fields}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                w, h, c, px = imagecodec.decode(bytes(payload))
-                if (w, h) != (PHASH_IMG, PHASH_IMG):
-                    raise ValueError(
-                        "image_phash_wide expects a "
-                        f"{PHASH_IMG}x{PHASH_IMG} input, got {w}x{h}"
-                    )
-                p = np.asarray(px, dtype=np.int64).reshape(h, w, c)[
-                    :, :, 0
-                ]
-                coefs = (ct8 @ p @ ct16.T).ravel()
-                rest = coefs[1:125]  # row-major index u*16+v, DC out
-                med = np.sort(rest)[61]
-                bits = (rest > med).astype(np.int64)
-                out["doc_id"].append(int(doc_id))
-                out["width"].append(int(w))
-                out["height"].append(int(h))
-                out["phash_lo"].append(int((bits * w_lo).sum()))
-                out["phash_hi"].append(int((bits * w_hi).sum()))
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, payload_col).mapInPandas(
-        _hash, schema=WIDE_PHASH_SCHEMA
-    )
+    return _image_phash(df, id_col, payload_col, n_words=2)

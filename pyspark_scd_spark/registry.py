@@ -2924,8 +2924,8 @@ def q22_inactive_customers(spark, sf_dir):
     """,
     doc="Resize/downsample: binary payload in -> smaller binary out "
     "via Arrow-batched mapInPandas (deterministic stride sampling "
-    "payload[::stride][:64]; real codec gated behind fake=False "
-    "NotImplementedError). The oracle replays the stride arithmetic "
+    "payload[::stride][:64], the resize shape without a codec "
+    "resample). The oracle replays the stride arithmetic "
     "per byte position and compares the resized payload as hex "
     "(ASCII corpus: char positions == byte positions) "
     "(operators/multimodal.py resize_payload).",
@@ -10968,7 +10968,6 @@ def q_corpus_zipf_slope(spark, sf_dir):
 from pyspark_scd_spark.operators import multimodal as _MM  # noqa: E402
 from pyspark_scd_spark.operators.perceptual import (  # noqa: E402
     phash_cos_table as _phash_ct,
-    phash_cos_table_16 as _phash_ct16,
     phash_pixel_expr_sql as _phash_px,
     with_grayscale_payload as _gray_images,
 )
@@ -11025,7 +11024,7 @@ _PHASH_BITS_CTES = f"""
 
 _PHASH_WIDE_BITS_CTES = f"""
     ct(u, k, c) AS (VALUES {_ct_values(_phash_ct())}),
-    ct16(u, k, c) AS (VALUES {_ct_values(_phash_ct16())}),
+    ct16(u, k, c) AS (VALUES {_ct_values(_phash_ct(16))}),
     yy AS (SELECT UNNEST(range(0, 16)) AS y),
     xx AS (SELECT UNNEST(range(0, 16)) AS x),
     px AS (SELECT doc_id, y, x,

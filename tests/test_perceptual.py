@@ -113,14 +113,18 @@ def test_phash_envelope_gates(spark):
 
 
 def test_tools_reference_existing_perceptual_names():
-    """The scale studies in tools/ call perceptual.<name> but never
-    run in the test suite, so a renamed operator would only surface
-    on a full-scale run. Scan their ASTs (no Spark) and require every
-    referenced name to exist."""
+    """The scale studies in tools/ call perceptual.<name> and
+    multimodal.<name> but never run in the test suite, so a renamed
+    operator or helper would only surface on a full-scale run. Scan
+    their ASTs (no Spark) and require every referenced name to
+    exist."""
     import ast
     import glob
     import os
 
+    from pyspark_scd_spark.operators import multimodal
+
+    modules = {"perceptual": perceptual, "multimodal": multimodal}
     tools = os.path.join(os.path.dirname(__file__), "..", "tools")
     refs = {}
     for path in glob.glob(os.path.join(tools, "*.py")):
@@ -130,11 +134,20 @@ def test_tools_reference_existing_perceptual_names():
             if (
                 isinstance(node, ast.Attribute)
                 and isinstance(node.value, ast.Name)
-                and node.value.id == "perceptual"
+                and node.value.id in modules
             ):
-                refs.setdefault(node.attr, os.path.basename(path))
-    assert refs, "no perceptual.<name> references found under tools/"
-    missing = {n: p for n, p in refs.items() if not hasattr(perceptual, n)}
+                refs.setdefault(
+                    (node.value.id, node.attr), os.path.basename(path)
+                )
+    for mod in modules:
+        assert any(m == mod for m, _ in refs), (
+            f"no {mod}.<name> references found under tools/"
+        )
+    missing = {
+        f"{m}.{n}": p
+        for (m, n), p in refs.items()
+        if not hasattr(modules[m], n)
+    }
     assert not missing, missing
 
 
@@ -570,7 +583,7 @@ def test_cos_table_16_far_from_rounding_boundaries():
                 * perceptual.PHASH_SCALE
             )
             assert abs(v - math.floor(v) - 0.5) >= 0.09, (u, k)
-    assert perceptual.phash_cos_table_16()[:8] == (
+    assert perceptual.phash_cos_table(16)[:8] == (
         perceptual.phash_cos_table()
     )
 
@@ -591,7 +604,7 @@ def test_image_phash_wide_matches_python_reference(spark):
         ).collect()
     }
     ct8 = np.asarray(perceptual.phash_cos_table(), dtype=np.int64)
-    ct16 = np.asarray(perceptual.phash_cos_table_16(), dtype=np.int64)
+    ct16 = np.asarray(perceptual.phash_cos_table(16), dtype=np.int64)
     n = perceptual.PHASH_IMG
     for i in range(25):
         p = np.asarray(
@@ -690,3 +703,58 @@ def test_video_frame_hash_wide_rejects_noninjective_stride(spark):
         "doc_id: long, payload: binary",
     )
     assert perceptual.video_frame_hash_wide(ok).count() == 2
+
+
+# (module, operator, declared schema) for every operator behind the
+# shared (id, payload) -> rows map: the eleven decoders and six hashers
+_PAYLOAD_MAPS = [
+    ("multimodal", "extract_payload_meta", "PAYLOAD_META_SCHEMA"),
+    ("multimodal", "decode_image_features", "IMAGE_FEATURE_SCHEMA"),
+    ("multimodal", "resize_payload", "RESIZED_SCHEMA"),
+    ("multimodal", "sample_frames", "FRAME_SAMPLE_SCHEMA"),
+    ("multimodal", "decode_audio_features", "AUDIO_FEATURE_SCHEMA"),
+    ("multimodal", "audio_window_energy", "AUDIO_ENERGY_SCHEMA"),
+    ("multimodal", "video_frame_stats", "VIDEO_FRAME_STATS_SCHEMA"),
+    ("multimodal", "png_pixel_stats", "PNG_PIXEL_STATS_SCHEMA"),
+    ("multimodal", "gif_pixel_stats", "GIF_PIXEL_STATS_SCHEMA"),
+    ("multimodal", "jpeg_component_stats", "JPEG_COMPONENT_STATS_SCHEMA"),
+    ("multimodal", "flac_sample_stats", "FLAC_SAMPLE_STATS_SCHEMA"),
+    ("perceptual", "image_phash", "PHASH_SCHEMA"),
+    ("perceptual", "video_frame_hashes", "VIDEO_FHASH_SCHEMA"),
+    ("perceptual", "audio_fingerprint", "AUDIO_FP_SCHEMA"),
+    ("perceptual", "image_phash_wide", "WIDE_PHASH_SCHEMA"),
+    ("perceptual", "video_frame_hash_wide", "WIDE_VIDEO_FHASH_SCHEMA"),
+    ("perceptual", "audio_fingerprint_wide", "WIDE_AUDIO_FP_SCHEMA"),
+]
+
+
+@pytest.mark.parametrize(
+    "mod,op,schema,zero_sample_clip",
+    [(*m, False) for m in _PAYLOAD_MAPS]
+    + [("multimodal", "audio_window_energy", "AUDIO_ENERGY_SCHEMA", True)],
+    ids=[m[1] for m in _PAYLOAD_MAPS] + ["audio_window_energy-zero-sample"],
+)
+def test_payload_maps_emit_no_rows_with_declared_schema(
+    spark, mod, op, schema, zero_sample_clip
+):
+    """An empty input gives 0 rows carrying the operator's declared
+    schema; so does a non-empty batch whose payloads yield no rows (a
+    zero-sample clip has no energy windows), which hands an empty
+    record list across the Arrow boundary."""
+    from pyspark_scd_spark.functions import audiocodec
+    from pyspark_scd_spark.operators import multimodal
+
+    module = {"multimodal": multimodal, "perceptual": perceptual}[mod]
+    if zero_sample_clip:
+        df = spark.createDataFrame(
+            [(1, audiocodec.encode_wav([], 8000))],
+            "doc_id: long, payload: binary",
+        )
+    else:
+        df = spark.range(0).select(
+            F.col("id").alias("doc_id"),
+            F.lit("").cast("binary").alias("payload"),
+        )
+    out = getattr(module, op)(df)
+    assert out.schema == getattr(module, schema)
+    assert out.collect() == []

@@ -35,26 +35,17 @@ import json
 import os
 import sys
 import time
-from collections.abc import Iterator
 
 sys.path.insert(
     0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 )
 
-import pandas as pd  # noqa: E402
-from pyspark.sql import DataFrame, functions as F, types as T  # noqa: E402
+from pyspark.sql import DataFrame, functions as F  # noqa: E402
 
-from pyspark_scd_spark.operators import perceptual  # noqa: E402
+from pyspark_scd_spark.operators import multimodal, perceptual  # noqa: E402
 from pyspark_scd_spark.session import get_spark  # noqa: E402
 
 TIERS = [(150_000, "x30"), (500_000, "x100"), (1_500_000, "x300")]
-
-_PAYLOAD_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-    ]
-)
 
 # h=9 deliberately: video_frame_hashes samples luma at positions
 # (k % h, 7k % w); with h=8, w=16 the position sequence repeats every
@@ -90,32 +81,25 @@ def diverse_video_payload(df: DataFrame) -> DataFrame:
     """Real Y4M clips with ~unique frame hashes; doc_id % 100 == 1
     replants doc-1's frames 1..2 (planted 2-frame-vote partner)."""
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    uv = bytes([128]) * (VID_W * VID_H)
+
+    def make(i):
         from pyspark_scd_spark.functions import videocodec
 
-        uv = bytes([128]) * (VID_W * VID_H)
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                base = i - 1 if i % 100 == 1 else i
-                seed = (base * 2654435761) % 2147483647
-                frames = []
-                for f in range(VID_F):
-                    if f == 0 and i % 100 == 1:
-                        # partner's own frame 0 — different content,
-                        # so only frames 1..2 vote
-                        y = _vid_frame((i * 97 + 13) % 2147483647, 0)
-                    else:
-                        y = _vid_frame(seed, f)
-                    frames.append((y, uv, uv))
-                payloads.append(
-                    videocodec.encode_y4m(frames, VID_W, VID_H)
-                )
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+        base = i - 1 if i % 100 == 1 else i
+        seed = (base * 2654435761) % 2147483647
+        frames = []
+        for f in range(VID_F):
+            if f == 0 and i % 100 == 1:
+                # partner's own frame 0 — different content, so only
+                # frames 1..2 vote
+                y = _vid_frame((i * 97 + 13) % 2147483647, 0)
+            else:
+                y = _vid_frame(seed, f)
+            frames.append((y, uv, uv))
+        return videocodec.encode_y4m(frames, VID_W, VID_H)
 
-    return df.select("doc_id").mapInPandas(_synth, schema=_PAYLOAD_SCHEMA)
+    return multimodal._synth_payloads(df, make)
 
 
 def _aud_samples(seed: int) -> list:
@@ -144,25 +128,18 @@ def diverse_audio_payload(df: DataFrame) -> DataFrame:
     copies doc-1's samples and perturbs only the last 8 (<= 2
     transition-bit flips — a planted hamming <= 3 partner)."""
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def make(i):
         from pyspark_scd_spark.functions import audiocodec
 
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                base = i - 1 if i % 100 == 1 else i
-                # raw base feeds the 64-bit mixer directly — the r12
-                # 31-bit golden-ratio modulus capped seed entropy
-                samples = _aud_samples(base)
-                if i % 100 == 1:
-                    for j in range(AUD_N - 8, AUD_N):
-                        samples[j] = ((samples[j] + 4321) % 65536) - 32768
-                payloads.append(audiocodec.encode_wav(samples, 16000))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+        # raw base feeds the 64-bit mixer directly — the r12 31-bit
+        # golden-ratio modulus capped seed entropy
+        samples = _aud_samples(i - 1 if i % 100 == 1 else i)
+        if i % 100 == 1:
+            for j in range(AUD_N - 8, AUD_N):
+                samples[j] = ((samples[j] + 4321) % 65536) - 32768
+        return audiocodec.encode_wav(samples, 16000)
 
-    return df.select("doc_id").mapInPandas(_synth, schema=_PAYLOAD_SCHEMA)
+    return multimodal._synth_payloads(df, make)
 
 
 def _consume(df) -> None:

@@ -35,16 +35,14 @@ import json
 import os
 import sys
 import time
-from collections.abc import Iterator
 
 sys.path.insert(
     0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 )
 
-import pandas as pd  # noqa: E402
-from pyspark.sql import DataFrame, functions as F, types as T  # noqa: E402
+from pyspark.sql import DataFrame, functions as F  # noqa: E402
 
-from pyspark_scd_spark.operators import perceptual  # noqa: E402
+from pyspark_scd_spark.operators import multimodal, perceptual  # noqa: E402
 from pyspark_scd_spark.session import get_spark  # noqa: E402
 from tools.av_scale_study import _consume, _ensure_tier  # noqa: E402
 
@@ -59,38 +57,25 @@ def diverse_grayscale_payload(
     base image with a small corner perturbation — a planted near-dup
     partner (hamming small, often 0..3), so dup mass is linear in n."""
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    n = perceptual.PHASH_IMG
+
+    def make(i):
         from pyspark_scd_spark.functions import imagecodec
 
-        n = perceptual.PHASH_IMG
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                base = i - 1 if i % 100 == 1 else i
-                s = (base * 2654435761) % 2147483647
-                px = [
-                    (s + y * 40503 + x * 9973 + ((y * x) % 11) * 7919
-                     + ((s >> 8) * (y + 3 * x)) ) % 251
-                    for y in range(n)
-                    for x in range(n)
-                ]
-                if i % 100 == 1:
-                    for k in range(8):
-                        px[k] = (px[k] + 9) % 251
-                payloads.append(imagecodec.encode_png(n, n, 1, px))
-            yield pd.DataFrame({id_col: ids, out_col: payloads})
+        base = i - 1 if i % 100 == 1 else i
+        s = (base * 2654435761) % 2147483647
+        px = [
+            (s + y * 40503 + x * 9973 + ((y * x) % 11) * 7919
+             + ((s >> 8) * (y + 3 * x)) ) % 251
+            for y in range(n)
+            for x in range(n)
+        ]
+        if i % 100 == 1:
+            for k in range(8):
+                px[k] = (px[k] + 9) % 251
+        return imagecodec.encode_png(n, n, 1, px)
 
-    return df.select(id_col).mapInPandas(
-        _synth,
-        schema=T.StructType(
-            [
-                T.StructField(id_col, T.LongType()),
-                T.StructField(out_col, T.BinaryType()),
-            ]
-        ),
-    )
+    return multimodal._synth_payloads(df, make, id_col, out_col)
 
 
 def _queries(spark, sf_dir: str):
