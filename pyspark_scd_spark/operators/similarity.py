@@ -18,8 +18,8 @@ Two kinds of operator live here:
   keeps) and round through ``_round_away``, DuckDB's
   half-away-from-zero ``ROUND``. The driver-collect twins
   (``embedding_neardup_pairs_blas``, ``knn_label_vote``,
-  ``hard_negative_mining``) are explicit small-corpus options outside
-  this contract.
+  ``hard_negative_mining``) are explicit small-corpus options with
+  kernels of their own; they round through ``_round_away`` too.
 
 The LSH and IVF operators take ``verify=``: a bucket/cell GEMM (the
 default) or ``'pairs'``, the pair-gather twin through
@@ -238,9 +238,8 @@ def embedding_neardup_pairs_blas(
     EXPLICIT SMALL-CORPUS OPTION: collects the corpus to the driver.
     The registry and any at-scale caller use
     ``embedding_neardup_pairs_grid`` (fully distributed; the same
-    results except on exact .5 rounding ties, which this form rounds
-    half to even); this form wins only on corpora small enough that
-    grid-cell scheduling overhead dominates.
+    rows); this form wins only on corpora small enough that grid-cell
+    scheduling overhead dominates.
 
     One side is collected, L2-normalized, and broadcast (N×d float64 —
     at d=64 a million vectors is ~500 MB, the practical ceiling; beyond
@@ -250,8 +249,9 @@ def embedding_neardup_pairs_blas(
     evaluation does in minutes, with one Arrow hop per ~10k rows.
 
     Each unordered pair is emitted once (id_a < id_b) by the batch that
-    holds the smaller id. Cosines are rounded to ``round_to`` and the
-    threshold applies to the ROUNDED value so results are reproducible
+    holds the smaller id. Cosines are rounded to ``round_to`` half away
+    from zero (``_round_away``, DuckDB's ``ROUND``) and the threshold
+    applies to the ROUNDED value so results are reproducible
     across backends (BLAS pairwise summation vs sequential differ by
     ~1e-15; at 4 dp that never flips a comparison in practice).
     """
@@ -276,7 +276,7 @@ def embedding_neardup_pairs_blas(
             qid = pdf[id_col].to_numpy(dtype=np.int64)
             out_a, out_b, out_s = [], [], []
             for i in range(sims.shape[0]):
-                s = np.round(sims[i], round_to)
+                s = _round_away(sims[i], round_to)
                 mask = (s >= threshold) & (all_ids > qid[i])
                 out_a.append(np.full(mask.sum(), qid[i], dtype=np.int64))
                 out_b.append(all_ids[mask])
@@ -805,8 +805,7 @@ def knn_label_vote(
 
     EXPLICIT SMALL-CORPUS OPTION — collects the corpus to the driver
     and broadcasts it; the registry and any at-scale caller use
-    ``knn_label_vote_grid`` (fully distributed; the same output except
-    on exact .5 ties at 6 dp, which this form rounds half to even).
+    ``knn_label_vote_grid`` (fully distributed; the same output).
 
     Same blocked-BLAS shape as ``embedding_neardup_pairs_blas``: the
     corpus matrix is L2-normalized and broadcast, ``mapInPandas``
@@ -833,7 +832,7 @@ def knn_label_vote(
         for pdf in batches:
             q = np.array(list(pdf[vec_col]), dtype=np.float64)
             q /= np.linalg.norm(q, axis=1, keepdims=True)
-            sims = np.round(q @ all_mat.T, 6)
+            sims = _round_away(q @ all_mat.T, 6)
             qid = pdf[id_col].to_numpy(dtype=np.int64)
             qlab = pdf[label_col].to_numpy(dtype=np.int64)
             out = {c: [] for c in
@@ -907,13 +906,6 @@ def hard_negative_mining(
     mat /= np.linalg.norm(mat, axis=1, keepdims=True)
     sc = df.sparkSession.sparkContext
     b = sc.broadcast((ids, labels, mat))
-
-    def _round_away(a, d):
-        # DuckDB ROUND is half-away-from-zero; np.round/py round are
-        # half-even — the two disagree exactly on .5 boundaries, which
-        # real cosine ties do hit. Mirror DuckDB.
-        p = 10.0 ** d
-        return np.sign(a) * np.floor(np.abs(a) * p + 0.5) / p
 
     def _mine(batches):
         all_ids, all_labels, all_mat = b.value
@@ -1114,8 +1106,7 @@ def embedding_neardup_pairs_grid(
     from zero to ``round_to`` like DuckDB's ROUND, threshold on the
     ROUNDED value), emitting pairs with id_a < id_b. Each unordered
     pair lives in exactly one cell. Same rows as the LSH and IVF
-    tiers' verify; the ``_blas`` twin rounds half to even, so it can
-    differ on exact .5 ties.
+    tiers' verify and the ``_blas`` twin.
     """
     import numpy as np
 

@@ -3350,6 +3350,57 @@ def q17_small_quantity_revenue(spark, sf_dir):
     )
 
 
+# ----------------------------------------------------------------------
+# TPC-H Q21: the correlated EXISTS / NOT EXISTS pair over lineitem as
+# window facts on the order key (WinMagic, Zuzarte et al. SIGMOD 2003),
+# with the orders side tagged into the same window instead of joined:
+# both sides share the one hash exchange on l_orderkey.
+# ----------------------------------------------------------------------
+
+
+_BY_ORDER = "OVER (PARTITION BY l_orderkey)"
+
+
+def _q21_lines(spark, sf_dir, col: str, *facts: str) -> DataFrame:
+    """Lineitem rows (``l_orderkey``, ``l_suppkey``, ``col``) tagged
+    ``f = 0`` and the status-F order keys tagged ``f = 1``, unioned,
+    with the per-order facts over one ``l_orderkey`` window: ``n_f``,
+    the order's F rows (the orders join's multiplicity), ``nsupp``, its
+    distinct non-NULL suppliers (a TPC-H order has at most 7 lines),
+    and the SQL expressions ``facts``. Each window level is one
+    ``selectExpr``: a py4j round trip instead of one per Column."""
+    li = _t(spark, sf_dir, "lineitem").selectExpr(
+        "l_orderkey", "l_suppkey", col, "0 AS f"
+    )
+    # A NULL key joins nothing, so it gets no F row to count.
+    o = (
+        _t(spark, sf_dir, "orders")
+        .filter("o_orderstatus = 'F' AND o_orderkey IS NOT NULL")
+        .selectExpr("o_orderkey AS l_orderkey", "1 AS f")
+    )
+    return li.unionByName(o, allowMissingColumns=True).selectExpr(
+        "*",
+        f"sum(f) {_BY_ORDER} AS n_f",
+        f"size(collect_set(l_suppkey) {_BY_ORDER}) AS nsupp",
+        *facts,
+    )
+
+
+def _q21_numwait(spark, sf_dir, lines: DataFrame, not_exists: str) -> DataFrame:
+    """``numwait`` per supplier name over the lineitem rows of ``lines``
+    that have a status-F order, pass EXISTS (another supplier on the
+    order) and pass the SQL predicate ``not_exists``. Each row counts
+    once per F row of its order, as the inner join with orders would
+    count it."""
+    s = _t(spark, sf_dir, "supplier").selectExpr("s_suppkey AS l_suppkey", "s_name")
+    return (
+        lines.filter(f"f = 0 AND n_f > 0 AND nsupp >= 2 AND ({not_exists})")
+        .join(F.broadcast(s), "l_suppkey")
+        .groupBy("s_name")
+        .agg(F.expr("sum(n_f) AS numwait"))
+    )
+
+
 @register(
     "q21_waiting_supplier",
     """
@@ -3368,38 +3419,23 @@ def q17_small_quantity_revenue(spark, sf_dir):
     GROUP BY s.s_name
     """,
     doc="TPC-H Q21 shape: EXISTS + NOT EXISTS self-correlations on the "
-    "fact table -> left-semi and left-anti self-joins on the order "
-    "key.",
+    "fact table, decorrelated into per-order window facts: lineitem "
+    "rows and status-F order keys are tagged and unioned, one "
+    "l_orderkey window counts each order's F rows, its distinct "
+    "suppliers and the suppliers with an R line, and no join but the "
+    "supplier broadcast remains.",
 )
 def q21_waiting_supplier(spark, sf_dir):
-    s = _t(spark, sf_dir, "supplier")
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
-
-    l1 = li.alias("l1")
-    l2 = li.select(
-        F.col("l_orderkey").alias("k2"), F.col("l_suppkey").alias("s2")
+    lines = _q21_lines(
+        spark,
+        sf_dir,
+        "l_returnflag",
+        "collect_set(CASE WHEN l_returnflag = 'R' THEN l_suppkey END) "
+        f"{_BY_ORDER} AS r_supps",
     )
-    l3 = li.filter(F.col("l_returnflag") == "R").select(
-        F.col("l_orderkey").alias("k3"), F.col("l_suppkey").alias("s3")
-    )
-    base = l1.join(o, F.col("l1.l_orderkey") == o.o_orderkey).join(
-        F.broadcast(s), F.col("l1.l_suppkey") == s.s_suppkey
-    )
-    with_other = base.join(
-        l2,
-        (F.col("l1.l_orderkey") == F.col("k2"))
-        & (F.col("l1.l_suppkey") != F.col("s2")),
-        "left_semi",
-    )
-    no_other_returned = with_other.join(
-        l3,
-        (F.col("l1.l_orderkey") == F.col("k3"))
-        & (F.col("l1.l_suppkey") != F.col("s3")),
-        "left_anti",
-    )
-    return no_other_returned.groupBy("s_name").agg(
-        F.count(F.lit(1)).alias("numwait")
+    # NOT EXISTS: no supplier but the row's own has an R line.
+    return _q21_numwait(
+        spark, sf_dir, lines, "size(array_remove(r_supps, l_suppkey)) = 0"
     )
 
 
@@ -6364,70 +6400,44 @@ def q19_disjunctive_revenue(spark, sf_dir):
     """,
     doc="TPC-H Q21 shape (last shipper standing in for the trimmed "
     "receipt/commit dates): double-correlated EXISTS / NOT EXISTS "
-    "decorrelated into per-order window aggregates — top-2 distinct "
-    "supplier ship maxes per order replace both correlated scans, so "
-    "lineitem is shuffled once on l_orderkey instead of three times: "
-    "the (order, supplier) group and the per-order windows share "
-    "that one exchange.",
+    "decorrelated into per-order window facts over lineitem rows and "
+    "status-F order keys tagged into one union: each supplier's ship "
+    "max, the order's top two of those and how many suppliers attain "
+    "the top give the latest ship date of any other supplier, so "
+    "lineitem is scanned once and shuffled once on l_orderkey, with no "
+    "join but the supplier broadcast.",
 )
 def q21_last_shipper(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey", "l_shipdate"
-    )
-    o = _t(spark, sf_dir, "orders").filter(
-        F.col("o_orderstatus") == "F"
-    ).select("o_orderkey")
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-
-    w = Window.partitionBy("l_orderkey")
-    # Per (order, supplier) ship max, then per order: the overall max,
-    # how many suppliers attain it, and the runner-up max. Clustering
-    # on l_orderkey first lets the (order, supplier) group and the
-    # per-order windows share that one exchange (a hash on l_orderkey
-    # satisfies both); grouped directly, the group would shuffle on
-    # (l_orderkey, l_suppkey) and the window again on l_orderkey.
-    supp_max = (
-        li.repartition("l_orderkey")
-        .groupBy("l_orderkey", "l_suppkey")
-        .agg(F.max("l_shipdate").alias("supp_max"))
-    )
-    decorated = (
-        supp_max.withColumn("nsupp", F.count("*").over(w))
-        .withColumn("max1", F.max("supp_max").over(w))
-        .withColumn(
-            "n_at_max",
-            F.sum(
-                F.when(F.col("supp_max") == F.col("max1"), 1).otherwise(0)
-            ).over(w),
+    # Each supplier's ship max, then the order's top one, then how many
+    # suppliers hold the top and the runner-up. The per-order window of
+    # _q21_lines sits lowest, so its l_orderkey exchange also clusters
+    # the (order, supplier) window above it.
+    lines = (
+        _q21_lines(spark, sf_dir, "l_shipdate")
+        .selectExpr(
+            "*",
+            "CASE WHEN l_suppkey IS NOT NULL THEN max(l_shipdate) "
+            "OVER (PARTITION BY l_orderkey, l_suppkey) END AS supp_max",
         )
-        .withColumn(
-            "max2",
-            F.max(
-                F.when(F.col("supp_max") < F.col("max1"), F.col("supp_max"))
-            ).over(w),
+        .selectExpr("*", f"max(supp_max) {_BY_ORDER} AS max1")
+        .selectExpr(
+            "*",
+            "size(collect_set(CASE WHEN supp_max = max1 THEN l_suppkey END) "
+            f"{_BY_ORDER}) AS n_at_max",
+            f"max(CASE WHEN supp_max < max1 THEN supp_max END) {_BY_ORDER} AS max2",
         )
-        .withColumn(
-            "max_other",
-            F.when(
-                (F.col("supp_max") == F.col("max1"))
-                & (F.col("n_at_max") == 1),
-                F.col("max2"),
-            ).otherwise(F.col("max1")),
-        )
-        .filter(F.col("nsupp") >= 2)
-        .select("l_orderkey", "l_suppkey", "max_other")
     )
-    qualifying = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(decorated, ["l_orderkey", "l_suppkey"])
-        .filter(F.col("l_shipdate") >= F.col("max_other"))
+    # NOT EXISTS a later line of another supplier, whose latest ship
+    # date is the runner-up when this supplier alone holds the top and
+    # the top otherwise; a NULL ship date on either side blocks nothing.
+    counts = _q21_numwait(
+        spark,
+        sf_dir,
+        lines,
+        "coalesce(l_shipdate >= CASE WHEN supp_max = max1 AND n_at_max = 1 "
+        "THEN max2 ELSE max1 END, true)",
     )
-    counts = (
-        qualifying.join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"))
-        .groupBy("s_name")
-        .agg(F.count("*").alias("numwait"))
-    )
-    return counts.orderBy(F.col("numwait").desc(), F.col("s_name").asc()).limit(25)
+    return counts.orderBy(F.desc("numwait"), "s_name").limit(25)
 
 
 @register(

@@ -466,7 +466,8 @@ def test_grid_and_ivf_verify_agree_on_ties_and_zero_vectors(spark):
     kernel: a cosine exactly on a 4 dp rounding boundary (1/32) rounds
     half away from zero in both, as DuckDB's ROUND does (np.round
     would give 0.0312 and drop the pair), and a zero vector scores
-    NaN, which no threshold keeps (DuckDB scores it -1.0)."""
+    NaN, which no threshold keeps (DuckDB scores it -1.0). The
+    driver-collect ``_blas`` twin rounds the tie the same way."""
     schema = "vec_id bigint, embedding array<double>"
     tie = spark.createDataFrame(
         [(1, [1.0, 0.0, 0.0, 0.0, 0.0]), (2, [1.0, 31.0, 5.0, 6.0, 1.0])],
@@ -491,6 +492,8 @@ def test_grid_and_ivf_verify_agree_on_ties_and_zero_vectors(spark):
         return [sorted(map(tuple, out.collect())) for out in (grid, ivf)]
 
     assert both_tiers(tie, 0.0313) == [[(1, 2, 0.0313)]] * 2
+    blas = similarity.embedding_neardup_pairs_blas(tie, 0.0313)
+    assert sorted(map(tuple, blas.collect())) == [(1, 2, 0.0313)]
     assert both_tiers(zero, -0.5) == [[(1, 2, 0.0)]] * 2
 
 

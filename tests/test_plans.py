@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from pyspark_scd_spark.plans import explain
@@ -108,14 +109,30 @@ def test_scd_merge_single_key_shuffle(spark, tmp_path):
     assert "Join" not in plan, plan
 
 
-def test_q21_single_lineitem_shuffle(spark, sf_dir):
-    """q21's (order, supplier) group and per-order windows share ONE
-    exchange on l_orderkey; none clusters on (l_orderkey, l_suppkey)."""
-    df = REGISTRY["q21_last_shipper"].builder(spark, sf_dir)
+@pytest.mark.parametrize("name", ["q21_last_shipper", "q21_waiting_supplier"])
+def test_q21_single_lineitem_shuffle(spark, sf_dir, name):
+    """Both q21 entries are one tagged union windowed on l_orderkey:
+    the only hash exchanges are that window's and the s_name group's,
+    no correlated subquery is left as a join, and the one broadcast
+    join is the supplier's."""
+    df = REGISTRY[name].builder(spark, sf_dir)
     plan = explain.physical_plan(df)
-    keys = _hash_exchange_keys(plan)
-    assert [k for k in keys if k[0] == "l_orderkey"] == [["l_orderkey"]], plan
-    assert not [k for k in keys if "l_suppkey" in k], plan
+    assert sorted(_hash_exchange_keys(plan)) == [["l_orderkey"], ["s_name"]], plan
+    for join in ("SortMergeJoin", "LeftSemi", "LeftAnti"):
+        assert join not in plan, plan
+    assert plan.count("BroadcastHashJoin") == 1, plan
+    assert re.search(r"BroadcastHashJoin \[l_suppkey#\d+L\], \[l_suppkey#", plan), plan
+
+
+@pytest.mark.parametrize("name", ["q21_last_shipper", "q21_waiting_supplier"])
+def test_q21_runs_four_jobs(spark, sf_dir, name):
+    """The l_orderkey exchange, the supplier broadcast, the s_name
+    exchange and the result: four Spark jobs per q21 run."""
+    from tests.test_employee_job import _jobs_of
+
+    df = REGISTRY[name].builder(spark, sf_dir)
+    n = _jobs_of(spark, lambda: df.write.format("noop").mode("overwrite").save())
+    assert n == 4, n
 
 
 def test_global_max_is_broadcast(spark, sf_dir):

@@ -218,3 +218,67 @@ def test_dense_oracle_matches_builder(spark, sf_dir, duck, name):
     assert s_rows, f"{name}: no rows, nothing compared"
     assert len(s_rows) == len(d_rows)
     assert s_rows == d_rows
+
+
+def _q21_tables(root) -> str:
+    """Tiny lineitem / orders / supplier parquet on q21's edges: NULL
+    ship dates (a line's own, and another supplier's only ones), a NULL
+    l_suppkey, a NULL l_returnflag, a NULL order key on both sides, a
+    status-F order listed twice, a non-F order, and a supplier missing
+    from the supplier table."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    def d(day):
+        return dt.datetime(1995, 1, day)
+
+    lineitem = [  # l_orderkey, l_suppkey, l_returnflag, l_shipdate
+        (1, 1, "N", d(5)), (1, 2, "A", None), (1, 3, "R", d(3)),
+        (2, 1, "N", d(1)), (2, 2, "N", None), (2, 2, None, None),
+        (3, 1, "R", d(7)), (3, None, "R", d(9)), (3, 2, "N", d(7)),
+        (4, 1, "N", d(2)), (4, None, "N", d(3)),
+        (5, 1, "N", d(1)), (5, 2, "N", d(2)),
+        (6, 1, "N", d(4)), (6, 2, "R", d(2)),
+        (7, 1, "N", d(1)), (7, 4, "N", d(2)),
+        (None, 1, "N", d(1)), (None, 2, "N", d(2)),
+    ]
+    orders = [(1, "F"), (2, "F"), (3, "F"), (4, "F"), (5, "O"), (6, "F"),
+              (6, "F"), (7, "F"), (None, "F")]
+    supplier = [(1, "Supplier#1"), (2, "Supplier#2"), (3, "Supplier#3")]
+    tables = {
+        "lineitem": (lineitem, [("l_orderkey", pa.int64()), ("l_suppkey", pa.int64()),
+                                ("l_returnflag", pa.string()),
+                                ("l_shipdate", pa.timestamp("us"))]),
+        "orders": (orders, [("o_orderkey", pa.int64()), ("o_orderstatus", pa.string())]),
+        "supplier": (supplier, [("s_suppkey", pa.int64()), ("s_name", pa.string())]),
+    }
+    for name, (rows, fields) in tables.items():
+        cols = list(zip(*rows))
+        pq.write_table(
+            pa.table({f: pa.array(c, t) for (f, t), c in zip(fields, cols)}),
+            f"{root}/{name}.parquet",
+        )
+    return str(root)
+
+
+@pytest.mark.parametrize("name", ["q21_last_shipper", "q21_waiting_supplier"])
+def test_q21_null_edges_match_oracle(spark, tmp_path, name):
+    """Both q21 builders return their DuckDB oracle's rows where NULLs
+    decide EXISTS / NOT EXISTS: a NULL ship date blocks nothing, a NULL
+    supplier is no other supplier, a NULL return flag is no R."""
+    import duckdb
+
+    sf_dir = _q21_tables(tmp_path)
+    q = REGISTRY[name]
+    sdf = q.builder(spark, sf_dir)
+    s_cols, s_rows = _canon(sdf.columns, [tuple(r) for r in sdf.collect()])
+    con = duckdb.connect()
+    for t in ("lineitem", "orders", "supplier"):
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    rel = con.sql(q.oracle)
+    d_cols, d_rows = _canon(list(rel.columns), rel.fetchall())
+    con.close()
+    assert s_rows, f"{name}: no rows, nothing compared"
+    assert (s_cols, s_rows) == (d_cols, d_rows)

@@ -54,12 +54,12 @@ TABLES = (
 
 def _plan_pins() -> dict:
     """entry name -> sorted list of test_plans.py test names whose
-    body (def-to-def span) mentions the entry."""
+    body (def-to-def span, decorators included) mentions the entry."""
     path = os.path.join(REPO, "tests", "test_plans.py")
     with open(path) as f:
         src = f.read()
     spans = []
-    for m in re.finditer(r"^def (test_\w+)", src, re.M):
+    for m in re.finditer(r"^(?:@.*\n)*def (test_\w+)", src, re.M):
         spans.append((m.group(1), m.start()))
     spans.append(("__end__", len(src)))
     bodies = {
