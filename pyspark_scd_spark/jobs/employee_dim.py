@@ -16,7 +16,8 @@ This version:
   checked before the swap — no gate runs a job of its own;
 - every parquet read passes the profile schema, so Spark runs no
   footer-inference job;
-- statuses recomputed with the corrected islands partitioning;
+- statuses and change dates recomputed per entity (the corrected
+  islands: each row dated by the start of its own run);
 - an incremental variant applies the day's snapshot against the
   current view only (scd_merge) — O(day) not O(history).
 """

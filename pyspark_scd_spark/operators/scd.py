@@ -11,9 +11,12 @@ scale hazards engineered out:
 - global max computed via ``agg(max)`` + broadcast cross-join instead of
   a ``partitionBy(lit(1))`` window that funnels every row through one
   task (reference jobs/create_employee_all.py:58,63,118,127);
-- gaps-and-islands partitioned by ``(key, hash, gap_grp)`` — the
-  reference partitions by ``gap_grp`` alone, which collapses islands of
-  different entities into one group and is empirically wrong on its own
+- each row's change date is the start of its run of equal fingerprints
+  within its own entity, read off the same ordered key window as the
+  status (``last`` run-opening date, ignoring NULLs): the dates of
+  per-entity ``gap_grp`` islands. The reference partitions its island
+  window by ``gap_grp`` alone, which collapses islands of different
+  entities into one group and is empirically wrong on its own
   committed output (SURVEY.md §2 #11; reference
   jobs/create_employee_all.py:138);
 - deterministic dedup tie-break (the reference's survivor among true
@@ -32,7 +35,7 @@ import functools
 import operator
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 # Status vocabulary, verbatim from the reference (README.md:34-41,
@@ -191,23 +194,57 @@ def _with_global_max(
     return df.crossJoin(F.broadcast(scalar))
 
 
+def _with_runs(
+    df: DataFrame, w: Window, time_col: str, *more: Column
+) -> DataFrame:
+    """Add ``__prev_hash`` (``lag`` of ``row_hash`` over the key window
+    ``w``) and ``__run_start``: ``time_col`` of the first row of the
+    row's run of equal fingerprints. ``more`` are further columns over
+    the same window level.
+
+    A row opens a run when it is the key's first row or its fingerprint
+    differs from the previous row's (fingerprints are never NULL, so a
+    NULL ``__prev_hash`` marks the first row); every row carries the
+    last opening time at or before it. These are the dates of the
+    reference's ``min(t)`` over per-entity ``gap_grp`` islands
+    (reference jobs/create_employee_all.py:136-150), from the one
+    ordered key window instead of three more sorts.
+    """
+    prev = F.col("__prev_hash")
+    opens = F.when(prev.isNull() | (prev != F.col("row_hash")), F.col(time_col))
+    upto_row = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    return df.select(
+        "*", F.lag("row_hash").over(w).alias("__prev_hash"), *more
+    ).withColumn("__run_start", F.last(opens, ignorenulls=True).over(upto_row))
+
+
 def with_change_status(
     df: DataFrame,
     key_cols: Sequence[str],
     time_col: str,
-    hash_col: str = "row_hash",
-    status_col: str = "change_status",
     treat_gap_as_delete: bool = False,
     global_max_source: DataFrame | None = None,
 ) -> DataFrame:
-    """Classify every snapshot row as New / Changed / No Change / Deleted.
+    """Classify every snapshot row as New / Changed / No Change / Deleted
+    (``change_status``) and date when that status took effect
+    (``changed_status_date``), from ``row_hash`` fingerprints.
 
-    Semantics per reference jobs/create_employee_all.py:111-134:
+    Semantics per reference jobs/create_employee_all.py:111-150:
     - ``New``      : the entity's earliest snapshot row (wins over all);
     - ``Deleted``  : the entity's latest row, when that row predates the
                      dataset-global latest snapshot (entity dropped out);
     - ``Changed``  : fingerprint differs from the previous snapshot row;
     - ``No Change``: fingerprint equals the previous row's.
+
+    ``changed_status_date`` is the row's own date on ``Deleted`` rows
+    and otherwise the start of its run of equal fingerprints
+    (``_with_runs``) — the reference's gaps-and-islands date, with the
+    islands kept per entity (the reference partitions its island
+    window by ``gap_grp`` alone, reference
+    jobs/create_employee_all.py:138, which merges islands across
+    entities; its own committed output shows the wrong dates, e.g.
+    emp 13's 2020-01-02 salary change dated 2020-01-01 — SURVEY.md §2
+    #11).
 
     A gap followed by reappearance compares against the pre-gap
     fingerprint — the gap itself is invisible (reference behavior,
@@ -215,17 +252,15 @@ def with_change_status(
     the row *before* a gap as ``Deleted`` and the reappearance row as
     ``New`` (an extension; off by default for parity).
 
-    Unlike the reference, the min/max windows use explicit unbounded
-    frames — the reference relied on a running max over an ascending
-    order being "accidentally correct" at the one row where it is read
-    (SURVEY.md §2 #7).
+    Everything comes from ONE ``partitionBy(key).orderBy(time)``
+    window: first and last rows are where ``lag`` / ``lead`` of the
+    (never NULL) fingerprint is NULL, so the plan sorts once per key
+    partition.
     """
-    w_key = Window.partitionBy(*key_cols)
-    w_full = w_key.orderBy(time_col).rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    w_ord = w_key.orderBy(time_col)
-
+    cols = df.columns
+    w = Window.partitionBy(*key_cols).orderBy(time_col)
+    t = F.col(time_col)
+    steps = [F.lead("row_hash").over(w).isNull().alias("__is_last")]
     if treat_gap_as_delete:
         # Rank the distinct snapshot dates (a tiny, bounded set — one row
         # per snapshot, not per data row) and broadcast the rank back so
@@ -238,101 +273,37 @@ def with_change_status(
             .withColumn("__t_rank", F.row_number().over(Window.orderBy(time_col)))
         )
         df = df.join(F.broadcast(date_rank), on=time_col, how="left")
-
-    df = (
-        df.withColumn("__min_t", F.min(time_col).over(w_full))
-        .withColumn("__max_t", F.max(time_col).over(w_full))
-        .withColumn("__prev_hash", F.lag(hash_col).over(w_ord))
-        .withColumn("__next_hash", F.lead(hash_col).over(w_ord))
-    )
+        rank = F.col("__t_rank")
+        steps += [
+            ((rank - F.lag(rank).over(w)) > 1).alias("__gap_before"),
+            ((F.lead(rank).over(w) - rank) > 1).alias("__gap_after"),
+        ]
     df = _with_global_max(
-        df, time_col, "__global_max_t", scalar_source=global_max_source
+        _with_runs(df, w, time_col, *steps),
+        time_col,
+        "__global_max_t",
+        scalar_source=global_max_source,
     )
 
-    t = F.col(time_col)
-    ended_early = F.col("__next_hash").isNull() & (
-        F.col("__max_t") != F.col("__global_max_t")
-    )
-    is_first = t == F.col("__min_t")
-    changed = F.col("__prev_hash") != F.col(hash_col)
-
+    is_new = F.col("__prev_hash").isNull()
+    deleted = F.col("__is_last") & (t != F.col("__global_max_t"))
     if treat_gap_as_delete:
-        gap_before = (F.col("__t_rank") - F.lag("__t_rank").over(w_ord)) > 1
-        gap_after = (F.lead("__t_rank").over(w_ord) - F.col("__t_rank")) > 1
-        status = (
-            F.when(is_first, F.lit(STATUS_NEW))
-            .when(gap_before, F.lit(STATUS_NEW))
-            .when(gap_after | ended_early, F.lit(STATUS_DELETED))
-            .when(changed, F.lit(STATUS_CHANGED))
-            .otherwise(F.lit(STATUS_NO_CHANGE))
-        )
-        return df.withColumn(status_col, status).drop("__t_rank")
-
+        is_new = is_new | F.col("__gap_before")
+        deleted = F.col("__gap_after") | deleted
+    deleted = ~is_new & deleted
     status = (
-        F.when(is_first, F.lit(STATUS_NEW))
-        .when(ended_early, F.lit(STATUS_DELETED))
-        .when(changed, F.lit(STATUS_CHANGED))
+        F.when(is_new, F.lit(STATUS_NEW))
+        .when(deleted, F.lit(STATUS_DELETED))
+        .when(F.col("__prev_hash") != F.col("row_hash"), F.lit(STATUS_CHANGED))
         .otherwise(F.lit(STATUS_NO_CHANGE))
     )
-    return df.withColumn(status_col, status)
-
-
-def with_change_date(
-    df: DataFrame,
-    key_cols: Sequence[str],
-    time_col: str,
-    hash_col: str = "row_hash",
-    status_col: str = "change_status",
-    out_col: str = "changed_status_date",
-) -> DataFrame:
-    """Gaps-and-islands: date each row's status took effect.
-
-    ``gap_grp = row_number() over (key ↓t) − row_number() over
-    (key, hash ↓t)`` identifies contiguous runs of the same fingerprint;
-    ``out_col`` = the run's first snapshot date, except ``Deleted`` rows
-    which carry their own date (reference
-    jobs/create_employee_all.py:136-150).
-
-    The island-min window partitions by ``(key, hash, gap_grp)`` — the
-    *corrected* form. The reference partitions by ``gap_grp`` alone
-    (reference jobs/create_employee_all.py:138), merging islands across
-    entities; its own committed output shows the wrong dates (e.g. emp
-    13's 2020-01-02 salary change dated 2020-01-01 — SURVEY.md §2 #11).
-    """
-    w1 = Window.partitionBy(*key_cols).orderBy(F.col(time_col).desc())
-    w2 = Window.partitionBy(*key_cols, hash_col).orderBy(
-        F.col(time_col).desc()
+    return df.select(
+        *cols,
+        status.alias("change_status"),
+        F.when(deleted, t)
+        .otherwise(F.col("__run_start"))
+        .alias("changed_status_date"),
     )
-    df = df.withColumn(
-        "__gap_grp", F.row_number().over(w1) - F.row_number().over(w2)
-    )
-    w_island = Window.partitionBy(*key_cols, hash_col, "__gap_grp")
-    island_min = F.min(time_col).over(w_island)
-    return df.withColumn(
-        out_col,
-        F.when(F.col(status_col) == STATUS_DELETED, F.col(time_col)).otherwise(
-            island_min
-        ),
-    )
-
-
-_HELPER_COLS = (
-    "__min_t",
-    "__max_t",
-    "__prev_hash",
-    "__next_hash",
-    "__global_max_t",
-    "__gap_grp",
-    "row_hash",
-)
-
-
-def drop_helpers(df: DataFrame, extra: Sequence[str] = ()) -> DataFrame:
-    """Drop internal helper columns (reference
-    jobs/create_employee_all.py:120,140,150). Catalyst column-pruning
-    means they were never materialized downstream anyway."""
-    present = [c for c in (*_HELPER_COLS, *extra) if c in df.columns]
-    return df.drop(*present)
 
 
 def current_view(
@@ -381,7 +352,8 @@ def scd_apply(
 ) -> DataFrame:
     """The full ``employee_all`` pipeline as one transform chain
     (reference jobs/create_employee_all.py:236-240): dedup → hash →
-    status → change date → drop helpers.
+    status and change date → the input columns plus ``change_status``
+    and ``changed_status_date``.
 
     Dedup keeps one row per (key, ``time_col``): the row whose
     ``tiebreak_cols`` tuple sorts highest (descending, NULL lowest).
@@ -392,10 +364,10 @@ def scd_apply(
     Exact re-drops (reference README.md:87) are the common case and
     collapse to their single distinct row.
 
-    Plan shape: ONE hash exchange on ``key_cols`` feeds the dedup, the
-    status windows, and the islands windows (partition-aligned dedup +
-    prefix-compatible sorts); the global-max scalar comes from the raw
-    pre-dedup scan so its branch is scan+agg only.
+    Plan shape: ONE hash exchange on ``key_cols`` and ONE sort feed the
+    dedup and the status / run-start windows (partition-aligned dedup
+    + a prefix-compatible key window); the global-max scalar comes
+    from the raw pre-dedup scan so its branch is scan+agg only.
     """
     df = snapshot_dedup_aligned(
         snapshots, key_cols, time_col, tiebreak_cols or hash_cols
@@ -408,21 +380,20 @@ def scd_apply(
         treat_gap_as_delete=treat_gap_as_delete,
         global_max_source=snapshots.select(time_col),
     )
-    df = with_change_date(df, key_cols, time_col)
-    return drop_helpers(df)
+    return df.select(
+        *snapshots.columns, "change_status", "changed_status_date"
+    )
 
 
 def scd_bootstrap(
     first_snapshot: DataFrame,
     key_cols: Sequence[str],
     time_col: str,
-    status_col: str = "change_status",
-    date_col: str = "changed_status_date",
 ) -> DataFrame:
     """Initial current view from the first snapshot: everything is New."""
     return first_snapshot.withColumn(
-        status_col, F.lit(STATUS_NEW)
-    ).withColumn(date_col, F.col(time_col))
+        "change_status", F.lit(STATUS_NEW)
+    ).withColumn("changed_status_date", F.col(time_col))
 
 
 def scd_merge(
@@ -431,8 +402,6 @@ def scd_merge(
     key_cols: Sequence[str],
     time_col: str,
     hash_cols: Sequence[str],
-    status_col: str = "change_status",
-    date_col: str = "changed_status_date",
 ) -> DataFrame:
     """Incremental MERGE-style upsert: one new snapshot against the
     current view only — the 100 TB path.
@@ -453,14 +422,14 @@ def scd_merge(
     single hash exchange on ``key_cols`` also clusters the output for
     any key-partitioned consumer (the write gate's key window).
 
-    Returns the NEW current view with ``status_col``/``date_col``
-    updated; append it to the history table to extend ``employee_all``.
-    A key listed twice in the snapshot yields two rows, as a MERGE
-    would. Known divergence vs the full windowed recompute: an entity
-    that disappears and later reappears with its pre-gap fingerprint
-    gets its change date from the merge state, not from the pre-gap
-    island (the window form treats the gap as invisible — SURVEY.md
-    §2 #10).
+    Returns the NEW current view with ``change_status`` /
+    ``changed_status_date`` updated; append it to the history table to
+    extend ``employee_all``. A key listed twice in the snapshot yields
+    two rows, as a MERGE would. Known divergence vs the full windowed
+    recompute: an entity that disappears and later reappears with its
+    pre-gap fingerprint gets its change date from the merge state, not
+    from the start of its pre-gap run (the window form treats the gap
+    as invisible — SURVEY.md §2 #10).
     """
     keys = list(key_cols)
     cols = [*keys, time_col]
@@ -473,13 +442,15 @@ def scd_merge(
         *cols,
         "__new_hash",
         F.lit(None).cast("string").alias("__cur_hash"),
-        F.lit(None).cast(current.schema[date_col].dataType).alias("__dt_c"),
+        F.lit(None)
+        .cast(current.schema["changed_status_date"].dataType)
+        .alias("__dt_c"),
     )
     cur = with_row_hash(current, hash_cols, out_col="__cur_hash").select(
         *cols,
         F.lit(None).cast("string").alias("__new_hash"),
         "__cur_hash",
-        F.col(date_col).alias("__dt_c"),
+        F.col("changed_status_date").alias("__dt_c"),
     )
     # A NULL key matches nothing (as in an equi-join), so its rows take
     # no aggregate from the rows they share a window partition with.
@@ -511,8 +482,8 @@ def scd_merge(
     ).otherwise(F.col("__dt_c"))
     return u.filter(~is_gone | (F.col("__n_new") == 0)).select(
         *cols,
-        status.alias(status_col),
-        change_date.alias(date_col),
+        status.alias("change_status"),
+        change_date.alias("changed_status_date"),
     )
 
 
@@ -521,8 +492,6 @@ def scd_merge_tree(
     key_cols: Sequence[str],
     time_col: str,
     hash_cols: Sequence[str],
-    status_col: str = "change_status",
-    date_col: str = "changed_status_date",
 ) -> DataFrame:
     """Tree-fold (parallel-prefix) form of the incremental MERGE fold:
     the same end state as folding ``scd_merge`` day-by-day, in
@@ -568,8 +537,8 @@ def scd_merge_tree(
             *keys,
             time_col,
             *attr_cols,
-            F.lit(STATUS_NEW).alias(status_col),
-            F.col(time_col).alias(date_col),
+            F.lit(STATUS_NEW).alias("change_status"),
+            F.col(time_col).alias("changed_status_date"),
         ).limit(0)
     t_type = snapshots.schema[time_col].dataType
     tmax = times[-1]
@@ -656,8 +625,8 @@ def scd_merge_tree(
         *keys,
         s["ly"].alias(time_col),
         *[s["attrs"][a].alias(a) for a in attr_cols],
-        status.alias(status_col),
-        change_date.alias(date_col),
+        status.alias("change_status"),
+        change_date.alias("changed_status_date"),
     )
 
 
@@ -707,35 +676,28 @@ def type2_intervals(
     key_cols: Sequence[str],
     time_col: str,
     state_cols: Sequence[str],
-    hash_col: str = "row_hash",
 ) -> DataFrame:
     """Collapse a snapshot history into SCD Type-2 effective-dated rows.
 
     The reference's ``employee_all`` keeps one row per (snapshot, key)
     with a change_status; a Type-2 dimension keeps one row per
-    *contiguous run* of identical state: ``valid_from`` (first snapshot
-    of the run), ``valid_to`` (next run's valid_from, exclusive; NULL on
-    the open run), ``last_seen``, ``n_snaps``, ``is_current``.
+    *contiguous run* of identical state (equal ``row_hash``):
+    ``valid_from`` (first snapshot of the run), ``valid_to`` (next
+    run's valid_from, exclusive; NULL on the open run), ``last_seen``,
+    ``n_snaps``, ``is_current``.
 
-    Islands are found with the single-window form: change flag =
-    "fingerprint differs from the previous row" (null-safe), island id
-    = running sum of the flag. Every window here partitions by the
-    entity key only, so the whole pass costs ONE exchange on the key
-    (the two-row_number gap-group trick needs a second (key, hash)
-    exchange); the groupBy that follows re-uses tiny per-island rows.
-    Reference semantics source: jobs/create_employee_all.py:136-150.
+    Runs are the ones ``with_change_status`` dates: each row's run
+    start (``_with_runs``) is its ``valid_from`` and the group id. The
+    windows partition by the entity key only, so the whole pass costs
+    ONE exchange on the key (the two-row_number gap-group trick needs
+    a second (key, hash) exchange); the groupBy that follows re-uses
+    tiny per-run rows. Reference semantics source:
+    jobs/create_employee_all.py:136-150.
     """
     keys = list(key_cols)
     w = Window.partitionBy(*keys).orderBy(time_col)
-    wrun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    changed = (
-        ~F.lag(hash_col).over(w).eqNullSafe(F.col(hash_col))
-    ).cast("int")
-    runs = df.withColumn("__chg", changed).withColumn(
-        "__island", F.sum("__chg").over(wrun)
-    )
-    g = runs.groupBy(*keys, "__island", *state_cols).agg(
-        F.min(time_col).alias("valid_from"),
+    valid_from = F.col("__run_start").alias("valid_from")
+    g = _with_runs(df, w, time_col).groupBy(*keys, valid_from, *state_cols).agg(
         F.max(time_col).alias("last_seen"),
         F.count(F.lit(1)).cast("long").alias("n_snaps"),
     )

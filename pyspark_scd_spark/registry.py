@@ -233,9 +233,9 @@ FROM g
     "scd_employee_all",
     _SCD_FULL_SQL,
     doc="The full SCD history pipeline — dedup → hash → 4-way status "
-    "CASE → corrected gaps-and-islands change date (reference "
-    "jobs/create_employee_all.py:111-150; islands partitioning fixed "
-    "per SURVEY.md §2 #11).",
+    "CASE and run-start change date from one ordered window per key "
+    "(reference jobs/create_employee_all.py:111-150; the dates of "
+    "per-entity gaps-and-islands, fixing SURVEY.md §2 #11).",
 )
 def q_scd_employee_all(spark, sf_dir):
     # Raw (pre-dedup) snapshots go straight into scd_apply: the
@@ -2236,8 +2236,10 @@ def q13_customer_distribution(spark, sf_dir):
         SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
     GROUP BY p_brand, p_type
     """,
-    doc="TPC-H Q16 shape: NOT IN subquery -> left-anti join (null-safe "
-    "here because s_suppkey is never null) + distinct aggregation.",
+    doc="TPC-H Q16 shape: NOT IN subquery -> null-aware left-anti join "
+    "(a NULL l_suppkey, or a NULL in the excluded set, drops the row "
+    "unless the excluded set is empty, as SQL's NOT IN does) + "
+    "distinct aggregation.",
 )
 def q16_notin_distinct(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
@@ -2245,9 +2247,10 @@ def q16_notin_distinct(spark, sf_dir):
     bad_supp = _t(spark, sf_dir, "supplier").filter(
         F.col("s_acctbal") < 0
     ).select("s_suppkey")
-    filtered = li.join(
-        bad_supp, li.l_suppkey == bad_supp.s_suppkey, "left_anti"
-    )
+    # `a = b OR isnull(a = b)` is NOT IN's anti-join condition; Catalyst
+    # plans it as its single-column null-aware anti join.
+    eq = li.l_suppkey == bad_supp.s_suppkey
+    filtered = li.join(bad_supp, eq | eq.isNull(), "left_anti")
     return (
         filtered.join(F.broadcast(p), filtered.l_partkey == p.p_partkey)
         .groupBy("p_brand", "p_type")
@@ -5442,8 +5445,9 @@ def q_table_checksum_audit(spark, sf_dir):
     "+ is_current (operators/scd.py type2_intervals). The reference "
     "stops at per-snapshot change_status rows (jobs/"
     "create_employee_all.py:136-150); this is the classic "
-    "interval-form output built on the same islands, via the "
-    "single-exchange lag-flag + running-sum form. At 100 TB the "
+    "interval-form output built on the same islands, grouped on the "
+    "run start that dates employee_all's rows (one key window, one "
+    "exchange). At 100 TB the "
     "output is |state changes|, orders of magnitude smaller than "
     "the snapshot history it summarizes.",
 )

@@ -38,6 +38,19 @@ _DEFAULTS = {
 }
 
 
+_DRIVER_MEM_CAP_MB = 16 * 1024
+
+
+def _driver_memory(phys_bytes: int | None = None) -> str:
+    """Default ``spark.driver.memory``: a quarter of physical RAM, capped
+    at 16g. The local-mode driver JVM is the whole Spark process, so a
+    heap sized to all of RAM lets one long run (a full test suite)
+    grow until the kernel OOM-kills it."""
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(phys_bytes // 4 // 1024**2, _DRIVER_MEM_CAP_MB)}m"
+
+
 def get_spark(
     app_name: str = "pyspark_scd_spark",
     master: str | None = None,
@@ -61,7 +74,9 @@ def get_spark(
     )
     conf = dict(_DEFAULTS)
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions or cpus)
-    conf["spark.driver.memory"] = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+    conf["spark.driver.memory"] = os.environ.get(
+        "SPARK_GRAFT_DRIVER_MEM"
+    ) or _driver_memory()
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():

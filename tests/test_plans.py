@@ -37,8 +37,9 @@ def test_no_single_partition_window_in_scd(spark, sf_dir):
 
 def test_scd_single_key_shuffle(spark, sf_dir):
     """The whole SCD window pipeline should reuse ONE hash exchange on
-    the entity key (partition-aligned dedup); the only other exchange
-    is the 1-row global-max scalar branch feeding the broadcast."""
+    the entity key (partition-aligned dedup) and ONE sort (every window
+    orders by the key and time); the only other exchange is the 1-row
+    global-max scalar branch feeding the broadcast."""
     df = REGISTRY["scd_employee_all"].builder(spark, sf_dir)
     plan = explain.physical_plan(df)
     data_exchanges = [
@@ -47,6 +48,13 @@ def test_scd_single_key_shuffle(spark, sf_dir):
     ]
     assert len(data_exchanges) == 1, plan
     assert explain.has_broadcast_join(df), plan
+    assert _sorts(plan) == 1, plan
+
+
+def _sorts(plan: str) -> int:
+    """Sort operators in a physical plan (not SortMergeJoin or
+    SortAggregate)."""
+    return len(re.findall(r"\bSort \[", plan))
 
 
 def _hash_exchange_keys(plan: str) -> list[list[str]]:
@@ -59,9 +67,10 @@ def _hash_exchange_keys(plan: str) -> list[list[str]]:
 
 def test_employee_all_single_key_shuffle(spark):
     """The job's employee_all (scd_apply with no tiebreak) dedups
-    inside the per-key windows: one hash(employee_number) exchange
-    serves the whole pipeline, and none clusters on the snapshot date
-    (a dedup on (key, date) would add that second shuffle)."""
+    inside the per-key windows: one hash(employee_number) exchange and
+    one sort serve the whole pipeline, and none clusters on the
+    snapshot date (a dedup on (key, date) would add that second
+    shuffle)."""
     from pyspark_scd_spark.jobs import employee_dim
     from pyspark_scd_spark.operators import scd
     from tests.emp_fixture import emp_snapshots
@@ -76,6 +85,7 @@ def test_employee_all_single_key_shuffle(spark):
     keys = _hash_exchange_keys(plan)
     assert keys == [["employee_number"]], plan
     assert "snapshot_date" not in str(keys), plan
+    assert _sorts(plan) == 1, plan
 
 
 def test_scd_merge_single_key_shuffle(spark, tmp_path):

@@ -229,7 +229,6 @@ def _q21_tables(root) -> str:
     import datetime as dt
 
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
     def d(day):
         return dt.datetime(1995, 1, day)
@@ -254,6 +253,15 @@ def _q21_tables(root) -> str:
         "orders": (orders, [("o_orderkey", pa.int64()), ("o_orderstatus", pa.string())]),
         "supplier": (supplier, [("s_suppkey", pa.int64()), ("s_name", pa.string())]),
     }
+    return _write_tables(root, tables)
+
+
+def _write_tables(root, tables) -> str:
+    """Write ``{name: (rows, [(field, arrow type), ...])}`` as
+    ``root/<name>.parquet``; returns ``root`` as an sf_dir."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     for name, (rows, fields) in tables.items():
         cols = list(zip(*rows))
         pq.write_table(
@@ -263,22 +271,47 @@ def _q21_tables(root) -> str:
     return str(root)
 
 
-@pytest.mark.parametrize("name", ["q21_last_shipper", "q21_waiting_supplier"])
-def test_q21_null_edges_match_oracle(spark, tmp_path, name):
-    """Both q21 builders return their DuckDB oracle's rows where NULLs
-    decide EXISTS / NOT EXISTS: a NULL ship date blocks nothing, a NULL
-    supplier is no other supplier, a NULL return flag is no R."""
+def _assert_matches_oracle(spark, name, sf_dir):
+    """The builder's rows on ``sf_dir`` equal its DuckDB oracle's,
+    compared as tools/check_oracle.py does."""
     import duckdb
 
-    sf_dir = _q21_tables(tmp_path)
     q = REGISTRY[name]
     sdf = q.builder(spark, sf_dir)
     s_cols, s_rows = _canon(sdf.columns, [tuple(r) for r in sdf.collect()])
     con = duckdb.connect()
-    for t in ("lineitem", "orders", "supplier"):
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    for f in sorted(os.listdir(sf_dir)):
+        t = f.removesuffix(".parquet")
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{f}'")
     rel = con.sql(q.oracle)
     d_cols, d_rows = _canon(list(rel.columns), rel.fetchall())
     con.close()
     assert s_rows, f"{name}: no rows, nothing compared"
     assert (s_cols, s_rows) == (d_cols, d_rows)
+
+
+@pytest.mark.parametrize("name", ["q21_last_shipper", "q21_waiting_supplier"])
+def test_q21_null_edges_match_oracle(spark, tmp_path, name):
+    """Both q21 builders return their DuckDB oracle's rows where NULLs
+    decide EXISTS / NOT EXISTS: a NULL ship date blocks nothing, a NULL
+    supplier is no other supplier, a NULL return flag is no R."""
+    _assert_matches_oracle(spark, name, _q21_tables(tmp_path))
+
+
+@pytest.mark.parametrize("excluded", [True, False], ids=["excluded", "none_excluded"])
+def test_q16_null_supplier_matches_oracle(spark, tmp_path, excluded):
+    """q16's NOT IN on a NULL l_suppkey: the line drops out while the
+    excluded-supplier set is non-empty, and stays (counting no
+    supplier) when it is empty."""
+    import pyarrow as pa
+
+    lineitem = [(1, None), (2, 1), (2, 2)]  # l_partkey, l_suppkey
+    part = [(1, "Brand#2", "A"), (2, "Brand#3", "B")]
+    supplier = [(1, 100.0), (2, -5.0 if excluded else 5.0)]
+    sf_dir = _write_tables(tmp_path, {
+        "lineitem": (lineitem, [("l_partkey", pa.int64()), ("l_suppkey", pa.int64())]),
+        "part": (part, [("p_partkey", pa.int64()), ("p_brand", pa.string()),
+                        ("p_type", pa.string())]),
+        "supplier": (supplier, [("s_suppkey", pa.int64()), ("s_acctbal", pa.float64())]),
+    })
+    _assert_matches_oracle(spark, "q16_notin_distinct", sf_dir)
