@@ -194,8 +194,33 @@ def _with_global_max(
     return df.crossJoin(F.broadcast(scalar))
 
 
+def _with_date_rank(df: DataFrame, time_col: str) -> DataFrame:
+    """Add ``__t_rank`` (the rank of the row's ``time_col`` among the
+    distinct snapshot times, from 1) and ``__t_count`` (how many
+    distinct times there are): a jump of more than one rank between an
+    entity's consecutive rows marks a gap, and ``__t_rank =
+    __t_count`` marks the latest snapshot.
+
+    The rank window is global but runs over one row per snapshot, not
+    per data row, and its result is broadcast back, so it is not a
+    scale hazard; no time value makes a round trip through the driver.
+    """
+    w = Window.orderBy(time_col)
+    every = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    ranks = df.select(time_col).distinct().select(
+        time_col,
+        F.row_number().over(w).alias("__t_rank"),
+        F.count(F.lit(1)).over(every).alias("__t_count"),
+    )
+    return df.join(F.broadcast(ranks), on=time_col, how="left")
+
+
 def _with_runs(
-    df: DataFrame, w: Window, time_col: str, *more: Column
+    df: DataFrame,
+    w: Window,
+    time_col: str,
+    *more: Column,
+    gaps_open_at: Column | None = None,
 ) -> DataFrame:
     """Add ``__prev_hash`` (``lag`` of ``row_hash`` over the key window
     ``w``) and ``__run_start``: ``time_col`` of the first row of the
@@ -209,9 +234,19 @@ def _with_runs(
     reference's ``min(t)`` over per-entity ``gap_grp`` islands
     (reference jobs/create_employee_all.py:136-150), from the one
     ordered key window instead of three more sorts.
+
+    Without ``gaps_open_at`` a gap is invisible. With it, a row after a
+    gap (``__gap_before``: the key missed a snapshot, by
+    ``_with_date_rank``) also opens a run, dated ``gaps_open_at``
+    unless its fingerprint changed.
     """
     prev = F.col("__prev_hash")
     opens = F.when(prev.isNull() | (prev != F.col("row_hash")), F.col(time_col))
+    if gaps_open_at is not None:
+        df = _with_date_rank(df, time_col)
+        rank = F.col("__t_rank")
+        more += (((rank - F.lag(rank).over(w)) > 1).alias("__gap_before"),)
+        opens = F.coalesce(opens, F.when(F.col("__gap_before"), gaps_open_at))
     upto_row = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     return df.select(
         "*", F.lag("row_hash").over(w).alias("__prev_hash"), *more
@@ -250,7 +285,9 @@ def with_change_status(
     fingerprint — the gap itself is invisible (reference behavior,
     SURVEY.md §2 #10). ``treat_gap_as_delete=True`` additionally marks
     the row *before* a gap as ``Deleted`` and the reappearance row as
-    ``New`` (an extension; off by default for parity).
+    ``New``, opening a run dated by the reappearance (an extension; off
+    by default for parity). Gaps and the latest snapshot are then read
+    off snapshot ranks (``_with_date_rank``) instead of the global max.
 
     Everything comes from ONE ``partitionBy(key).orderBy(time)``
     window: first and last rows are where ``lag`` / ``lead`` of the
@@ -260,33 +297,25 @@ def with_change_status(
     cols = df.columns
     w = Window.partitionBy(*key_cols).orderBy(time_col)
     t = F.col(time_col)
-    steps = [F.lead("row_hash").over(w).isNull().alias("__is_last")]
+    is_last = F.lead("row_hash").over(w).isNull().alias("__is_last")
     if treat_gap_as_delete:
-        # Rank the distinct snapshot dates (a tiny, bounded set — one row
-        # per snapshot, not per data row) and broadcast the rank back so
-        # a jump of >1 rank between consecutive observations of an entity
-        # marks a gap. The rank window is global but runs over #snapshots
-        # rows only, so it is not a scale hazard.
-        date_rank = (
-            df.select(time_col)
-            .distinct()
-            .withColumn("__t_rank", F.row_number().over(Window.orderBy(time_col)))
-        )
-        df = df.join(F.broadcast(date_rank), on=time_col, how="left")
         rank = F.col("__t_rank")
-        steps += [
-            ((rank - F.lag(rank).over(w)) > 1).alias("__gap_before"),
-            ((F.lead(rank).over(w) - rank) > 1).alias("__gap_after"),
-        ]
-    df = _with_global_max(
-        _with_runs(df, w, time_col, *steps),
-        time_col,
-        "__global_max_t",
-        scalar_source=global_max_source,
-    )
+        gap_after = (F.lead(rank).over(w) - rank) > 1
+        df = _with_runs(
+            df, w, time_col, is_last, gap_after.alias("__gap_after"), gaps_open_at=t
+        )
+        at_latest = rank == F.col("__t_count")
+    else:
+        df = _with_global_max(
+            _with_runs(df, w, time_col, is_last),
+            time_col,
+            "__global_max_t",
+            scalar_source=global_max_source,
+        )
+        at_latest = t == F.col("__global_max_t")
 
     is_new = F.col("__prev_hash").isNull()
-    deleted = F.col("__is_last") & (t != F.col("__global_max_t"))
+    deleted = F.col("__is_last") & ~at_latest
     if treat_gap_as_delete:
         is_new = is_new | F.col("__gap_before")
         deleted = F.col("__gap_after") | deleted
@@ -425,11 +454,12 @@ def scd_merge(
     Returns the NEW current view with ``change_status`` /
     ``changed_status_date`` updated; append it to the history table to
     extend ``employee_all``. A key listed twice in the snapshot yields
-    two rows, as a MERGE would. Known divergence vs the full windowed
-    recompute: an entity that disappears and later reappears with its
-    pre-gap fingerprint gets its change date from the merge state, not
-    from the start of its pre-gap run (the window form treats the gap
-    as invisible — SURVEY.md §2 #10).
+    two rows, as a MERGE would. Folded over every snapshot it ends at
+    ``scd_merge_tree``'s state, which differs from the full windowed
+    recompute in how a gap is dated alone: a key that disappears and
+    reappears with its pre-gap fingerprint keeps the date of its last
+    appearance before the gap (the date of its Deleted row), where the
+    window form sees no gap and keeps its run start (SURVEY.md §2 #10).
     """
     keys = list(key_cols)
     cols = [*keys, time_col]
@@ -493,138 +523,45 @@ def scd_merge_tree(
     time_col: str,
     hash_cols: Sequence[str],
 ) -> DataFrame:
-    """Tree-fold (parallel-prefix) form of the incremental MERGE fold:
-    the same end state as folding ``scd_merge`` day-by-day, in
-    ``ceil(log2 days)`` passes instead of ``days`` sequential merges.
+    """The end state of folding ``scd_merge`` snapshot by snapshot, in
+    closed form on one ordered key window: one row per key.
 
-    Input: ONE table with one row per (key, snapshot time) — i.e. the
-    deduped union of all snapshots — where the distinct snapshot
-    times form the global snapshot sequence (gaps in a KEY's
-    appearances are meaningful; gaps in the global sequence are not
-    allowed, same contract as the closed-form oracle).
+    Input: one row per (key, snapshot time), whose distinct times are
+    the global snapshot sequence (a KEY's gaps are meaningful).
 
-    Why it composes: the per-key fold state is summarizable per
-    contiguous block of snapshots as (first appearance year+hash,
-    previous/last appearance year+hash, last RESET strictly after
-    the block's first appearance, last attrs). Two adjacent blocks
-    combine with pure expressions — the boundary reset is the later
-    block's first year on a fingerprint change, the earlier block's
-    last year on an appearance gap (block-index arithmetic, so any
-    orderable time type works), else nothing; the combined last
-    reset is ``coalesce(later.internal, boundary, earlier.internal)``.
-    Status and change date fall out of the root block exactly as the
-    sequential fold computes them (deleted keys keep their last
-    appearance's attrs/date; gap + same fingerprint = No Change with
-    the pre-gap date; gap + new fingerprint = Changed at reappearance).
-
-    Scale: each pass is ONE hash exchange on (key, pair) over one
-    summary row per live (key, block) — the day-by-day fold is a
-    serial chain of merges whose length is the snapshot
-    count, which is exactly what dominates its wall clock at x10
-    (NOTES round-7 flag). Driver state: the sorted distinct snapshot
-    times (bounded — days, not rows).
+    Each key keeps its last row: ``Deleted`` at its own time when that
+    row predates the latest snapshot, else New / Changed / No Change
+    against the previous row, dated by its run start (``_with_runs``).
+    Besides a fingerprint change, a gap (snapshots the key missed)
+    opens a run, dated by the key's previous appearance — the date
+    ``scd_merge`` stamps on the Deleted row, which a reappearance with
+    the same fingerprint keeps. Gaps and the latest snapshot are read
+    off ``_with_date_rank``, so nothing goes through the driver.
     """
     keys = list(key_cols)
-    attr_cols = [
-        c for c in snapshots.columns if c not in (*keys, time_col)
-    ]
-    hashed = with_row_hash(snapshots, hash_cols, out_col="__h")
-    times = sorted(
-        r[0] for r in snapshots.select(time_col).distinct().collect()
+    cols = [*keys, time_col]
+    cols += [c for c in snapshots.columns if c not in cols]
+    w = Window.partitionBy(*keys).orderBy(time_col)
+    df = _with_runs(
+        with_row_hash(snapshots, hash_cols),
+        w,
+        time_col,
+        F.lead("row_hash").over(w).isNull().alias("__is_last"),
+        F.lag(time_col).over(w).alias("__prev_t"),
+        gaps_open_at=F.col("__prev_t"),
     )
-    if not times:
-        return snapshots.select(
-            *keys,
-            time_col,
-            *attr_cols,
-            F.lit(STATUS_NEW).alias("change_status"),
-            F.col(time_col).alias("changed_status_date"),
-        ).limit(0)
-    t_type = snapshots.schema[time_col].dataType
-    tmax = times[-1]
-    blk_map = F.create_map(
-        *[
-            x
-            for t, i in ((t, i) for i, t in enumerate(times))
-            for x in (F.lit(t), F.lit(i))
-        ]
-    )
-    state = hashed.select(
-        *keys,
-        blk_map[F.col(time_col)].cast("long").alias("__blk"),
-        F.struct(
-            F.lit(1).cast("long").alias("n"),
-            F.col(time_col).alias("fy"),
-            F.col("__h").alias("fh"),
-            blk_map[F.col(time_col)].cast("long").alias("fb"),
-            F.lit(None).cast(t_type).alias("py"),
-            F.lit(None).cast("string").alias("ph"),
-            F.col(time_col).alias("ly"),
-            F.col("__h").alias("lh"),
-            blk_map[F.col(time_col)].cast("long").alias("lb"),
-            F.lit(None).cast(t_type).alias("dtx"),
-            F.struct(*attr_cols).alias("attrs"),
-        ).alias("__s"),
-    )
-    n_blocks = len(times)
-    while n_blocks > 1:
-        paired = state.select(
-            *keys,
-            F.floor(F.col("__blk") / 2).alias("__pair"),
-            F.when(F.col("__blk") % 2 == 0, F.col("__s")).alias("__s0"),
-            F.when(F.col("__blk") % 2 == 1, F.col("__s")).alias("__s1"),
-        ).withColumnRenamed("__pair", "__blk")
-        g = paired.groupBy(*keys, "__blk").agg(
-            F.first("__s0", ignorenulls=True).alias("__s0"),
-            F.first("__s1", ignorenulls=True).alias("__s1"),
-        )
-        s0, s1 = F.col("__s0"), F.col("__s1")
-        boundary_reset = F.when(
-            s1["fh"] != s0["lh"], s1["fy"]
-        ).when(s1["fb"] > s0["lb"] + 1, s0["ly"])
-        combined = F.struct(
-            (s0["n"] + s1["n"]).alias("n"),
-            s0["fy"].alias("fy"),
-            s0["fh"].alias("fh"),
-            s0["fb"].alias("fb"),
-            F.when(s1["n"] >= 2, s1["py"])
-            .otherwise(s0["ly"])
-            .alias("py"),
-            F.when(s1["n"] >= 2, s1["ph"])
-            .otherwise(s0["lh"])
-            .alias("ph"),
-            s1["ly"].alias("ly"),
-            s1["lh"].alias("lh"),
-            s1["lb"].alias("lb"),
-            F.coalesce(s1["dtx"], boundary_reset, s0["dtx"]).alias(
-                "dtx"
-            ),
-            s1["attrs"].alias("attrs"),
-        )
-        state = g.select(
-            *keys,
-            "__blk",
-            F.when(s0.isNull(), s1)
-            .when(s1.isNull(), s0)
-            .otherwise(combined)
-            .alias("__s"),
-        )
-        n_blocks = -(-n_blocks // 2)
-    s = F.col("__s")
-    at_max = s["ly"] == F.lit(tmax)
+    at_latest = F.col("__t_rank") == F.col("__t_count")
     status = (
-        F.when(at_max & s["py"].isNull(), F.lit(STATUS_NEW))
-        .when(at_max & (s["ph"] != s["lh"]), F.lit(STATUS_CHANGED))
-        .when(at_max, F.lit(STATUS_NO_CHANGE))
-        .otherwise(F.lit(STATUS_DELETED))
+        F.when(~at_latest, F.lit(STATUS_DELETED))
+        .when(F.col("__prev_hash").isNull(), F.lit(STATUS_NEW))
+        .when(F.col("__prev_hash") != F.col("row_hash"), F.lit(STATUS_CHANGED))
+        .otherwise(F.lit(STATUS_NO_CHANGE))
     )
-    change_date = F.when(
-        at_max, F.coalesce(s["dtx"], s["fy"])
-    ).otherwise(s["ly"])
-    return state.select(
-        *keys,
-        s["ly"].alias(time_col),
-        *[s["attrs"][a].alias(a) for a in attr_cols],
+    change_date = F.when(at_latest, F.col("__run_start")).otherwise(
+        F.col(time_col)
+    )
+    return df.filter(F.col("__is_last")).select(
+        *cols,
         status.alias("change_status"),
         change_date.alias("changed_status_date"),
     )

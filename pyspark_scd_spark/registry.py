@@ -89,8 +89,8 @@ def order_snapshots(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderpriority",
         "o_orderkey",
     )
-    return scd.snapshot_dedup(
-        snaps, ["key", "snap_date"], tiebreak_cols=["o_orderkey"]
+    return scd.snapshot_dedup_aligned(
+        snaps, ["key"], "snap_date", tiebreak_cols=["o_orderkey"]
     ).drop("o_orderkey")
 
 
@@ -356,19 +356,21 @@ def q_scd_employee_current(spark, sf_dir):
     """,
     doc="MERGE-style incremental upsert folded over yearly snapshots "
     "(BASELINE.json approach; O(current) per step instead of the "
-    "reference's O(history) full recompute). The oracle is the fold's "
-    "CLOSED FORM: per key, status from the last two appearance years, "
-    "change date from the last 'reset point' (entry, hash change, or "
-    "the pre-gap year a deletion stamped) — valid because the global "
-    "year sequence is contiguous, and a strong check that N merge "
-    "steps compose to the right end state.",
+    "reference's O(history) full recompute). Builder and oracle both "
+    "compute the fold's CLOSED FORM on one key window: per key, status "
+    "from the last two appearance years, change date from the last "
+    "'reset point' (entry, hash change, or the pre-gap year a deletion "
+    "stamped); the builder reads gaps off broadcast snapshot ranks, the "
+    "oracle off year arithmetic (valid because the global year sequence "
+    "is contiguous); the property tests check the builder's form "
+    "against N merge steps.",
 )
 def q_scd_merge_incremental(spark, sf_dir):
-    # Tree-fold (parallel-prefix) form: ceil(log2 years) exchanges on
-    # (key, pair) instead of a serial chain of merges, one exchange
-    # per year — identical end state (property-tested against the
-    # day-by-day scd_merge fold on gap/revert/delete patterns, and
-    # the closed-form oracle here checks the composition end-to-end).
+    # The fold's end state in closed form on one key window (property-
+    # tested against the year-by-year scd_merge fold on gap / revert /
+    # delete patterns; the closed-form oracle checks it end to end).
+    # The dedup runs inside the same key window, so one exchange on the
+    # key serves both.
     orders = _t(spark, sf_dir, "orders")
     yearly = (
         orders.select(
@@ -380,15 +382,11 @@ def q_scd_merge_incremental(spark, sf_dir):
             "o_orderkey",
         )
         .transform(
-            lambda df: scd.snapshot_dedup(
-                df, ["key", "snap_year"], tiebreak_cols=["snap_date", "o_orderkey"]
+            lambda df: scd.snapshot_dedup_aligned(
+                df, ["key"], "snap_year", ["snap_date", "o_orderkey"]
             )
         )
         .drop("o_orderkey", "snap_date")
-        # one materialization: the tree fold scans its input twice
-        # (distinct snapshot times + the leaf summaries), and each
-        # scan would otherwise re-run the dedup window
-        .localCheckpoint()
     )
     return scd.scd_merge_tree(
         yearly, ["key"], "snap_year", SCD_HASH_COLS

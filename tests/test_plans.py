@@ -145,6 +145,32 @@ def test_q21_runs_four_jobs(spark, sf_dir, name):
     assert n == 4, n
 
 
+def test_scd_merge_incremental_job_count(spark, sf_dir):
+    """Building and writing the merge fold's closed form runs six jobs:
+    the key exchange, the snapshot-rank branch (its own key exchange,
+    the distinct times, the rank window, the broadcast) and the result.
+    Building runs none: no driver collect of the snapshot times and no
+    checkpoint of the deduped input."""
+    from tests.test_employee_job import _jobs_of
+
+    build = REGISTRY["scd_merge_incremental"].builder
+    build(spark, sf_dir)  # memoizes the orders footer read
+    n = _jobs_of(
+        spark,
+        lambda: build(spark, sf_dir).write.format("noop").mode("overwrite").save(),
+    )
+    assert n == 6, n
+
+
+@pytest.mark.parametrize("name", ["scd_type2_intervals", "scd_asof_lookup"])
+def test_order_snapshots_single_key_shuffle(spark, sf_dir, name):
+    """order_snapshots dedups inside the key window, so one exchange on
+    the key serves the dedup and every SCD window after it."""
+    df = REGISTRY[name].builder(spark, sf_dir)
+    plan = explain.physical_plan(df)
+    assert _hash_exchange_keys(plan) == [["key"]], plan
+
+
 def test_global_max_is_broadcast(spark, sf_dir):
     df = REGISTRY["global_max_broadcast"].builder(spark, sf_dir)
     assert explain.has_broadcast_join(df)
@@ -321,6 +347,10 @@ _SINGLE_PARTITION_ALLOWED = {
     "scd_employee_all": 1,       # global-max stamp (1-row agg)
     "scd_employee_current": 2,   # global max + current-stamp aggs
     "scd_composite_key": 1,
+    "scd_merge_incremental": 1,  # snapshot-rank window over the
+                                 # distinct snapshot times (one row
+                                 # per snapshot, not per data row),
+                                 # broadcast back
     "profile_table": 1,          # corpus-wide stat row
     "corpus_temperature_sample": 1,  # total-token budget row
     "q6_forecast_revenue": 1,    # TPC-H scalar aggregate

@@ -102,6 +102,57 @@ def test_gap_as_delete_variant(spark):
     assert m[d(5)][0] in ("New", "Deleted")  # reappears AND ends early
 
 
+def test_gap_as_delete_dates_reappearance(spark):
+    """With gaps as deletes, a key that reappears opens a new run: its
+    New row and the rows after it are dated by the reappearance, not by
+    the run before the gap (which the Deleted row closed)."""
+    snaps = spark.createDataFrame(
+        [(1, d(1), "a"), (1, d(2), "a"), (1, d(4), "a"), (1, d(5), "a")]
+        + [(2, d(day), "z") for day in range(1, 6)],
+        "k int, t date, v string",
+    )
+    df = scd.scd_apply(snaps, ["k"], "t", ["v"], treat_gap_as_delete=True)
+    got = sorted(
+        (r["t"], r["change_status"], r["changed_status_date"])
+        for r in df.filter(F.col("k") == 1).collect()
+    )
+    assert got == [
+        (d(1), "New", d(1)),
+        (d(2), "Deleted", d(2)),
+        (d(4), "New", d(4)),
+        (d(5), "No Change", d(4)),
+    ]
+
+
+def test_scd_merge_tree_timestamps_across_dst_fallback(spark, monkeypatch):
+    """Two snapshot instants an hour apart that share one local wall
+    time (01:30 on the US fall-back night) stay two snapshots: the
+    result is the one a UTC process gets, whatever the driver's zone."""
+    import time
+
+    first, second = 1699162200, 1699165800  # 2023-11-05 05:30 / 06:30 UTC
+    snaps = spark.createDataFrame(
+        [(1, first, "a"), (1, second, "a"), (2, first, "b")],
+        "k int, ts long, v string",
+    ).withColumn("ts", F.timestamp_seconds("ts"))
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        out = scd.scd_merge_tree(snaps, ["k"], "ts", ["v"])
+        got = sorted(
+            (r["k"], r["change_status"], r["at"])
+            for r in out.select(
+                "k",
+                "change_status",
+                F.unix_timestamp("changed_status_date").alias("at"),
+            ).collect()
+        )
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    assert got == [(1, "No Change", first), (2, "Deleted", first)]
+
+
 def test_duplicate_drop_is_noop(spark, employee_all):
     dup = scd.scd_apply(
         emp_snapshots(spark, duplicate_day=2),

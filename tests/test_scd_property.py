@@ -162,9 +162,9 @@ def test_scd_merge_fold_matches_merge_model(spark, obs):
 )
 @given(obs=histories())
 def test_scd_merge_tree_matches_merge_model(spark, obs):
-    """The O(log days) tree fold must equal the day-by-day merge fold
-    on arbitrary gap / revert / delete patterns — same model, same
-    semantics, associative composition instead of a serial chain."""
+    """The fold's closed form on one key window must equal the
+    day-by-day merge fold on arbitrary gap / revert / delete patterns
+    — same model, same semantics, no serial chain of merges."""
     if not obs:
         return
     rows = [
