@@ -18,12 +18,17 @@ This version:
   footer-inference job;
 - statuses and change dates recomputed per entity (the corrected
   islands: each row dated by the start of its own run);
+- the latest snapshot date that ``Deleted`` is judged against comes
+  from the pending drops and the history's ``snapshot_date=…``
+  partition directories, listed on the driver — the rebuild scans
+  every history file once, for the windows, not again for a max;
 - an incremental variant applies the day's snapshot against the
   current view only (scd_merge) — O(day) not O(history).
 """
 
 from __future__ import annotations
 
+import datetime as dt
 import functools
 import os
 
@@ -95,9 +100,21 @@ def run(
     )
 
     hist_path = all_profile.output_path
+    latest_source = None
     if os.path.isdir(hist_path):
         history = all_profile.read(spark).select(*snap_profile.schema.names)
         snapshots = scd.union_snapshots(history, new_df)
+        hist_latest = max(
+            map(dt.date.fromisoformat, all_profile.partition_values()),
+            default=None,
+        )
+        # greatest skips NULL: with no pending drop the history's date
+        # stands, and a re-dropped older day never beats it.
+        latest_source = new_df.agg(
+            F.greatest(F.max(TIME_COL), F.lit(hist_latest).cast("date")).alias(
+                TIME_COL
+            )
+        )
     else:
         snapshots = new_df
 
@@ -106,6 +123,7 @@ def run(
         key_cols=KEY_COLS,
         time_col=TIME_COL,
         hash_cols=HASH_COLS,
+        global_max_source=latest_source,
     )
     # The write is the lineage's only consumer (the gates ride it), so
     # nothing is cached: the window pipeline runs exactly once. It also

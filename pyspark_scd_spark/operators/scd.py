@@ -10,7 +10,11 @@ scale hazards engineered out:
 
 - global max computed via ``agg(max)`` + broadcast cross-join instead of
   a ``partitionBy(lit(1))`` window that funnels every row through one
-  task (reference jobs/create_employee_all.py:58,63,118,127);
+  task (reference jobs/create_employee_all.py:58,63,118,127). The max
+  comes from a separate scalar source, by default the raw pre-dedup
+  scan; ``scd_apply(global_max_source=...)`` lets a caller that knows
+  the latest time more cheaply (the daily job, from its history's
+  date partitions) skip scanning the history for it;
 - each row's change date is the start of its run of equal fingerprints
   within its own entity, read off the same ordered key window as the
   status (``last`` run-opening date, ignoring NULLs): the dates of
@@ -38,6 +42,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pyspark_scd_spark.functions.text import _q
+
 # Status vocabulary, verbatim from the reference (README.md:34-41,
 # jobs/create_employee_all.py:128-134).
 STATUS_NEW = "New"
@@ -64,13 +70,13 @@ def with_row_hash(
     keyed JSON field. Use this form for new pipelines; the faithful form
     exists for parity with the reference and for the DuckDB oracle
     (``sha256(concat_ws(...))`` matches bit-for-bit on string/int input).
+
+    Either form is one parsed SQL expression over backtick-quoted
+    names: one py4j round trip however many columns are hashed.
     """
-    cols = [F.col(c) for c in hash_cols]
-    if hardened:
-        fingerprint = F.sha2(F.to_json(F.struct(*cols)), 256)
-    else:
-        fingerprint = F.sha2(F.concat_ws("||", *cols), 256)
-    return df.withColumn(out_col, fingerprint)
+    cols = ", ".join(_q(c) for c in hash_cols)
+    body = f"to_json(struct({cols}))" if hardened else f"concat_ws('||', {cols})"
+    return df.withColumn(out_col, F.expr(f"sha2({body}, 256)"))
 
 
 def snapshot_dedup(
@@ -184,17 +190,21 @@ def _with_global_max(
     cross-join adds the scalar to every row with no shuffle at all —
     Catalyst plans a BroadcastNestedLoopJoin over a 1-row table.
 
-    ``scalar_source``: optional cheaper lineage with the same max (e.g.
-    the raw pre-dedup scan) — the scalar branch is a separate plan
-    subtree, so pointing it at the raw scan avoids re-running the
-    dedup/hash stages just to take a max.
+    ``scalar_source``: optional cheaper lineage with the same max — the
+    scalar branch is a separate plan subtree, so pointing it at the raw
+    pre-dedup scan (``scd_apply``'s default) avoids re-running the
+    dedup/hash stages just to take a max, and a frame that already
+    holds the max (the daily job's: the pending drops' max and the
+    history's latest partition date) avoids scanning the history.
     """
     src = scalar_source if scalar_source is not None else df
     scalar = src.agg(F.max(time_col).alias(out_col))
     return df.crossJoin(F.broadcast(scalar))
 
 
-def _with_date_rank(df: DataFrame, time_col: str) -> DataFrame:
+def _with_date_rank(
+    df: DataFrame, time_col: str, source: DataFrame | None = None
+) -> DataFrame:
     """Add ``__t_rank`` (the rank of the row's ``time_col`` among the
     distinct snapshot times, from 1) and ``__t_count`` (how many
     distinct times there are): a jump of more than one rank between an
@@ -204,10 +214,15 @@ def _with_date_rank(df: DataFrame, time_col: str) -> DataFrame:
     The rank window is global but runs over one row per snapshot, not
     per data row, and its result is broadcast back, so it is not a
     scale hazard; no time value makes a round trip through the driver.
+
+    ``source``: optional cheaper lineage with the same distinct times
+    (the raw pre-dedup scan) — without it the rank branch re-runs
+    ``df``'s dedup and its key exchange just to list the times.
     """
     w = Window.orderBy(time_col)
     every = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    ranks = df.select(time_col).distinct().select(
+    src = source if source is not None else df
+    ranks = src.select(time_col).distinct().select(
         time_col,
         F.row_number().over(w).alias("__t_rank"),
         F.count(F.lit(1)).over(every).alias("__t_count"),
@@ -236,14 +251,13 @@ def _with_runs(
     ordered key window instead of three more sorts.
 
     Without ``gaps_open_at`` a gap is invisible. With it, a row after a
-    gap (``__gap_before``: the key missed a snapshot, by
-    ``_with_date_rank``) also opens a run, dated ``gaps_open_at``
-    unless its fingerprint changed.
+    gap (``__gap_before``: the key missed a snapshot, by the
+    ``__t_rank`` that ``_with_date_rank`` added to ``df``) also opens a
+    run, dated ``gaps_open_at`` unless its fingerprint changed.
     """
     prev = F.col("__prev_hash")
     opens = F.when(prev.isNull() | (prev != F.col("row_hash")), F.col(time_col))
     if gaps_open_at is not None:
-        df = _with_date_rank(df, time_col)
         rank = F.col("__t_rank")
         more += (((rank - F.lag(rank).over(w)) > 1).alias("__gap_before"),)
         opens = F.coalesce(opens, F.when(F.col("__gap_before"), gaps_open_at))
@@ -289,6 +303,10 @@ def with_change_status(
     by default for parity). Gaps and the latest snapshot are then read
     off snapshot ranks (``_with_date_rank``) instead of the global max.
 
+    ``global_max_source``: optional cheaper lineage for the scalar
+    branch. It must hold the same latest ``time_col`` as ``df`` and, in
+    gap mode (where it feeds the ranks), the same distinct times.
+
     Everything comes from ONE ``partitionBy(key).orderBy(time)``
     window: first and last rows are where ``lag`` / ``lead`` of the
     (never NULL) fingerprint is NULL, so the plan sorts once per key
@@ -302,7 +320,12 @@ def with_change_status(
         rank = F.col("__t_rank")
         gap_after = (F.lead(rank).over(w) - rank) > 1
         df = _with_runs(
-            df, w, time_col, is_last, gap_after.alias("__gap_after"), gaps_open_at=t
+            _with_date_rank(df, time_col, global_max_source),
+            w,
+            time_col,
+            is_last,
+            gap_after.alias("__gap_after"),
+            gaps_open_at=t,
         )
         at_latest = rank == F.col("__t_count")
     else:
@@ -378,6 +401,7 @@ def scd_apply(
     tiebreak_cols: Sequence[str] = (),
     hardened_hash: bool = False,
     treat_gap_as_delete: bool = False,
+    global_max_source: DataFrame | None = None,
 ) -> DataFrame:
     """The full ``employee_all`` pipeline as one transform chain
     (reference jobs/create_employee_all.py:236-240): dedup → hash →
@@ -395,8 +419,14 @@ def scd_apply(
 
     Plan shape: ONE hash exchange on ``key_cols`` and ONE sort feed the
     dedup and the status / run-start windows (partition-aligned dedup
-    + a prefix-compatible key window); the global-max scalar comes
-    from the raw pre-dedup scan so its branch is scan+agg only.
+    + a prefix-compatible key window). The global-max scalar (or, with
+    ``treat_gap_as_delete``, the snapshot ranks) comes from
+    ``global_max_source``, by default the raw pre-dedup scan's
+    ``time_col``, so its branch is scan+agg only. A caller that knows
+    the latest time more cheaply passes a frame holding it: the daily
+    job's history is partitioned by date, so its latest date is a
+    directory name and the source scans only the pending drops. In
+    gap mode the source must hold every distinct time.
     """
     df = snapshot_dedup_aligned(
         snapshots, key_cols, time_col, tiebreak_cols or hash_cols
@@ -407,7 +437,11 @@ def scd_apply(
         key_cols,
         time_col,
         treat_gap_as_delete=treat_gap_as_delete,
-        global_max_source=snapshots.select(time_col),
+        global_max_source=(
+            global_max_source
+            if global_max_source is not None
+            else snapshots.select(time_col)
+        ),
     )
     return df.select(
         *snapshots.columns, "change_status", "changed_status_date"
@@ -543,7 +577,7 @@ def scd_merge_tree(
     cols += [c for c in snapshots.columns if c not in cols]
     w = Window.partitionBy(*keys).orderBy(time_col)
     df = _with_runs(
-        with_row_hash(snapshots, hash_cols),
+        _with_date_rank(with_row_hash(snapshots, hash_cols), time_col),
         w,
         time_col,
         F.lead("row_hash").over(w).isNull().alias("__is_last"),

@@ -8,7 +8,9 @@ new here — the partition columns used for scale-out layout.
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass, field
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -50,6 +52,24 @@ class TableProfile:
             }
             return reader.options(**opts).csv(p)
         return reader.options(**self.read_options).format(self.fmt).load(p)
+
+    def partition_values(self) -> list[str]:
+        """Values of the first ``partition_by`` column present under
+        ``input_path``, read off its ``<col>=<value>`` directory names
+        on the driver: no Spark job and no file read. As in Spark's
+        partition discovery, names are unescaped and Hive's NULL
+        partition (``__HIVE_DEFAULT_PARTITION__``) yields no value."""
+        prefix = f"{self.partition_by[0]}="
+        with os.scandir(self.input_path) as entries:
+            values = [
+                unquote(d.name[len(prefix):])
+                for d in entries
+                if d.is_dir() and d.name.startswith(prefix)
+            ]
+        return [v for v in values if v != _HIVE_NULL_PARTITION]
+
+
+_HIVE_NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
 
 
 # --- the reference's employee-roster data model, re-declared -----------

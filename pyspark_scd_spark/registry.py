@@ -80,17 +80,23 @@ SELECT key, snap_date, o_orderstatus, o_orderpriority FROM (
 SCD_HASH_COLS = ["o_orderstatus", "o_orderpriority"]
 
 
-def order_snapshots(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
-    snaps = orders.select(
+def order_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Orders as raw customer snapshot rows, several per (key, date)."""
+    return _t(spark, sf_dir, "orders").select(
         F.col("o_custkey").alias("key"),
         F.to_date("o_orderdate").alias("snap_date"),
         "o_orderstatus",
         "o_orderpriority",
         "o_orderkey",
     )
+
+
+def order_snapshots(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scd.snapshot_dedup_aligned(
-        snaps, ["key"], "snap_date", tiebreak_cols=["o_orderkey"]
+        order_rows(spark, sf_dir),
+        ["key"],
+        "snap_date",
+        tiebreak_cols=["o_orderkey"],
     ).drop("o_orderkey")
 
 
@@ -242,16 +248,8 @@ def q_scd_employee_all(spark, sf_dir):
     # partition-aligned dedup runs inside the same per-key window
     # pipeline, so the whole SCD computes off ONE hash(key) exchange
     # and the global-max scalar branch is a bare scan+agg.
-    orders = _t(spark, sf_dir, "orders")
-    snaps = orders.select(
-        F.col("o_custkey").alias("key"),
-        F.to_date("o_orderdate").alias("snap_date"),
-        "o_orderstatus",
-        "o_orderpriority",
-        "o_orderkey",
-    )
     out = scd.scd_apply(
-        snaps,
+        order_rows(spark, sf_dir),
         key_cols=["key"],
         time_col="snap_date",
         hash_cols=SCD_HASH_COLS,
@@ -4733,18 +4731,22 @@ def q_text_unigram_logprob(spark, sf_dir):
     FROM s
     """,
     doc="SCD status with treat_gap_as_delete=True (operators/scd.py "
-    "with_change_status): an entity absent from intermediate "
+    "scd_apply): an entity absent from intermediate "
     "snapshots gets Deleted on its pre-gap row and New on "
     "reappearance — vs the reference's gap-invisible default "
     "(SURVEY.md §2 #10). Snapshot-date ranks come from a broadcast "
-    "over the tiny distinct-date set, so gap detection adds no "
-    "per-row shuffle.",
+    "over the tiny distinct-date set, listed from the raw order scan, "
+    "so gap detection adds no per-row shuffle and one exchange on the "
+    "key serves the dedup and every window.",
 )
 def q_scd_gap_as_delete(spark, sf_dir):
-    snaps = order_snapshots(spark, sf_dir)
-    df = scd.with_row_hash(snaps, SCD_HASH_COLS)
-    df = scd.with_change_status(
-        df, ["key"], "snap_date", treat_gap_as_delete=True
+    df = scd.scd_apply(
+        order_rows(spark, sf_dir),
+        key_cols=["key"],
+        time_col="snap_date",
+        hash_cols=SCD_HASH_COLS,
+        tiebreak_cols=["o_orderkey"],
+        treat_gap_as_delete=True,
     )
     return df.select("key", "snap_date", "change_status")
 

@@ -352,3 +352,106 @@ def test_run_gates_reject(spark, tmp_path, monkeypatch, kind, message):
     assert not [p for p in os.listdir(f"{base}/output") if "__" in p]
     if kind == "schema":
         assert n_jobs == 0
+
+
+def _rows(df) -> list[str]:
+    """``df``'s rows as a sorted list, comparable across column orders."""
+    return sorted(repr(sorted(r.asDict().items())) for r in df.collect())
+
+
+def _subtree(plan: str, node: str) -> str:
+    """The first line of ``plan`` that holds ``node`` and every line
+    of the subtree under it."""
+    lines = plan.splitlines()
+
+    def depth(line: str) -> int:
+        return len(line) - len(line.lstrip(" :+-"))
+
+    start = next(i for i, ln in enumerate(lines) if node in ln)
+    end = start + 1
+    while end < len(lines) and depth(lines[end]) > depth(lines[start]):
+        end += 1
+    return "\n".join(lines[start:end])
+
+
+def test_latest_date_scans_no_history(spark, tmp_path, monkeypatch):
+    """The latest snapshot date that Deleted is judged against comes
+    from the pending drops and the history's partition directories:
+    the broadcast scalar branch of the employee_all plan reads no
+    parquet, so a run does not scan the history twice."""
+    from pyspark_scd_spark.plans import explain
+
+    base = _second_run_base(spark, tmp_path)
+    real = employee_dim.write_staged
+    plans = []
+
+    def capture(df, *args, **kwargs):
+        plans.append(explain.physical_plan(df))
+        return real(df, *args, **kwargs)
+
+    monkeypatch.setattr(employee_dim, "write_staged", capture)
+    employee_dim.run(spark, base)
+    branch = _subtree(plans[0], "BroadcastExchange")
+    assert "Scan csv" in branch, plans[0]
+    assert "Scan parquet" not in branch, plans[0]
+    assert "Scan parquet" in plans[0], plans[0]
+
+
+def test_redrop_of_older_day_keeps_history_latest(spark, tmp_path):
+    """A pending re-drop of a committed day older than the history's
+    latest date: Deleted is still judged against the history's latest
+    date, so employee 30, last seen on the re-dropped day, is Deleted
+    there, and the rebuild equals a full recompute of the days."""
+    from tests.emp_fixture import emp_snapshots
+
+    base = str(tmp_path / "scd")
+    _write_csvs(base, days=range(1, 5))
+    employee_dim.run(spark, base)
+    _write_csvs(base, days=[3])
+    all_df, cur_df = employee_dim.run(spark, base)
+
+    expected = scd.scd_apply(
+        emp_snapshots(spark).filter(F.dayofmonth("snapshot_date") <= 4),
+        key_cols=employee_dim.KEY_COLS,
+        time_col=employee_dim.TIME_COL,
+        hash_cols=HASH_COLS,
+    )
+    assert _rows(all_df) == _rows(expected)
+    (last30,) = all_df.filter(
+        (F.col("employee_number") == 30)
+        & (F.col("snapshot_date") == dt.date(2020, 1, 3))
+    ).collect()
+    assert last30["change_status"] == "Deleted"
+    assert {r["snapshot_date"] for r in cur_df.collect()} == {dt.date(2020, 1, 4)}
+
+
+def test_run_without_pending_drops_keeps_outputs(spark, tmp_path):
+    """With no pending drop the latest date is the history's own, and a
+    run rewrites employee_all and employee_current unchanged."""
+    base = _second_run_base(spark, tmp_path)
+    all1, cur1 = employee_dim.run(spark, base)
+    want_all, want_cur = _rows(all1), _rows(cur1)
+    all2, cur2 = employee_dim.run(spark, base)
+    assert _rows(all2) == want_all
+    assert _rows(cur2) == want_cur
+
+
+def test_partition_values_read_directory_names(tmp_path):
+    """Partition values come from the ``col=value`` directory names,
+    unescaped; Hive's NULL partition and other names yield none."""
+    from pyspark_scd_spark.profiles import EMP_ALL_SCHEMA, TableProfile
+
+    root = tmp_path / "t"
+    for name in [
+        "d=2020-01-02",
+        "d=a%3Db",
+        "d=__HIVE_DEFAULT_PARTITION__",
+        "e=2020-01-05",
+    ]:
+        (root / name).mkdir(parents=True)
+        (root / name / "part-0.parquet").write_text("")
+    (root / "_SUCCESS").write_text("")
+    profile = TableProfile(
+        "t", EMP_ALL_SCHEMA, (), input_path=str(root), partition_by=("d",)
+    )
+    assert sorted(profile.partition_values()) == ["2020-01-02", "a=b"]

@@ -162,6 +162,16 @@ def test_scd_merge_incremental_job_count(spark, sf_dir):
     assert n == 6, n
 
 
+def test_gap_as_delete_single_key_shuffle(spark, sf_dir):
+    """Gap mode ranks the distinct dates of the raw order scan, so one
+    hash exchange on the key serves the dedup and every window; the
+    only other is the distinct dates'. Ranking the deduped frame's
+    dates would re-run its key exchange in the rank branch."""
+    df = REGISTRY["scd_gap_as_delete"].builder(spark, sf_dir)
+    plan = explain.physical_plan(df)
+    assert sorted(_hash_exchange_keys(plan)) == [["key"], ["snap_date"]], plan
+
+
 @pytest.mark.parametrize("name", ["scd_type2_intervals", "scd_asof_lookup"])
 def test_order_snapshots_single_key_shuffle(spark, sf_dir, name):
     """order_snapshots dedups inside the key window, so one exchange on

@@ -45,3 +45,20 @@ def test_registry_index_invariants():
             f"{name}: rows-only entries must be explicitly "
             "documented in COVERAGE.md before relaxing this"
         )
+
+
+def test_plan_pins_credit_module_constants_to_their_reader():
+    """An entry named in a module-level constant of tests/test_plans.py
+    is pinned by the test that reads the constant, not by the test that
+    happens to precede it in the file."""
+    sys.path.insert(0, os.path.join(REPO, "tools"))
+    from gen_registry_index import _plan_pins
+
+    from tests.test_plans import _SINGLE_PARTITION_ALLOWED
+
+    bodies = _plan_pins()
+    reader = bodies["test_headline_single_partition_budget"]
+    before = bodies["test_ivf_pq_adc_no_corpus_shuffle"]
+    for name in _SINGLE_PARTITION_ALLOWED:
+        assert f'"{name}"' in reader, name
+        assert f'"{name}"' not in before, name

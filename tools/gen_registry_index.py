@@ -13,7 +13,8 @@ Per entry:
             future rows-only entry would record "rows_only"
   - bench:  "headline" / "x10" / "x3" / null (from bench.py's sets;
             x10/x3 listed only when not already headline)
-  - plan_pins: tests in tests/test_plans.py that name this entry —
+  - plan_pins: tests in tests/test_plans.py that name this entry, in
+            their own body or in a module-level constant they read —
             the plan-shape contracts a refactor must keep green
   - doc:    the entry's registered one-line doc (first sentence)
 
@@ -26,6 +27,7 @@ Usage: python tools/gen_registry_index.py [out_json]
 
 from __future__ import annotations
 
+import ast
 import inspect
 import json
 import os
@@ -53,19 +55,38 @@ TABLES = (
 
 
 def _plan_pins() -> dict:
-    """entry name -> sorted list of test_plans.py test names whose
-    body (def-to-def span, decorators included) mentions the entry."""
+    """test name -> the source text that counts as the test's body:
+    its own def (decorators included) plus every module-level
+    assignment whose name it reads (such as a budget dict), so an
+    entry named there is pinned by the test that uses it, and by no
+    test that merely precedes it in the file."""
     path = os.path.join(REPO, "tests", "test_plans.py")
     with open(path) as f:
         src = f.read()
-    spans = []
-    for m in re.finditer(r"^(?:@.*\n)*def (test_\w+)", src, re.M):
-        spans.append((m.group(1), m.start()))
-    spans.append(("__end__", len(src)))
-    bodies = {
-        name: src[a:spans[i + 1][1]]
-        for i, (name, a) in enumerate(spans[:-1])
+    lines = src.splitlines(keepends=True)
+
+    def text(node) -> str:
+        first = min([d.lineno for d in getattr(node, "decorator_list", [])]
+                    + [node.lineno])
+        return "".join(lines[first - 1:node.end_lineno])
+
+    module = ast.parse(src)
+    consts = {  # module-level name -> its assignment's text
+        t.id: text(node)
+        for node in module.body
+        if isinstance(node, ast.Assign)
+        for t in node.targets
+        if isinstance(t, ast.Name)
     }
+    bodies = {}
+    for node in module.body:
+        if isinstance(node, ast.FunctionDef) and node.name.startswith("test_"):
+            read = {
+                n.id
+                for n in ast.walk(node)
+                if isinstance(n, ast.Name) and n.id in consts
+            }
+            bodies[node.name] = text(node) + "".join(consts[c] for c in sorted(read))
     return bodies
 
 
