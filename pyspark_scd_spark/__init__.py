@@ -24,7 +24,7 @@ Operator families (see COVERAGE.md for the full query inventory):
 - ``operators.dedup`` — exact groups, n-gram Jaccard (count/PPJoin),
   MinHash LSH, SimHash, winnowed span overlap, connected components,
   survivor selection.
-- ``operators.similarity`` — cosine top-k (BLAS / LSH / IVF tiers),
+- ``operators.similarity`` — cosine top-k (grid / LSH / IVF tiers),
   k-means training, int8 + product quantization, IVF+PQ ADC search,
   kNN label audit, hard-negative mining.
 - ``operators.corpus`` — decontamination, Gopher repetition filter,

@@ -79,28 +79,6 @@ def with_row_hash(
     return df.withColumn(out_col, F.expr(f"sha2({body}, 256)"))
 
 
-def snapshot_dedup(
-    df: DataFrame,
-    key_cols: Sequence[str],
-    tiebreak_cols: Sequence[str],
-) -> DataFrame:
-    """Keep exactly one row per key group.
-
-    The reference's dedup (reference jobs/create_employee_all.py:74-81)
-    orders by a column that is constant within the partition, so the
-    survivor among non-identical duplicates is nondeterministic. Here
-    ``tiebreak_cols`` (descending, at least one) pins the survivor.
-    """
-    w = Window.partitionBy(*key_cols).orderBy(
-        *[F.col(c).desc() for c in tiebreak_cols]
-    )
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-
-
 def snapshot_dedup_aligned(
     df: DataFrame,
     key_cols: Sequence[str],
@@ -110,16 +88,18 @@ def snapshot_dedup_aligned(
     """Dedup to one row per (key, time) WITHOUT leaving the per-key
     partitioning.
 
-    ``snapshot_dedup`` (or ``dropDuplicates``) on (key, time) clusters
-    by hash(key, time) — an exchange the downstream SCD windows
-    (partitioned by key alone) cannot reuse, so the pipeline pays two
-    shuffles. Here rows are sorted (time ASC, tiebreaks DESC) inside
-    the per-KEY window and a row survives iff it is the first of its
-    time-run (``lag(time) != time``) — same survivor as
-    row_number()=1 per (key, time) ordered by tiebreaks DESC, but the
-    single hash(key) exchange now serves every later window (Spark
-    satisfies a required (key) clustering and (key, time) sort prefix
-    from it). One shuffle for the whole SCD pipeline instead of two.
+    A ``row_number()`` window (or ``dropDuplicates``) on (key, time)
+    clusters by hash(key, time) — an exchange the downstream SCD
+    windows (partitioned by key alone) cannot reuse, so the pipeline
+    pays two shuffles. Here rows are sorted (time ASC, tiebreaks DESC)
+    inside the per-KEY window and a row survives iff it opens its
+    time-run: it is the key's first row, or ``NOT (lag(time) <=>
+    time)``. That is the survivor of row_number()=1 per (key, time)
+    ordered by tiebreaks DESC — a NULL time is one more run, so a
+    key's NULL-time rows keep one row too — but the single hash(key)
+    exchange now serves every later window (Spark satisfies a
+    required (key) clustering and (key, time) sort prefix from it).
+    One shuffle for the whole SCD pipeline instead of two.
 
     The survivor is the row whose ``tiebreak_cols`` tuple sorts
     highest (DESC puts NULL lowest); among rows that tie on every
@@ -129,13 +109,13 @@ def snapshot_dedup_aligned(
         F.col(time_col).asc(),
         *[F.col(c).desc() for c in tiebreak_cols],
     )
-    prev_t = F.lag(time_col).over(w)
+    # lag of a non-NULL literal is NULL on the key's first row only
+    first = F.lag(F.lit(1)).over(w).isNull()
+    new_run = ~F.lag(time_col).over(w).eqNullSafe(F.col(time_col))
     return (
-        df.withColumn("__prev_t", prev_t)
-        .filter(
-            F.col("__prev_t").isNull() | (F.col("__prev_t") != F.col(time_col))
-        )
-        .drop("__prev_t")
+        df.withColumn("__keep", first | new_run)
+        .filter("__keep")
+        .drop("__keep")
     )
 
 

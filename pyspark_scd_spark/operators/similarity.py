@@ -16,18 +16,8 @@ Two kinds of operator live here:
   ``_np_pairs_emit`` (above-threshold pairs). Both L2-normalize
   through ``_l2_rows`` (a zero vector scores NaN, which no threshold
   keeps) and round through ``_round_away``, DuckDB's
-  half-away-from-zero ``ROUND``. The driver-collect twins
-  (``embedding_neardup_pairs_blas``, ``knn_label_vote``,
-  ``hard_negative_mining``) are explicit small-corpus options with
-  kernels of their own; they round through ``_round_away`` too.
-
-The LSH and IVF operators take ``verify=``: a bucket/cell GEMM (the
-default) or ``'pairs'``, the pair-gather twin through
-``candidate_pair_cosine``. The two paths return identical output up to
-one caveat: the GEMM and the pair path's per-row (a*b).sum associate
-float adds differently, so a dot landing EXACTLY on a rounding boundary
-could round apart — never observed on the fixtures, where parity tests
-pin exact equality.
+  half-away-from-zero ``ROUND``. The grid is the only exact tier; each
+  index has one verify path.
 """
 
 from __future__ import annotations
@@ -126,25 +116,6 @@ def duckdb_bucket_sql(
     return "(" + " + ".join(terms) + ")"
 
 
-def with_lsh_bucket(
-    df: DataFrame,
-    dim: int,
-    n_planes: int = 8,
-    vec_col: str = "embedding",
-    seed: int = 42,
-    out_col: str = "bucket",
-) -> DataFrame:
-    """Random-hyperplane signature: bit i = sign(v · plane_i).
-
-    P(two vectors agree on one bit) = 1 − θ/π; bucket equality on 8
-    bits concentrates candidates ~2⁸× — the planes are literal arrays
-    baked into the plan (broadcast-free constants).
-    """
-    return df.withColumn(
-        out_col, lsh_bucket_expr(vec_col, dim, n_planes, seed)
-    )
-
-
 def lsh_bucketed_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -225,80 +196,6 @@ def lsh_bucketed_topk(
         .filter(F.col("rank") <= k)
         .select(query_id_col, id_col, "cosine", "rank")
     )
-
-
-def embedding_neardup_pairs_blas(
-    df: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_to: int = 4,
-) -> DataFrame:
-    """All-pairs cosine ≥ threshold via blocked BLAS matmul —
-    EXPLICIT SMALL-CORPUS OPTION: collects the corpus to the driver.
-    The registry and any at-scale caller use
-    ``embedding_neardup_pairs_grid`` (fully distributed; the same
-    rows); this form wins only on corpora small enough that grid-cell
-    scheduling overhead dominates.
-
-    One side is collected, L2-normalized, and broadcast (N×d float64 —
-    at d=64 a million vectors is ~500 MB, the practical ceiling; beyond
-    that, LSH/IVF candidate generation is the path). ``mapInPandas``
-    then streams corpus batches through ``batch @ broadcast.T`` — a
-    dense matmul that does in milliseconds what per-element expression
-    evaluation does in minutes, with one Arrow hop per ~10k rows.
-
-    Each unordered pair is emitted once (id_a < id_b) by the batch that
-    holds the smaller id. Cosines are rounded to ``round_to`` half away
-    from zero (``_round_away``, DuckDB's ``ROUND``) and the threshold
-    applies to the ROUNDED value so results are reproducible
-    across backends (BLAS pairwise summation vs sequential differ by
-    ~1e-15; at 4 dp that never flips a comparison in practice).
-    """
-    import numpy as np
-    import pandas as pd
-
-    rows = df.select(id_col, vec_col).collect()
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    mat = np.array([r[1] for r in rows], dtype=np.float64)
-    mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-    sc = df.sparkSession.sparkContext
-    b_ids = sc.broadcast(ids)
-    b_mat = sc.broadcast(mat)
-
-    def _pairs(batches):
-        all_ids = b_ids.value
-        all_mat = b_mat.value
-        for pdf in batches:
-            q = np.array(list(pdf[vec_col]), dtype=np.float64)
-            q /= np.linalg.norm(q, axis=1, keepdims=True)
-            sims = q @ all_mat.T
-            qid = pdf[id_col].to_numpy(dtype=np.int64)
-            out_a, out_b, out_s = [], [], []
-            for i in range(sims.shape[0]):
-                s = _round_away(sims[i], round_to)
-                mask = (s >= threshold) & (all_ids > qid[i])
-                out_a.append(np.full(mask.sum(), qid[i], dtype=np.int64))
-                out_b.append(all_ids[mask])
-                out_s.append(s[mask])
-            yield pd.DataFrame(
-                {
-                    "id_a": np.concatenate(out_a) if out_a else [],
-                    "id_b": np.concatenate(out_b) if out_b else [],
-                    "cosine": np.concatenate(out_s) if out_s else [],
-                }
-            )
-
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("id_a", T.LongType()),
-            T.StructField("id_b", T.LongType()),
-            T.StructField("cosine", T.DoubleType()),
-        ]
-    )
-    return df.select(id_col, vec_col).mapInPandas(_pairs, schema=schema)
 
 
 def _ivf_scored_sql(xcol: str, centroids: list[list[float]]) -> str:
@@ -788,174 +685,9 @@ def kmeans_train(
     return centroids.tolist(), assigned
 
 
-def knn_label_vote(
-    df: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-) -> DataFrame:
-    """Label-noise audit: majority label vote among each vector's k
-    nearest cosine neighbors (self excluded).
-
-    Returns (id, label, predicted_label, n_agree, mislabeled) — rows
-    whose neighborhood disagrees with their own label are candidate
-    annotation errors, the standard kNN-consistency data-quality check
-    before training.
-
-    EXPLICIT SMALL-CORPUS OPTION — collects the corpus to the driver
-    and broadcasts it; the registry and any at-scale caller use
-    ``knn_label_vote_grid`` (fully distributed; the same output).
-
-    Same blocked-BLAS shape as ``embedding_neardup_pairs_blas``: the
-    corpus matrix is L2-normalized and broadcast, ``mapInPandas``
-    streams batches through one dense matmul, so the scan never
-    shuffles. Determinism for oracle parity: similarities are rounded
-    to 6 dp, neighbors rank by (cosine DESC, id ASC), and vote ties
-    break toward the smaller label — all mirrored in the DuckDB twin.
-    The dense broadcast path holds to ~1M vectors at d=64.
-    """
-    import numpy as np
-    import pandas as pd
-
-    rows = df.select(id_col, vec_col, label_col).collect()
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    labels = np.array([r[2] for r in rows], dtype=np.int64)
-    mat = np.array([r[1] for r in rows], dtype=np.float64)
-    mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-    sc = df.sparkSession.sparkContext
-    b = sc.broadcast((ids, labels, mat))
-
-    def _vote(batches):
-        all_ids, all_labels, all_mat = b.value
-        # Rank by (-cosine, id): argsort a stable composite via lexsort.
-        for pdf in batches:
-            q = np.array(list(pdf[vec_col]), dtype=np.float64)
-            q /= np.linalg.norm(q, axis=1, keepdims=True)
-            sims = _round_away(q @ all_mat.T, 6)
-            qid = pdf[id_col].to_numpy(dtype=np.int64)
-            qlab = pdf[label_col].to_numpy(dtype=np.int64)
-            out = {c: [] for c in
-                   (id_col, label_col, "predicted_label", "n_agree")}
-            for i in range(sims.shape[0]):
-                s = sims[i].copy()
-                s[all_ids == qid[i]] = -np.inf  # exclude self
-                order = np.lexsort((all_ids, -s))[:k]
-                votes: dict[int, int] = {}
-                for lb in all_labels[order]:
-                    votes[int(lb)] = votes.get(int(lb), 0) + 1
-                pred, n = min(votes.items(), key=lambda kv: (-kv[1], kv[0]))
-                out[id_col].append(qid[i])
-                out[label_col].append(qlab[i])
-                out["predicted_label"].append(pred)
-                out["n_agree"].append(n)
-            res = pd.DataFrame(out)
-            res["mislabeled"] = res["predicted_label"] != res[label_col]
-            yield res
-
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField(label_col, T.IntegerType()),
-            T.StructField("predicted_label", T.IntegerType()),
-            T.StructField("n_agree", T.IntegerType()),
-            T.StructField("mislabeled", T.BooleanType()),
-        ]
-    )
-    return df.select(id_col, vec_col, label_col).mapInPandas(
-        _vote, schema=schema
-    )
-
-
-def hard_negative_mining(
-    df: DataFrame,
-    k: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-) -> DataFrame:
-    """Contrastive-training data prep: for every anchor vector, the k
-    most-similar vectors carrying a DIFFERENT label — the "hard
-    negatives" that make contrastive / triplet losses informative
-    (easy negatives contribute ~zero gradient).
-
-    Returns (id, label, neg_id, neg_label, cosine, rank), rank 1..k by
-    (cosine DESC, neg_id ASC) over 6-dp-rounded similarities; the
-    emitted cosine is rounded to 4 dp so engines agree bit-for-bit.
-
-    EXPLICIT SMALL-CORPUS OPTION — collects the corpus to the driver
-    and broadcasts it; the registry and any at-scale caller use
-    ``hard_negative_mining_grid`` (bit-identical output, fully
-    distributed).
-
-    Same blocked-BLAS shape as ``knn_label_vote``: the L2-normalized
-    corpus matrix is broadcast once and each Arrow batch does a single
-    dense matmul with same-label columns masked out, so the anchor
-    scan never shuffles. The dense broadcast path holds to ~1M
-    vectors at d=64.
-    """
-    import numpy as np
-    import pandas as pd
-
-    rows = df.select(id_col, vec_col, label_col).collect()
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    labels = np.array([r[2] for r in rows], dtype=np.int64)
-    mat = np.array([r[1] for r in rows], dtype=np.float64)
-    mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-    sc = df.sparkSession.sparkContext
-    b = sc.broadcast((ids, labels, mat))
-
-    def _mine(batches):
-        all_ids, all_labels, all_mat = b.value
-        for pdf in batches:
-            q = np.array(list(pdf[vec_col]), dtype=np.float64)
-            q /= np.linalg.norm(q, axis=1, keepdims=True)
-            sims = _round_away(q @ all_mat.T, 6)
-            qid = pdf[id_col].to_numpy(dtype=np.int64)
-            qlab = pdf[label_col].to_numpy(dtype=np.int64)
-            out = {c: [] for c in
-                   (id_col, label_col, "neg_id", "neg_label",
-                    "cosine", "rank")}
-            for i in range(sims.shape[0]):
-                s = sims[i].copy()
-                s[all_labels == qlab[i]] = -np.inf  # negatives only
-                order = np.lexsort((all_ids, -s))[:k]
-                for r, j in enumerate(order, start=1):
-                    if s[j] == -np.inf:
-                        break
-                    out[id_col].append(qid[i])
-                    out[label_col].append(qlab[i])
-                    out["neg_id"].append(all_ids[j])
-                    out["neg_label"].append(int(all_labels[j]))
-                    out["cosine"].append(
-                        float(_round_away(sims[i][j], 4))
-                    )
-                    out["rank"].append(r)
-            yield pd.DataFrame(out)
-
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField(label_col, T.IntegerType()),
-            T.StructField("neg_id", T.LongType()),
-            T.StructField("neg_label", T.IntegerType()),
-            T.StructField("cosine", T.DoubleType()),
-            T.StructField("rank", T.IntegerType()),
-        ]
-    )
-    return df.select(id_col, vec_col, label_col).mapInPandas(
-        _mine, schema=schema
-    )
-
-
 # ----------------------------------------------------------------------
 # Blocked pair-grid: exact dense similarity WITHOUT driver/broadcast
-# materialization of the corpus. The 100 TB-shaped twin of the
-# ``*_blas`` broadcast functions above.
+# materialization of the corpus: the family's exact tier.
 # ----------------------------------------------------------------------
 
 
@@ -1096,8 +828,7 @@ def embedding_neardup_pairs_grid(
 ) -> DataFrame:
     """All-pairs cosine ≥ threshold via a blocked BLAS pair grid —
     exact, and fully distributed (no driver collect, no corpus-wide
-    broadcast; contrast ``embedding_neardup_pairs_blas``, the explicit
-    small-corpus option this replaces in the registry).
+    broadcast).
 
     The corpus is packed into ``n_blocks`` chunk rows (one shuffle),
     the chunk table self-joined into the upper-triangle grid of block
@@ -1105,8 +836,8 @@ def embedding_neardup_pairs_grid(
     (``_np_pairs_emit``: normalized float64 dot, rounded half away
     from zero to ``round_to`` like DuckDB's ROUND, threshold on the
     ROUNDED value), emitting pairs with id_a < id_b. Each unordered
-    pair lives in exactly one cell. Same rows as the LSH and IVF
-    tiers' verify and the ``_blas`` twin.
+    pair lives in exactly one cell. The LSH and IVF tiers verify
+    their groups with the same kernel.
     """
     import numpy as np
 
@@ -1184,10 +915,14 @@ def knn_label_vote_grid(
     label_col: str = "label",
     n_blocks: int | None = None,
 ) -> DataFrame:
-    """Exact kNN label-consistency audit without materializing the
-    corpus on the driver (the 100 TB-shaped twin of
-    ``knn_label_vote``, which ranks on half-to-even rounded cosines —
-    the two can differ only on exact .5 ties at 6 dp).
+    """Label-noise audit: majority label vote among each vector's k
+    nearest cosine neighbors (self excluded), exact, without
+    materializing the corpus on the driver.
+
+    Returns (id, label, predicted_label, n_agree, mislabeled) — rows
+    whose neighborhood disagrees with their own label are candidate
+    annotation errors, the standard kNN-consistency data-quality check
+    before training.
 
     Candidate generation is the blocked pair grid
     (``_grid_topk_scored``): each cell emits its local top-k rows per
@@ -1211,9 +946,13 @@ def hard_negative_mining_grid(
     label_col: str = "label",
     n_blocks: int | None = None,
 ) -> DataFrame:
-    """Exact top-k hard negatives per anchor via the blocked pair grid
-    (the 100 TB-shaped twin of ``hard_negative_mining`` — no driver
-    collect, no corpus broadcast).
+    """Contrastive-training data prep: for every anchor vector, the k
+    most-similar vectors carrying a DIFFERENT label — the "hard
+    negatives" that make contrastive / triplet losses informative —
+    exact, via the blocked pair grid (no driver collect, no corpus
+    broadcast).
+
+    Returns (id, label, neg_id, neg_label, cosine, rank), rank 1..k.
 
     Each grid cell masks same-label columns and emits its local top-k
     negatives per anchor under (cosine@6dp DESC, id ASC)
@@ -1691,8 +1430,8 @@ def _np_topk_emit(
     masked, (optionally) same-label masked, per-query top-k under the
     (cosine DESC, id ASC) total order. NaN sims rank GREATEST (Spark /
     DuckDB NaN-greatest ordering — numpy would sort them last, which
-    would silently diverge from the pair-gather twin on degenerate
-    vectors). Returns per-chunk column arrays of ``_SCORED_FIELDS`` for
+    would silently diverge from the oracle on degenerate vectors).
+    Returns per-chunk column arrays of ``_SCORED_FIELDS`` for
     ``_frame``.
 
     The order is one int64 key per (query, member), ascending: a
@@ -1805,11 +1544,12 @@ def _frame(cols, fields):
 def _dedup_scored(scored: DataFrame) -> DataFrame:
     """Collapse cross-group re-emissions of the same directed
     candidate (a pair sharing >1 probed bucket/cell is scored once
-    per shared group). max-agg rather than distinct, for the same
-    reason as the IVF pairs path: two emissions compute the dot in
-    different GEMM shapes, and a value landing exactly on a rounding
-    boundary could round differently per group — distinct would then
-    keep both rows."""
+    per shared group). max-agg rather than distinct: two emissions
+    compute the dot in different GEMM shapes, and a value landing
+    exactly on a rounding boundary could round differently per group —
+    distinct would then keep both rows (the same rule as the pair
+    consumers' dedup in ``_grouped_threshold_pairs`` and
+    ``embedding_neardup_pairs_ivf``)."""
     return scored.groupBy("qid", "qlabel", "nid", "nlabel").agg(
         F.max("c").alias("c")
     )
@@ -2099,8 +1839,7 @@ def _vote_tail(
 ) -> DataFrame:
     """Global top-k merge + majority vote + smaller-label tie-break
     over (qid, qlabel, nid, nlabel, c) candidate rows — the shared
-    tail of every kNN label-audit tier (grid / LSH / IVF, pair-gather
-    or bucket-GEMM verify)."""
+    tail of every kNN label-audit tier (grid / LSH / IVF)."""
     w_rank = Window.partitionBy("qid").orderBy(
         F.col("c").desc(), F.col("nid").asc()
     )
@@ -2149,39 +1888,6 @@ def _hardneg_tail(
     )
 
 
-def _check_verify(verify: str, allowed: tuple[str, str]) -> None:
-    """Reject an unknown ``verify=`` before any Spark job runs: a typo
-    would otherwise silently fall through to the pair-gather branch,
-    changing the physical plan the caller asked for."""
-    if verify not in allowed:
-        raise ValueError(f"unknown verify: {verify!r}")
-
-
-def _pair_scored(
-    df: DataFrame,
-    cand: DataFrame,
-    id_col: str,
-    vec_col: str,
-    label_col: str,
-    cross_label_only: bool,
-) -> DataFrame:
-    """The ``verify='pairs'`` leg of the per-anchor consumers: exact
-    6 dp cosine of every directed candidate pair as (qid, qlabel, nid,
-    nlabel, c) rows, same-label pairs dropped if ``cross_label_only``."""
-    scored = candidate_pair_cosine(
-        df, cand, id_col, vec_col, label_col, decimals=6
-    )
-    if cross_label_only:
-        scored = scored.filter(F.col("label_a") != F.col("label_b"))
-    return scored.select(
-        F.col("id_a").alias("qid"),
-        F.col("label_a").alias("qlabel"),
-        F.col("id_b").alias("nid"),
-        F.col("label_b").alias("nlabel"),
-        F.col("cosine").alias("c"),
-    )
-
-
 def _lsh_scored(
     df: DataFrame,
     k: int,
@@ -2192,39 +1898,29 @@ def _lsh_scored(
     id_col: str,
     vec_col: str,
     label_col: str,
-    verify: str,
     cross_label_only: bool,
 ) -> DataFrame:
     """Scored candidate neighbors of the LSH tier's per-anchor
     consumers (kNN vote, hard negatives), ready for their global tail.
 
-    ``verify='buckets'``: per-(table, bucket) dense GEMM + vectorized
-    local top-k — top-k distributes over the bucket cover, so
-    per-bucket top-k ⊇ global top-k (the grid kernel's argument; with
-    ``cross_label_only`` the same-label mask applies inside the kernel
-    and the argument holds on the masked order). Candidate pairs are
-    never materialized; on dup-heavy corpora this replaces the
-    pair-gather whose candidate volume was near-quadratic per bucket
-    (the 201 s x10 row). ``verify='pairs'`` scores every directed
-    LSH candidate pair."""
-    _check_verify(verify, ("buckets", "pairs"))
+    Per-(table, bucket) dense GEMM + vectorized local top-k — top-k
+    distributes over the bucket cover, so per-bucket top-k ⊇ global
+    top-k (the grid kernel's argument; with ``cross_label_only`` the
+    same-label mask applies inside the kernel and the argument holds
+    on the masked order). Candidate pairs are never materialized: on
+    dup-heavy corpora a pair-gather's candidate volume is
+    near-quadratic per bucket (the 201 s x10 row)."""
     if n_planes is None:
         n_planes = auto_planes(df.count())
-    if verify == "buckets":
-        queries, members = _lsh_assigned_vec_rows(
-            df, dim, n_planes, n_tables, multiprobe,
-            id_col, vec_col, label_col,
-        )
-        return _grouped_topk_scored(
-            queries, members, ["t", "b"], k,
-            id_col, vec_col, label_col, decimals=6,
-            cross_label_only=cross_label_only,
-        )
-    cand = lsh_candidates(
-        df, dim, n_planes, n_tables, multiprobe, id_col, vec_col,
-        ordered=False,
+    queries, members = _lsh_assigned_vec_rows(
+        df, dim, n_planes, n_tables, multiprobe,
+        id_col, vec_col, label_col,
     )
-    return _pair_scored(df, cand, id_col, vec_col, label_col, cross_label_only)
+    return _grouped_topk_scored(
+        queries, members, ["t", "b"], k,
+        id_col, vec_col, label_col, decimals=6,
+        cross_label_only=cross_label_only,
+    )
 
 
 def embedding_neardup_pairs_ann(
@@ -2237,7 +1933,6 @@ def embedding_neardup_pairs_ann(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     round_to: int = 4,
-    verify: str = "buckets",
 ) -> DataFrame:
     """Semantic near-dup pairs, ANN tier: LSH candidate pairs → exact
     cosine verify ≥ threshold (threshold applies to the rounded value,
@@ -2251,45 +1946,23 @@ def embedding_neardup_pairs_ann(
     (candidates AND verify) replays in oracle SQL — the output is
     exact-checkable, only its candidate set is approximate.
 
-    ``verify='buckets'`` (default) is the bucket-GEMM verify:
-    candidate pairs are never materialized — vectors shuffle once to
-    their (table, bucket) groups (queries probe-expanded, the
-    Hamming≤1 one-side scheme) and each group runs one dense
-    normalized matmul, emitting only above-threshold pairs. On
-    duplicate-heavy corpora, where per-bucket candidate density is
-    near-quadratic, this replaces the generic pair-gather whose
-    ~0.6M pairs/s rate was the x10 wall (round-4 study).
-    ``verify='pairs'`` routes the distinct candidate pair set through
-    ``candidate_pair_cosine`` — identical output (up to the module
-    docstring's caveat), kept for candidate sets consumers want to
-    inspect and for cross-tier comparability.
+    The verify is a bucket GEMM: candidate pairs are never
+    materialized — vectors shuffle once to their (table, bucket)
+    groups (queries probe-expanded, the Hamming≤1 one-side scheme) and
+    each group runs one dense normalized matmul, emitting only
+    above-threshold pairs. On duplicate-heavy corpora, where
+    per-bucket candidate density is near-quadratic, a generic
+    pair-gather's ~0.6M pairs/s is the x10 wall (round-4 study).
     """
-    _check_verify(verify, ("buckets", "pairs"))
     if n_planes is None:
         n_planes = auto_planes(df.count())
-    if verify == "buckets":
-        queries, members = _lsh_assigned_vec_rows(
-            df, dim, n_planes, n_tables, multiprobe,
-            id_col, vec_col, None,
-        )
-        return _grouped_threshold_pairs(
-            queries, members, ["t", "b"], threshold,
-            id_col, vec_col, round_to,
-        )
-    # distinct BEFORE verify: the candidate multiset carries a
-    # tables x probes duplication factor (measured 167M rows at 60k
-    # vectors), and every duplicate row pays the Arrow round-trip in
-    # the verify stage — a skinny-pair shuffle is far cheaper than
-    # pushing the multiset through Python.
-    cand = lsh_candidates(
-        df, dim, n_planes, n_tables, multiprobe, id_col, vec_col,
-        ordered=True, distinct=True,
+    queries, members = _lsh_assigned_vec_rows(
+        df, dim, n_planes, n_tables, multiprobe,
+        id_col, vec_col, None,
     )
-    scored = candidate_pair_cosine(
-        df, cand, id_col, vec_col, decimals=round_to
-    )
-    return scored.filter(_neardup_threshold(threshold)).select(
-        "id_a", "id_b", "cosine"
+    return _grouped_threshold_pairs(
+        queries, members, ["t", "b"], threshold,
+        id_col, vec_col, round_to,
     )
 
 
@@ -2303,19 +1976,17 @@ def knn_label_vote_ann(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     label_col: str = "label",
-    verify: str = "buckets",
 ) -> DataFrame:
     """kNN label-consistency audit, ANN tier: neighbors restricted to
     LSH candidates (Hamming≤1 in any table), exact cosine re-rank to
-    top-k, then the same majority vote / tie-break contract as the
-    exact twin ``knn_label_vote_grid``. Rows whose buckets hold no
-    other vector emit no vote (both engines replay identically).
-    ``verify='buckets'`` (default) scores candidates with per-bucket
-    GEMMs, ``verify='pairs'`` by pair-gather (``_lsh_scored``).
+    top-k (per-bucket GEMMs, ``_lsh_scored``), then the same majority
+    vote / tie-break contract as the exact twin ``knn_label_vote_grid``.
+    Rows whose buckets hold no other vector emit no vote (both engines
+    replay identically).
     """
     scored = _lsh_scored(
         df, k, dim, n_planes, n_tables, multiprobe,
-        id_col, vec_col, label_col, verify, cross_label_only=False,
+        id_col, vec_col, label_col, cross_label_only=False,
     )
     return _vote_tail(scored, k, id_col, label_col)
 
@@ -2330,19 +2001,17 @@ def hard_negative_mining_ann(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     label_col: str = "label",
-    verify: str = "buckets",
 ) -> DataFrame:
     """Contrastive hard negatives, ANN tier: LSH candidates with the
-    same-label pairs masked, exact cosine re-rank to the top-k
-    different-label neighbors per anchor. Ranking at 6 dp (cosine
-    DESC, id ASC); emitted cosine re-rounds to 4 dp half-away — the
-    exact twin ``hard_negative_mining_grid``'s contract.
-    ``verify='buckets'`` (default) scores candidates with per-bucket
-    GEMMs, ``verify='pairs'`` by pair-gather (``_lsh_scored``).
+    same-label pairs masked, exact cosine re-rank (per-bucket GEMMs,
+    ``_lsh_scored``) to the top-k different-label neighbors per
+    anchor. Ranking at 6 dp (cosine DESC, id ASC); emitted cosine
+    re-rounds to 4 dp half-away — the exact twin
+    ``hard_negative_mining_grid``'s contract.
     """
     scored = _lsh_scored(
         df, k, dim, n_planes, n_tables, multiprobe,
-        id_col, vec_col, label_col, verify, cross_label_only=True,
+        id_col, vec_col, label_col, cross_label_only=True,
     )
     return _hardneg_tail(scored, k, id_col, label_col)
 
@@ -2523,7 +2192,6 @@ def embedding_neardup_incremental_ivf(
     round_to: int = 4,
     store_cells: DataFrame | None = None,
     fold: str = "serial",
-    verify: str = "cells",
 ) -> DataFrame:
     """Daily-ingest semantic near-dup on the IVF tier: exact-verified
     pairs between a NEW batch and the existing STORE via shared
@@ -2540,21 +2208,18 @@ def embedding_neardup_incremental_ivf(
     ``auto_cells`` k — and retrain/re-assign only when drift warrants
     (the classic IVF maintenance cycle).
 
-    ``verify='cells'`` (default) is the directed cell-native GEMM:
-    both sides cogroup on the cell key and pair volume exists only as
-    FLOPs inside each task (``_grouped_threshold_pairs`` with
-    ``upper=False``, store rows as queries). The r8
-    x100 study caught the previous default — ``verify='pairs'``, kept
-    for cross-tier comparability — materializing AND checkpointing the
-    full same-cell store×batch pair list before verifying: ~160M rows
-    at 60k vectors under the pinned k_cells=8 parity config, billions
-    at 600k. A pair sharing >1 probed cell dedups by max-agg
-    (different GEMM shapes may round a boundary dot differently —
-    the embedding_neardup_pairs_ivf lesson).
+    The verify is the directed cell-native GEMM: both sides cogroup on
+    the cell key and pair volume exists only as FLOPs inside each task
+    (``_grouped_threshold_pairs`` with ``upper=False``, store rows as
+    queries). Materializing the same-cell store×batch pair list
+    instead costs ~160M rows at 60k vectors under the pinned
+    k_cells=8 parity config, billions at 600k (r8 x100 study). A pair
+    sharing >1 probed cell dedups by max-agg (different GEMM shapes
+    may round a boundary dot differently — the
+    embedding_neardup_pairs_ivf lesson).
 
     Returns (store_id, batch_id, cosine ≥ threshold at ``round_to``).
     """
-    _check_verify(verify, ("cells", "pairs"))
     if store_cells is not None and centroids is None:
         # A persisted cell table is only meaningful WITH the centroids
         # that produced it: re-deriving defaults here would assign the
@@ -2580,29 +2245,16 @@ def embedding_neardup_incremental_ivf(
     cb = _ivf_cell_rows(
         batch, centroids, n_probe, id_col, vec_col, fold=fold
     )
-    if verify == "cells":
-        ca_vec = cs.join(store.select(id_col, vec_col), id_col)
-        cb_vec = cb.join(batch.select(id_col, vec_col), id_col)
-        pairs = _grouped_threshold_pairs(
-            ca_vec, cb_vec, ["cell"], threshold, id_col, vec_col,
-            round_to, upper=False,
-        )
-        return pairs.select(
-            F.col("id_a").alias("store_id"),
-            F.col("id_b").alias("batch_id"),
-            "cosine",
-        )
-    cand = (
-        cs.select(F.col(id_col).alias("id_a"), "cell")
-        .join(cb.select(F.col(id_col).alias("id_b"), "cell"), "cell")
-        .select("id_a", "id_b")
-        .distinct()
-        # cand feeds two jobs (the eager pack via the semi-join, then
-        # the cogroup) — checkpoint or the store assignment re-runs
-        .localCheckpoint()
+    ca_vec = cs.join(store.select(id_col, vec_col), id_col)
+    cb_vec = cb.join(batch.select(id_col, vec_col), id_col)
+    pairs = _grouped_threshold_pairs(
+        ca_vec, cb_vec, ["cell"], threshold, id_col, vec_col,
+        round_to, upper=False,
     )
-    return _incremental_verify_pairs(
-        store, batch, cand, threshold, id_col, vec_col, round_to
+    return pairs.select(
+        F.col("id_a").alias("store_id"),
+        F.col("id_b").alias("batch_id"),
+        "cosine",
     )
 
 
@@ -2919,9 +2571,9 @@ def _cell_dense_pairs(
     (O(n·cell·probe²) with auto_cells), done at dense-BLAS rates
     instead of the generic pair-gather's ~0.6M pairs/s (measured:
     100k vectors / 15.5M candidates — 27s via candidate_pair_cosine,
-    ~3s here; the gather path stays as ``verify='pairs'`` for
-    candidate sets that do NOT share a grouping key, e.g. LSH
-    multi-table candidates). ``chunk_rows`` bounds the per-task sims
+    ~3s here; ``candidate_pair_cosine`` stays for candidate lists
+    that do NOT share a grouping key, e.g. the incremental LSH
+    store×batch probe). ``chunk_rows`` bounds the per-task sims
     matrix (chunk_rows × cell_rows float64) — the x30 OOM lesson from
     the pair grid applies to skewed cells too.
     """
@@ -2967,48 +2619,6 @@ def _default_centroids(
     ]
 
 
-def ivf_candidates(
-    df: DataFrame,
-    centroids=None,
-    k_cells: int | None = None,
-    n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    ordered: bool = True,
-    fold: str = "serial",
-) -> DataFrame:
-    """Same-cell candidate pairs of the IVF tier — the composable
-    candidate generator (the analogue of ``lsh_candidates`` for
-    corpora with centroid structure). ``ordered=True`` emits each
-    unordered pair once (id_a < id_b — symmetric pair consumers);
-    ``ordered=False`` emits both directions (per-anchor top-k
-    consumers: kNN audit, hard-negative mining). Centroids default to
-    the first ``k_cells`` vectors by id (deterministic,
-    oracle-replayable); pass ``kmeans_train`` output for tighter
-    cells and ``auto_cells`` for the balanced k = probe·√n rule.
-    """
-    if centroids is None:
-        centroids = _default_centroids(
-            df, k_cells, n_probe, id_col, vec_col
-        )
-    cells = _ivf_cell_rows(
-        df, centroids, n_probe, id_col, vec_col, fold=fold
-    ).localCheckpoint()
-    a = cells.select(F.col(id_col).alias("id_a"), "cell")
-    b = cells.select(F.col(id_col).alias("id_b"), "cell")
-    cond = (
-        F.col("id_a") < F.col("id_b")
-        if ordered
-        else F.col("id_a") != F.col("id_b")
-    )
-    return (
-        a.join(b, "cell")
-        .filter(cond)
-        .select("id_a", "id_b")
-        .distinct()
-    )
-
-
 def _ivf_scored(
     df: DataFrame,
     k: int,
@@ -3017,48 +2627,39 @@ def _ivf_scored(
     id_col: str,
     vec_col: str,
     label_col: str,
-    verify: str,
     n_salt: int | None,
     cross_label_only: bool,
 ) -> DataFrame:
     """Scored candidate neighbors of the IVF tier's per-anchor
     consumers (kNN vote, hard negatives), ready for their global tail.
 
-    ``verify='cells'`` is the directed analogue of the pairs path's
-    cells verify: vectors shuffle once to their probed cells (with the
-    label carried — no join back), each cell GEMMs against itself
-    (same-label pairs masked inside the kernel if
-    ``cross_label_only``) and emits its local top-k per anchor.
-    Per-cell top-k ⊇ global top-k (top-k distributes over the cell
-    cover). Under a PINNED cell count the anchor side additionally
-    salts ``n_salt`` ways (default: enough that cells x salts covers
-    the task slots, see ``_auto_anchor_salt``) — members replicate per
-    salt so every anchor still sees the full cell, output unchanged,
-    parallelism x salt (the r6 x10 wall: 8 cells = 8 tasks on 32
-    cores). ``verify='pairs'`` scores every directed same-cell
-    candidate pair through the generic pair-gather."""
-    _check_verify(verify, ("cells", "pairs"))
-    if verify == "cells":
-        centroids = _default_centroids(
-            df, k_cells, n_probe, id_col, vec_col
-        )
-        assigned = _ivf_cell_vec_rows(
-            df, centroids, n_probe, id_col, vec_col, "serial",
-            extra_cols=(label_col,),
-        )
-        salt = (
-            n_salt
-            if n_salt is not None
-            else _auto_anchor_salt(df, len(centroids), n_probe)
-        )
-        return _salted_cell_topk_scored(
-            assigned, k, id_col, vec_col, label_col, salt,
-            decimals=6, cross_label_only=cross_label_only,
-        )
-    cand = ivf_candidates(
-        df, None, k_cells, n_probe, id_col, vec_col, ordered=False
+    The directed analogue of the near-dup cells verify: vectors
+    shuffle once to their probed cells (with the label carried — no
+    join back), each cell GEMMs against itself (same-label pairs
+    masked inside the kernel if ``cross_label_only``) and emits its
+    local top-k per anchor. Per-cell top-k ⊇ global top-k (top-k
+    distributes over the cell cover). Under a PINNED cell count the
+    anchor side additionally salts ``n_salt`` ways (default: enough
+    that cells x salts covers the task slots, see
+    ``_auto_anchor_salt``) — members replicate per salt so every
+    anchor still sees the full cell, output unchanged, parallelism x
+    salt (the r6 x10 wall: 8 cells = 8 tasks on 32 cores)."""
+    centroids = _default_centroids(
+        df, k_cells, n_probe, id_col, vec_col
     )
-    return _pair_scored(df, cand, id_col, vec_col, label_col, cross_label_only)
+    assigned = _ivf_cell_vec_rows(
+        df, centroids, n_probe, id_col, vec_col, "serial",
+        extra_cols=(label_col,),
+    )
+    salt = (
+        n_salt
+        if n_salt is not None
+        else _auto_anchor_salt(df, len(centroids), n_probe)
+    )
+    return _salted_cell_topk_scored(
+        assigned, k, id_col, vec_col, label_col, salt,
+        decimals=6, cross_label_only=cross_label_only,
+    )
 
 
 def knn_label_vote_ivf(
@@ -3069,7 +2670,6 @@ def knn_label_vote_ivf(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     label_col: str = "label",
-    verify: str = "cells",
     n_salt: int | None = None,
 ) -> DataFrame:
     """kNN label-consistency audit, IVF tier: neighbors restricted to
@@ -3082,13 +2682,12 @@ def knn_label_vote_ivf(
     centroid structure. Anchors alone in their cells emit no vote —
     both engines replay identically.
 
-    ``verify='cells'`` (default) scores candidates with per-cell
-    GEMMs, ``verify='pairs'`` by pair-gather; ``n_salt`` splits each
+    Candidates are scored with per-cell GEMMs; ``n_salt`` splits each
     cell's anchors under a pinned cell count (``_ivf_scored``).
     """
     scored = _ivf_scored(
         df, k, k_cells, n_probe, id_col, vec_col, label_col,
-        verify, n_salt, cross_label_only=False,
+        n_salt, cross_label_only=False,
     )
     return _vote_tail(scored, k, id_col, label_col)
 
@@ -3101,23 +2700,20 @@ def hard_negative_mining_ivf(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     label_col: str = "label",
-    verify: str = "cells",
     n_salt: int | None = None,
 ) -> DataFrame:
     """Contrastive hard negatives, IVF tier: directed same-cell
-    candidates with same-label pairs masked, exact cosine re-rank to
-    the top-k different-label neighbors per anchor. Ranking at 6 dp
-    (cosine DESC, id ASC); emitted cosine re-rounds to 4 dp half-away
-    — the exact twin ``hard_negative_mining_grid``'s contract. The
-    hard-negative use case needs the MOST similar cross-label rows;
-    on clustered corpora those share cells by construction.
-
-    ``verify='cells'`` (default) scores candidates with per-cell
-    GEMMs, ``verify='pairs'`` by pair-gather (``_ivf_scored``).
+    candidates with same-label pairs masked, exact cosine re-rank
+    (per-cell GEMMs, ``_ivf_scored``) to the top-k different-label
+    neighbors per anchor. Ranking at 6 dp (cosine DESC, id ASC);
+    emitted cosine re-rounds to 4 dp half-away — the exact twin
+    ``hard_negative_mining_grid``'s contract. The hard-negative use
+    case needs the MOST similar cross-label rows; on clustered corpora
+    those share cells by construction.
     """
     scored = _ivf_scored(
         df, k, k_cells, n_probe, id_col, vec_col, label_col,
-        verify, n_salt, cross_label_only=True,
+        n_salt, cross_label_only=True,
     )
     return _hardneg_tail(scored, k, id_col, label_col)
 
@@ -3132,7 +2728,6 @@ def embedding_neardup_pairs_ivf(
     vec_col: str = "embedding",
     round_to: int = 4,
     fold: str = "serial",
-    verify: str = "cells",
 ) -> DataFrame:
     """Semantic near-dup pairs, IVF tier — the candidate generator
     that actually scales (SCALING.md round 4): vectors are assigned to
@@ -3159,47 +2754,32 @@ def embedding_neardup_pairs_ivf(
 
     Exact-cosine verify on candidates only, threshold on the
     ``round_to``-rounded value — the grid/ANN family contract.
-    ``verify='cells'`` (default) never materializes candidate pairs:
-    vectors shuffle once to their cells (O(n·probe·dim) bytes) and
-    each cell runs a dense normalized GEMM, emitting only
-    above-threshold pairs — the IVF-native shape (measured at 100k
-    vectors: 27s via the generic pair-gather vs ~3s here).
-    ``verify='pairs'`` routes the same-cell candidate set through
-    ``candidate_pair_cosine`` (the LSH tier's verify) — identical
-    output, kept for cross-tier comparability.
+    Candidate pairs are never materialized: vectors shuffle once to
+    their cells (O(n·probe·dim) bytes) and each cell runs a dense
+    normalized GEMM, emitting only above-threshold pairs — the
+    IVF-native shape (measured at 100k vectors: 27s via a generic
+    pair-gather vs ~3s here).
     """
-    _check_verify(verify, ("cells", "pairs"))
     if centroids is None:
         centroids = _default_centroids(
             df, k_cells, n_probe, id_col, vec_col
         )
-    if verify == "cells":
-        assigned = _ivf_cell_vec_rows(
-            df, centroids, n_probe, id_col, vec_col, fold
-        )
-        pairs = _cell_dense_pairs(
-            assigned, threshold, id_col, vec_col, round_to
-        )
-        # a pair sharing >1 probed cell is emitted once per shared
-        # cell; dedup is output-sized. max-agg rather than distinct:
-        # the two emissions compute the dot in different GEMM shapes
-        # (different cell matrices / chunk offsets), and BLAS
-        # accumulation order is not guaranteed identical across
-        # shapes — a dot landing exactly on a 4dp rounding boundary
-        # could round differently per cell, and distinct() would
-        # then keep BOTH rows for one pair
-        return pairs.groupBy("id_a", "id_b").agg(
-            F.max("cosine").alias("cosine")
-        )
-    cand = ivf_candidates(
-        df, centroids, None, n_probe, id_col, vec_col,
-        ordered=True, fold=fold,
+    assigned = _ivf_cell_vec_rows(
+        df, centroids, n_probe, id_col, vec_col, fold
     )
-    scored = candidate_pair_cosine(
-        df, cand, id_col, vec_col, decimals=round_to
+    pairs = _cell_dense_pairs(
+        assigned, threshold, id_col, vec_col, round_to
     )
-    return scored.filter(_neardup_threshold(threshold)).select(
-        "id_a", "id_b", "cosine"
+    # a pair sharing >1 probed cell is emitted once per shared
+    # cell; dedup is output-sized. max-agg rather than distinct:
+    # the two emissions compute the dot in different GEMM shapes
+    # (different cell matrices / chunk offsets), and BLAS
+    # accumulation order is not guaranteed identical across
+    # shapes — a dot landing exactly on a 4dp rounding boundary
+    # could round differently per cell, and distinct() would
+    # then keep BOTH rows for one pair
+    return pairs.groupBy("id_a", "id_b").agg(
+        F.max("cosine").alias("cosine")
     )
 
 

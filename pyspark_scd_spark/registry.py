@@ -80,20 +80,23 @@ SELECT key, snap_date, o_orderstatus, o_orderpriority FROM (
 SCD_HASH_COLS = ["o_orderstatus", "o_orderpriority"]
 
 
-def order_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Orders as raw customer snapshot rows, several per (key, date)."""
-    return _t(spark, sf_dir, "orders").select(
+def order_rows(orders: DataFrame, *extra) -> DataFrame:
+    """Orders as raw customer snapshot rows, several per (key, date):
+    (key, snap_date, o_orderstatus, o_orderpriority, o_orderkey) and
+    then the ``extra`` columns."""
+    return orders.select(
         F.col("o_custkey").alias("key"),
         F.to_date("o_orderdate").alias("snap_date"),
         "o_orderstatus",
         "o_orderpriority",
         "o_orderkey",
+        *extra,
     )
 
 
 def order_snapshots(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scd.snapshot_dedup_aligned(
-        order_rows(spark, sf_dir),
+        order_rows(_t(spark, sf_dir, "orders")),
         ["key"],
         "snap_date",
         tiebreak_cols=["o_orderkey"],
@@ -249,7 +252,7 @@ def q_scd_employee_all(spark, sf_dir):
     # pipeline, so the whole SCD computes off ONE hash(key) exchange
     # and the global-max scalar branch is a bare scan+agg.
     out = scd.scd_apply(
-        order_rows(spark, sf_dir),
+        order_rows(_t(spark, sf_dir, "orders")),
         key_cols=["key"],
         time_col="snap_date",
         hash_cols=SCD_HASH_COLS,
@@ -369,23 +372,15 @@ def q_scd_merge_incremental(spark, sf_dir):
     # delete patterns; the closed-form oracle checks it end to end).
     # The dedup runs inside the same key window, so one exchange on the
     # key serves both.
-    orders = _t(spark, sf_dir, "orders")
-    yearly = (
-        orders.select(
-            F.col("o_custkey").alias("key"),
+    yearly = scd.snapshot_dedup_aligned(
+        order_rows(
+            _t(spark, sf_dir, "orders"),
             F.year("o_orderdate").alias("snap_year"),
-            F.to_date("o_orderdate").alias("snap_date"),
-            "o_orderstatus",
-            "o_orderpriority",
-            "o_orderkey",
-        )
-        .transform(
-            lambda df: scd.snapshot_dedup_aligned(
-                df, ["key"], "snap_year", ["snap_date", "o_orderkey"]
-            )
-        )
-        .drop("o_orderkey", "snap_date")
-    )
+        ),
+        ["key"],
+        "snap_year",
+        ["snap_date", "o_orderkey"],
+    ).drop("o_orderkey", "snap_date")
     return scd.scd_merge_tree(
         yearly, ["key"], "snap_year", SCD_HASH_COLS
     )
@@ -457,16 +452,9 @@ def q_scd_merge_incremental(spark, sf_dir):
     "which is the semantics the injective hardened hash encodes.",
 )
 def q_scd_schema_evolution(spark, sf_dir):
-    orders = _t(spark, sf_dir, "orders")
-    base = orders.select(
-        F.col("o_custkey").alias("key"),
-        F.to_date("o_orderdate").alias("snap_date"),
-        "o_orderstatus",
-        "o_orderpriority",
-        "o_orderkey",
-        F.floor(F.col("o_totalprice") / 50000)
-        .cast("int")
-        .alias("price_band"),
+    base = order_rows(
+        _t(spark, sf_dir, "orders"),
+        F.floor(F.col("o_totalprice") / 50000).cast("int").alias("price_band"),
     )
     pre = base.filter(F.col("snap_date") < "1998-01-01").drop(
         "price_band"
@@ -1524,7 +1512,8 @@ def _first_k_cent_sql(src: str, k_cells: int | None,
 
 def _ivf_cand_ctes(k_cells: int | None = 8, n_probe: int = 2,
                    ordered: bool = True, seed: bool = True) -> str:
-    """Oracle CTEs replaying ivf_candidates: first-k centroids by id
+    """Oracle CTEs replaying the IVF tier's candidate set — the
+    same-cell pairs its per-cell verify scores: first-k centroids by id
     (``_first_k_cent_sql``; ``seed=False`` uses an upstream
     ``cent(c, cv)`` table instead, e.g. trained centroids), top-
     ``n_probe`` cell assignment, DISTINCT same-cell id pairs as
@@ -4741,7 +4730,7 @@ def q_text_unigram_logprob(spark, sf_dir):
 )
 def q_scd_gap_as_delete(spark, sf_dir):
     df = scd.scd_apply(
-        order_rows(spark, sf_dir),
+        order_rows(_t(spark, sf_dir, "orders")),
         key_cols=["key"],
         time_col="snap_date",
         hash_cols=SCD_HASH_COLS,
@@ -7072,15 +7061,8 @@ def q_stream_dedup_watermark(spark, sf_dir):
 def _scd_snaps_prep(orders):
     """Shared snapshot projection for the SCD stream builders
     (module-level so both classify variants share one staging dir)."""
-    snaps = orders.select(
-        F.col("o_custkey").alias("key"),
-        F.to_date("o_orderdate").alias("snap_date"),
-        "o_orderstatus",
-        "o_orderpriority",
-        "o_orderkey",
-    )
-    deduped = scd.snapshot_dedup(
-        snaps, ["key", "snap_date"], tiebreak_cols=["o_orderkey"]
+    deduped = scd.snapshot_dedup_aligned(
+        order_rows(orders), ["key"], "snap_date", ["o_orderkey"]
     ).drop("o_orderkey")
     return scd.with_row_hash(deduped, SCD_HASH_COLS).select(
         "key", "snap_date", "row_hash"

@@ -8,16 +8,8 @@ it: the O(history) re-window becomes O(arriving rows) per micro-batch
 with O(entities) keyed state, the shape that survives a 100 TB
 accumulated history (history size never matters).
 
-Two implementations of the same operator:
-
-- ``scd_status_stream`` — ``applyInPandasWithState`` (GroupState API,
-  works everywhere Spark 3.4+ runs). This is the tested default.
-- ``scd_status_stream_tws`` — ``transformWithStateInPandas`` (Spark
-  4 arbitrary-state API: typed ValueState, RocksDB-backed, state
-  schema evolution). The TWS python protocol needs ``google.protobuf``
-  at runtime, which this container does not ship, so the function
-  raises a clear error when the dependency is missing and its test
-  skips; the implementation is real and runs where protobuf exists.
+The operator, ``scd_status_stream``, is built on
+``applyInPandasWithState`` (the GroupState API, on every Spark 3.4+).
 
 Semantics vs the batch operator (operators/scd.py with_change_status):
 - New / Changed / No Change match the batch classification.
@@ -159,87 +151,3 @@ def scd_status_stream(
         timeoutConf=timeout,
     )
 
-
-def tws_available() -> bool:
-    """transformWithStateInPandas needs google.protobuf for its state
-    server protocol; absent in this container (no pip installs).
-    Re-probed every round — last checked 2026-08-17 (round 13),
-    still absent; the gate test (tests/test_streaming.py) asserts
-    whichever branch is real."""
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def scd_status_stream_tws(
-    snapshots: DataFrame,
-    key_col: str = "key",
-    time_col: str = "snap_date",
-    hash_col: str = "row_hash",
-) -> DataFrame:
-    """Spark-4 ``transformWithStateInPandas`` form of
-    ``scd_status_stream``: typed ValueState, RocksDB state store,
-    state-schema evolution — the forward-looking API for custom
-    stateful operators. Same classification semantics.
-
-    Raises ``ImportError`` with a clear message when ``google.protobuf``
-    (required by the TWS python worker protocol) is unavailable.
-    """
-    if not tws_available():
-        raise ImportError(
-            "transformWithStateInPandas requires google.protobuf, which "
-            "is not installed in this environment; use "
-            "scd_status_stream (applyInPandasWithState) instead."
-        )
-    import pandas as pd
-    from pyspark.sql import types as T
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    key_type = snapshots.schema[key_col].dataType
-    time_type = snapshots.schema[time_col].dataType
-    out_schema = T.StructType(
-        [
-            T.StructField(key_col, key_type),
-            T.StructField(time_col, time_type),
-            T.StructField("change_status", T.StringType()),
-        ]
-    )
-
-    class _SCDProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._last = handle.getValueState("scd_last", "last_hash string")
-
-        def handleInputRows(self, key, rows, timer_values):
-            prev = self._last.get()
-            last_hash = prev[0] if prev is not None else None
-            batch = pd.concat(list(rows))
-            batch = batch.sort_values(time_col, kind="mergesort")
-            statuses, last_hash, _ = _classify(
-                last_hash,
-                batch[hash_col].tolist(),
-                batch[time_col].tolist(),
-            )
-            self._last.update((last_hash,))
-            yield pd.DataFrame(
-                {
-                    key_col: [key[0]] * len(statuses),
-                    time_col: batch[time_col].tolist(),
-                    "change_status": statuses,
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return snapshots.groupBy(key_col).transformWithStateInPandas(
-        _SCDProcessor(),
-        outputStructType=out_schema,
-        outputMode="append",
-        timeMode="none",
-    )

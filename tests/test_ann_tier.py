@@ -201,28 +201,6 @@ def test_ivf_near_identical_vectors_share_cells(spark):
         assert (j, 100 + j) in found, (j, found)
 
 
-def test_ivf_verify_paths_identical(spark, sf_dir):
-    """verify='cells' (within-cell dense GEMM, no candidate
-    materialization) and verify='pairs' (same-cell candidates through
-    the generic pair-gather) are two physical plans for ONE logical
-    operator: identical pair sets, identical 4dp cosines."""
-    e = _emb(spark, sf_dir)
-    cells = {
-        (r["id_a"], r["id_b"]): r["cosine"]
-        for r in similarity.embedding_neardup_pairs_ivf(
-            e, threshold=0.3, k_cells=8, n_probe=2, verify="cells"
-        ).collect()
-    }
-    pairs = {
-        (r["id_a"], r["id_b"]): r["cosine"]
-        for r in similarity.embedding_neardup_pairs_ivf(
-            e, threshold=0.3, k_cells=8, n_probe=2, verify="pairs"
-        ).collect()
-    }
-    assert cells == pairs
-    assert len(cells) > 0
-
-
 def test_ivf_knn_with_one_cell_equals_exact_grid(spark, sf_dir):
     """With k_cells=1 every vector shares the single cell, so the IVF
     candidate set degenerates to ALL pairs — the kNN audit must then
@@ -328,82 +306,6 @@ def test_auto_blocks_caps_chunk_rows(spark):
     assert b >= math.ceil(90_000 / 4000), b
 
 
-def test_lsh_bucket_verify_paths_identical(spark, sf_dir):
-    """verify='buckets' (per-(table,bucket) dense GEMM, candidates
-    never materialized) and verify='pairs' (distinct LSH candidates
-    through the generic pair-gather) are two physical plans for ONE
-    logical operator — identical pair sets and cosines for the
-    near-dup form, identical rows for both directed consumers."""
-    e = _emb(spark, sf_dir)
-    b = {
-        (r["id_a"], r["id_b"]): r["cosine"]
-        for r in similarity.embedding_neardup_pairs_ann(
-            e, 0.3, 64, 8, 8, verify="buckets"
-        ).collect()
-    }
-    p = {
-        (r["id_a"], r["id_b"]): r["cosine"]
-        for r in similarity.embedding_neardup_pairs_ann(
-            e, 0.3, 64, 8, 8, verify="pairs"
-        ).collect()
-    }
-    assert b == p
-    assert len(b) > 0
-
-    kb = sorted(
-        map(tuple, similarity.knn_label_vote_ann(
-            e, 5, 64, 8, 8, verify="buckets"
-        ).collect())
-    )
-    kp = sorted(
-        map(tuple, similarity.knn_label_vote_ann(
-            e, 5, 64, 8, 8, verify="pairs"
-        ).collect())
-    )
-    assert kb == kp
-
-    hb = sorted(
-        map(tuple, similarity.hard_negative_mining_ann(
-            e, 3, 64, 8, 8, verify="buckets"
-        ).collect())
-    )
-    hp = sorted(
-        map(tuple, similarity.hard_negative_mining_ann(
-            e, 3, 64, 8, 8, verify="pairs"
-        ).collect())
-    )
-    assert hb == hp
-
-
-def test_ivf_directed_verify_paths_identical(spark, sf_dir):
-    """The directed IVF consumers' cells verify (within-cell GEMM +
-    local top-k, the round-5 analogue of the pairs path's
-    verify='cells') matches the pair-gather twin row-for-row."""
-    e = _emb(spark, sf_dir)
-    kb = sorted(
-        map(tuple, similarity.knn_label_vote_ivf(
-            e, k=5, k_cells=8, n_probe=2, verify="cells"
-        ).collect())
-    )
-    kp = sorted(
-        map(tuple, similarity.knn_label_vote_ivf(
-            e, k=5, k_cells=8, n_probe=2, verify="pairs"
-        ).collect())
-    )
-    assert kb == kp
-    hb = sorted(
-        map(tuple, similarity.hard_negative_mining_ivf(
-            e, k=3, k_cells=8, n_probe=2, verify="cells"
-        ).collect())
-    )
-    hp = sorted(
-        map(tuple, similarity.hard_negative_mining_ivf(
-            e, k=3, k_cells=8, n_probe=2, verify="pairs"
-        ).collect())
-    )
-    assert hb == hp
-
-
 def test_bucket_verify_survives_column_pruning(spark, sf_dir):
     """Regression: the two cogroup legs descend from one checkpointed
     base; without fresh exprIds on the query leg, a downstream
@@ -411,9 +313,7 @@ def test_bucket_verify_survives_column_pruning(spark, sf_dir):
     raised KeyError on the id column. count() and a pruned select
     must both execute."""
     e = _emb(spark, sf_dir)
-    out = similarity.embedding_neardup_pairs_ann(
-        e, 0.3, 64, 8, 8, verify="buckets"
-    )
+    out = similarity.embedding_neardup_pairs_ann(e, 0.3, 64, 8, 8)
     assert out.count() > 0
     assert out.select("id_a", "id_b").count() == out.count()
 
@@ -436,38 +336,12 @@ def test_l2_rows_mixed_null_group():
     assert np.isnan(mat[2]).all()  # wrong-length degrades too
 
 
-def test_verify_validation_before_spark_jobs():
-    """An invalid verify= must raise without touching the DataFrame
-    (no count/collect jobs on the error path)."""
-    import pytest
-
-    from pyspark_scd_spark.operators import similarity
-
-    class _Boom:
-        def count(self):
-            raise AssertionError("Spark job ran on the error path")
-
-        def __getattr__(self, name):
-            raise AssertionError("DataFrame touched on the error path")
-
-    boom = _Boom()
-    with pytest.raises(ValueError, match="unknown verify"):
-        similarity.embedding_neardup_pairs_ann(
-            boom, threshold=0.3, dim=64, n_planes=None, verify="bucket"
-        )
-    with pytest.raises(ValueError, match="unknown verify"):
-        similarity.embedding_neardup_pairs_ivf(
-            boom, threshold=0.3, verify="cell"
-        )
-
-
 def test_grid_and_ivf_verify_agree_on_ties_and_zero_vectors(spark):
     """The exact grid and the IVF tier verify through one pairs
     kernel: a cosine exactly on a 4 dp rounding boundary (1/32) rounds
     half away from zero in both, as DuckDB's ROUND does (np.round
     would give 0.0312 and drop the pair), and a zero vector scores
-    NaN, which no threshold keeps (DuckDB scores it -1.0). The
-    driver-collect ``_blas`` twin rounds the tie the same way."""
+    NaN, which no threshold keeps (DuckDB scores it -1.0)."""
     schema = "vec_id bigint, embedding array<double>"
     tie = spark.createDataFrame(
         [(1, [1.0, 0.0, 0.0, 0.0, 0.0]), (2, [1.0, 31.0, 5.0, 6.0, 1.0])],
@@ -492,8 +366,6 @@ def test_grid_and_ivf_verify_agree_on_ties_and_zero_vectors(spark):
         return [sorted(map(tuple, out.collect())) for out in (grid, ivf)]
 
     assert both_tiers(tie, 0.0313) == [[(1, 2, 0.0313)]] * 2
-    blas = similarity.embedding_neardup_pairs_blas(tie, 0.0313)
-    assert sorted(map(tuple, blas.collect())) == [(1, 2, 0.0313)]
     assert both_tiers(zero, -0.5) == [[(1, 2, 0.0)]] * 2
 
 

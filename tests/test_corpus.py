@@ -109,7 +109,10 @@ def test_knn_label_vote_flags_planted_outlier(spark):
         rows.append((i, [0.0, 1.0 + 0.01 * i, 0.1], 1))
     rows.append((99, [1.0, 0.001, 0.1], 1))  # geometrically cluster 0
     df = spark.createDataFrame(rows, ["vec_id", "embedding", "label"])
-    out = {r["vec_id"]: r for r in similarity.knn_label_vote(df, k=5).collect()}
+    out = {
+        r["vec_id"]: r
+        for r in similarity.knn_label_vote_grid(df, k=5).collect()
+    }
     assert out[99]["mislabeled"] is True
     assert out[99]["predicted_label"] == 0
     assert out[0]["mislabeled"] is False

@@ -88,11 +88,20 @@ def test_brute_force_topk_ordering(vectors):
 
 
 def test_lsh_bucket_deterministic(vectors):
-    a = similarity.with_lsh_bucket(vectors, dim=4, n_planes=4).collect()
-    b = similarity.with_lsh_bucket(vectors, dim=4, n_planes=4).collect()
-    assert {(r["vec_id"], r["bucket"]) for r in a} == {
-        (r["vec_id"], r["bucket"]) for r in b
-    }
+    def buckets():
+        return {
+            (r["vec_id"], r["bucket"])
+            for r in vectors.select(
+                "vec_id",
+                similarity.lsh_bucket_expr("embedding", 4, 4).alias("bucket"),
+            ).collect()
+        }
+
+    a = buckets()
+    assert a == buckets()
+    # the SQL expression and the one-pass Arrow bucket rows agree
+    rows = similarity._lsh_bucket_rows(vectors, 4, 4, 1, "vec_id", "embedding")
+    assert a == {(r["vec_id"], r["b"]) for r in rows.collect()}
 
 
 def test_multimodal_meta_roundtrip(docs):
@@ -549,12 +558,13 @@ def test_staged_shingles_match_inline(spark, sf_dir, tmp_path):
     )
 
 
-def test_grid_matches_broadcast_dense_trio(spark):
-    """The distributed pair-grid forms must be bit-identical to the
-    legacy driver-collect broadcast forms on the same data — identical
-    per-pair float64 math, one emission per pair, same tie-breaks.
-    Uses a corpus bigger than n_blocks with duplicate/opposite/near
-    vectors so diagonal cells, cross cells and ties are all hit."""
+def test_grid_dense_trio_invariant_to_block_count(spark):
+    """The pair-grid forms give the same rows whatever the block
+    count: four blocks (diagonal and cross cells, each pair emitted
+    once) equal one block (one diagonal cell holding the whole
+    corpus). Uses a corpus bigger than n_blocks with planted near-dup
+    vectors across blocks so diagonal cells, cross cells and ties are
+    all hit."""
     import math
     import random
 
@@ -574,21 +584,20 @@ def test_grid_matches_broadcast_dense_trio(spark):
     def rows_of(d):
         return sorted(tuple(r) for r in d.collect())
 
-    assert rows_of(
-        similarity.embedding_neardup_pairs_blas(df, threshold=0.4)
-    ) == rows_of(
-        similarity.embedding_neardup_pairs_grid(df, threshold=0.4, n_blocks=4)
-    )
-    assert rows_of(similarity.knn_label_vote(df, k=5)) == rows_of(
-        similarity.knn_label_vote_grid(df, k=5, n_blocks=4)
-    )
-    assert rows_of(similarity.hard_negative_mining(df, k=3)) == rows_of(
-        similarity.hard_negative_mining_grid(df, k=3, n_blocks=4)
-    )
+    for op, kw in (
+        (similarity.embedding_neardup_pairs_grid, {"threshold": 0.4}),
+        (similarity.knn_label_vote_grid, {"k": 5}),
+        (similarity.hard_negative_mining_grid, {"k": 3}),
+    ):
+        one = rows_of(op(df, n_blocks=1, **kw))
+        assert one, op.__name__
+        assert rows_of(op(df, n_blocks=4, **kw)) == one, op.__name__
 
 
 def test_hard_negative_mining_semantics(spark):
-    from pyspark_scd_spark.operators.similarity import hard_negative_mining
+    from pyspark_scd_spark.operators.similarity import (
+        hard_negative_mining_grid,
+    )
 
     rows = [
         (1, [1.0, 0.0], 0),
@@ -598,7 +607,7 @@ def test_hard_negative_mining_semantics(spark):
         (5, [-1.0, 0.0], 2),
     ]
     df = spark.createDataFrame(rows, ["vec_id", "embedding", "label"])
-    out = hard_negative_mining(df, k=2).collect()
+    out = hard_negative_mining_grid(df, k=2).collect()
     by_anchor = {}
     for r in out:
         assert r["neg_label"] != r["label"]

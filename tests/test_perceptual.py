@@ -113,31 +113,46 @@ def test_phash_envelope_gates(spark):
 
 
 def test_tools_reference_existing_perceptual_names():
-    """The scale studies in tools/ call perceptual.<name> and
-    multimodal.<name> but never run in the test suite, so a renamed
-    operator or helper would only surface on a full-scale run. Scan
-    their ASTs (no Spark) and require every referenced name to
-    exist."""
+    """The scale studies in tools/ call perceptual.<name>,
+    multimodal.<name> and similarity.<name> but never run in the test
+    suite, so a renamed or removed operator or helper would only
+    surface on a full-scale run. Scan their ASTs (no Spark), resolve
+    each file's import aliases (``similarity as S``) and require every
+    referenced name to exist."""
     import ast
     import glob
     import os
 
-    from pyspark_scd_spark.operators import multimodal
+    from pyspark_scd_spark.operators import multimodal, similarity
 
-    modules = {"perceptual": perceptual, "multimodal": multimodal}
+    modules = {
+        "perceptual": perceptual,
+        "multimodal": multimodal,
+        "similarity": similarity,
+    }
+    package = "pyspark_scd_spark.operators"
     tools = os.path.join(os.path.dirname(__file__), "..", "tools")
     refs = {}
     for path in glob.glob(os.path.join(tools, "*.py")):
         with open(path) as f:
             tree = ast.parse(f.read())
+        # local name -> module name
+        bound = {
+            a.asname or a.name: a.name
+            for node in ast.walk(tree)
+            if isinstance(node, ast.ImportFrom) and node.module == package
+            for a in node.names
+            if a.name in modules
+        }
         for node in ast.walk(tree):
             if (
                 isinstance(node, ast.Attribute)
                 and isinstance(node.value, ast.Name)
-                and node.value.id in modules
+                and node.value.id in bound
             ):
                 refs.setdefault(
-                    (node.value.id, node.attr), os.path.basename(path)
+                    (bound[node.value.id], node.attr),
+                    os.path.basename(path),
                 )
     for mod in modules:
         assert any(m == mod for m, _ in refs), (

@@ -298,8 +298,8 @@ def test_dense_ann_trio_never_materializes_corpus_on_driver(
 ):
     """The registry's three dense-similarity queries must build their
     plans without ever collecting the embedding corpus to the driver
-    (the round-1 scale-killer: similarity.py's *_blas broadcast forms
-    did df.collect() at build time). localCheckpoint (executor-side
+    (the round-1 scale-killer: the since-removed broadcast forms did
+    df.collect() at build time). localCheckpoint (executor-side
     materialization) is allowed; collect/toPandas/toLocalIterator are
     not."""
     from pyspark.sql import DataFrame

@@ -166,6 +166,56 @@ def test_duplicate_drop_is_noop(spark, employee_all):
     assert a == b
 
 
+def test_dedup_aligned_keeps_one_null_time_row(spark):
+    """NULL is one more time value to the dedup: a key listed three
+    times with no date keeps only its highest-tiebreak NULL row, as
+    row_number()=1 per (key, time) does, and the SCD chain then sees
+    one undated row instead of labelling repeats Changed."""
+    from pyspark.sql import Window
+
+    rows = [
+        (1, None, "a", 10),
+        (1, None, "b", 11),
+        (1, None, "c", 12),
+        (1, d(1), "a", 1),
+        (1, d(1), "b", 2),
+        (1, d(2), "b", 3),
+        (2, None, "x", 5),
+        (2, d(1), "x", 6),
+    ]
+    df = spark.createDataFrame(
+        rows, f"employee_number int, {T} date, dept string, tb int"
+    )
+    got = sorted(
+        map(tuple, scd.snapshot_dedup_aligned(df, KEY, T, ["tb"]).collect()),
+        key=lambda r: (r[0], r[3]),
+    )
+    w = Window.partitionBy(*KEY, T).orderBy(F.col("tb").desc())
+    expected = sorted(
+        map(
+            tuple,
+            df.withColumn("rn", F.row_number().over(w))
+            .filter("rn = 1")
+            .drop("rn")
+            .collect(),
+        ),
+        key=lambda r: (r[0], r[3]),
+    )
+    assert got == expected
+    assert [r for r in got if r[0] == 1 and r[1] is None] == [
+        (1, None, "c", 12)
+    ]
+    out = scd.scd_apply(
+        df, key_cols=KEY, time_col=T, hash_cols=["dept"], tiebreak_cols=["tb"]
+    )
+    statuses = [
+        r["change_status"]
+        for r in out.filter(F.col("employee_number") == 1).collect()
+    ]
+    assert len(statuses) == 3
+    assert statuses.count("Changed") <= 1
+
+
 def test_invariants(employee_all):
     per_key = (
         employee_all.groupBy("employee_number")

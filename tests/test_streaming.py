@@ -344,58 +344,6 @@ def test_stateful_stream_scd_matches_batch(spark, sf_dir, tmp_path):
     assert got == expected
 
 
-def test_scd_stream_tws_gated(spark, sf_dir, tmp_path):
-    """The Spark-4 transformWithStateInPandas variant: runs the same
-    equivalence when protobuf is available, otherwise asserts the
-    documented clear-error gate."""
-    from pyspark_scd_spark.streaming import scd_stream
-
-    snaps = _scd_snaps(spark, sf_dir)
-    if not scd_stream.tws_available():
-        with pytest.raises(ImportError, match="protobuf"):
-            scd_stream.scd_status_stream_tws(snaps)
-        return
-
-    src = str(tmp_path / "snaps_tws")
-    snaps.write.mode("overwrite").parquet(src)
-    prev = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        stream = spark.readStream.schema(
-            spark.read.parquet(src).schema
-        ).parquet(src)
-        out = scd_stream.scd_status_stream_tws(stream)
-        q = (
-            out.writeStream.format("memory")
-            .queryName("scd_tws_out")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", str(tmp_path / "ck_tws"))
-            .start()
-        )
-        q.awaitTermination(180)
-        got = {
-            (r["key"], r["snap_date"]): r["change_status"]
-            for r in spark.sql("SELECT * FROM scd_tws_out").collect()
-        }
-    finally:
-        if prev is None:
-            spark.conf.unset(
-                "spark.sql.streaming.stateStore.providerClass"
-            )
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev
-            )
-    assert got == _scd_stream_expected(spark, snaps)
-
-
 def test_stream_stream_interval_join_matches_batch(spark, events_dir, tmp_path):
     from pyspark_scd_spark.streaming.join import (
         attribution_candidates_stream,
