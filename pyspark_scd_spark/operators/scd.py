@@ -13,8 +13,9 @@ scale hazards engineered out:
   task (reference jobs/create_employee_all.py:58,63,118,127). The max
   comes from a separate scalar source, by default the raw pre-dedup
   scan; ``scd_apply(global_max_source=...)`` lets a caller that knows
-  the latest time more cheaply (the daily job, from its history's
-  date partitions) skip scanning the history for it;
+  the latest time on the driver (the daily job, from its history's
+  date partitions and its drops' file names) pass it as a Column,
+  which stamps every row in one projection with no scalar branch;
 - each row's change date is the start of its run of equal fingerprints
   within its own entity, read off the same ordered key window as the
   status (``last`` run-opening date, ignoring NULLs): the dates of
@@ -159,7 +160,7 @@ def _with_global_max(
     df: DataFrame,
     time_col: str,
     out_col: str,
-    scalar_source: DataFrame | None = None,
+    scalar_source: DataFrame | Column | None = None,
 ) -> DataFrame:
     """Stamp the dataset-global max of ``time_col`` onto every row.
 
@@ -173,10 +174,13 @@ def _with_global_max(
     ``scalar_source``: optional cheaper lineage with the same max — the
     scalar branch is a separate plan subtree, so pointing it at the raw
     pre-dedup scan (``scd_apply``'s default) avoids re-running the
-    dedup/hash stages just to take a max, and a frame that already
-    holds the max (the daily job's: the pending drops' max and the
-    history's latest partition date) avoids scanning the history.
+    dedup/hash stages just to take a max. A Column (typically a
+    literal the caller already knows) is the max itself: it is stamped
+    in one projection, with no scalar branch, no aggregate and no
+    broadcast join.
     """
+    if isinstance(scalar_source, Column):
+        return df.withColumn(out_col, scalar_source)
     src = scalar_source if scalar_source is not None else df
     scalar = src.agg(F.max(time_col).alias(out_col))
     return df.crossJoin(F.broadcast(scalar))
@@ -252,7 +256,7 @@ def with_change_status(
     key_cols: Sequence[str],
     time_col: str,
     treat_gap_as_delete: bool = False,
-    global_max_source: DataFrame | None = None,
+    global_max_source: DataFrame | Column | None = None,
 ) -> DataFrame:
     """Classify every snapshot row as New / Changed / No Change / Deleted
     (``change_status``) and date when that status took effect
@@ -286,6 +290,8 @@ def with_change_status(
     ``global_max_source``: optional cheaper lineage for the scalar
     branch. It must hold the same latest ``time_col`` as ``df`` and, in
     gap mode (where it feeds the ranks), the same distinct times.
+    Outside gap mode it may also be a Column holding that latest time
+    (a literal): the plan then has no scalar branch at all.
 
     Everything comes from ONE ``partitionBy(key).orderBy(time)``
     window: first and last rows are where ``lag`` / ``lead`` of the
@@ -343,7 +349,7 @@ def current_view(
     key_cols: Sequence[str],
     time_col: str,
     stamp_global_max: bool = True,
-    global_max_source: DataFrame | None = None,
+    global_max_source: DataFrame | Column | None = None,
 ) -> DataFrame:
     """Latest row per entity (the SCD Type-1 "current" table).
 
@@ -381,7 +387,7 @@ def scd_apply(
     tiebreak_cols: Sequence[str] = (),
     hardened_hash: bool = False,
     treat_gap_as_delete: bool = False,
-    global_max_source: DataFrame | None = None,
+    global_max_source: DataFrame | Column | None = None,
 ) -> DataFrame:
     """The full ``employee_all`` pipeline as one transform chain
     (reference jobs/create_employee_all.py:236-240): dedup → hash →
@@ -403,10 +409,11 @@ def scd_apply(
     ``treat_gap_as_delete``, the snapshot ranks) comes from
     ``global_max_source``, by default the raw pre-dedup scan's
     ``time_col``, so its branch is scan+agg only. A caller that knows
-    the latest time more cheaply passes a frame holding it: the daily
-    job's history is partitioned by date, so its latest date is a
-    directory name and the source scans only the pending drops. In
-    gap mode the source must hold every distinct time.
+    the latest time on the driver passes it as a Column (outside gap
+    mode): the daily job reads it off its history's date partitions
+    and its drops' file names, so the plan scans each input once and
+    has no scalar branch. In gap mode the source must be a frame
+    holding every distinct time.
     """
     df = snapshot_dedup_aligned(
         snapshots, key_cols, time_col, tiebreak_cols or hash_cols

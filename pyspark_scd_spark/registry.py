@@ -7149,10 +7149,10 @@ def q_stream_scd_status_ttl(spark, sf_dir):
 
 
 def _clicks_prep(df):
-    """Shared click projection for the attribution stream builders —
-    module-level on purpose: _stream_source caches staged parquet by
-    prepare.__name__, so two same-named closures with diverging
-    bodies would silently share one staging dir."""
+    """Shared click projection for the attribution stream builders.
+    _stream_source keys its staged parquet on the prepare function's
+    bytecode, constants, names and closure cells, not its __name__, so
+    the builders that pass this one function share one staging dir."""
     return df.filter(F.col("event_type") == "click").select(
         "user_id", "ts", "event_id"
     )

@@ -206,14 +206,16 @@ def _second_run_base(spark, tmp_path) -> str:
 
 
 # Jobs per call, measured with the gates riding the writes, every
-# parquet read given its schema and one exchange for the SCD windows.
-# A pre-write validation pass, a footer-inference read or a dedup
-# shuffle of its own brings back jobs and fails these bounds. The
+# parquet read given its schema, one exchange for the SCD windows and
+# the latest snapshot date a literal (drops named by their date). A
+# pre-write validation pass, a footer-inference read, a dedup shuffle
+# of its own or a scalar branch for the latest date (an aggregate
+# exchange and a broadcast) brings back jobs and fails these bounds. The
 # merge is a union under one key window that the write gate's key
 # window shares (one shuffle-map job, then the write): a join of the
 # day's drop and the current view would shuffle each side and then
 # re-shuffle its output for the gate, and fails the second bound.
-RUN_JOB_BUDGET = 6
+RUN_JOB_BUDGET = 4
 RUN_INCREMENTAL_JOB_BUDGET = 2
 
 
@@ -359,26 +361,12 @@ def _rows(df) -> list[str]:
     return sorted(repr(sorted(r.asDict().items())) for r in df.collect())
 
 
-def _subtree(plan: str, node: str) -> str:
-    """The first line of ``plan`` that holds ``node`` and every line
-    of the subtree under it."""
-    lines = plan.splitlines()
-
-    def depth(line: str) -> int:
-        return len(line) - len(line.lstrip(" :+-"))
-
-    start = next(i for i, ln in enumerate(lines) if node in ln)
-    end = start + 1
-    while end < len(lines) and depth(lines[end]) > depth(lines[start]):
-        end += 1
-    return "\n".join(lines[start:end])
-
-
 def test_latest_date_scans_no_history(spark, tmp_path, monkeypatch):
-    """The latest snapshot date that Deleted is judged against comes
-    from the pending drops and the history's partition directories:
-    the broadcast scalar branch of the employee_all plan reads no
-    parquet, so a run does not scan the history twice."""
+    """The latest snapshot date that Deleted is judged against is a
+    literal read off the history's partition directories and the
+    drops' file names: the employee_all write plan has no broadcast
+    scalar branch and scans the history parquet and the drops' csv
+    once each."""
     from pyspark_scd_spark.plans import explain
 
     base = _second_run_base(spark, tmp_path)
@@ -391,10 +379,63 @@ def test_latest_date_scans_no_history(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(employee_dim, "write_staged", capture)
     employee_dim.run(spark, base)
-    branch = _subtree(plans[0], "BroadcastExchange")
-    assert "Scan csv" in branch, plans[0]
-    assert "Scan parquet" not in branch, plans[0]
-    assert "Scan parquet" in plans[0], plans[0]
+    assert "BroadcastExchange" not in plans[0], plans[0]
+    assert "BroadcastNestedLoopJoin" not in plans[0], plans[0]
+    assert plans[0].count("Scan parquet") == 1, plans[0]
+    assert plans[0].count("Scan csv") == 1, plans[0]
+
+
+def _misname_roster(input_dir: str) -> None:
+    """The day-10 drop, named ``roster.csv``."""
+    os.rename(f"{input_dir}/2020-01-10.csv", f"{input_dir}/roster.csv")
+
+
+def _misname_later_day(input_dir: str) -> None:
+    """The day-10 drop, named after 2020-01-12."""
+    os.rename(f"{input_dir}/2020-01-10.csv", f"{input_dir}/2020-01-12.csv")
+
+
+def _empty_later_drop(input_dir: str) -> None:
+    """One more, header-only, drop named after 2020-01-11."""
+    with open(f"{input_dir}/2020-01-10.csv") as f:
+        header = f.readline()
+    with open(f"{input_dir}/2020-01-11.csv", "w") as f:
+        f.write(header)
+
+
+@pytest.mark.parametrize(
+    "misname", [_misname_roster, _misname_later_day, _empty_later_drop]
+)
+def test_misnamed_drop_rebuilds_against_written_latest(
+    spark, tmp_path, misname
+):
+    """A drop whose file name is not the date it holds only misleads
+    the latest-date hint: the write observes the true max, the rebuild
+    runs once more against it and the outputs equal a full recompute,
+    at no more jobs than one scalar branch for the date would cost."""
+    from tests.emp_fixture import emp_snapshots
+
+    base = _second_run_base(spark, tmp_path)
+    misname(f"{base}/input")
+    pending = [f for f in os.listdir(f"{base}/input") if f.endswith(".csv")]
+    out = []
+    n_jobs = _jobs_of(spark, lambda: out.extend(employee_dim.run(spark, base)))
+
+    all_df, cur_df = out
+    expected = scd.scd_apply(
+        emp_snapshots(spark),
+        key_cols=employee_dim.KEY_COLS,
+        time_col=employee_dim.TIME_COL,
+        hash_cols=HASH_COLS,
+    )
+    assert _rows(all_df) == _rows(expected)
+    assert {r["snapshot_date"] for r in cur_df.collect()} == {
+        dt.date(2020, 1, 10)
+    }
+    assert not [p for p in os.listdir(f"{base}/output") if "__" in p]
+    assert not [f for f in os.listdir(f"{base}/input") if f.endswith(".csv")]
+    assert set(pending) <= set(os.listdir(f"{base}/input/processed"))
+    assert n_jobs <= 6, n_jobs
 
 
 def test_redrop_of_older_day_keeps_history_latest(spark, tmp_path):

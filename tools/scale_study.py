@@ -18,6 +18,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pyspark_scd_spark.operators import similarity  # noqa: E402
 from pyspark_scd_spark.registry import REGISTRY  # noqa: E402
 from pyspark_scd_spark.session import get_spark  # noqa: E402
 
@@ -28,36 +29,28 @@ def _emb(spark, d):
     return read_parquet_table(spark, d, "embeddings")
 
 
-def _ann_auto(op_kwargs):
+def _ann_auto(op, **kw):
     """The library's auto_planes scale path (registry entries pin
     n_planes=8 only so their oracle SQL stays static; at scale the
     auto path is the default)."""
-
-    def run(spark, d):
-        from pyspark_scd_spark.operators import similarity
-
-        op = getattr(similarity, op_kwargs["op"])
-        kw = {k: v for k, v in op_kwargs.items() if k != "op"}
-        return op(_emb(spark, d), n_planes=None, **kw)
-
-    return run
+    return lambda spark, d: op(_emb(spark, d), n_planes=None, **kw)
 
 
-# Non-registry study targets: the ANN quartet under auto_planes, and
-# the exact grid twins for the quadratic baseline.
+# Non-registry study targets: the ANN trio under auto_planes, and the
+# exact grid twins for the quadratic baseline.
 SPECIAL = {
     "neardup_ann_auto": _ann_auto(
-        {"op": "embedding_neardup_pairs_ann", "threshold": 0.3, "dim": 64}
+        similarity.embedding_neardup_pairs_ann, threshold=0.3, dim=64
     ),
-    "neardup_grid_exact": lambda spark, d: __import__(
-        "pyspark_scd_spark.operators.similarity", fromlist=["x"]
-    ).embedding_neardup_pairs_grid(_emb(spark, d), threshold=0.3),
-    "knn_ann_auto": _ann_auto({"op": "knn_label_vote_ann", "k": 5, "dim": 64}),
-    "knn_grid_exact": lambda spark, d: __import__(
-        "pyspark_scd_spark.operators.similarity", fromlist=["x"]
-    ).knn_label_vote_grid(_emb(spark, d), k=5),
+    "neardup_grid_exact": lambda spark, d: similarity.embedding_neardup_pairs_grid(
+        _emb(spark, d), threshold=0.3
+    ),
+    "knn_ann_auto": _ann_auto(similarity.knn_label_vote_ann, k=5, dim=64),
+    "knn_grid_exact": lambda spark, d: similarity.knn_label_vote_grid(
+        _emb(spark, d), k=5
+    ),
     "hardneg_ann_auto": _ann_auto(
-        {"op": "hard_negative_mining_ann", "k": 3, "dim": 64}
+        similarity.hard_negative_mining_ann, k=3, dim=64
     ),
 }
 
